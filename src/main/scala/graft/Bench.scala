@@ -61,20 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (both join children hashed on the SAME
-      // subset of join keys) is what the blocked pair join relies on —
-      // the bucketed-join dial
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.getOrCreate("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JIT + whole-stage-codegen class generation on the tiny
     // scale factor so timed runs measure steady-state throughput.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan of one (or
   * every) SparkEntry query. Usage:
   *   runMain graft.Explain <queryName|all> [sfDir]
@@ -10,19 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val target = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // subset co-partitioning (both join children hashed on the SAME
-      // subset of join keys) is what the blocked pair join relies on —
-      // the bucketed-join dial
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.getOrCreate("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (target == "all") SparkEntry.queries.keys.toSeq.sorted else Seq(target)
     names.foreach { name =>

@@ -21,13 +21,7 @@ object Pipelines {
     * create. */
   private def withSession[T](name: String)(f: SparkSession => T): T = {
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = existing.getOrElse(
-      SparkSession.builder()
-        .appName(name)
-        .master(sys.props.getOrElse("spark.master", "local[*]"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .getOrCreate())
+    val spark = graft.Session.getOrCreate(name)
     try f(spark) finally if (existing.isEmpty) spark.stop()
   }
 

@@ -38,18 +38,12 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("dup_count"))
 
-  /** Distinct word-n-gram shingles per doc (adds `shingles`).
-    * Uses the native `word_shingles` expression when GraftExtensions
-    * is installed (one codegen'd pass per row); falls back to the
-    * pure-built-in lambda form otherwise — both value-identical
-    * (tested). */
-  def withShingles(df: DataFrame, textCol: String, n: Int): DataFrame = {
-    val shingles =
-      if (df.sparkSession.catalog.functionExists("word_shingles"))
-        call_function("word_shingles", col(textCol), lit(n))
-      else wordShingles(col(textCol), n)
-    df.withColumn("shingles", shingles)
-  }
+  /** Distinct word-n-gram shingles per doc (adds `shingles`), by the
+    * native `word_shingles` expression (one codegen'd pass per row;
+    * value-identical to the built-in form `Funcs.wordShingles`,
+    * tested). */
+  def withShingles(df: DataFrame, textCol: String, n: Int): DataFrame =
+    df.withColumn("shingles", call_function("word_shingles", col(textCol), lit(n)))
 
   /** MinHash signature (adds `sig`: array of numHashes longs) via the
     * standard one-base-hash + affine-permutation family:
@@ -58,7 +52,8 @@ object Dedup {
     * This computes ONE md5 per shingle instead of numHashes of them —
     * the md5 pass is the dominant scan cost at corpus scale — and all
     * arithmetic stays below 2^37, far from BIGINT overflow (which
-    * engines handle differently).
+    * engines handle differently). The built-in reference form of the
+    * native `minhash_sig` (tested value-identical).
     */
   def withMinhash(df: DataFrame, numHashes: Int): DataFrame =
     df.withColumn("__base", transform(col("shingles"), s => hash60(s) % 1073741824L))
@@ -159,7 +154,7 @@ object Dedup {
     * the whole signature emits inside the scan stage — no explode of
     * (doc, shingle) rows, no md5-per-exploded-row, no shuffle through
     * numHashes partial aggregates. Value-identical to the agg form
-    * (tested); the preferred form whenever the extension is installed. */
+    * (tested); the preferred form. */
   def minhashLshPairsNative(docs: DataFrame, idCol: String, textCol: String,
                             n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                             threshold: Double = 0.5): DataFrame = {
@@ -197,11 +192,8 @@ object Dedup {
                      maxDist: Int = 40, prefixLen: Int = 160): DataFrame = {
     val spread = spreadById(docs, idCol, textCol)
     val shingled = withShingles(spread, textCol, n).filter(size(col("shingles")) > 0)
-    val sig =
-      if (docs.sparkSession.catalog.functionExists("minhash_sig"))
-        shingled.select(col(idCol),
-          call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
-      else minhashSigAgg(shingled, idCol, numHashes)
+    val sig = shingled.select(col(idCol),
+      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
     val pref = spread.select(col(idCol), substring(col(textCol), 1, prefixLen).as("p"))
     lshCandidateIds(sig, idCol, bands, numHashes / bands)
       .join(pref.select(col(idCol).as("id1"), col("p").as("p1")), "id1")
@@ -383,7 +375,7 @@ object Dedup {
     * stage, so only the winnowed set (~2/(w+1) of the grams) ever
     * explodes — the relational form shuffles and sorts EVERY gram row
     * through a doc-partitioned window. Value-identical (tested); the
-    * preferred form whenever the extension is installed. */
+    * preferred form. */
   def winnowingFingerprintsNative(docs: DataFrame, idCol: String,
                                   textCol: String, k: Int = 4,
                                   w: Int = 4): DataFrame = {
@@ -521,10 +513,8 @@ object Dedup {
                         n: Int = 3, numHashes: Int = 32): DataFrame = {
     val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
       .filter(size(col("shingles")) > 0)
-    if (docs.sparkSession.catalog.functionExists("minhash_sig"))
-      shingled.select(col(idCol), col("shingles"),
-        call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
-    else withMinhash(shingled, numHashes).select(col(idCol), col("shingles"), col("sig"))
+    shingled.select(col(idCol), col("shingles"),
+      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
   }
 
   /** INCREMENTAL MinHash-LSH dedup: near-dup pairs where at least one

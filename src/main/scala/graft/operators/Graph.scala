@@ -40,35 +40,6 @@ object Graph {
   private def stageIf(big: Boolean, df: DataFrame, keys: String*): DataFrame =
     if (big) Staging.snapshotKeyed(df, keys: _*) else Staging.snapshot(df)
 
-  /** The ARRAY-round device for SMALL-regime bounded loops (the
-    * [[graft.operators.Cohorts.bradleyTerry]] r17 playbook, guide §2.4
-    * "remove shuffles outright"): when the node frame fits under the
-    * broadcast dial ([[Staging.wantsPin]] false — the same boundedness
-    * the join form already leans on to broadcast the label frame every
-    * round), the loop state travels as ONE broadcast 1-row array
-    * positioned by dense node id, and each message round is a
-    * projection over the grouped per-node neighbor arrays folding the
-    * state array — zero shuffles, zero per-round aggregate exchanges,
-    * one broadcast build per round instead of the join form's 3-4
-    * driver job barriers (measured q_scc: 109 sequential jobs of
-    * median 40 ms, taskSec 2.2 — the lane was pure job-chain). The
-    * big regime keeps the message-passing joins with pinned layouts —
-    * same results, per-scale physical plans, the house regime
-    * discipline. Folds used by callers are integer min / boolean OR /
-    * integer sums — order-free, so results are bit-identical to the
-    * join form (oracle-checked at two SFs).
-    *
-    * `warr(df, valueCol)`: S-row (did, value) frame → 1-row ARRAY
-    * positioned by did (sort_array on the unique leading did makes the
-    * order deterministic). The S-row `row_number` id window is bounded
-    * by the regime probe — only frames under the broadcast threshold
-    * ever reach it. */
-  private def warr(df: DataFrame, valueCol: String): DataFrame =
-    df.agg(transform(
-      sort_array(collect_list(struct(col("did"), col(valueCol)))),
-      e => e.getField(valueCol)).as("wa"))
-
-
   /** Fixed-iteration PageRank in EXACT integer arithmetic.
     *
     * Ranks are scaled to `scale` (default 1e12) and every step is

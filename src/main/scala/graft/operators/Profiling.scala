@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs.{nullifZero, r4, rd, scaled}
+import graft.sources.Staging
 import graft.sources.Staging.Snapshottable
 
 /** Data-profiling operators: fixed-width histograms and quantile-tier
@@ -201,7 +202,7 @@ object Profiling {
     // snapshot the bucket rollup (≤ |thresholds|+1 rows): totals and
     // the threshold join both read it — without this each branch
     // re-runs the corpus scan
-    val agg = graft.sources.Staging.snapshot(
+    val agg = Staging.snapshot(
       df.select(bucket.as("b"), tokens.as("tk"))
         .groupBy("b").agg(count(lit(1)).as("nd"), sum(col("tk")).as("nt")))
     val totals = agg.agg(sum(col("nd")).as("td"), sum(col("nt")).as("tt"))
@@ -218,101 +219,96 @@ object Profiling {
           .as("token_frac"))
   }
 
-  /** Per-key totals bucketed into `tiles` quantile tiers (deciles by
-    * default): aggregate `value` per key (exact long — pass a
-    * Funcs.scaled view), rank the KEYS on (total desc, key), then roll
-    * up per tier.
-    *
-    * Scale shape — the ranking is DISTRIBUTED, never a single-task
-    * total order: the aggregated key table is range-partitioned on the
-    * sort order, ranked locally per partition (a partitioned window,
-    * fully parallel), and per-partition row counts — a partitions-sized
-    * table — turn local ranks into global ranks via a broadcast join.
-    * Tile assignment is then ntile's closed form over (rank, n): the
-    * first n % tiles tiles take ⌈n/tiles⌉ keys, the rest ⌊n/tiles⌋ —
-    * identical to `ntile(t) OVER (ORDER BY total DESC, key)` (the
-    * q_ntile_deciles oracle pins the equivalence), but a 10⁹-key tier
-    * summary no longer funnels through one WindowExec task.
-    *
-    * The range-partitioned frame is snapshotted before fan-out: range
-    * partitioning SAMPLES to pick boundaries, and the offsets branch
-    * and the ranking branch must see identical partition assignment.
-    * The offsets cumulative window is a total order over the
-    * partitions-sized count table — bounded by the shuffle-partition
-    * setting, not by data. */
   /** EXACT global row number over a TOTAL order without a single-task
-    * window — [[tierSummary]]'s offset device, factored out (r18) so
-    * the two remaining row-scale `Window.orderBy` sites
-    * ([[calibrationBins]], [[TextAnalysis.heapsLaw]]) stop funneling
-    * an UNBOUNDED frame through one WindowExec task. Regime-gated on
-    * the materialized input's measured size: a frame under the pin
-    * dial keeps the single-window plan (bounded by construction);
-    * past it, range-partition on
-    * the order, rank locally per partition (parallel), and add each
-    * partition's cumulative predecessor count via a broadcast of the
-    * partitions-sized offset table. `order` must be a total order
-    * (include a unique tiebreak) — equal keys land in one range
-    * partition, so local rank + offset IS `row_number() OVER (ORDER BY
-    * order)`, value-identical at any partition count (range boundaries
-    * only move WHERE ranks are computed, never what they are). Output:
-    * input columns + `rankCol` (1-based global rank) + `totalCol`
-    * (global row count). The frame is snapshotted before the fan-out:
-    * range partitioning SAMPLES boundaries, and the offset branch and
-    * rank branch must see identical assignment. */
-  private[operators] def globalRank(df: DataFrame, order: Seq[Column],
-                                    rankCol: String, totalCol: String): DataFrame = {
-    // The input is snapshotted FIRST, for two reasons: (a) range
-    // partitioning SAMPLES its input before exchanging it, so an
-    // un-materialized upstream executes twice (measured r18: the
-    // device re-ran q_calibration's whole classifier scan and cost
-    // the lane +0.57 s); (b) the measured size of the snapshot is the
-    // house regime probe ([[graft.sources.Staging.wantsPin]]) — a
-    // frame under the broadcast dial goes through ONE bounded-size
-    // WindowExec task (cheaper than the range-sample + offset
-    // machinery, and bounded BY CONSTRUCTION — the r18 Window audit's
-    // bar), while a frame past the dial gets the distributed device.
-    val src = graft.sources.Staging.snapshot(df)
-    if (!graft.sources.Staging.wantsPin(src))
-      return src
-        .withColumn(rankCol, row_number().over(Window.orderBy(order: _*)).cast("long"))
-        .withColumn(totalCol, count(lit(1)).over(Window.partitionBy()))
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val rp = graft.sources.Staging.snapshot(
-      src.repartitionByRange(parts, order: _*).withColumn("__pid", spark_partition_id()))
-    graft.sources.Staging.release(src)
+    * window, for the row-scale `Window.orderBy` sites
+    * ([[calibrationBins]], [[TextAnalysis.heapsLaw]]). Regime-gated on
+    * the snapshotted input's measured size: a frame under the pin dial
+    * ([[graft.sources.Staging.pinThreshold]]) goes through ONE
+    * bounded-size WindowExec task, cheaper than the range-sample +
+    * offset machinery; a larger frame, or one whose size cannot be
+    * measured (`graft.staging.reliable=true`), gets [[rangeRank]].
+    * `order` must be a total order (include a unique tiebreak).
+    *
+    * `consume` receives the input columns + `rankCol` (1-based global
+    * rank) + `totalCol` (global row count), in that order on both
+    * branches; its result is snapshotted, after which the input
+    * snapshots are released. The input is snapshotted FIRST: range
+    * partitioning SAMPLES its input before exchanging it, so an
+    * un-materialized upstream would execute twice (measured r18: +0.57 s
+    * on q_calibration's classifier scan), and the snapshot's measured
+    * size is the regime probe. */
+  private[graft] def globalRank(df: DataFrame, order: Seq[Column],
+                                rankCol: String, totalCol: String)(
+                                consume: DataFrame => DataFrame): DataFrame = {
+    val src = Staging.snapshot(df)
+    val (staged, ranked) =
+      if (Staging.measuredSize(src).exists(_ <= Staging.pinThreshold(src)))
+        (src, src.withColumn(rankCol, row_number().over(Window.orderBy(order: _*)).cast("long"))
+          .withColumn(totalCol, count(lit(1)).over(Window.partitionBy())))
+      else {
+        val rp = rangeStage(src, order)
+        Staging.release(src)
+        (rp, rangeRank(rp, order, rankCol, totalCol))
+      }
+    val out = Staging.snapshot(consume(ranked))
+    Staging.release(staged)
+    out
+  }
+
+  /** `df` range-partitioned on `order` with its partition id as
+    * `__pid`, snapshotted: range partitioning SAMPLES boundaries, and
+    * [[rangeRank]]'s offset branch and rank branch must see identical
+    * assignment. */
+  private def rangeStage(df: DataFrame, order: Seq[Column]): DataFrame =
+    Staging.snapshot(df.repartitionByRange(
+      df.sparkSession.sessionState.conf.numShufflePartitions, order: _*)
+      .withColumn("__pid", spark_partition_id()))
+
+  /** The distributed global rank over a [[rangeStage]] frame: rank
+    * locally per range partition (a partitioned window, fully
+    * parallel) and add each partition's cumulative predecessor count
+    * from a broadcast of the partitions-sized offset table. Equal keys
+    * land in one range partition, so local rank + offset IS
+    * `row_number() OVER (ORDER BY order)` at any partition count. The
+    * offset windows' total order is over partition ids — bounded by
+    * the shuffle-partition setting, not by data. Output: the staged
+    * columns without `__pid`, then `rankCol`, then `totalCol`. */
+  private def rangeRank(rp: DataFrame, order: Seq[Column],
+                        rankCol: String, totalCol: String): DataFrame = {
     val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     val off = rp.groupBy("__pid").agg(count(lit(1)).as("__pn"))
       .withColumn("__off", coalesce(sum(col("__pn")).over(wOff), lit(0L)))
       .withColumn(totalCol, sum(col("__pn")).over(Window.partitionBy()))
       .select(col("__pid"), col("__off"), col(totalCol))
     val wLocal = Window.partitionBy("__pid").orderBy(order: _*)
+    val cols = rp.columns.filter(_ != "__pid").map(col) :+ col(rankCol) :+ col(totalCol)
     rp.join(broadcast(off), "__pid")
       .withColumn(rankCol, col("__off") + row_number().over(wLocal))
-      .drop("__pid", "__off")
+      .select(cols: _*)
   }
 
+  /** Per-key totals bucketed into `tiles` quantile tiers (deciles by
+    * default): aggregate `value` per key (exact long — pass a
+    * Funcs.scaled view), rank the KEYS on (total desc, key), then roll
+    * up per tier.
+    *
+    * Scale shape — the ranking is always [[rangeRank]]'s distributed
+    * form, never a single-task total order, at every input size (the
+    * plan PlanSpec pins). Tile assignment is then ntile's closed form
+    * over (rank, n): the first n % tiles tiles take ⌈n/tiles⌉ keys, the
+    * rest ⌊n/tiles⌋ — identical to `ntile(t) OVER (ORDER BY total DESC,
+    * key)` (the q_ntile_deciles oracle pins the equivalence), but a
+    * 10⁹-key tier summary never funnels through one WindowExec task. */
   def tierSummary(df: DataFrame, key: String, value: Column,
                   tiles: Int = 10): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
+    val order = Seq(col("total").desc, col(key).asc)
     val totals = df.groupBy(col(key)).agg(sum(value).as("total"))
-    val rp = graft.sources.Staging.snapshot(
-      totals.repartitionByRange(parts, col("total").desc, col(key).asc)
-        .withColumn("__pid", spark_partition_id()))
-    val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val off = rp.groupBy("__pid").agg(count(lit(1)).as("__pn"))
-      .withColumn("__off", coalesce(sum(col("__pn")).over(wOff), lit(0L)))
-      .withColumn("__n", sum(col("__pn")).over(Window.partitionBy()))
-      .select("__pid", "__off", "__n")
-    val wLocal = Window.partitionBy("__pid")
-      .orderBy(col("total").desc, col(key).asc)
     // ntile closed form (1-based rank r, n rows, t tiles):
     //   big = n div t + 1 sized tiles for the first n % t tiles
     //   r <= (n % t)·big        → tier = ⌈r / big⌉
     //   else (small = n div t)  → tier = n % t + ⌈(r − (n % t)·big) / small⌉
     // (small = 0 ⇒ n < t ⇒ the ELSE branch is unreachable: cut = n)
-    val tiered = rp.withColumn("__lr", row_number().over(wLocal).cast("long"))
-      .join(broadcast(off), "__pid")
-      .withColumn("__rank", col("__off") + col("__lr"))
+    rangeRank(rangeStage(totals, order), order, "__rank", "__n")
       .withColumn("tier", expr(
         s"""CASE WHEN __rank <= (__n % $tiles) * (__n div $tiles + 1)
            |  THEN (__rank + __n div $tiles) div (__n div $tiles + 1)
@@ -320,7 +316,6 @@ object Profiling {
            |    (__rank - (__n % $tiles) * (__n div $tiles + 1) + __n div $tiles - 1)
            |      div (__n div $tiles)
            |END""".stripMargin).cast("int"))
-    tiered
       .groupBy("tier")
       .agg(count(lit(1)).as("n_keys"),
         sum(col("total")).as("tier_total"),
@@ -555,22 +550,22 @@ object Profiling {
     * integer: Σr / ((n−1)·count) — rank sums never touch doubles
     * until the one final division.
     *
-    * Scale note (r18): the global rank runs on [[globalRank]]'s
-    * range-partitioned offset device — the doc-grain frame is never
-    * funneled through a single WindowExec task (the pre-r18 form's one
-    * row-scale total-order window; rank values are identical). */
+    * Scale note (r18): the global rank runs on [[globalRank]] — a
+    * doc-grain frame past the pin dial, or of unmeasured size, is never
+    * funneled through a single WindowExec task (rank values are
+    * identical on both branches). */
   def calibrationBins(df: DataFrame, idCol: String, scoreCol: String,
                       labelCol: String, bins: Int = 10): DataFrame = {
     val denom = greatest(col("nn") - 1, lit(1L)) * col("n_docs")
     globalRank(
       df.select(col(idCol), col(scoreCol), col(labelCol).cast("long").as("pos")),
-      Seq(col(scoreCol), col(idCol)), "rn", "nn")
-      .withColumn("r0", (col("rn") - 1).cast("long"))
-      .withColumn("bin", least(expr(s"(r0 * $bins) DIV greatest(nn - 1, 1)"),
-        lit(bins - 1).cast("long")).cast("int"))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n_docs"), sum(col("r0")).as("sum_r"),
-        sum(col("pos")).as("n_pos"), max(col("nn")).as("nn"))
+      Seq(col(scoreCol), col(idCol)), "rn", "nn")(
+      _.withColumn("r0", (col("rn") - 1).cast("long"))
+        .withColumn("bin", least(expr(s"(r0 * $bins) DIV greatest(nn - 1, 1)"),
+          lit(bins - 1).cast("long")).cast("int"))
+        .groupBy("bin")
+        .agg(count(lit(1)).as("n_docs"), sum(col("r0")).as("sum_r"),
+          sum(col("pos")).as("n_pos"), max(col("nn")).as("nn")))
       .select(col("bin"), col("n_docs"),
         r4(col("sum_r").cast("double") / denom).as("mean_p"),
         r4(col("n_pos").cast("double") / col("n_docs")).as("pos_rate"),

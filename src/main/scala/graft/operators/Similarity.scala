@@ -21,42 +21,34 @@ import graft.sources.Staging.Snapshottable
   */
 object Similarity {
 
-  /** Quantized vector (array<long>) at 10^scale. Native
-    * `quantize_vec` ([[graft.plans.QuantizeVec]]) when registered —
-    * the entry ramp of every similarity path runs compiled instead of
-    * as an interpreted transform; lambda fallback value-identical
-    * (tested). */
+  /** Quantized vector (array<long>) at 10^scale, by the native
+    * `quantize_vec` ([[graft.plans.QuantizeVec]]) — the entry ramp of
+    * every similarity path runs compiled instead of as an interpreted
+    * transform. */
   def quantize(vec: Column, scale: Int = 6): Column =
-    if (natFn("quantize_vec")) call_function("quantize_vec", vec, lit(scale))
-    else transform(vec, x => floor(x.cast("double") * math.pow(10, scale) + 0.5).cast("long"))
+    call_function("quantize_vec", vec, lit(scale))
 
-  /** Exact integer squared norm of a quantized vector. */
+  /** Exact integer squared norm of a quantized vector — the built-in
+    * reference form of `dot_q(v, v)`. */
   def normSq(vecQ: Column): Column =
     aggregate(vecQ, lit(0L), (acc, x) => acc + x * x)
 
-  /** Exact integer dot product of two quantized vectors. */
+  /** Exact integer dot product of two quantized vectors — the built-in
+    * reference form of `dot_q`. */
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** True iff the native function is registered on the active session
-    * (GraftExtensions installed). */
-  private def natFn(name: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists(name))
-
-  /** [[dotQ]], natively when available: the `dot_q` expression
-    * ([[graft.plans.DotQ]]) fuses the multiply-add loop in compiled
-    * code instead of two interpreted lambdas + a product array per
-    * pair. Value-identical on equal-length vectors (tested). */
-  private def dotQN(a: Column, b: Column): Column =
-    if (natFn("dot_q")) call_function("dot_q", a, b) else dotQ(a, b)
+  /** [[dotQ]] by the native `dot_q` expression ([[graft.plans.DotQ]]):
+    * the multiply-add loop runs in compiled code instead of two
+    * interpreted lambdas + a product array per pair. Value-identical on
+    * equal-length vectors (tested). */
+  private def dotQN(a: Column, b: Column): Column = call_function("dot_q", a, b)
 
   /** [[normSq]] via the same native path (`dot_q(v, v)`). */
-  private def normSqN(v: Column): Column =
-    if (natFn("dot_q")) call_function("dot_q", v, v) else normSq(v)
+  private def normSqN(v: Column): Column = call_function("dot_q", v, v)
 
   /** ADC lookup-sum, built-in fold form — the value-identical
-    * fallback of the native `adc_dist` ([[graft.plans.AdcDist]]). */
+    * reference form of the native `adc_dist` ([[graft.plans.AdcDist]]). */
   private[graft] def adcBuiltin(qtab: Column, codes: Column, m: Int): Column =
     aggregate(sequence(lit(0), lit(m - 1)), lit(0L), (acc, s) =>
       acc + element_at(element_at(qtab, (s + 1).cast("int")),
@@ -174,7 +166,7 @@ object Similarity {
       .select(col("block"), col("id"), col("__v"), quantize(col("__v")).as("vq"))
       .withColumn("n", normSqN(col("vq")))
     val base = base0
-      .withColumn("sig", sigExpr(base0, col("__v"), col("vq"), bands * planesPerBand, dim))
+      .withColumn("sig", sigExpr(col("__v"), col("vq"), bands * planesPerBand, dim))
       .drop("__v")
     val banded = base.select(col("block"), col("id"), posexplode(
         expr(s"transform(sequence(0, ${bands - 1}), b -> shiftright(sig, b * $planesPerBand) & $mask)"))
@@ -192,16 +184,14 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** The hyperplane signature, natively when available: the
-    * `hyperplane_sig` Catalyst expression ([[graft.plans.HyperplaneSig]],
-    * registered via GraftExtensions) runs the numPlanes×dim
-    * multiply-adds in compiled code inside the scan stage; the
-    * fallback is [[lshBucket]]'s interpreted lambda form. Both are
-    * value-identical on dim-64 vectors (tested). */
-  private def sigExpr(df: DataFrame, rawVec: Column, vecQ: Column,
+  /** The hyperplane signature: for dim-64 vectors the native
+    * `hyperplane_sig` Catalyst expression ([[graft.plans.HyperplaneSig]])
+    * runs the numPlanes×dim multiply-adds in compiled code inside the
+    * scan stage; other dimensions use [[lshBucket]]'s interpreted
+    * lambda form. Both are value-identical on dim-64 vectors (tested). */
+  private def sigExpr(rawVec: Column, vecQ: Column,
                       numPlanes: Int, dim: Int): Column =
-    if (dim == 64 && df.sparkSession.catalog.functionExists("hyperplane_sig"))
-      call_function("hyperplane_sig", rawVec, lit(numPlanes))
+    if (dim == 64) call_function("hyperplane_sig", rawVec, lit(numPlanes))
     else lshBucket(vecQ, numPlanes, dim)
 
   /** Deterministic hyperplane components: md5("p,j") first 15 hex
@@ -276,21 +266,9 @@ object Similarity {
   /** The `n` nearest cells of a quantized vector by exact integer L2
     * against the plan-time centroid literal (one narrow pass, no
     * shuffle); ties break by cell index. Native `nearest_cells`
-    * ([[graft.plans.NearestCells]]) when registered; lambda-sort
-    * fallback — value-identical (tested). */
-  private def nearestCellsOf(vq: Column, centroidLit: Column,
-                             numCells: Int, n: Int): Column =
-    if (natFn("nearest_cells"))
-      call_function("nearest_cells", vq, centroidLit, lit(n))
-    else {
-      val dists = transform(sequence(lit(0), lit(numCells - 1)), c =>
-        struct(
-          aggregate(
-            zip_with(vq, element_at(centroidLit, c + 1), (x, y) => (x - y) * (x - y)),
-            lit(0L), (acc, x) => acc + x).as("d"),
-          c.cast("long").as("cell")))
-      transform(slice(array_sort(dists), 1, n), s => s.getField("cell"))
-    }
+    * ([[graft.plans.NearestCells]]). */
+  private def nearestCellsOf(vq: Column, centroidLit: Column, n: Int): Column =
+    call_function("nearest_cells", vq, centroidLit, lit(n))
 
   /** IVF (inverted-file) ANN: a coarse quantizer assigns each vector
     * to a cell; queries probe their `nprobe` nearest cells and rank
@@ -333,7 +311,7 @@ object Similarity {
     val centroidLit = typedLit(centroids)
 
     def cellsOf(vq: Column, n: Int): Column =
-      nearestCellsOf(vq, centroidLit, numCells, n)
+      nearestCellsOf(vq, centroidLit, n)
 
     val c = corpus.select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
       .select(col("corpus_id"), col("cq"), explode(cellsOf(col("cq"), 1)).as("cell"))
@@ -362,15 +340,14 @@ object Similarity {
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
                 numCells: Int = 16): DataFrame = {
     val centroidLit = typedLit(trainCellSeeds(df, idCol, vecCol, numCells))
-    // explicit-count repartition: quantize/L2 lambdas are interpreted
-    // on the fallback path, and even the native expression is CPU-bound
-    // — spread over all cores regardless of input split layout.
+    // explicit-count repartition: the native nearest-cell scan is
+    // CPU-bound — spread over all cores regardless of input split layout.
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     df.select(col(idCol).as("id"), col(vecCol).as("__v"))
       .repartition(parts, col("id"))
       .select(col("id"), quantize(col("__v")).as("vq"))
       .select(col("id"), col("vq"),
-        element_at(nearestCellsOf(col("vq"), centroidLit, numCells, 1), 1).as("cell"))
+        element_at(nearestCellsOf(col("vq"), centroidLit, 1), 1).as("cell"))
       .withColumn("n", normSqN(col("vq")))
   }
 
@@ -429,16 +406,9 @@ object Similarity {
     def centroid(s: Column, j: Column): Column =
       element_at(element_at(cbLit, (s + 1).cast("int")), (j + 1).cast("int"))
 
-    // corpus encode: m·ksub interpreted L2s per vector as a fold, or
-    // one compiled pass via native `pq_encode` (flat codebook literal;
-    // value-identical including the ties-to-lowest-index rule, tested)
-    val codes =
-      if (natFn("pq_encode"))
-        call_function("pq_encode", col("cq"), typedLit(codebook.flatten), lit(m))
-      else transform(sequence(lit(0), lit(m - 1)), s =>
-        array_min(transform(sequence(lit(0), lit(ksub - 1)), j =>
-          struct(l2(subVec(col("cq"), s), centroid(s, j)).as("d"),
-            j.cast("long").as("j")))).getField("j"))
+    // corpus encode: one compiled pass via native `pq_encode` (flat
+    // codebook literal; ties go to the lowest code index)
+    val codes = call_function("pq_encode", col("cq"), typedLit(codebook.flatten), lit(m))
     val qtab = transform(sequence(lit(0), lit(m - 1)), s =>
       transform(sequence(lit(0), lit(ksub - 1)), j =>
         l2(subVec(col("qq"), s), centroid(s, j))))
@@ -450,12 +420,9 @@ object Similarity {
       .select(col("corpus_id"), codes.as("codes"))
     val q = queries.select(col(idCol).as("query_id"), quantize(col(vecCol)).as("qq"))
       .select(col("query_id"), qtab.as("qtab"))
-    // the hottest loop of PQ search: |Q|·|C| pairs × m table lookups.
-    // Native `adc_dist` runs it as a compiled flat walk; the fold
-    // fallback is value-identical for in-range codes (tested).
-    val adc =
-      if (natFn("adc_dist")) call_function("adc_dist", col("qtab"), col("codes"))
-      else adcBuiltin(col("qtab"), col("codes"), m)
+    // the hottest loop of PQ search: |Q|·|C| pairs × m table lookups,
+    // run by native `adc_dist` as a compiled flat walk
+    val adc = call_function("adc_dist", col("qtab"), col("codes"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("corpus_id").asc)
     c.crossJoin(broadcast(q))
@@ -472,21 +439,9 @@ object Similarity {
     * sized, not data sized. */
   private def refinePqCodebook(vq: DataFrame, cb: Seq[Seq[Seq[Long]]],
                                m: Int, ksub: Int, subDim: Int): Seq[Seq[Seq[Long]]] = {
-    val cbLit = typedLit(cb)
-    def l2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
     // per-subspace assignment: native pq_encode computes all m codes
-    // in one compiled pass (same ties-to-lowest-index contract); the
-    // fold fallback recomputes the argmin per exploded subspace
-    val codesCol =
-      if (natFn("pq_encode"))
-        call_function("pq_encode", col("vq"), typedLit(cb.flatten), lit(m))
-      else transform(sequence(lit(0), lit(m - 1)), s => {
-        val sub = slice(col("vq"), s * subDim + 1, lit(subDim))
-        array_min(transform(sequence(lit(0), lit(ksub - 1)), j =>
-          struct(l2(sub, element_at(element_at(cbLit, (s + 1).cast("int")), (j + 1).cast("int"))).as("d"),
-            j.cast("long").as("j")))).getField("j")
-      })
+    // in one compiled pass (ties go to the lowest code index)
+    val codesCol = call_function("pq_encode", col("vq"), typedLit(cb.flatten), lit(m))
     val entry = explode(transform(sequence(lit(0), lit(m - 1)), s =>
       struct(s.cast("long").as("s"),
         element_at(col("__codes"), (s + 1).cast("int")).as("code"),
@@ -522,7 +477,7 @@ object Similarity {
     var centroids = seed
     for (_ <- 0 until iters) {
       val asg = vq.select(col("vq"),
-        element_at(nearestCellsOf(col("vq"), typedLit(centroids), numCells, 1), 1)
+        element_at(nearestCellsOf(col("vq"), typedLit(centroids), 1), 1)
           .as("cell"))
       val sums = asg
         .select(col("cell"), posexplode(col("vq")).as(Seq("k", "x")))
@@ -611,7 +566,7 @@ object Similarity {
     val centroids = refineCentroidsLoop(vq,
       trainCellSeeds(df, idCol, vecCol, numCells), numCells, iters)
     val out = vq.select(col("id"),
-      element_at(nearestCellsOf(col("vq"), typedLit(centroids), numCells, 1), 1)
+      element_at(nearestCellsOf(col("vq"), typedLit(centroids), 1), 1)
         .as("cell"))
       .snapshot()
     vq.unpersist(blocking = false)
@@ -666,7 +621,7 @@ object Similarity {
     def side(df: DataFrame, idAs: String, qAs: String, nAs: String) =
       df.select(col(idCol).as(idAs), col(vecCol).as("__v"),
           quantize(col(vecCol)).as("__vq"))
-        .withColumn("bucket", sigExpr(df, col("__v"), col("__vq"), numPlanes, dim))
+        .withColumn("bucket", sigExpr(col("__v"), col("__vq"), numPlanes, dim))
         .withColumn(nAs, normSqN(col("__vq")))
         .withColumnRenamed("__vq", qAs)
         .drop("__v")

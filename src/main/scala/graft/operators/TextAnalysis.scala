@@ -801,21 +801,22 @@ object TextAnalysis {
     * 100); the β exponent fit is left to the consumer (log-free
     * house rule).
     *
-    * Scale shape (r18): the doc rank runs on [[Profiling.globalRank]]'s
-    * range-partitioned offset device — the doc-id frame is never
-    * funneled through one WindowExec task (the pre-r18 form's one
-    * row-scale total-order window; rank values are identical) — then
-    * joins onto one exploded token pass that feeds every prefix's
-    * aggregate from a single snapshot — |pcts| aggregates, one scan. */
+    * Scale shape (r18): the doc rank runs on [[Profiling.globalRank]] —
+    * a doc-id frame past the pin dial, or of unmeasured size, is never
+    * funneled through one WindowExec task (rank values are identical
+    * on both branches) — then joins onto one exploded token pass that
+    * feeds every prefix's aggregate from a single snapshot — |pcts|
+    * aggregates, one scan. */
   def heapsLaw(docs: DataFrame, idCol: String, textCol: String,
                pcts: Seq[Int] = Seq(25, 50, 75, 100)): DataFrame = {
-    val ranked = Profiling.globalRank(docs.select(col(idCol).as("id")),
-      Seq(col("id")), "rn", "nd")
-      .withColumn("rn", col("rn").cast("long"))
-    val exr = Dedup.spreadById(docs, idCol, textCol)
-      .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
-      .join(ranked, "id")
-      .snapshot() // one exploded pass feeds every prefix aggregate
+    // one exploded pass (the rank's snapshotted result) feeds every
+    // prefix aggregate
+    val exr = Profiling.globalRank(docs.select(col(idCol).as("id")),
+      Seq(col("id")), "rn", "nd") { ranked =>
+      Dedup.spreadById(docs, idCol, textCol)
+        .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
+        .join(ranked, "id")
+    }
     pcts.map { p =>
       val k = greatest(expr(s"(nd * $p) DIV 100"), lit(1L))
       exr.agg(

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension point. Install with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * or `.withExtensions(new GraftExtensions)`.
+/** Engine extension point. [[graft.Session.getOrCreate]] builds
+  * sessions with it; [[graft.Session.install]] registers the same
+  * table on a session built elsewhere.
   *
   * Registers the custom native expressions: [[RollingHash]],
   * [[MinHashSig]], [[SimHashSig]], [[WordShingles]], [[HyperplaneSig]],
@@ -28,132 +28,92 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * rejected rather than silently dropped.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     // Planner strategy for the one custom logical node: the staging
     // layer's partitioning pin (see PinHashPartitioning's soundness
     // contract — only Staging.snapshotKeyed constructs it).
     ext.injectPlannerStrategy(_ => new PinPartitioningStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => RollingHash(
-        arity("rolling_hash", children, 1, 1).head)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(
-        arity("minhash_sig", children, 1, 2).head,
-        foldableInt("minhash_sig", "numHashes", children, 1, default = 32))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (children: Seq[Expression]) => SimHashSig(
-        arity("simhash_sig", children, 1, 2).head,
-        foldableInt("simhash_sig", "bits", children, 1, default = 60))))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => WordShingles(
-        arity("word_shingles", children, 1, 2).head,
-        foldableInt("word_shingles", "n", children, 1, default = 3))))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSig].getName, "hyperplane_sig"),
-      (children: Seq[Expression]) => HyperplaneSig(
-        arity("hyperplane_sig", children, 1, 2).head,
-        foldableInt("hyperplane_sig", "planes", children, 1, default = 12))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_q"),
-      new ExpressionInfo(classOf[DotQ].getName, "dot_q"),
-      (children: Seq[Expression]) => {
-        val c = arity("dot_q", children, 2, 2)
-        DotQ(c.head, c(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("quantize_vec"),
-      new ExpressionInfo(classOf[QuantizeVec].getName, "quantize_vec"),
-      (children: Seq[Expression]) => {
-        val c = arity("quantize_vec", children, 2, 2)
-        QuantizeVec(c.head, c(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nearest_cells"),
-      new ExpressionInfo(classOf[NearestCells].getName, "nearest_cells"),
-      (children: Seq[Expression]) => {
-        val c = arity("nearest_cells", children, 2, 3)
-        NearestCells(c.head, c(1),
-          foldableInt("nearest_cells", "nProbe", children, 2, default = 1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-      (children: Seq[Expression]) => {
-        val c = arity("pq_encode", children, 3, 3)
-        PqEncode(c.head, c(1), c(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("adc_dist"),
-      new ExpressionInfo(classOf[AdcDist].getName, "adc_dist"),
-      (children: Seq[Expression]) => {
-        val c = arity("adc_dist", children, 2, 2)
-        AdcDist(c.head, c(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (children: Seq[Expression]) => WinnowFps(
-        arity("winnow_fps", children, 1, 3).head,
-        foldableInt("winnow_fps", "k", children, 1, default = 4),
-        foldableInt("winnow_fps", "w", children, 2, default = 4))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
+
+object GraftExtensions {
+  import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+  import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+
+  /** The native function table. [[GraftExtensions.apply]] injects it
+    * into sessions built with `spark.sql.extensions`, and
+    * [[graft.Session.install]] registers it on a live session. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("rolling_hash", classOf[RollingHash])(c =>
+      RollingHash(arity("rolling_hash", c, 1, 1).head)),
+    fn("minhash_sig", classOf[MinHashSig])(c => MinHashSig(
+      arity("minhash_sig", c, 1, 2).head,
+      foldableInt("minhash_sig", "numHashes", c, 1, default = 32))),
+    fn("simhash_sig", classOf[SimHashSig])(c => SimHashSig(
+      arity("simhash_sig", c, 1, 2).head,
+      foldableInt("simhash_sig", "bits", c, 1, default = 60))),
+    fn("word_shingles", classOf[WordShingles])(c => WordShingles(
+      arity("word_shingles", c, 1, 2).head,
+      foldableInt("word_shingles", "n", c, 1, default = 3))),
+    fn("hyperplane_sig", classOf[HyperplaneSig])(c => HyperplaneSig(
+      arity("hyperplane_sig", c, 1, 2).head,
+      foldableInt("hyperplane_sig", "planes", c, 1, default = 12))),
+    fn("dot_q", classOf[DotQ]) { c =>
+      val a = arity("dot_q", c, 2, 2)
+      DotQ(a.head, a(1))
+    },
+    fn("quantize_vec", classOf[QuantizeVec]) { c =>
+      val a = arity("quantize_vec", c, 2, 2)
+      QuantizeVec(a.head, a(1))
+    },
+    fn("nearest_cells", classOf[NearestCells]) { c =>
+      val a = arity("nearest_cells", c, 2, 3)
+      NearestCells(a.head, a(1), foldableInt("nearest_cells", "nProbe", c, 2, default = 1))
+    },
+    fn("pq_encode", classOf[PqEncode]) { c =>
+      val a = arity("pq_encode", c, 3, 3)
+      PqEncode(a.head, a(1), a(2))
+    },
+    fn("adc_dist", classOf[AdcDist]) { c =>
+      val a = arity("adc_dist", c, 2, 2)
+      AdcDist(a.head, a(1))
+    },
+    fn("winnow_fps", classOf[WinnowFps])(c => WinnowFps(
+      arity("winnow_fps", c, 1, 3).head,
+      foldableInt("winnow_fps", "k", c, 1, default = 4),
+      foldableInt("winnow_fps", "w", c, 2, default = 4))),
     // Spark's own bloom-filter expressions, which core registers only
     // for the optimizer's injected runtime filters — exposing them as
     // functions gives pipelines an explicit "build once, prefilter a
     // huge scan" primitive (see Decontamination.contaminationScoresBloom).
     // bloom_filter_agg(longCol[, estimatedItems[, numBits]]) → binary
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (children: Seq[Expression]) => {
-        val c = arity("bloom_filter_agg", children, 1, 3)
-        c.size match {
-          case 1 => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c.head)
-          case 2 => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c.head, c(1))
-          case _ => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c.head, c(1), c(2))
-        }
-      }))
+    fn("bloom_filter_agg", classOf[BloomFilterAggregate]) { c =>
+      val a = arity("bloom_filter_agg", c, 1, 3)
+      a.size match {
+        case 1 => new BloomFilterAggregate(a.head)
+        case 2 => new BloomFilterAggregate(a.head, a(1))
+        case _ => new BloomFilterAggregate(a.head, a(1), a(2))
+      }
+    },
     // bloom_might_contain(binary, longCol) → boolean (no false negatives)
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        val c = arity("bloom_might_contain", children, 2, 2)
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(c.head, c(1))
-      }))
+    fn("bloom_might_contain", classOf[BloomFilterMightContain]) { c =>
+      val a = arity("bloom_might_contain", c, 2, 2)
+      BloomFilterMightContain(a.head, a(1))
+    },
     // cms_merge_agg(binary) → binary: in-plan Count-Min sketch rollup
     // (Spark ships the build aggregate but no merge — same gap as bloom)
-    ext.injectFunction((
-      FunctionIdentifier("cms_merge_agg"),
-      new ExpressionInfo(classOf[CmsMergeAgg].getName, "cms_merge_agg"),
-      (children: Seq[Expression]) => CmsMergeAgg(
-        arity("cms_merge_agg", children, 1, 1).head)))
+    fn("cms_merge_agg", classOf[CmsMergeAgg])(c =>
+      CmsMergeAgg(arity("cms_merge_agg", c, 1, 1).head)),
     // cms_estimate(binary, string) → bigint: in-plan point-frequency read
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (children: Seq[Expression]) => {
-        val c = arity("cms_estimate", children, 2, 2)
-        CmsEstimate(c.head, c(1))
-      }))
-  }
-}
+    fn("cms_estimate", classOf[CmsEstimate]) { c =>
+      val a = arity("cms_estimate", c, 2, 2)
+      CmsEstimate(a.head, a(1))
+    })
 
-object GraftExtensions {
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
   /** Reject wrong argument counts at resolution time with Spark's
     * standard error class (extra args would otherwise be silently
     * ignored by positional `lift`). */

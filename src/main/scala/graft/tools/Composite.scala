@@ -318,22 +318,10 @@ object CompositeScalingBench {
     // generated table stays a full-run artifact; partial patches would
     // mix hosts). Used to re-read a flagged row in isolation.
     val only = args.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "2").toInt
     val sfDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (both join children hashed on the SAME
-      // subset of join keys) is what the blocked pair join relies on —
-      // the bucketed-join dial
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.getOrCreate("graft-composite")
+    val cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     // measure the FULL recompute path: with the silver marts on, the
     // first trial pays the edge-list/panel build and the min-of-N

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Driver-job dissection for job-count-bound queries (the graph
   * loops): runs a named registry query once warm and once measured,
@@ -19,17 +18,7 @@ object JobProbe {
     require(args.nonEmpty, "usage: JobProbe <query> [sfDir]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.getOrCreate("graft-jobprobe")
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: marts, codegen, JIT

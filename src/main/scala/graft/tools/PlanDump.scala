@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the r17 plan-evidence deliverable (`plans/r17/<q>_<tag>.txt`).
@@ -15,18 +14,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> <query>...")
     val (outDir, tag, names) = (args(0), args(1), args.drop(2).toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.Session.getOrCreate("graft-plandump")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { q =>

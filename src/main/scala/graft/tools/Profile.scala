@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -12,22 +11,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val named = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", 32)
-      // subset co-partitioning (both join children hashed on the SAME
-      // subset of join keys) is what the blocked pair join relies on —
-      // the bucketed-join dial
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.adaptive.enabled",
-        !sys.env.get("PROFILE_NO_AQE").contains("1"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.Session.getOrCreate("graft-profile")
     spark.sparkContext.setLogLevel("WARN")
 
     // Execution-shape counters (jobs/stages/task-time/shuffle volume):

@@ -141,21 +141,8 @@ object Scaling {
   * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScalingBench"` */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning (both join children hashed on the SAME
-      // subset of join keys) is what the blocked pair join relies on —
-      // the bucketed-join dial
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.getOrCreate("graft-scaling")
+    val cpus = spark.sparkContext.defaultParallelism.toString
     spark.sparkContext.setLogLevel("WARN")
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
     val rows = Scaling.measure(spark, Scaling.scaleSensitive,

@@ -4,15 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One session for the whole test JVM (suites must not stop it). */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.getOrCreate("graft-tests")
 }
