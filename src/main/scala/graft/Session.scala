@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.plans.{GraftExtensions, PinPartitioningStrategy}
+import graft.sources.LocalFs
 
 /** The one way graft gets a session. Every main (the pipelines,
   * [[Verify]], [[Bench]], [[Explain]], the tools) and the test suite
@@ -33,11 +34,14 @@ object Session {
     install(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .getOrElse(build(appName)))
 
-  /** Idempotent: sets [[sqlConfs]] and registers the native function
-    * table and [[PinPartitioningStrategy]] where missing. Never touches
-    * the master or the shuffle-partition count. */
+  /** Idempotent: sets [[sqlConfs]] and [[LocalFs]]'s Hadoop keys, and
+    * registers the native function table and [[PinPartitioningStrategy]]
+    * where missing. Never touches the master or the shuffle-partition
+    * count. A `file:` FileSystem the JVM has already cached keeps its
+    * class; [[build]] sets the keys before the context starts. */
   def install(spark: SparkSession): SparkSession = {
     sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    LocalFs.hadoopConfs.foreach { case (k, v) => spark.sparkContext.hadoopConfiguration.set(k, v) }
     val registry = spark.sessionState.functionRegistry
     GraftExtensions.functions.foreach { case (id, info, builder) =>
       if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
@@ -55,6 +59,7 @@ object Session {
       .appName(appName)
       .master(master)
       .config(sqlConfs)
+      .config(LocalFs.hadoopConfs.map { case (k, v) => s"spark.hadoop.$k" -> v })
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -132,17 +132,12 @@ object Staging {
   /** True materialized bytes of an eager snapshot, from the block
     * manager (mem + disk). None when untracked (reliable checkpoints
     * don't persist; block reports can lag a kill). */
-  private def measuredBytes(snapped: DataFrame): Option[BigInt] = {
-    val m = PlanBridge.logicalPlan(snapped).collectFirst { case l: LogicalRDD => l.rdd.id }
+  private def measuredBytes(snapped: DataFrame): Option[BigInt] =
+    PlanBridge.logicalPlan(snapped).collectFirst { case l: LogicalRDD => l.rdd.id }
       .flatMap { id =>
         snapped.sparkSession.sparkContext.getRDDStorageInfo
           .find(_.id == id).map(i => BigInt(i.memSize + i.diskSize))
       }
-    if (sys.env.get("SPARK_GRAFT_STAGE_DEBUG").contains("1"))
-      System.err.println(s"[staging] snapshot cols=${snapped.columns.mkString(",")} " +
-        s"bytes=${m.getOrElse(-1)}")
-    m
-  }
 
   private def pinInstalled(df: DataFrame): Boolean =
     df.sparkSession.sessionState.planner.strategies

@@ -39,16 +39,18 @@ object TickStream {
     * default in-heap HDFS-backed provider. Stateful operators (window
     * aggs, dropDuplicates, mapGroupsWithState) keep state per key —
     * with millions of (symbol, window) keys the in-heap store competes
-    * with execution memory and stalls GC; RocksDB keeps state off-heap
-    * with changelog checkpointing for fast failover. Apply BEFORE
-    * starting queries: configureRocksDbState(spark). */
+    * with execution memory and stalls GC; RocksDB keeps state off-heap.
+    * Each commit uploads a full `<version>.zip` snapshot, so a restart
+    * loads one snapshot. With changelog checkpointing a commit uploads
+    * only a delta and snapshots come from a maintenance thread that
+    * first runs 60 s after a store opens; a seconds-long AvailableNow
+    * drain never reaches it, so every start would replay each changelog
+    * since batch 0. Apply BEFORE starting queries:
+    * configureRocksDbState(spark). */
   val rocksDbStateConfigs: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    // changelog checkpointing: upload only per-batch deltas, not full
-    // snapshots — the failover-time/throughput tradeoff that matters
-    // once state is tens of GB per executor
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
 
   def configureRocksDbState(spark: SparkSession): Unit =
     rocksDbStateConfigs.foreach { case (k, v) => spark.conf.set(k, v) }

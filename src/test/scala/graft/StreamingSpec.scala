@@ -645,48 +645,91 @@ class StreamingSpec extends AnyFunSpec {
 
   describe("StreamingPipeline checkpoint across a shuffle-partition change") {
     it("drains a checkpoint written at 8 partitions after the session moves to 4") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_parts").toString
-      val raw = new java.io.File(dir, "raw")
-      raw.mkdirs()
-      def land(name: String, rows: Seq[String]): Unit = {
-        val w = new java.io.PrintWriter(new java.io.File(raw, name))
-        w.println("symbol,timestamp,price,open,high,low,volume")
-        rows.foreach(w.println)
-        w.close()
-      }
-      def drain(): Unit = graft.jobs.Pipelines.StreamingPipeline.main(
-        Array(raw.getAbsolutePath, s"$dir/out", s"$dir/ckpt"))
-      // the main switches the state store to RocksDB on the session
-      val touched = "spark.sql.shuffle.partitions" +: TickStream.rocksDbStateConfigs.keys.toSeq
-      val saved = touched.map(k => k -> spark.conf.getOption(k))
-      try {
+      val zone = new TickDrain("graft_ckpt_parts")
+      TickDrain.isolated(spark) {
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        land("a.csv", Seq(
-          "AAPL,2024-01-01 10:00:00,10.0,10,10,10,1", "AAPL,2024-01-01 10:05:00,12.0,12,12,12,2",
-          "MSFT,2024-01-01 10:02:00,50.0,50,50,50,1", "AAPL,2024-01-01 10:16:00,13.0,13,13,13,3"))
-        drain()
+        zone.land("a.csv", TickDrain.firstRows)
+        zone.drain()
         spark.conf.set("spark.sql.shuffle.partitions", "4")
-        land("b.csv", Seq(
-          "MSFT,2024-01-01 10:31:00,52.0,52,52,52,2", "AAPL,2024-01-01 10:47:00,14.0,14,14,14,1",
-          "MSFT,2024-01-01 10:40:00,51.5,51,52,51,4",
-          // closes every window above: watermark 12:30
-          "AAPL,2024-01-01 13:00:00,1.0,1,1,1,1"))
-        drain()
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+        zone.land("b.csv", TickDrain.closingRows)
+        zone.drain()
       }
       val cols = Seq("symbol", "window_start", "window_end", "ma", "volatility", "volume_sum")
-      val out = spark.read.parquet(s"$dir/out").select(cols.map(col): _*)
+      val out = spark.read.parquet(s"${zone.dir}/out").select(cols.map(col): _*)
       val ticks = graft.operators.BatchCleaner.cleanTicks(spark.read
-        .schema(graft.sources.Schemas.rawTick).option("header", "true").csv(raw.getAbsolutePath))
+        .schema(graft.sources.Schemas.rawTick).option("header", "true").csv(zone.raw.getAbsolutePath))
       val want = TickAnalytics.windowAggregates(ticks, "15 minutes")
         .filter($"window_start" < Timestamp.valueOf("2024-01-01 13:00:00"))
       assert(want.count() == 5)
       assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
       // the stateful operator kept the checkpoint's 8 partitions
-      val stores = new java.io.File(s"$dir/ckpt/state/0").list().count(_.forall(_.isDigit))
-      assert(stores == 8)
+      assert(zone.stores.size == 8)
+    }
+  }
+
+  describe("StreamingPipeline restart") {
+    it("every state-store commit writes a full snapshot, never a changelog") {
+      val zone = new TickDrain("graft_ckpt_snap")
+      TickDrain.isolated(spark) {
+        zone.land("a.csv", TickDrain.firstRows)
+        zone.drain()
+        zone.land("b.csv", TickDrain.closingRows)
+        zone.drain()
+      }
+      // state-store version n is the state after batch n - 1
+      val last = new java.io.File(s"${zone.dir}/ckpt/commits").list()
+        .filter(_.forall(_.isDigit)).map(_.toLong).max + 1
+      assert(last >= 2, "two drains commit at least two batches")
+      assert(zone.stores.nonEmpty)
+      zone.stores.foreach { store =>
+        val files = store.list().toSeq
+        assert(!files.exists(_.endsWith(".changelog")), s"$store holds a changelog: $files")
+        assert(files.contains(s"$last.zip"), s"$store lacks the version-$last snapshot: $files")
+      }
+    }
+  }
+}
+
+/** A StreamingPipeline landing zone: CSV increments land in `raw`, a
+  * drain appends windows to `out` and checkpoints in `ckpt`. */
+class TickDrain(prefix: String) {
+  val dir: String = java.nio.file.Files.createTempDirectory(prefix).toString
+  val raw = new java.io.File(dir, "raw")
+  raw.mkdirs()
+
+  def land(name: String, rows: Seq[String]): Unit = {
+    val w = new java.io.PrintWriter(new java.io.File(raw, name))
+    w.println("symbol,timestamp,price,open,high,low,volume")
+    rows.foreach(w.println)
+    w.close()
+  }
+
+  def drain(): Unit = graft.jobs.Pipelines.StreamingPipeline.main(
+    Array(raw.getAbsolutePath, s"$dir/out", s"$dir/ckpt"))
+
+  /** The windowed aggregate's state-store directories, one per partition. */
+  def stores: Seq[java.io.File] =
+    new java.io.File(s"$dir/ckpt/state/0").listFiles().filter(_.getName.forall(_.isDigit)).toSeq
+}
+
+object TickDrain {
+  val firstRows = Seq(
+    "AAPL,2024-01-01 10:00:00,10.0,10,10,10,1", "AAPL,2024-01-01 10:05:00,12.0,12,12,12,2",
+    "MSFT,2024-01-01 10:02:00,50.0,50,50,50,1", "AAPL,2024-01-01 10:16:00,13.0,13,13,13,3")
+  val closingRows = Seq(
+    "MSFT,2024-01-01 10:31:00,52.0,52,52,52,2", "AAPL,2024-01-01 10:47:00,14.0,14,14,14,1",
+    "MSFT,2024-01-01 10:40:00,51.5,51,52,51,4",
+    // closes every window above: watermark 12:30
+    "AAPL,2024-01-01 13:00:00,1.0,1,1,1,1")
+
+  /** Runs `body` and restores the session confs a drain changes: the
+    * main switches the state store to RocksDB on the shared session. */
+  def isolated[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val touched = "spark.sql.shuffle.partitions" +: TickStream.rocksDbStateConfigs.keys.toSeq
+    val saved = touched.map(k => k -> spark.conf.getOption(k))
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }
