@@ -94,15 +94,6 @@ object Bench {
     // (the hybrid picks min-label here) — benching it would just count
     // the operator twice at its worst-case configuration.
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "5").toInt
-    // SPARK_GRAFT_TRIAL_DEBUG=1: per-trial wall + GC-pause time to
-    // stderr — the dissection knob for spread_gt3 flags (is a slow
-    // trial GC, or plan-level?). Off for driver runs.
-    val trialDebug = sys.env.get("SPARK_GRAFT_TRIAL_DEBUG").contains("1")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     // Deterministic block release per TRIAL: every RDD the trial
     // persisted (snapshot() panels localCheckpoint with a storage
     // level, so they all appear in getPersistentRDDs) is unpersisted
@@ -142,7 +133,7 @@ object Bench {
     val trialsByQuery = selSeq.zipWithIndex.map { case ((name, fn), idx) =>
       if (idx == mid) canaryMid = canary()
       // One UNTIMED warm run at the target SF before the timed trials:
-      // r12/r13 trial dissection (SPARK_GRAFT_TRIAL_DEBUG) showed every
+      // r12/r13 per-trial dissection (wall + GC pause) showed every
       // spread>3 flag was a first-trial-only cold start (gc≈0, trials
       // 2..N stable) whose burden rotates with QUERY POSITION across
       // rounds (r12 flagged token_rarity/repetition/dedup_recall at
@@ -153,13 +144,7 @@ object Bench {
       // artifact so the spread metric flags REAL bimodal plans only;
       // the min metric was never affected.
       timed(fn)
-      val times = (1 to trials).map { _ =>
-        val g0 = if (trialDebug) gcMillis else 0L
-        val t = timed(fn)
-        if (trialDebug)
-          System.err.println(f"[trial] $name $t%.3f s gc=${gcMillis - g0} ms")
-        t
-      }
+      val times = (1 to trials).map(_ => timed(fn))
       // Blocks are now freed deterministically per trial (above); the
       // per-query GC stays as a cheap second line against non-block JVM
       // residue (code cache, broadcast cleanup) — outside timed region.
@@ -198,8 +183,7 @@ object Bench {
     //      `vs_prev_gt2` and retried.
     // Total retry set is bounded (≤24 queries x (1 warm + N trials)).
     val firstMin = trialsByQuery.map { case (k, ts) => k -> ts.min }
-    val topSlowK = sys.env.getOrElse("SPARK_GRAFT_RETRY_TOPK", "8").toInt
-    val topSlow = firstMin.toSeq.sortBy(-_._2).take(topSlowK).map(_._1)
+    val topSlow = firstMin.toSeq.sortBy(-_._2).take(8).map(_._1)
     val ledgerPath = java.nio.file.Paths.get("bench_ledger.json")
     val (ledgerSf, ledgerMins): (Option[String], Map[String, Double]) =
       if (java.nio.file.Files.exists(ledgerPath)) {

@@ -5,7 +5,7 @@ import graft.plans.{GraftExtensions, PinPartitioningStrategy}
 import graft.sources.LocalFs
 
 /** The one way graft gets a session. Every main (the pipelines,
-  * [[Verify]], [[Bench]], [[Explain]], the tools) and the test suite
+  * [[Verify]], [[Bench]], the tools) and the test suite
   * call [[getOrCreate]]; a session built elsewhere (spark-submit, a
   * library user's notebook) gets the same confs and natives through
   * [[install]].

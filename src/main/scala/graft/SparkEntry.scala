@@ -566,11 +566,11 @@ object SparkEntry {
     // dial, r18): an INNER stream-stream join appends rows only in
     // data batches — the trailing no-data batch exists to advance the
     // watermark for emission-on-eviction sinks (outer joins, append-
-    // mode windows), emits nothing here, and costs a measured ~0.55 s
-    // fixed commit (StreamProfile: batch 3, rows=0, triggerExecution
-    // 549 ms). State eviction mid-query still runs between the k=3
-    // data batches — StreamingSpec's >1-batch + bounded-state guards
-    // are unaffected.
+    // mode windows), emits nothing here, and costs a ~0.55 s fixed
+    // commit (sf0.1 micro-batch progress: batch 3, rows=0,
+    // triggerExecution 549 ms). State eviction mid-query still runs
+    // between the k=3 data batches — StreamingSpec's >1-batch +
+    // bounded-state guards are unaffected.
     val progress = withStatePartitions(s, 4) {
       withSqlConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
         val q = TickStream.toParquet(joined, s"$out/table", s"$out/ckpt").start()

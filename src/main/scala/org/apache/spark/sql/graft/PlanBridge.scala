@@ -2,14 +2,15 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** `private[sql]` bridge (the standard extension-library shim — the
   * same door Delta/Iceberg/Hudi open): build a DataFrame from a raw
   * [[LogicalPlan]], and read one back. Needed by
   * [[graft.sources.Staging.snapshotKeyed]] to wrap a checkpointed
   * frame in [[graft.plans.PinHashPartitioning]] — there is no public
-  * Dataset API that attaches a custom logical node. Nothing else in
+  * Dataset API that attaches a custom logical node — and by
+  * [[graft.tools.Probe]] to flush the listener bus. Nothing else in
   * the repo goes through this package. */
 object PlanBridge {
 
@@ -18,4 +19,8 @@ object PlanBridge {
 
   def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(df.sparkSession.asInstanceOf[CSparkSession], plan)
+
+  /** Blocks until every event posted so far reached every listener,
+    * streaming-query listeners included (their bus listens on this one). */
+  def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,0 +1,66 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.scalatest.funspec.AnyFunSpec
+import graft.tools.Probe
+
+/** [[Probe]] reports jobs, task time, plans and micro-batch phases for
+  * registry queries, with every event of a run and none of another's. */
+class ProbeSpec extends AnyFunSpec {
+  import SharedSpark.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  private def withOut[T](body: String => T): T = {
+    val out = Files.createTempDirectory("graft_probe").toFile
+    try body(out.getPath)
+    finally new scala.reflect.io.Directory(out).deleteRecursively()
+  }
+
+  describe("Probe.probe") {
+    it("records a batch query's jobs, task time and final plan, each job ended") {
+      withOut { out =>
+        val runs = Probe.probe(spark, dir, out, "q_mart_stock_performance")
+        assert(runs.size == Probe.Runs)
+        runs.foreach { r =>
+          val recs = Seq(r.construct, r.execute)
+          assert(recs.map(_.jobs.size).sum >= 1)
+          assert(recs.map(_.taskS).sum > 0)
+          assert(recs.flatMap(_.jobs).forall(j => j.endMs >= j.startMs), r.json)
+        }
+        val plan = new String(Files.readAllBytes(Paths.get(out, "q_mart_stock_performance.plan.txt")), "UTF-8")
+        assert(plan.contains("Physical Plan"))
+        val lines = Files.readAllLines(Paths.get(out, "layers.jsonl"))
+        assert(lines.size == Probe.Runs && lines.get(0).startsWith("{\"query\":\"q_mart_stock_performance\""))
+      }
+    }
+
+    it("records the micro-batch phases of a streaming lane") {
+      withOut { out =>
+        val batches = Probe.probe(spark, dir, out, "q_stream_join").last.construct.batches
+        assert(batches.nonEmpty)
+        assert(batches.exists(b => Seq("addBatch", "walCommit").forall(b.durationsMs.contains)),
+          batches)
+      }
+    }
+  }
+
+  describe("Probe.record") {
+    it("keeps two records on one session apart, even behind a lagging listener") {
+      // delivery to every later listener waits on this one
+      val lag = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Thread.sleep(200)
+        override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(200)
+      }
+      spark.sparkContext.addSparkListener(lag)
+      val (first, second) = try {
+        val (_, first) = Probe.record(spark)(spark.range(1000).selectExpr("sum(id)").collect())
+        (first, Probe.record(spark)(())._2)
+      } finally spark.sparkContext.removeSparkListener(lag)
+      assert(first.jobs.nonEmpty && first.jobs.forall(_.endMs >= 0), first.json)
+      assert(first.stages >= 1 && first.plans.nonEmpty, first.json)
+      assert(second.jobs.isEmpty && second.stages == 0 && second.tasks == 0 && second.plans.isEmpty,
+        second.json)
+    }
+  }
+}

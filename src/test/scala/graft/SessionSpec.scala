@@ -10,7 +10,8 @@ import graft.sources.Staging
 
 /** [[Session]] is the one way a graft entry point gets its session:
   * confs and natives reach sessions graft did not build, installing
-  * twice changes nothing, and no second session builder creeps back. */
+  * twice changes nothing, and no second session builder or hand-written
+  * listener creeps back. */
 class SessionSpec extends AnyFunSpec {
   import SharedSpark.spark
 
@@ -67,6 +68,13 @@ class SessionSpec extends AnyFunSpec {
       val builder = "SparkSession" + ".builder"
       val hits = scalaFiles("src").filter(p => read(p).contains(builder)).map(_.toString)
       assert(hits == Seq("src/main/scala/graft/Session.scala"))
+    }
+
+    it("no Spark or streaming-query listener outside graft/tools/Probe.scala") {
+      val listener = "(extends|with|new)\\s+[\\w.]*\\b(SparkListener|StreamingQueryListener)\\b".r
+      val hits = scalaFiles("src/main").filter(p => listener.findFirstIn(read(p)).nonEmpty)
+        .map(_.toString)
+      assert(hits == Seq("src/main/scala/graft/tools/Probe.scala"))
     }
 
     it("no registration checks in the operators: the natives are the only path") {

@@ -47,44 +47,30 @@ class StagingSpec extends AnyFunSpec {
   describe("Profiling.globalRank regime gate") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    import scala.jdk.CollectionConverters._
     import graft.operators.Profiling
+    import graft.tools.Probe
 
     /** Under `confs`: ranks equal `row_number() OVER (ORDER BY v, id)`,
       * in one column order, through the range device iff `range`. */
     def ranked(range: Boolean, confs: (String, String)*): Unit = {
       import spark.implicits._
-      import org.scalatest.concurrent.Eventually._
-      import org.scalatest.time.SpanSugar._
       val df = (1L to 40L).map(i => (i, i * 7919L % 13)).toDF("id", "v")
       val want = df
         .withColumn("rn", row_number().over(Window.orderBy("v", "id")).cast("long"))
         .withColumn("nn", count(lit(1)).over(Window.partitionBy()))
-      // the device's own executions (its snapshots) carry the range cut
-      val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            executed.add(s.physicalPlanDescription)
-          case _ =>
-        }
-      }
       var plan = ""
-      spark.sparkContext.addSparkListener(listener)
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val got = try Profiling.globalRank(df, Seq(col("v"), col("id")), "rn", "nn") { r =>
-        plan = r.queryExecution.sparkPlan.toString
-        r
-      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-      try {
-        assert(got.columns.toSeq == Seq("id", "v", "rn", "nn"))
-        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-        assert(plan.contains("__pid") == range, plan)
-        // listener events arrive asynchronously
-        if (range) eventually(timeout(30.seconds)) {
-          assert(executed.asScala.exists(_.contains("rangepartitioning")))
+      val (got, rec) = try Probe.record(spark) {
+        Profiling.globalRank(df, Seq(col("v"), col("id")), "rn", "nn") { r =>
+          plan = r.queryExecution.sparkPlan.toString
+          r
         }
-      } finally spark.sparkContext.removeSparkListener(listener)
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+      assert(got.columns.toSeq == Seq("id", "v", "rn", "nn"))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      assert(plan.contains("__pid") == range, plan)
+      // the device's own executions (its snapshots) carry the range cut
+      if (range) assert(rec.plans.exists(_.contains("rangepartitioning")))
     }
 
     it("keeps the single bounded window under the pin dial") {
