@@ -59,6 +59,28 @@ object Bench {
       case _ => hostFactor <= 1.5 && ledgerSfOrDefault(ledgerSf) == sfDir
     }
 
+  /** Wall seconds of one trial `body`, then deterministic block
+    * release: every RDD the trial persisted (snapshot() panels
+    * localCheckpoint with a storage level, so they all appear in
+    * getPersistentRDDs) is unpersisted explicitly, OUTSIDE the timed
+    * region, before the next trial starts. The r13 scheme (one
+    * System.gc per query + ContextCleaner) demonstrably failed for
+    * snapshot-HEAVY queries: q_hits runs 7 eager snapshot jobs per
+    * trial and churned localCheckpoint blocks faster than the GC-driven
+    * cleaner reclaimed them, so the driver record showed 5.74 s where
+    * the isolated 12-trial steady state is ~2.0 s. unpersist() frees
+    * the blocks synchronously — no GC race. The bench, the scaling
+    * gate ([[graft.tools.Scaling.measure]]) and the composite probe
+    * all time through this. */
+  def timed(spark: SparkSession)(body: => Any): Double = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val t0 = System.nanoTime()
+    try { body; (System.nanoTime() - t0) / 1e9 }
+    finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = true)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.getOrCreate("graft-bench")
@@ -94,28 +116,9 @@ object Bench {
     // (the hybrid picks min-label here) — benching it would just count
     // the operator twice at its worst-case configuration.
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "5").toInt
-    // Deterministic block release per TRIAL: every RDD the trial
-    // persisted (snapshot() panels localCheckpoint with a storage
-    // level, so they all appear in getPersistentRDDs) is unpersisted
-    // explicitly, OUTSIDE the timed region, before the next trial
-    // starts. The r13 scheme (one System.gc per query + ContextCleaner)
-    // demonstrably failed for snapshot-HEAVY queries: q_hits runs 7
-    // eager snapshot jobs per trial and churned localCheckpoint blocks
-    // faster than the GC-driven cleaner reclaimed them, so the driver
-    // record showed 5.74 s where the isolated 12-trial steady state is
-    // ~2.0 s. unpersist() frees the blocks synchronously — no GC race.
-    def releaseNewBlocks(before: scala.collection.Set[Int]): Unit =
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = true)
-      }
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      releaseNewBlocks(before)
-      dt
-    }
+    // one trial: a failed run records -1 rows and its wall time
+    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Bench.timed(spark)(try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L })
     // Fixed host canary ([[HostCanary]]) at run START / MIDDLE / END.
     // Purpose: the r14 driver record was taken during sustained
     // multi-second host stalls that min-of-5 could not dodge

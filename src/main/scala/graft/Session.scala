@@ -51,6 +51,18 @@ object Session {
     spark
   }
 
+  /** Runs `body` with each `(key, value)` set on the session, then
+    * restores each key's prior value, or unsets the key if it had none. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private def build(appName: String): SparkSession = {
     val master = sys.props.get("spark.master")
       .orElse(sys.env.get("SPARK_GRAFT_CPUS").map(n => s"local[$n]"))

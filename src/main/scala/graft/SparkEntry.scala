@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import graft.functions.Funcs._
 import graft.operators._
-import graft.sources.{Adapters, Marts, Tables}
+import graft.sources.{Adapters, Marts, Scratch, Tables}
 import graft.sources.Staging.Snapshottable
+import graft.streaming.{CorpusStream, TickStream}
 
 /** Driver contract — maps every operator in SURVEY.md §2 (plus the
   * LLM-data-pipeline extensions) to a query over the shared testdata
@@ -98,6 +100,64 @@ object SparkEntry {
     TickAnalytics.windowAggregatesExact(Adapters.ticks(s, dir), "1 hour")
       .orderBy("symbol", "window_start")
 
+  /** One `Trigger.AvailableNow` drain of a streaming lane: a fresh
+    * scratch dir `out`; `sink(out)` started and awaited under the
+    * lane's scoped confs; the sink read back by `read(out)` and
+    * snapshotted before `out` (checkpoint and sink alike) is deleted.
+    * Returns the result and the query's `recentProgress`.
+    *
+    * `statePartitions` pins `spark.sql.shuffle.partitions` — which
+    * fixes a NEW streaming query's state-store partition count — for
+    * the drain only. The registered streaming queries move ~35 K rows
+    * per micro-batch, but every state store pays a fixed commit cost
+    * per batch: at the session's 32 partitions that is up to 128 store
+    * commits per batch (4 stores per partition for a stream-stream
+    * join) of ~nothing each — pure overhead, ~1.5 s per query at this
+    * volume. Four partitions carry the same data with 1/8th the commit
+    * fan-out; the keyed monitors take two (see [[qStreamCusum]]). On a
+    * cluster the partition count scales with executors × per-partition
+    * volume; this pin is the harness-scale setting of the same dial
+    * (checkpoints are fresh per run, so no stored partition count is
+    * ever contradicted). `noDataBatches = false` drops the trailing
+    * no-data batch where the sink emits nothing in it (the two joins). */
+  private def drain(s: SparkSession, prefix: String, statePartitions: Int,
+                    noDataBatches: Boolean = true)(
+      sink: String => DataStreamWriter[Row])(read: String => DataFrame)
+      : (DataFrame, Array[StreamingQueryProgress]) = {
+    val out = Scratch.dir(prefix)
+    try {
+      val confs = Seq("spark.sql.shuffle.partitions" -> statePartitions.toString) ++
+        Option.when(!noDataBatches)("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      val progress = Session.withConf(s, confs: _*) {
+        val q = sink(out).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q.recentProgress
+      }
+      (read(out).snapshot(), progress)
+    } finally Scratch.deleteDir(out)
+  }
+
+  /** `dir`'s `table` as a file stream: the file source wants a
+    * directory to watch, so the one table is selected out of the shared
+    * sf dir by filename glob. */
+  private def tableStream(s: SparkSession, dir: String, table: String): DataFrame =
+    s.readStream.schema(Tables.table(s, dir, table).schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
+
+  /** A staged events replay ([[sharedEventStage]]) as a file stream,
+    * one chunk file per micro-batch. */
+  private def replayStream(s: SparkSession, dir: String, stage: String): DataFrame =
+    s.readStream.schema(Tables.events(s, dir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+
+  /** The events' `ts` as epoch microseconds, from either encoding
+    * (nanos-as-long or timestamp). */
+  private def tsMicros(events: DataFrame): Column = events.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType => expr("ts div 1000")
+    case _ => expr("unix_micros(cast(ts as timestamp))")
+  }
+
   /** §2.8 through the CORRECTNESS gate: the same 15-minute window lane
     * as `q_tick_windows_15m`, computed end-to-end through Structured
     * Streaming — readStream parquet source → watermarked exact window
@@ -106,62 +166,8 @@ object SparkEntry {
     * assertion. (Append-mode file sink can't express the equality —
     * windows overlapping the final watermark never close — hence the
     * complete-mode snapshot; see TickStream.snapshotSink.) */
-  /** Pin `spark.sql.shuffle.partitions` — which fixes a NEW streaming
-    * query's state-store partition count — around a start→drain block,
-    * restoring the session value after. The registered streaming
-    * queries move ~35 K rows per micro-batch, but every state store
-    * pays a fixed commit cost per batch: at the session's 32
-    * partitions that is up to 128 store commits per batch (4 stores
-    * per partition for a stream-stream join) of ~nothing each — pure
-    * overhead, ~1.5 s per query at this volume. Four partitions carry
-    * the same data with 1/8th the commit fan-out. On a cluster the
-    * partition count scales with executors × per-partition volume;
-    * this pin is the harness-scale setting of the same dial, applied
-    * only to the query inside the block (checkpoints are fresh per
-    * run, so no stored partition count is ever contradicted). */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Harness scratch space for the streaming queries' throwaway
-    * artifacts (staged replay chunks, checkpoints, sink tables — all
-    * deleted or content-cached after the run): prefers the RAM-backed
-    * /dev/shm when mounted so the bench measures the engine's
-    * micro-batch work, not the sandbox's virtual-disk fsync latency
-    * (measured ~0.1 s per micro-batch commit on /tmp's block device).
-    * PRODUCTION note: a real deployment's checkpointLocation must live
-    * on durable shared storage (HDFS/S3) — that is exactly-once's
-    * recovery log; only this local replay harness, whose inputs are
-    * immutable staged files, may keep it in RAM. */
-  private[graft] def scratchBase: java.nio.file.Path = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) shm.toPath
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-  private[graft] def scratchDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(scratchBase, prefix).toString
-
-  /** Scoped SQL-conf override (set → body → restore), for per-query
-    * streaming knobs the session default should not inherit. */
-  private def withSqlConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   private def qStreamWindows15m(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
-    val out = scratchDir("graft_stream_w15")
-    // The file stream source wants a directory to watch; select the
-    // single events table out of the shared sf dir by filename glob.
-    val ev = s.readStream.schema(Tables.events(s, dir).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val ev = tableStream(s, dir, "events")
     // Watermarks require TIMESTAMP (instant) — the batch lane's
     // TIMESTAMP_NTZ is cast through the session's pinned-UTC timezone
     // on the way in and back on the way out, both wall-clock-preserving.
@@ -170,23 +176,16 @@ object SparkEntry {
       Adapters.eventTime(ev).cast("timestamp").as("event_time"),
       col("value").as("price"),
       lit(1L).as("volume"))
-    withStatePartitions(s, 4) {
-      val q = TickStream.snapshotSink(
-          TickStream.windowedExact(ticks, "15 minutes", "30 minutes"),
-          s"$out/table", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = s.read.parquet(s"$out/table")
-      .select(col("symbol"),
-        col("window_start").cast("timestamp_ntz").as("window_start"),
-        col("window_end").cast("timestamp_ntz").as("window_end"),
-        col("ma"), col("volatility"), col("volume_sum"))
-      .orderBy("symbol", "window_start")
-      .snapshot() // materialize, then drop the temp snapshot+checkpoint
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_w15", 4)(out => TickStream.snapshotSink(
+        TickStream.windowedExact(ticks, "15 minutes", "30 minutes"),
+        s"$out/table", s"$out/ckpt")) { out =>
+      s.read.parquet(s"$out/table")
+        .select(col("symbol"),
+          col("window_start").cast("timestamp_ntz").as("window_start"),
+          col("window_end").cast("timestamp_ntz").as("window_end"),
+          col("ma"), col("volatility"), col("volume_sum"))
+        .orderBy("symbol", "window_start")
+    }._1
   }
 
   /** The 4-hour-gap sessionization computed THROUGH the streaming
@@ -194,12 +193,7 @@ object SparkEntry {
     * snapshot sink) against q_session_windows' oracle — streaming ≡
     * batch for MERGING session state, not just tumbling windows. */
   private def qStreamSessions(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
-    val out = scratchDir("graft_stream_sess")
-    val evb = Tables.events(s, dir)
-    val ev = s.readStream.schema(evb.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val ev = tableStream(s, dir, "events")
     val sessions = ev.select(col("user_id"),
         Adapters.eventTime(ev).cast("timestamp").as("event_time"), col("value"))
       .withWatermark("event_time", "1 hour")
@@ -210,17 +204,10 @@ object SparkEntry {
         col("sw.start").cast("timestamp_ntz").as("session_start"),
         col("sw.end").cast("timestamp_ntz").as("session_end"),
         col("n_events"), col("value_sum"))
-    withStatePartitions(s, 4) {
-      val q = TickStream.snapshotSink(sessions, s"$out/table", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = s.read.parquet(s"$out/table")
-      .orderBy("user_id", "session_start")
-      .snapshot() // materialize, then drop the temp snapshot+checkpoint
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_sess", 4)(out =>
+      TickStream.snapshotSink(sessions, s"$out/table", s"$out/ckpt")) { out =>
+      s.read.parquet(s"$out/table").orderBy("user_id", "session_start")
+    }._1
   }
 
   /** Streaming HEAVY HITTERS through the engine: events replayed as a
@@ -236,85 +223,58 @@ object SparkEntry {
     * error bound are property-tested in StreamingSpec. State is
     * O(shards x capacity) regardless of stream length. */
   private def qStreamTopk(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
     import s.implicits._
-    val out = scratchDir("graft_stream_topk")
-    val evb = Tables.events(s, dir)
-    val ev = s.readStream.schema(evb.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val typed = ev.select(col("event_type"),
+    val typed = tableStream(s, dir, "events").select(col("event_type"),
         pmod(col("user_id"), lit(4)).cast("int").as("shard"), col("user_id"))
       .as[(String, Int, Long)]
     val updates = TickStream.spaceSavingTopK(typed, capacity = 1024, emitK = 16)
-    withStatePartitions(s, 4) {
-      val q = TickStream.upsertSink(updates.toDF(), s"$out/table", s"$out/ckpt",
-          Seq("event_type", "shard"), "total_events")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy(col("cnt").desc, col("user_id"))
-    val result = s.read.parquet(s"$out/table")
-      .select(col("event_type"), explode(col("summary")).as("e"))
-      .select(col("event_type"), col("e.user_id").as("user_id"),
-        col("e.cnt").as("cnt"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= 10)
-      .select("event_type", "rank", "user_id", "cnt")
-      .orderBy("event_type", "rank")
-      .snapshot()
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_topk", 4)(out => TickStream.upsertSink(updates.toDF(),
+        s"$out/table", s"$out/ckpt", Seq("event_type", "shard"), "total_events")) { out =>
+      s.read.parquet(s"$out/table")
+        .select(col("event_type"), explode(col("summary")).as("e"))
+        .select(col("event_type"), col("e.user_id").as("user_id"),
+          col("e.cnt").as("cnt"))
+        .withColumn("rank", row_number().over(w).cast("int"))
+        .filter(col("rank") <= 10)
+        .select("event_type", "rank", "user_id", "cnt")
+        .orderBy("event_type", "rank")
+    }._1
   }
 
   /** Streaming two-sided Page CUSUM drift monitor: per-symbol prefix-
     * sum state folded micro-batch by micro-batch over the shared
-    * 3-chunk ordered replay (TickStream.cusumMonitor), upserted per
-    * trigger; the final table equals the batch window computation
-    * exactly (integer arithmetic end to end), giving the online
-    * detector a full SQL-window oracle. τ=50.00, slack 2.00,
-    * h=1500.00 — fixed literals (near the tick-value scale, so both
-    * sides genuinely excurse) mirrored in the oracle. */
+    * ordered replay (TickStream.cusumMonitor), upserted per trigger;
+    * the final table equals the batch window computation exactly
+    * (integer arithmetic end to end), giving the online detector a
+    * full SQL-window oracle. τ=50.00, slack 2.00, h=1500.00 — fixed
+    * literals (near the tick-value scale, so both sides genuinely
+    * excurse) mirrored in the oracle.
+    *
+    * 2 state partitions, not 4: the keyed monitors hold one state row
+    * per symbol (5 here) — every extra partition is a RocksDB store
+    * instance opened+committed per micro-batch for zero keys. (The
+    * joins/windows keep 4: their state is row-granular.) */
   private def qStreamCusum(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
     import s.implicits._
-    val out = scratchDir("graft_stream_cusum")
-    val evb = Tables.events(s, dir)
     // k=2: the monitor needs ordered multi-batch ACCUMULATION (state
     // carried across a batch boundary), not the joins' watermark-
     // eviction proof — see sharedEventStage's k contract
-    val ev = s.readStream.schema(evb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(sharedEventStage(s, dir, k = 2))
-    val tsMicros = evb.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => expr("unix_micros(cast(ts as timestamp))")
-    }
-    val input = ev.select(col("event_type"), tsMicros.as("tus"),
+    val ev = replayStream(s, dir, sharedEventStage(s, dir, k = 2))
+    val input = ev.select(col("event_type"), tsMicros(ev).as("tus"),
         scaled(col("value"), 2).as("x2"))
       .as[(String, Long, Long)]
     val updates = TickStream.cusumMonitor(input,
       target = 5000L, slack = 200L, threshold = 150000L)
-    // 2 state partitions, not 4: the keyed monitors hold one state row
-    // per symbol (5 here) — every extra partition is a RocksDB store
-    // instance opened+committed per micro-batch for zero keys. (The
-    // joins/windows keep 4: their state is row-granular.)
-    withStatePartitions(s, 2) {
-      val q = TickStream.upsertSink(updates.toDF(), s"$out/table", s"$out/ckpt",
-          Seq("symbol"), "n_events")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = s.read.parquet(s"$out/table")
-      .select(col("symbol"), col("n_events"), col("s_plus"), col("s_minus"),
-        col("max_s_plus"), col("max_s_minus"), col("first_alarm_n"),
-        col("first_alarm_n").isNotNull.as("alarmed"))
-      .orderBy("symbol")
-      .snapshot()
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_cusum", 2)(out => TickStream.upsertSink(updates.toDF(),
+        s"$out/table", s"$out/ckpt", Seq("symbol"), "n_events")) { out =>
+      s.read.parquet(s"$out/table")
+        .select(col("symbol"), col("n_events"), col("s_plus"), col("s_minus"),
+          col("max_s_plus"), col("max_s_minus"), col("first_alarm_n"),
+          col("first_alarm_n").isNotNull.as("alarmed"))
+        .orderBy("symbol")
+    }._1
   }
 
   /** Streaming EWMA energy control chart: per-symbol RiskMetrics
@@ -323,34 +283,19 @@ object SparkEntry {
     * per trigger; the final table equals the batch list-fold exactly
     * — the online twin of q_ewma_vol's offline estimate. */
   private def qStreamEwma(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
     import s.implicits._
-    val out = scratchDir("graft_stream_ewma")
-    val evb = Tables.events(s, dir)
-    val ev = s.readStream.schema(evb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(sharedEventStage(s, dir, k = 2))
-    val tsMicros = evb.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => expr("unix_micros(cast(ts as timestamp))")
-    }
-    val input = ev.select(col("event_type"), tsMicros.as("tus"),
+    val ev = replayStream(s, dir, sharedEventStage(s, dir, k = 2))
+    val input = ev.select(col("event_type"), tsMicros(ev).as("tus"),
         scaled(col("value"), 2).as("x2"))
       .as[(String, Long, Long)]
     val updates = TickStream.ewmaMonitor(input)
-    withStatePartitions(s, 2) {
-      val q = TickStream.upsertSink(updates.toDF(), s"$out/table", s"$out/ckpt",
-          Seq("symbol"), "n_events")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = s.read.parquet(s"$out/table")
-      .select(col("symbol"), col("n_events"), col("ewma2"), col("max_ewma2"),
-        rd(sqrt(col("ewma2").cast("double")) / 100.0, 4).as("ewma_val"))
-      .orderBy("symbol")
-      .snapshot()
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_ewma", 2)(out => TickStream.upsertSink(updates.toDF(),
+        s"$out/table", s"$out/ckpt", Seq("symbol"), "n_events")) { out =>
+      s.read.parquet(s"$out/table")
+        .select(col("symbol"), col("n_events"), col("ewma2"), col("max_ewma2"),
+          rd(sqrt(col("ewma2").cast("double")) / 100.0, 4).as("ewma_val"))
+        .orderBy("symbol")
+    }._1
   }
 
   /** Streaming A/B experiment monitor: per-metric sufficient
@@ -359,26 +304,12 @@ object SparkEntry {
     * mSPRT readout equals the one-pass batch aggregate exactly —
     * the always-on experiment dashboard, state O(|metrics|). */
   private def qStreamAb(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
     import s.implicits._
-    val out = scratchDir("graft_stream_ab")
-    val evb = Tables.events(s, dir)
-    val ev = s.readStream.schema(evb.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val typed = ev.select(col("event_type"), col("user_id"),
+    val typed = tableStream(s, dir, "events").select(col("event_type"), col("user_id"),
         scaled(col("value"), 2).as("v2"))
       .as[(String, Long, Long)]
     val updates = TickStream.abMonitor(typed)
-    withStatePartitions(s, 2) {
-      val q = TickStream.upsertSink(updates.toDF(), s"$out/table", s"$out/ckpt",
-          Seq("metric"), "n_total")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val t = s.read.parquet(s"$out/table")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+    val dec = (c: Column) => c.cast("decimal(38,0)")
     val n = col("n_ctrl") + col("n_treat")
     val ssum = col("s_ctrl") + col("s_treat")
     val sigma2 = (dec(n) * col("s_sq") - dec(ssum) * ssum).cast("double") /
@@ -389,47 +320,15 @@ object SparkEntry {
     val t2 = 0.1 * 0.1
     val lam = sqrt(sigma2 / (sigma2 + h * t2)) *
       exp(h * h * t2 * delta * delta / (lit(2.0) * sigma2 * (sigma2 + h * t2)))
-    val result = t.filter(col("n_ctrl") > 0 && col("n_treat") > 0)
-      .select(col("metric"), col("n_ctrl"), col("n_treat"),
-        rd(delta, 4).as("delta"), rd(lam, 4).as("lambda"),
-        rd(least(lit(1.0), lit(1.0) / lam), 4).as("p_final"))
-      .orderBy("metric")
-      .snapshot()
-    deleteDir(out)
-    result
-  }
-
-  /** Recursive temp-dir cleanup for the streaming snapshot queries —
-    * repeated bench/correctness runs must not accumulate orphans. */
-  private[graft] def deleteDir(path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-  }
-
-  /** Content digest of a dataset path for staging-cache keys: full MD5
-    * over every regular file's RELATIVE path, length and mtime
-    * (recursing into directories — a Spark-written dataset is a
-    * directory whose own mtime/length do NOT change when its part
-    * files are regenerated in place, so a directory-level key could
-    * silently replay stale data). Metadata, not bytes: the inputs are
-    * driver-generated immutable parquet, and any rewrite touches part
-    * mtimes; hashing 100 K part STATS is cheap where hashing bytes
-    * would re-read the table. */
-  private[graft] def contentKey(root: java.io.File): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val base = root.toPath
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach(walk)
-      else
-        md.update(s"${base.relativize(f.toPath)}:${f.length}:${f.lastModified}\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    md.update(s"${root.getAbsolutePath}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    walk(root)
-    md.digest().map("%02x".format(_)).mkString
+    drain(s, "graft_stream_ab", 2)(out => TickStream.upsertSink(updates.toDF(),
+        s"$out/table", s"$out/ckpt", Seq("metric"), "n_total")) { out =>
+      s.read.parquet(s"$out/table")
+        .filter(col("n_ctrl") > 0 && col("n_treat") > 0)
+        .select(col("metric"), col("n_ctrl"), col("n_treat"),
+          rd(delta, 4).as("delta"), rd(lam, 4).as("lambda"),
+          rd(least(lit(1.0), lit(1.0) / lam), 4).as("p_final"))
+        .orderBy("metric")
+    }._1
   }
 
   /** The streaming DEDUP lane computed THROUGH the engine: documents
@@ -440,24 +339,11 @@ object SparkEntry {
     * ≡ batch for the LLM-data lane, the q_stream_windows_15m
     * assertion applied to dedup. */
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.CorpusStream
-    val out = scratchDir("graft_stream_dedup")
-    val docs = s.readStream.schema(Tables.documents(s, dir).schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    withStatePartitions(s, 4) {
-      val q = CorpusStream.dedupIngest(docs, "doc_id", "text",
-          s"$out/store", s"$out/flags", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = s.read.parquet(s"$out/flags")
-      .select("id1", "id2", "jaccard")
-      .orderBy("id1", "id2")
-      .snapshot() // materialize, then drop the temp store+flags+ckpt
-    deleteDir(out)
-    result
+    val docs = tableStream(s, dir, "documents")
+    drain(s, "graft_stream_dedup", 4)(out => CorpusStream.dedupIngest(docs, "doc_id", "text",
+        s"$out/store", s"$out/flags", s"$out/ckpt")) { out =>
+      s.read.parquet(s"$out/flags").select("id1", "id2", "jaccard").orderBy("id1", "id2")
+    }._1
   }
 
   /** Stream-stream INTERVAL JOIN computed THROUGH the engine: views
@@ -482,12 +368,28 @@ object SparkEntry {
   private def qStreamJoin(s: SparkSession, dir: String): DataFrame =
     streamJoinRun(s, dir)._1
 
+  /** The shared k-chunk time-ordered replay stage of raw events, one
+    * [[graft.sources.Scratch.cached]] entry per (k, events content):
+    * stage once, every ordered-replay consumer reads the same immutable
+    * chunk files.
+    *
+    * k is part of the cache name: the stream-stream JOINS need k=3 (the
+    * smallest replay that advances the watermark twice mid-query, so
+    * state EVICTION provably runs — StreamingSpec's >1-data-batch +
+    * <25%-state guards), while the keyed MONITORS (CUSUM) need only
+    * ordered multi-batch accumulation — k=2 proves state carries
+    * across a batch boundary and pays the fixed ~0.8 s/micro-batch
+    * commit floor one less time. */
+  private[graft] def sharedEventStage(s: SparkSession, dir: String, k: Int = 3): String =
+    Scratch.cached(s"sj_stage_k$k", 1, Seq(new java.io.File(s"$dir/events.parquet")))(
+      TickStream.stageTimeChunks(Tables.events(s, dir), "ts", k, _))
+
   /** [[qStreamJoin]] body, also returning the per-micro-batch progress
     * so StreamingSpec can assert the state stayed bounded.
     *
     * Harness-shape tuning, both sides documented for the cluster case:
-    *   - state partitions are pinned to 4 for THIS query (restored
-    *     after): each micro-batch here carries ~35 K rows, and the
+    *   - state partitions are pinned to 4 for THIS query ([[drain]]):
+    *     each micro-batch here carries ~35 K rows, and the
     *     stream-stream join keeps 4 state stores per partition whose
     *     per-batch commit cost is fixed — 32 partitions means 128
     *     store commits of ~nothing each, pure overhead at this volume.
@@ -499,54 +401,23 @@ object SparkEntry {
     *     staged directory once instead of twice — on a cluster this
     *     halves the driver's file-index work per trigger, and here it
     *     removes one of the two fixed per-batch source round trips.
-    *   - the staged time-chunks are cached per CONTENT digest (every
-    *     part file's relative path + length + mtime, full MD5 width —
-    *     a directory's own mtime does not change when a dataset is
-    *     regenerated in place, so keying on it could replay stale
-    *     data); stale graft_sj_stage_* dirs from older inputs are
-    *     removed at stage time. Checkpoint and sink stay fresh per run
+    *   - the staged time-chunks are the content-keyed
+    *     [[sharedEventStage]]. Checkpoint and sink stay fresh per run
     *     (exactly-once state is per-query, only the immutable input
-    *     replay is shared). */
-  /** The shared k-chunk time-ordered replay stage of raw events,
-    * content-keyed and cached across queries/runs: stage once, every
-    * ordered-replay consumer reads the same immutable chunk files.
-    *
-    * k is part of the cache key: the stream-stream JOINS need k=3 (the
-    * smallest replay that advances the watermark twice mid-query, so
-    * state EVICTION provably runs — StreamingSpec's >1-data-batch +
-    * <25%-state guards), while the keyed MONITORS (CUSUM) need only
-    * ordered multi-batch accumulation — k=2 proves state carries
-    * across a batch boundary and pays the fixed ~0.8 s/micro-batch
-    * commit floor one less time. */
-  private[graft] def sharedEventStage(s: SparkSession, dir: String,
-                                      k: Int = 3): String = {
-    import graft.streaming.TickStream
-    val events = Tables.events(s, dir)
-    val src = new java.io.File(s"$dir/events.parquet")
-    val prefix = s"graft_sj_stage_k${k}_"
-    val staged = new java.io.File(
-      scratchBase.toFile, s"$prefix${contentKey(src)}")
-    if (!new java.io.File(staged, "_STAGED").exists) { // partial stage from a killed run → re-stage
-      // drop stage dirs OF THIS k keyed by inputs that no longer exist
-      // in this form (regenerated data ⇒ new digest ⇒ garbage), plus
-      // any legacy un-k'd dirs from older builds
-      Option(staged.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName != staged.getName
-          && (f.getName.startsWith(prefix)
-            || f.getName.matches("graft_sj_stage_[0-9a-f]{32}")))
-        .foreach(f => deleteDir(f.toString))
-      TickStream.stageTimeChunks(events, "ts", k, staged.toString)
-    }
-    staged.toString
-  }
-
+    *     replay is shared).
+    *   - noDataMicroBatches is off FOR THIS QUERY (the
+    *     q_stream_join_outer dial, r18): an INNER stream-stream join
+    *     appends rows only in data batches — the trailing no-data batch
+    *     exists to advance the watermark for emission-on-eviction sinks
+    *     (outer joins, append-mode windows), emits nothing here, and
+    *     costs a ~0.55 s fixed commit (sf0.1 micro-batch progress:
+    *     batch 3, rows=0, triggerExecution 549 ms). State eviction
+    *     mid-query still runs between the k=3 data batches —
+    *     StreamingSpec's >1-batch + bounded-state guards are
+    *     unaffected. */
   private[graft] def streamJoinRun(s: SparkSession, dir: String)
-      : (DataFrame, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    import graft.streaming.TickStream
-    val out = scratchDir("graft_stream_join")
-    val events = Tables.events(s, dir)
-    val src0 = s.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(sharedEventStage(s, dir))
+      : (DataFrame, Array[StreamingQueryProgress]) = {
+    val src0 = replayStream(s, dir, sharedEventStage(s, dir))
     val views = src0.filter(col("event_type") === "view")
       .select(col("user_id").as("symbol"),
         Adapters.eventTime(src0).cast("timestamp").as("event_time"),
@@ -561,28 +432,11 @@ object SparkEntry {
         col("quote_time").cast("timestamp_ntz").as("click_time"))
     // append-mode parquet sink: inner join matches emit as found
     // (only OUTER joins wait on the watermark), so the AvailableNow
-    // replay lands the complete batch-equivalent result.
-    // noDataMicroBatches off FOR THIS QUERY (the q_stream_join_outer
-    // dial, r18): an INNER stream-stream join appends rows only in
-    // data batches — the trailing no-data batch exists to advance the
-    // watermark for emission-on-eviction sinks (outer joins, append-
-    // mode windows), emits nothing here, and costs a ~0.55 s fixed
-    // commit (sf0.1 micro-batch progress: batch 3, rows=0,
-    // triggerExecution 549 ms). State eviction mid-query still runs
-    // between the k=3 data batches — StreamingSpec's >1-batch +
-    // bounded-state guards are unaffected.
-    val progress = withStatePartitions(s, 4) {
-      withSqlConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-        val q = TickStream.toParquet(joined, s"$out/table", s"$out/ckpt").start()
-        q.awaitTermination()
-        q.recentProgress
-      }
+    // replay lands the complete batch-equivalent result
+    drain(s, "graft_stream_join", 4, noDataBatches = false)(out =>
+      TickStream.toParquet(joined, s"$out/table", s"$out/ckpt")) { out =>
+      s.read.parquet(s"$out/table").orderBy("user_id", "view_id", "click_id")
     }
-    val result = s.read.parquet(s"$out/table")
-      .orderBy("user_id", "view_id", "click_id")
-      .snapshot() // materialize, then drop the temp snapshot+checkpoint
-    deleteDir(out)
-    (result, progress)
   }
 
   /** Stream-stream LEFT OUTER interval join THROUGH the engine — the
@@ -609,56 +463,56 @@ object SparkEntry {
     * removes one fixed ~0.5 s micro-batch commit without changing
     * the result: null emission still runs mid-data in batch 2 (under
     * batch 1's watermark) and the state store still holds chunks,
-    * never both full inputs. */
+    * never both full inputs.
+    *
+    * noDataMicroBatches is off FOR THIS QUERY: with the t1 sentinels
+    * folded into the last data chunk, every real null-extended row is
+    * already emitted by the t2 flush batch (it runs under the
+    * t1-advanced watermark); the trailing no-data batch AvailableNow
+    * would otherwise append emits only the t2 sentinels' own unmatched
+    * rows — which the sink read filters out — at a measured ~0.5 s
+    * fixed commit cost. Streaming queries that DO need the no-data
+    * batch for final-state emission (sessions, windows) keep the
+    * session default. */
   private def qStreamJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.TickStream
     val sentinelUser = -999999L
-    val out = scratchDir("graft_stream_join_o")
-    val events = Tables.events(s, dir)
-    val src = new java.io.File(s"$dir/events.parquet")
-    // v2 in the name: the staged LAYOUT changed (sentinel pair 1 folded
-    // into the data chunks) — digest-equal dirs from the older 4-file
-    // layout must not be reused, and the prefix cleanup below drops them
-    val staged = new java.io.File(
-      scratchBase.toFile, s"graft_sjo_stage_v2_${contentKey(src)}")
-    if (!new java.io.File(staged, "_STAGED").exists) {
-      Option(staged.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_sjo_stage_")
-          && f.getName != staged.getName)
-        .foreach(f => deleteDir(f.toString))
-      val tsType = events.schema("ts").dataType
-      def sentinelTs(iso: String, nanos: Long) = tsType match {
-        // the nanos-as-long encoding; else a plain cast
-        case org.apache.spark.sql.types.LongType => lit(nanos)
-        case _ => lit(iso).cast(tsType)
-      }
-      def sentinel(eventType: String, id: Long,
-                   ts: org.apache.spark.sql.Column) = events.limit(1)
-        .select(events.columns.map {
-          case "event_id" => lit(id).cast(events.schema("event_id").dataType).as("event_id")
-          case "user_id" => lit(sentinelUser).cast(events.schema("user_id").dataType).as("user_id")
-          case "event_type" => lit(eventType).as("event_type")
-          case "ts" => ts.as("ts")
-          case c => col(c)
-        }: _*)
-      // sentinel pair 1 (t1) is folded into the staged data — its
-      // year-2099 rows range-sort into the TOP chunk, so the last data
-      // batch also advances both watermarks past all real data; pair 2
-      // (t2) is the one flush file whose batch emits the null-extended
-      // rows under that watermark. 2 data chunks: one mid-data
-      // watermark advance exercises early null emission mid-query; the
-      // deeper chunked replay/eviction proof is the INNER query's job
-      // (k=3 there), and each extra file costs a fixed ~0.5 s
-      // micro-batch commit.
-      val t1 = sentinelTs("2099-01-01 00:00:00", 4070908800000000000L)
-      val t2 = sentinelTs("2100-01-01 00:00:00", 4102444800000000000L)
-      TickStream.stageTimeChunks(
-        events.union(sentinel("view", -1L, t1)).union(sentinel("click", -2L, t1)),
-        "ts", 2, staged.toString,
-        flush = Seq(sentinel("view", -3L, t2).union(sentinel("click", -4L, t2))))
+    // version 2: the staged LAYOUT changed (sentinel pair 1 folded into
+    // the data chunks) — entries of the older 4-file layout must not be
+    // reused, and the cache evicts them
+    val staged = Scratch.cached("sjo_stage", 2, Seq(new java.io.File(s"$dir/events.parquet"))) {
+      stage =>
+        val events = Tables.events(s, dir)
+        val tsType = events.schema("ts").dataType
+        def sentinelTs(iso: String, nanos: Long) = tsType match {
+          // the nanos-as-long encoding; else a plain cast
+          case org.apache.spark.sql.types.LongType => lit(nanos)
+          case _ => lit(iso).cast(tsType)
+        }
+        def sentinel(eventType: String, id: Long, ts: Column) = events.limit(1)
+          .select(events.columns.map {
+            case "event_id" => lit(id).cast(events.schema("event_id").dataType).as("event_id")
+            case "user_id" => lit(sentinelUser).cast(events.schema("user_id").dataType).as("user_id")
+            case "event_type" => lit(eventType).as("event_type")
+            case "ts" => ts.as("ts")
+            case c => col(c)
+          }: _*)
+        // sentinel pair 1 (t1) is folded into the staged data — its
+        // year-2099 rows range-sort into the TOP chunk, so the last data
+        // batch also advances both watermarks past all real data; pair 2
+        // (t2) is the one flush file whose batch emits the null-extended
+        // rows under that watermark. 2 data chunks: one mid-data
+        // watermark advance exercises early null emission mid-query; the
+        // deeper chunked replay/eviction proof is the INNER query's job
+        // (k=3 there), and each extra file costs a fixed ~0.5 s
+        // micro-batch commit.
+        val t1 = sentinelTs("2099-01-01 00:00:00", 4070908800000000000L)
+        val t2 = sentinelTs("2100-01-01 00:00:00", 4102444800000000000L)
+        TickStream.stageTimeChunks(
+          events.union(sentinel("view", -1L, t1)).union(sentinel("click", -2L, t1)),
+          "ts", 2, stage,
+          flush = Seq(sentinel("view", -3L, t2).union(sentinel("click", -4L, t2))))
     }
-    val src0 = s.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged.toString)
+    val src0 = replayStream(s, dir, staged)
     val views = src0.filter(col("event_type") === "view")
       .select(col("user_id").as("symbol"),
         Adapters.eventTime(src0).cast("timestamp").as("event_time"),
@@ -678,27 +532,12 @@ object SparkEntry {
       .select(col("symbol").as("user_id"), col("view_id"), col("click_id"),
         col("event_time").cast("timestamp_ntz").as("view_time"),
         col("quote_time").cast("timestamp_ntz").as("click_time"))
-    // noDataMicroBatches off FOR THIS QUERY: with the t1 sentinels
-    // folded into the last data chunk, every real null-extended row is
-    // already emitted by the t2 flush batch (it runs under the
-    // t1-advanced watermark); the trailing no-data batch AvailableNow
-    // would otherwise append emits only the t2 sentinels' own unmatched
-    // rows — which the sink read filters out — at a measured ~0.5 s
-    // fixed commit cost. Streaming queries that DO need the no-data
-    // batch for final-state emission (sessions, windows) keep the
-    // session default.
-    withSqlConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      withStatePartitions(s, 2) {
-        val q = TickStream.toParquet(joined, s"$out/table", s"$out/ckpt").start()
-        q.awaitTermination()
-      }
-    }
-    val result = s.read.parquet(s"$out/table")
-      .filter(col("user_id") =!= sentinelUser) // drop the flush sentinels
-      .orderBy("user_id", "view_id", "click_id")
-      .snapshot() // materialize, then drop the temp snapshot+checkpoint
-    deleteDir(out)
-    result
+    drain(s, "graft_stream_join_o", 2, noDataBatches = false)(out =>
+      TickStream.toParquet(joined, s"$out/table", s"$out/ckpt")) { out =>
+      s.read.parquet(s"$out/table")
+        .filter(col("user_id") =!= sentinelUser) // drop the flush sentinels
+        .orderBy("user_id", "view_id", "click_id")
+    }._1
   }
 
   private def qRealtimeAnalytics(s: SparkSession, dir: String): DataFrame =

@@ -18,15 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * panels are materialized, partitioned tables in the lake (the
   * medallion pattern the reference implements bronze→silver→gold),
   * refreshed when the raw layer changes — which is exactly what the
-  * content key detects. Locally the cache lives in scratch
-  * ([[graft.SparkEntry.scratchBase]], tmpfs when available) keyed by
-  * the full MD5 of the raw table's part stats, the same key
-  * discipline as the staged streaming replay
-  * ([[graft.SparkEntry.sharedEventStage]]): regenerating the input in
-  * place changes part mtimes ⇒ new key ⇒ stale marts are dropped and
-  * rebuilt. A half-written mart from a killed run is invisible (the
-  * `_MART` marker lands only after a successful write) and gets
-  * rebuilt.
+  * content key detects. Locally the cache is [[Scratch.cached]]
+  * (tmpfs when available), the same cache as the staged streaming
+  * replays, keyed by the full MD5 of the raw tables' part stats:
+  * regenerating the input in place changes part mtimes ⇒ new key ⇒ the
+  * mart is rebuilt. A half-written mart from a killed run is never
+  * published and gets rebuilt.
   *
   * Lossless by construction: the panel's columns are int64 keys, a
   * date, min/max of the raw doubles and an integer-valued volume —
@@ -46,14 +43,14 @@ object Marts {
   /** Daily OHLCV bars (silver): content-keyed materialization of
     * [[Adapters.dailyBars]], keyed on the raw lineitem table. */
   def dailyBars(s: SparkSession, dir: String): DataFrame =
-    materialized(s, s"$dir/lineitem.parquet", "daily_bars")(
+    materialized(s, "daily_bars", s"$dir/lineitem.parquet")(
       Adapters.dailyBars(s, dir))
 
   /** Returns panel (silver): [[graft.operators.DailyAnalytics.dailyReturns]]
     * over [[dailyBars]] — the `int_daily_prices` twin, one window pass
     * materialized instead of re-run by every consumer. */
   def dailyReturns(s: SparkSession, dir: String): DataFrame =
-    materialized(s, s"$dir/lineitem.parquet", "daily_returns")(
+    materialized(s, "daily_returns", s"$dir/lineitem.parquet")(
       graft.operators.DailyAnalytics.dailyReturns(dailyBars(s, dir)))
 
   /** Bipartite customer–supplier co-purchase edge list (silver): the
@@ -62,8 +59,7 @@ object Marts {
     * materialized instead of five. Node ids pack kind in the low bit
     * (even = customer·2, odd = supplier·2+1). */
   def bipartiteEdges(s: SparkSession, dir: String): DataFrame =
-    materialized(s, Seq(s"$dir/orders.parquet", s"$dir/lineitem.parquet"),
-      "bipartite_edges") {
+    materialized(s, "bipartite_edges", s"$dir/orders.parquet", s"$dir/lineitem.parquet") {
       import org.apache.spark.sql.functions._
       Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
         .join(Tables.lineitem(s, dir)
@@ -78,7 +74,7 @@ object Marts {
     * (triangles/clustering/Adamic-Adar/assortativity) share; the
     * heaviest graph prep in the registry, materialized once. */
   def copurchasePairs(s: SparkSession, dir: String): DataFrame =
-    materialized(s, s"$dir/lineitem.parquet", "copurchase_pairs") {
+    materialized(s, "copurchase_pairs", s"$dir/lineitem.parquet") {
       import org.apache.spark.sql.functions._
       val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
       li.join(li.select(col("l_orderkey"), col("l_partkey").as("p2")), "l_orderkey")
@@ -95,7 +91,7 @@ object Marts {
     * lineitem scan + per-order window is the expensive prep of the
     * directed-graph lane; materialized once like [[copurchasePairs]]. */
   def sequenceEdges(s: SparkSession, dir: String): DataFrame =
-    materialized(s, s"$dir/lineitem.parquet", "sequence_edges") {
+    materialized(s, "sequence_edges", s"$dir/lineitem.parquet") {
       import org.apache.spark.sql.functions._
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
@@ -108,62 +104,12 @@ object Marts {
         .distinct()
     }
 
-  private def materialized(s: SparkSession, srcPath: String, name: String)(
-      build: => DataFrame): DataFrame =
-    materialized(s, Seq(srcPath), name)(build)
-
-  private def materialized(s: SparkSession, srcPaths: Seq[String], name: String)(
+  private def materialized(s: SparkSession, name: String, srcPaths: String*)(
       build: => DataFrame): DataFrame = {
     if (!enabled(s)) return build
     val srcs = srcPaths.map(new java.io.File(_))
     if (!srcs.forall(_.exists)) return build // non-standard layout → recompute
-    val prefix = s"graft_mart_${name}_v${Version}_"
-    // multi-source key: md5 over the per-source content keys, in order
-    val md = java.security.MessageDigest.getInstance("MD5")
-    srcs.foreach(f => md.update(
-      graft.SparkEntry.contentKey(f).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val target = new java.io.File(
-      graft.SparkEntry.scratchBase.toFile,
-      prefix + md.digest().map("%02x".format(_)).mkString)
-    val marker = new java.io.File(target, "_MART")
-    this.synchronized {
-      if (marker.exists) {
-        // LRU touch on cache HITS: eviction below ranks siblings by
-        // lastModified, which otherwise only reflects build time — a
-        // hot mart could be evicted from under a concurrent JVM once
-        // >5 content keys coexist. Bumping the dir mtime on every read
-        // makes the keep-newest-5 rank approximate least-recently-USED.
-        target.setLastModified(System.currentTimeMillis())
-      }
-      if (!marker.exists) {
-        // Evict stale caches of THIS mart, keeping the newest few
-        // content keys: several inputs legitimately coexist (the three
-        // sf dirs, a composite amplification), and evicting every
-        // other key on each build made alternating workloads thrash —
-        // a composite run would delete all sf0.1 marts, so the next
-        // bench rebuilt them. Old VERSIONS and .build dirs from a
-        // killed run are stale by definition and always go.
-        val siblings = Option(target.getParentFile.listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName != target.getName
-            && f.getName.startsWith(s"graft_mart_${name}_"))
-        val (current, stale) = siblings.partition(f =>
-          f.getName.startsWith(prefix) && !f.getName.contains(".build"))
-        stale.foreach(f => graft.SparkEntry.deleteDir(f.toString))
-        current.sortBy(-_.lastModified()).drop(5)
-          .foreach(f => graft.SparkEntry.deleteDir(f.toString))
-        // build into a pid-suffixed temp dir, publish by ATOMIC rename:
-        // a concurrent JVM building the same mart cannot interleave
-        // part files with ours, and a reader never sees a half-written
-        // dir (the _MART marker only exists inside a completed build)
-        val tmp = new java.io.File(target.getParentFile,
-          target.getName + ".build" + ProcessHandle.current().pid())
-        build.write.mode("overwrite").parquet(tmp.toString)
-        new java.io.File(tmp, "_MART").createNewFile()
-        if (!tmp.renameTo(target)) // lost the cross-process race: theirs won
-          graft.SparkEntry.deleteDir(tmp.toString)
-      }
-    }
-    s.read.parquet(target.toString)
+    s.read.parquet(Scratch.cached(s"mart_$name", Version, srcs)(
+      build.write.mode("overwrite").parquet(_)))
   }
 }

@@ -254,17 +254,6 @@ object TickStream {
         }
       }
 
-  /** Stream-stream inner join: each tick matched with the quotes for
-    * the same symbol whose `quote_time` falls within `tolerance`
-    * BEFORE the tick (the streaming twin of the backward as-of window
-    * — every candidate match, lag-bounded).
-    *
-    * Both sides are watermarked and the join condition carries the
-    * event-time range, which is what BOUNDS THE STATE: Spark keeps a
-    * side's rows only until watermark + tolerance passes, then evicts.
-    * A stream-stream join without the time-range predicate would have
-    * to buffer both streams forever — the classic unbounded-state
-    * trap. Append output; matches emit once both watermarks pass. */
   /** Stream-static dimension enrichment: the streaming tick lane
     * left-joined to a STATIC dim (sector/tier — the sp500_tickers
     * seed), broadcast per micro-batch by Spark's stream-static join
@@ -296,8 +285,9 @@ object TickStream {
     * FileStreamSource processes pending files oldest-mtime-first.
     * Since chunk i+1's earliest timestamp is ≥ chunk i's latest, no
     * row ever arrives behind the watermark — zero late drops, so the
-    * chunked replay is row-identical to the single-batch one. */
-  /** `flush`: optional frames staged as the FINAL files of the replay
+    * chunked replay is row-identical to the single-batch one.
+    *
+    * `flush`: optional frames staged as the FINAL files of the replay
     * (one file per element, in order) — the watermark-flush sentinels
     * an OUTER stream-stream join needs. Outer joins emit their
     * unmatched-side nulls only in a batch that RUNS with the watermark
@@ -307,7 +297,12 @@ object TickStream {
     * second gives the join a batch to evict state and emit the
     * null-extended rows under it (a single sentinel advances the
     * watermark and then the query stops — emission never runs). The
-    * caller filters sentinel rows out of the result. */
+    * caller filters sentinel rows out of the result.
+    *
+    * The replay order exists only once the mtime stamping is done, so a
+    * caller that shares a stage publishes it through
+    * [[graft.sources.Scratch.cached]], whose marker lands after this
+    * returns. */
   def stageTimeChunks(df: DataFrame, timeCol: String, k: Int, dir: String,
                       flush: Seq[DataFrame] = Nil): Unit = {
     def parts() = new java.io.File(dir).listFiles()
@@ -324,13 +319,21 @@ object TickStream {
     files.zipWithIndex.foreach { case (f, i) =>
       f.setLastModified(base + (i + 1) * 1000L)
     }
-    // marker AFTER the mtime stamping: callers that cache a staged dir
-    // must not reuse one whose replay order was never established
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_STAGED"), Array.empty[Byte])
   }
 
-  /** `joinType` "left_outer": unmatched ticks emit null-extended ONCE
+  /** Stream-stream inner join: each tick matched with the quotes for
+    * the same symbol whose `quote_time` falls within `tolerance`
+    * BEFORE the tick (the streaming twin of the backward as-of window
+    * — every candidate match, lag-bounded).
+    *
+    * Both sides are watermarked and the join condition carries the
+    * event-time range, which is what BOUNDS THE STATE: Spark keeps a
+    * side's rows only until watermark + tolerance passes, then evicts.
+    * A stream-stream join without the time-range predicate would have
+    * to buffer both streams forever — the classic unbounded-state
+    * trap. Append output; matches emit once both watermarks pass.
+    *
+    * `joinType` "left_outer": unmatched ticks emit null-extended ONCE
     * both watermarks pass their match window — pair with a
     * [[stageTimeChunks]] `flush` sentinel so a draining replay
     * actually reaches that point for the final chunk's rows. */

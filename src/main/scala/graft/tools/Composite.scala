@@ -329,26 +329,17 @@ object CompositeScalingBench {
     // post-prep algorithm only. The probe's claim is about the whole
     // operator including its heaviest join, so marts are disabled here.
     spark.conf.set("graft.marts.materialize", "false")
-    val base = graft.SparkEntry.scratchDir("graft_composite")
+    val base = graft.sources.Scratch.dir("graft_composite")
     val (entityDir, dateDir) = buildComposites(spark, sfDir, base)
 
-    // Deterministic block release per timed run — the same fix the
-    // main bench took in r13 (Bench.scala releaseNewBlocks): snapshot
-    // localCheckpoint blocks otherwise ACCUMULATE across the ~45
-    // families of a full regen, and by mid-run the composite-scale
+    // Deterministic block release per timed run (graft.Bench.timed):
+    // snapshot localCheckpoint blocks otherwise ACCUMULATE across the
+    // ~45 families of a full regen, and by mid-run the composite-scale
     // trials measure executor memory pressure instead of the plan
     // (r15: q_hits recorded 64 s / ratio 31 in the full sweep vs
     // 27.5 s / ratio 9.6 isolated on the same code and host).
-    def timed(name: String, dir: String): Double = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = true)
-      }
-      dt
-    }
+    def timed(name: String, dir: String): Double =
+      graft.Bench.timed(spark)(graft.SparkEntry.queries(name)(spark, dir).count())
     // warm codegen/JIT at the bench scale itself
     (entityFamilies.map(_._1) ++ dateFamilies.map(_._1)).distinct
       .filter(n => only.isEmpty || only(n))
@@ -357,11 +348,6 @@ object CompositeScalingBench {
     // cluster turns): 10× the input at the session's 32 partitions
     // means 10× the per-task agg map, which spills; 128 partitions
     // keep per-task state at roughly the sf0.1 working-set size
-    def withParts[T](n: Int)(body: => T): T = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-      try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
     // per-row SPREAD (max/min over the trials at each scale) makes
     // regens comparable: the r14 wave-3 commit cited a pairs ratio
     // (11.2) that a later regen on a drifting host measured at 46.9 —
@@ -374,7 +360,7 @@ object CompositeScalingBench {
       val ts0 = (1 to trials).map(_ => { System.gc(); timed(n, sfDir) })
       val t0 = ts0.min
       println(f"[composite] $n sf0.1 $t0%.2f s (spread ${spreadOf(ts0)}%.2f)")
-      val ts1 = withParts(128) {
+      val ts1 = graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> "128") {
         (1 to trials).map(_ => { System.gc(); timed(n, dir) }) }
       val t1 = ts1.min
       println(f"[composite] $n composite $t1%.2f s (ratio ${t1 / math.max(t0, 0.15)}%.1f)")
@@ -392,7 +378,7 @@ object CompositeScalingBench {
     if (only.nonEmpty) {
       println(f"[composite] diagnostic mode: host_factor ${hf(canaryStart)}%.2f" +
         f" -> ${hf(canaryEnd)}%.2f; SCALING.md NOT rewritten")
-      graft.SparkEntry.deleteDir(base)
+      graft.sources.Scratch.deleteDir(base)
       spark.stop()
       return
     }
@@ -456,7 +442,7 @@ object CompositeScalingBench {
     }
     java.nio.file.Files.write(path, next.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"SCALING.md composite section written (allOk=$allOk)")
-    graft.SparkEntry.deleteDir(base)
+    graft.sources.Scratch.deleteDir(base)
     spark.stop()
   }
 }

@@ -84,34 +84,28 @@ object Scaling {
     // on, trial 2+ reads a parquet cache and the ratio would measure
     // the post-prep algorithm only — an all-pairs regression in the
     // edge-list prep would slip the gate. Disable for the measurement.
-    val prevMarts = spark.conf.getOption("graft.marts.materialize")
-    spark.conf.set("graft.marts.materialize", "false")
-    def timed(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    try {
-    if (new java.io.File(warmDir).isDirectory)
-      queries.foreach { case (n, _, _) =>
-        try timed(n, warmDir) catch { case _: Throwable => () }
+    // Every run goes through Bench.timed, which releases the blocks the
+    // run persisted: snapshot() panels from the previous query (or,
+    // in-suite, from 400 earlier tests on the shared session) otherwise
+    // squeeze the LARGE-side trials' execution memory, and the growth
+    // ratio measures memory pressure, not the plan (r13 in-suite flake:
+    // q_retrieval_ndcg 0.36 s isolated vs 2.77 s mid-suite). As in
+    // Bench, one GC per query stays as a second line against non-block
+    // JVM residue (broadcast and shuffle cleanup wait on it).
+    def timed(name: String, dir: String): Double =
+      graft.Bench.timed(spark)(SparkEntry.queries(name)(spark, dir).count())
+    graft.Session.withConf(spark, "graft.marts.materialize" -> "false") {
+      if (new java.io.File(warmDir).isDirectory)
+        queries.foreach { case (n, _, _) =>
+          try timed(n, warmDir) catch { case _: Throwable => () }
+        }
+      def minOf(n: String, dir: String): Double = {
+        System.gc()
+        (1 to trials).map(_ => timed(n, dir)).min
       }
-    // Same dead-block discipline as Bench: snapshot() panels from the
-    // previous query (or, in-suite, from 400 earlier tests on the
-    // shared session) are unpersisted only after a GC notices their
-    // references died; without this the LARGE-side trials of later
-    // queries run with squeezed execution memory and the growth ratio
-    // measures memory pressure, not the plan (r13 in-suite flake:
-    // q_retrieval_ndcg 0.36 s isolated vs 2.77 s mid-suite).
-    def gcThen(t: => Double): Double = { System.gc(); t }
-    val small = queries.map { case (n, _, _) =>
-      n -> gcThen((1 to trials).map(_ => timed(n, smallDir)).min) }.toMap
-    val large = queries.map { case (n, _, _) =>
-      n -> gcThen((1 to trials).map(_ => timed(n, largeDir)).min) }.toMap
-    queries.map { case (n, t, g) => Growth(n, t, g, small(n), large(n)) }
-    } finally prevMarts match {
-      case Some(v) => spark.conf.set("graft.marts.materialize", v)
-      case None => spark.conf.unset("graft.marts.materialize")
+      val small = queries.map { case (n, _, _) => n -> minOf(n, smallDir) }.toMap
+      val large = queries.map { case (n, _, _) => n -> minOf(n, largeDir) }.toMap
+      queries.map { case (n, t, g) => Growth(n, t, g, small(n), large(n)) }
     }
   }
 

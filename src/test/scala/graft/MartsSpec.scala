@@ -1,18 +1,30 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths}
 import org.scalatest.funspec.AnyFunSpec
-import graft.sources.{Adapters, Marts}
+import graft.sources.{Adapters, Marts, Scratch}
 import graft.operators.DailyAnalytics
 
 /** The materialized-silver-marts contract: reading the content-keyed
   * parquet mart is BIT-IDENTICAL to recomputing the panel from raw,
-  * and the kill-switch forces the recompute path. */
+  * and the kill-switch forces the recompute path. The cache behind it,
+  * [[Scratch.cached]], keeps entries for different inputs untouched and
+  * publishes nothing from a failed build. */
 class MartsSpec extends AnyFunSpec {
   import SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+
+  private def partMtimes(stage: String): Map[String, Long] =
+    new File(stage).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> f.lastModified).toMap
+
+  private def entries(name: String): Seq[String] =
+    Option(Scratch.base.toFile.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith(s"graft_${name}_")).toSeq
 
   describe("Marts materialization") {
     it("daily_bars mart equals the raw recompute exactly") {
@@ -61,37 +73,42 @@ class MartsSpec extends AnyFunSpec {
 
     it("scratch footprint stays bounded across alternating inputs") {
       // Simulated alternation: 7 distinct content keys of the SAME mart
-      // (copies of sf0.001 — contentKey hashes path+size+mtime, so each
-      // copy keys differently). Eviction keeps the newest 5 siblings
-      // BEFORE publishing the new build, so the steady-state footprint
-      // is 5 kept + 1 just-built = 6 dirs per mart name, never growth
-      // linear in the number of inputs a long session touches.
-      val scratch = graft.SparkEntry.scratchBase.toFile
-      def martDirs = Option(scratch.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_mart_daily_bars_"))
+      // and of the k=2 event stage (copies of sf0.001 — contentKey
+      // hashes path+size+mtime, so each copy keys differently).
+      // Eviction keeps the newest 5 siblings BEFORE publishing the new
+      // build, so the steady-state footprint is 5 kept + 1 just-built =
+      // 6 dirs per cache name, never growth linear in the number of
+      // inputs a long session touches.
+      def dirs(prefix: String) = Option(Scratch.base.toFile.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
       val tmp = java.nio.file.Files.createTempDirectory("marts_alt").toFile
       try {
         (0 until 7).foreach { k =>
           val in = new java.io.File(tmp, s"in$k")
           in.mkdirs()
-          val src = java.nio.file.Paths.get(dir, "lineitem.parquet")
-          val dst = java.nio.file.Paths.get(in.toString, "lineitem.parquet")
-          java.nio.file.Files.copy(src, dst)
-          dst.toFile.setLastModified(1700000000000L + k * 60000L) // distinct keys
+          Seq("lineitem", "events").foreach { t =>
+            val dst = java.nio.file.Paths.get(in.toString, s"$t.parquet")
+            java.nio.file.Files.copy(java.nio.file.Paths.get(dir, s"$t.parquet"), dst)
+            dst.toFile.setLastModified(1700000000000L + k * 60000L) // distinct keys
+          }
           Marts.dailyBars(spark, in.toString).count()
-          assert(martDirs.length <= 6,
-            s"mart footprint grew past keep-5+current after input $k: " +
-              martDirs.map(_.getName).mkString(", "))
+          SparkEntry.sharedEventStage(spark, in.toString, k = 2)
+          Seq("graft_mart_daily_bars_", "graft_sj_stage_k2_").foreach { prefix =>
+            val found = dirs(prefix)
+            assert(found.length <= 6,
+              s"$prefix footprint grew past keep-5+current after input $k: " +
+                found.map(_.getName).mkString(", "))
+          }
         }
-      } finally graft.SparkEntry.deleteDir(tmp.toString)
+      } finally Scratch.deleteDir(tmp.toString)
     }
 
     it("a cache READ refreshes eviction order — the touched mart survives, the untouched oldest goes") {
       // 6 distinct content keys, then a READ of key #0 (LRU touch),
       // then a 7th build: eviction keeps the newest-5 by mtime, so
       // the victim must be the UNTOUCHED oldest (#1), not the
-      // least-recently-built (#0) — pins the Marts.scala:131 hit-touch
-      val scratch = graft.SparkEntry.scratchBase.toFile
+      // least-recently-built (#0) — pins Scratch.cached's hit-touch
+      val scratch = Scratch.base.toFile
       def martDirs = Option(scratch.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("graft_mart_daily_bars_"))
         .map(_.getName).toSet
@@ -119,7 +136,7 @@ class MartsSpec extends AnyFunSpec {
         assert(now.contains(dirOf(0)), "touched mart #0 was evicted — LRU touch lost")
         assert(!now.contains(dirOf(1)), "victim should be the untouched oldest (#1): " +
           now.mkString(", "))
-      } finally graft.SparkEntry.deleteDir(tmp.toString)
+      } finally Scratch.deleteDir(tmp.toString)
     }
 
     it("graph edge-list marts equal their recompute path exactly") {
@@ -136,6 +153,45 @@ class MartsSpec extends AnyFunSpec {
       // the multi-source mart serves from its cache on the second read
       val files = Marts.bipartiteEdges(spark, dir).inputFiles.toSet
       assert(files.nonEmpty && files.forall(_.contains("graft_mart_bipartite_edges_")))
+    }
+  }
+
+  describe("Scratch.cached") {
+    it("staging a second input leaves the first event stage in place") {
+      val first = SparkEntry.sharedEventStage(spark, dir, k = 2)
+      val before = partMtimes(first)
+      assert(before.nonEmpty)
+      val copy = Files.createTempDirectory("graft_stage_copy").toFile
+      try {
+        Files.copy(Paths.get(dir, "events.parquet"), Paths.get(copy.toString, "events.parquet"))
+        val second = SparkEntry.sharedEventStage(spark, copy.toString, k = 2)
+        assert(second != first)
+        assert(new File(first).isDirectory, "staging a second input evicted the first")
+        assert(partMtimes(first) === before, "the first stage was rewritten")
+        Scratch.deleteDir(second)
+      } finally Scratch.deleteDir(copy.toString)
+    }
+
+    it("a build that throws publishes nothing, and the next call rebuilds") {
+      val src = Files.createTempDirectory("graft_scratch_src").toFile
+      var builds = 0
+      def build(fail: Boolean)(out: String): Unit = {
+        builds += 1
+        Files.createDirectories(Paths.get(out))
+        Files.write(Paths.get(out, "part-0"), Array[Byte](1))
+        if (fail) throw new IllegalStateException("build failed")
+      }
+      try {
+        intercept[IllegalStateException](Scratch.cached("spec_fail", 1, Seq(src))(build(fail = true)))
+        assert(entries("spec_fail").isEmpty)
+        val out = Scratch.cached("spec_fail", 1, Seq(src))(build(fail = false))
+        assert(builds == 2)
+        assert(new File(out, Scratch.Marker).exists)
+        assert(entries("spec_fail") == Seq(new File(out).getName), "a .build dir was left behind")
+        Scratch.cached("spec_fail", 1, Seq(src))(build(fail = false))
+        assert(builds == 2, "a finished entry was rebuilt")
+        Scratch.deleteDir(out)
+      } finally Scratch.deleteDir(src.toString)
     }
   }
 }

@@ -77,6 +77,18 @@ class SessionSpec extends AnyFunSpec {
       assert(hits == Seq("src/main/scala/graft/tools/Probe.scala"))
     }
 
+    it("scratch dirs and content keys only in graft/sources/Scratch.scala") {
+      val device = "contentKey\\(|createTempDirectory\\(|/dev/shm".r
+      val hits = scalaFiles("src/main").filter(p => device.findFirstIn(read(p)).nonEmpty)
+        .map(_.toString)
+      assert(hits == Seq("src/main/scala/graft/sources/Scratch.scala"))
+      val helper = "SparkEntry\\.(scratch\\w*|contentKey|deleteDir|sharedEventStage)".r
+      val users = (Paths.get("src/main/scala/graft/sources/Marts.scala") +:
+        scalaFiles("src/main/scala/graft/tools"))
+        .filter(p => helper.findFirstIn(read(p)).nonEmpty).map(_.toString)
+      assert(users.isEmpty)
+    }
+
     it("no registration checks in the operators: the natives are the only path") {
       val check = ("function" + "Exists|nat" + "Fn").r
       val hits = scalaFiles("src/main/scala/graft/operators")

@@ -313,9 +313,10 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("stageTimeChunks writes disjoint ascending time ranges with matching mtime order") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_chunks").toString
+      val src = java.nio.file.Files.createTempDirectory("graft_chunks").toFile
       val rows = (1 to 1000).map(i => ((i * 7919) % 1000L, s"r$i")) // shuffled times
-      TickStream.stageTimeChunks(rows.toDF("t", "v"), "t", 4, dir)
+      val dir = graft.sources.Scratch.cached("spec_chunks", 1, Seq(src))(
+        TickStream.stageTimeChunks(rows.toDF("t", "v"), "t", 4, _))
       val files = new java.io.File(dir).listFiles()
         .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         .sortBy(_.getName)
@@ -330,7 +331,9 @@ class StreamingSpec extends AnyFunSpec {
       assert(ranges.sliding(2).forall { case Array((_, hi), (lo, _)) => hi <= lo })
       // nothing lost in the re-land
       assert(spark.read.parquet(dir).count() == 1000)
-      assert(new java.io.File(dir, "_STAGED").exists)
+      // the cache publishes the stage only after the mtime stamping
+      assert(new java.io.File(dir, graft.sources.Scratch.Marker).exists)
+      Seq(dir, src.toString).foreach(graft.sources.Scratch.deleteDir)
     }
 
     it("chunked stream-stream join replays >1 micro-batch with state bounded below the input") {
