@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Staging
 
 /** Fixed host-speed canary shared by [[Bench]] and
   * [[graft.tools.CompositeScalingBench]]: a registry-independent
@@ -59,26 +60,15 @@ object Bench {
       case _ => hostFactor <= 1.5 && ledgerSfOrDefault(ledgerSf) == sfDir
     }
 
-  /** Wall seconds of one trial `body`, then deterministic block
-    * release: every RDD the trial persisted (snapshot() panels
-    * localCheckpoint with a storage level, so they all appear in
-    * getPersistentRDDs) is unpersisted explicitly, OUTSIDE the timed
-    * region, before the next trial starts. The r13 scheme (one
-    * System.gc per query + ContextCleaner) demonstrably failed for
-    * snapshot-HEAVY queries: q_hits runs 7 eager snapshot jobs per
-    * trial and churned localCheckpoint blocks faster than the GC-driven
-    * cleaner reclaimed them, so the driver record showed 5.74 s where
-    * the isolated 12-trial steady state is ~2.0 s. unpersist() frees
-    * the blocks synchronously — no GC race. The bench, the scaling
-    * gate ([[graft.tools.Scaling.measure]]) and the composite probe
-    * all time through this. */
-  def timed(spark: SparkSession)(body: => Any): Double = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+  /** Wall seconds of one trial `body`, run in a [[graft.sources.Staging.scoped]]
+    * scope: the blocks the trial persisted are freed OUTSIDE the timed
+    * region, before the next trial starts. The bench, the scaling gate
+    * ([[graft.tools.Scaling.measure]]) and the composite probe all
+    * time through this. */
+  def timed(spark: SparkSession)(body: => Any): Double = Staging.scoped(spark) {
     val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
-    finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = true)
-    }
+    body
+    (System.nanoTime() - t0) / 1e9
   }
 
   def main(args: Array[String]): Unit = {
@@ -96,7 +86,7 @@ object Bench {
       else SparkEntry.queries -- correctnessOnly
     if (new java.io.File(warmDir).isDirectory)
       selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+        try Staging.scoped(spark)(fn(spark, warmDir).count()) catch { case _: Throwable => () }
       }
     // Best-of-N per query (plus the sf0.001 warm-up above): single
     // executions in a shared JVM swing 2-5x (GC, lazy JIT, hypervisor

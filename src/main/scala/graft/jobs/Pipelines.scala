@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.sources.{RawSources, Sinks}
+import graft.sources.{RawSources, Sinks, Staging}
 import graft.streaming.TickStream
 
 /** The reference's three Airflow DAGs (SURVEY §3) as plain sequential
@@ -18,11 +18,12 @@ object Pipelines {
 
   /** Reuse an active session (spark-submit, tests); otherwise build a
     * local one and stop it when done. Never stops a session we didn't
-    * create. */
+    * create. `f` runs in a [[Staging.scoped]] scope, so a reused
+    * session keeps none of the main's snapshots. */
   private def withSession[T](name: String)(f: SparkSession => T): T = {
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = graft.Session.getOrCreate(name)
-    try f(spark) finally if (existing.isEmpty) spark.stop()
+    try Staging.scoped(spark)(f(spark)) finally if (existing.isEmpty) spark.stop()
   }
 
   /** stock_market_batch_dag: raw historical CSV → clean bars parquet

@@ -32,12 +32,6 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Exact content dedup: group by md5(content), keep min id as the
-    * representative and count the group. */
-  def exactContentGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("dup_count"))
-
   /** Distinct word-n-gram shingles per doc (adds `shingles`), by the
     * native `word_shingles` expression (one codegen'd pass per row;
     * value-identical to the built-in form `Funcs.wordShingles`,
@@ -466,32 +460,10 @@ object Dedup {
       .orderBy("j_lo")
   }
 
-  /** 60-bit SimHash over distinct tokens (adds `simhash`).
-    * bit j set ⇔ Σ_tokens (bit_j(hash60(token))·2 − 1) > 0.
-    * Built as a SQL lambda expression because bit index j is a runtime
-    * column inside the lambda (the Scala shiftright helper only takes
-    * literal shifts).
-    */
-  def withSimhash(df: DataFrame, textCol: String, bits: Int = 60): DataFrame = {
-    val h = "conv(substring(md5(t), 1, 15), 16, 10)"
-    df.withColumn("__hashes",
-        expr(s"transform(array_distinct(split($textCol, ' ')), t -> cast($h as bigint))"))
-      .withColumn("simhash", expr(
-        s"""aggregate(
-           |  transform(sequence(0, ${bits - 1}), j ->
-           |    if(size(filter(__hashes, h -> (shiftright(h, j) & 1) = 1)) * 2 - size(__hashes) > 0,
-           |       shiftleft(1L, j), 0L)),
-           |  0L, (acc, x) -> acc + x)""".stripMargin))
-      .drop("__hashes")
-  }
-
-  /** SimHash near-duplicate pairs: band the 60-bit signature into
-    * `bands` chunks (Hamming distance ≤ bands−1 guarantees one exact
-    * band match), candidate-join per band, verify
-    * bit_count(xor) ≤ maxHamming. */
   /** SimHash via explode → hash-once-per-token → 60 partial bit-sum
     * aggregates (Σ ±1 per bit), then the signature is assembled from
-    * the sums. Same values as [[withSimhash]], but one md5 per token
+    * the sums. Same values as the native `simhash_sig`
+    * ([[graft.plans.SimHashSig]]), but one md5 per token
     * and map-side-combinable aggregation — the corpus-scale shape. */
   def simhashAgg(docs: DataFrame, idCol: String, textCol: String, bits: Int = 60): DataFrame = {
     val ex = spreadById(docs, idCol, textCol)
@@ -971,6 +943,10 @@ object Dedup {
       .distinct()
   }
 
+  /** SimHash near-duplicate pairs: band the 60-bit signature into
+    * `bands` chunks (Hamming distance ≤ bands−1 guarantees one exact
+    * band match), candidate-join per band, verify
+    * bit_count(xor) ≤ maxHamming. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, bands: Int = 4): DataFrame =
     simhashBandedPairs(

@@ -68,53 +68,6 @@ object Multimodal {
       transform(sequence(lit(0), lit(7)),
         i => (hash60(concat(md5(col("payload")), i.cast("string"))) % 1000).cast("double") / 1000.0))
 
-  /** ===== STUB resize =====
-    * Stand-in for an audio/video resample where no JDK codec exists:
-    * keeps every `factor`-th byte of the payload (a real codec would
-    * decode → scale → re-encode; for images, use the real
-    * [[decodeImageFeatures]]/[[toGrayPng]] path). Linear-time stride
-    * copy per partition — the earlier `aggregate(..., concat)`
-    * expression form copied the accumulator per byte, O(n²) per
-    * payload. Pure narrow map; metadata updated consistently.
-    */
-  def resizeStub(media: DataFrame, factor: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", media.schema("media_id").dataType),
-      StructField("payload", BinaryType),
-      StructField("mime", StringType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id"), col("payload"), col("meta.mime").as("mime"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val in = r.getAs[Array[Byte]](1)
-          val out = new Array[Byte]((in.length + factor - 1) / factor)
-          var i = 0
-          while (i < out.length) { out(i) = in(i * factor); i += 1 }
-          Row(r.get(0), out, r.getString(2))
-        }
-      }(enc)
-      .withColumn("meta", struct(
-        length(col("payload")).as("n_bytes"),
-        col("mime"),
-        ceil(length(col("payload")) / lit(frameSize.toDouble)).cast("int").as("n_frames")))
-      .select("media_id", "payload", "meta")
-  }
-
-  /** The mapPartitions form of the decode stage — the shape a native
-    * (JNI / process-per-partition codec) decoder plugs into. Kept
-    * simple: emits (media_id, n_bytes) via the low-level iterator API.
-    */
-  def decodePartitioned(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType), StructField("n_bytes", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        // a real decoder would init its codec once per partition here
-        rows.map { r => Row(r.getLong(0), r.getAs[Array[Byte]](1).length) }
-      }(enc)
-  }
-
   /** ===== REAL audio framing =====
     * Interprets the payload as 16-bit little-endian signed mono PCM —
     * raw PCM IS the decoded form, so unlike compressed audio this

@@ -47,13 +47,6 @@ object Similarity {
   /** [[normSq]] via the same native path (`dot_q(v, v)`). */
   private def normSqN(v: Column): Column = call_function("dot_q", v, v)
 
-  /** ADC lookup-sum, built-in fold form — the value-identical
-    * reference form of the native `adc_dist` ([[graft.plans.AdcDist]]). */
-  private[graft] def adcBuiltin(qtab: Column, codes: Column, m: Int): Column =
-    aggregate(sequence(lit(0), lit(m - 1)), lit(0L), (acc, s) =>
-      acc + element_at(element_at(qtab, (s + 1).cast("int")),
-        (element_at(codes, (s + 1).cast("int")) + 1).cast("int")))
-
   /** Cosine from exact integer dot/norms (rounded to 6 dp). */
   def cosineQ(dot: Column, na: Column, nb: Column): Column =
     rd(dot / nullifZero(sqrt(na) * sqrt(nb)), 6)

@@ -39,8 +39,7 @@ object Skew {
     * broadcast AND AQE's OptimizeSkewedJoin can't help (it splits
     * oversized sort-merge partitions, but a single hot KEY is one
     * unsplittable map-output block once it exceeds the split
-    * granularity; salting fixes the key itself). For a mostly-uniform
-    * key with a known hot head, prefer [[saltedJoinHot]].
+    * granularity; salting fixes the key itself).
     */
   def saltedJoin(facts: DataFrame, dim: DataFrame, key: String,
                  buckets: Int = 16): DataFrame = {
@@ -50,20 +49,5 @@ object Skew {
       .withColumn("__salt", pmod(hash(col(key), monotonically_increasing_id()), lit(buckets)))
       .join(salted, Seq(key, "__salt"))
       .drop("__salt")
-  }
-
-  /** [[saltedJoin]] restricted to a known hot-key head: hot fact rows
-    * take the salted join (dim head replicated ×buckets — bounded,
-    * |hotKeys|·buckets rows), the uniform tail takes the plain join.
-    * This is the production form — full-dim replication is a ×buckets
-    * shuffle tax on 100 TB, while the hot head is by definition a
-    * handful of keys.
-    */
-  def saltedJoinHot(facts: DataFrame, dim: DataFrame, key: String,
-                    hotKeys: Seq[Long], buckets: Int = 16): DataFrame = {
-    val isHot = col(key).isInCollection(hotKeys)
-    val hot = saltedJoin(facts.filter(isHot), dim.filter(isHot), key, buckets)
-    val cold = facts.filter(!isHot).join(dim.filter(!isHot), Seq(key))
-    hot.unionByName(cold)
   }
 }

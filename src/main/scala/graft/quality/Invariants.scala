@@ -116,13 +116,6 @@ object Invariants {
       acceptedValues("rsi_signal", Seq("OVERBOUGHT", "OVERSOLD", "NEUTRAL")),
       between("pct_of_52w_range", 0, 100, Warn))
 
-  /** dbt/models/marts/schema.yml:97-130 (mart_realtime_signals). */
-  def martRealtimeSignalsChecks: Seq[RowCheck] =
-    notNull("symbol", "window_start_at", "momentum_signal", "volatility_regime",
-      "is_volume_spike", "is_multi_signal_alert", "signal_summary") ++ Seq(
-      acceptedValues("momentum_signal", Seq("BULLISH", "BEARISH", "NEUTRAL")),
-      acceptedValues("volatility_regime", Seq("LOW", "NORMAL", "ELEVATED", "HIGH")))
-
   /** dbt/models/marts/schema.yml:132-160 (mart_daily_summary);
     * `trade_date` uniqueness goes through `uniqueKeys`. */
   def martDailySummaryChecks: Seq[RowCheck] =

@@ -17,20 +17,9 @@ object RawSources {
   def rawDailyBars(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.rawDailyBar).option("header", "true").csv(path)
 
-  /** S1 — raw realtime ticks: CSV, explicit schema, header. */
-  def rawTicks(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.rawTick).option("header", "true").csv(path)
-
   /** S9 — seed dimension CSV (header, tiny ⇒ broadcast at use site). */
   def tickerDim(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.tickerDim).option("header", "true").csv(path)
-
-  /** S4/S5 — the Kafka wire shape: JSON value keyed by symbol. In a
-    * cluster deployment the frame comes from
-    * `spark.read/readStream.format("kafka")`; this parses the same
-    * `value` payload, so the bronze job is source-agnostic. */
-  def fromKafkaJson(raw: DataFrame, valueCol: String): DataFrame =
-    Kafka.fromJson(raw, Schemas.rawTick, valueCol)
 
   /** S4 — serialize to the Kafka wire shape (key = symbol, value =
     * JSON of all fields), mirroring batch_data_producer.py:54-63. */

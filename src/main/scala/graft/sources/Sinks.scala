@@ -18,16 +18,12 @@ object Sinks {
 
   /** S2 — overwrite, partitioned (batch lane). */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,
-                       sortCols: Seq[String] = Nil, mode: String = "overwrite"): Unit = {
+                       sortCols: Seq[String] = Nil): Unit = {
     val laid = df.repartition(org.apache.spark.sql.functions.col(partitionCol))
     val sorted = if (sortCols.nonEmpty)
       laid.sortWithinPartitions(sortCols.head, sortCols.tail: _*) else laid
-    sorted.write.mode(mode).partitionBy(partitionCol).parquet(path)
+    sorted.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
   }
-
-  /** S3 — append, partitioned (realtime lane). */
-  def appendPartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    writePartitioned(df, path, partitionCol, Nil, "append")
 
   /** Bucketed catalog table: pre-shuffles data into `numBuckets` by
     * `bucketCol` at write time, so joins/aggregations between tables

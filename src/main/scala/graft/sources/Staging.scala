@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.PlanBridge
@@ -112,6 +112,32 @@ object Staging {
   def release(df: DataFrame): Unit =
     PlanBridge.logicalPlan(df).collectFirst { case l: LogicalRDD => l.rdd }
       .foreach(_.unpersist(blocking = false))
+
+  /** Runs `body`, then frees every RDD persisted while it ran — the
+    * snapshots above, and any `persist`/`cache` — with a blocking
+    * `unpersist`, also when `body` throws. A snapshot otherwise lives
+    * until ContextCleaner notices its frame is unreachable, which waits
+    * for the JVM to collect the frame: in r13 the bench's `q_hits` (7
+    * eager snapshot jobs per trial) churned blocks faster than
+    * GC-driven cleanup freed them and recorded 5.74 s against a ~2.0 s
+    * steady state.
+    * Every entry point wraps its unit of work in this scope: each
+    * Bench trial and warm-up run, each Probe run, each Verify write,
+    * and each `Pipelines` main, so a reused session keeps no blocks.
+    *
+    * The scope frees EVERY RDD persisted meanwhile, whoever persisted
+    * it, so it is for a session with no concurrent caller; a frame
+    * staged inside must not be used after it ends. Reliable-mode
+    * (`graft.staging.reliable=true`) checkpoint files are not blocks
+    * and stay where they were written. */
+  def scoped[A](spark: SparkSession)(body: => A): A = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = true)
+    }
+  }
 
   /** Attach measured size (and, for non-empty `keys`, the layout pin)
     * to an eager snapshot. No-op without the extension or when the

@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.{Session, SparkEntry}
+import graft.sources.Staging
 
 /** Where a registry query's time goes, layer by layer:
   *
@@ -135,22 +136,21 @@ object Probe {
 
   /** Runs registry query `q` once warm and [[Runs]] recorded times,
     * appends each run's line to `<outDir>/layers.jsonl` and writes the
-    * final frame's plan. Blocks a run persisted are released after it,
-    * so every run starts from the same storage state. */
+    * final frame's plan. Each run, the warm one too, is a
+    * [[Staging.scoped]] scope, so every run starts from the same
+    * storage state. */
   def probe(spark: SparkSession, sfDir: String, outDir: String, q: String): Seq[Run] = {
     val fn = SparkEntry.queries(q)
     Files.createDirectories(Paths.get(outDir))
-    fn(spark, sfDir).count()
+    Staging.scoped(spark)(fn(spark, sfDir).count())
     (1 to Runs).map { i =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val (df, construct) = record(spark)(fn(spark, sfDir))
-      val (_, execute) = record(spark)(df.count())
-      Files.write(Paths.get(outDir, s"$q.plan.txt"), // the last run's stays
-        df.queryExecution.explainString(FormattedMode).getBytes(UTF_8))
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = true)
+      val run = Staging.scoped(spark) {
+        val (df, construct) = record(spark)(fn(spark, sfDir))
+        val (_, execute) = record(spark)(df.count())
+        Files.write(Paths.get(outDir, s"$q.plan.txt"), // the last run's stays
+          df.queryExecution.explainString(FormattedMode).getBytes(UTF_8))
+        Run(q, i, construct, execute)
       }
-      val run = Run(q, i, construct, execute)
       Files.write(Paths.get(outDir, "layers.jsonl"), (run.json + "\n").getBytes(UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       run

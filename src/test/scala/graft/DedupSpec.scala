@@ -28,15 +28,6 @@ class DedupSpec extends AnyFunSpec {
     }
   }
 
-  describe("exactContentGroups") {
-    it("groups exact duplicates by content hash") {
-      val groups = Dedup.exactContentGroups(docs, "doc_id", "text")
-      assert(groups.count() == 4) // 1&4 collapse
-      val dupGroup = groups.filter($"dup_count" === 2).collect()
-      assert(dupGroup.length == 1 && dupGroup.head.getAs[Long]("rep_id") == 1L)
-    }
-  }
-
   describe("minhashLshPairs") {
     it("finds the planted exact and near duplicates, not the unrelated doc") {
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.5)

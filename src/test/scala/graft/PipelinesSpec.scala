@@ -7,6 +7,17 @@ import org.scalatest.funspec.AnyFunSpec
 class PipelinesSpec extends AnyFunSpec {
   import SharedSpark.spark
 
+  /** Runs `main` on the shared session and asserts it left no RDD it
+    * persisted behind: RDD ids are never reused and ContextCleaner only
+    * ever drops entries, so a main that found the session's blocks as
+    * it left them added no id. */
+  private def leavesNoBlocks(main: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    main
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs left persisted: $left")
+  }
+
   describe("Pipelines.BatchPipeline") {
     it("cleans a raw landing zone into partitioned parquet end-to-end") {
       val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toFile
@@ -108,7 +119,7 @@ class PipelinesSpec extends AnyFunSpec {
         (99992L, gz.take(gz.length / 2), 1)).toDF("doc_id", "blob", "orig_len")
       blobs.union(poison).write.parquet(blobsPath)
 
-      graft.jobs.Pipelines.MediaPipeline.main(Array(blobsPath, outDir))
+      leavesNoBlocks(graft.jobs.Pipelines.MediaPipeline.main(Array(blobsPath, outDir)))
 
       val kept = spark.read.parquet(s"$outDir/kept")
       assert(kept.count() > 0 && kept.count() <= 100)
@@ -137,7 +148,7 @@ class PipelinesSpec extends AnyFunSpec {
       val evalIds = docs.orderBy("doc_id").limit(5)
       evalIds.select("text").write.parquet(evalPath)
 
-      graft.jobs.Pipelines.CorpusPipeline.main(Array(docsPath, evalPath, outDir))
+      leavesNoBlocks(graft.jobs.Pipelines.CorpusPipeline.main(Array(docsPath, evalPath, outDir)))
 
       val corpus = spark.read.parquet(s"$outDir/corpus")
       val n = corpus.count()

@@ -35,6 +35,18 @@ class ProbeSpec extends AnyFunSpec {
       }
     }
 
+    it("leaves no RDD any of its runs persisted, the warm run's included") {
+      withOut { out =>
+        // RDD ids are never reused and ContextCleaner only ever drops
+        // entries: a run's snapshot left behind shows up as a new id
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val runs = Probe.probe(spark, dir, out, "q_kcore")
+        assert(runs.forall(_.construct.jobs.nonEmpty))
+        val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, left)
+      }
+    }
+
     it("records the micro-batch phases of a streaming lane") {
       withOut { out =>
         val batches = Probe.probe(spark, dir, out, "q_stream_join").last.construct.batches

@@ -10,8 +10,8 @@ import graft.sources.Staging
 
 /** [[Session]] is the one way a graft entry point gets its session:
   * confs and natives reach sessions graft did not build, installing
-  * twice changes nothing, and no second session builder or hand-written
-  * listener creeps back. */
+  * twice changes nothing, and no second session builder, hand-written
+  * listener or block-release loop creeps back. */
 class SessionSpec extends AnyFunSpec {
   import SharedSpark.spark
 
@@ -87,6 +87,13 @@ class SessionSpec extends AnyFunSpec {
         scalaFiles("src/main/scala/graft/tools"))
         .filter(p => helper.findFirstIn(read(p)).nonEmpty).map(_.toString)
       assert(users.isEmpty)
+    }
+
+    it("block release only in graft/sources/Staging.scala") {
+      val device = "getPersistentRDDs|unpersist\\(blocking = true\\)".r
+      val hits = scalaFiles("src/main").filter(p => device.findFirstIn(read(p)).nonEmpty)
+        .map(_.toString)
+      assert(hits == Seq("src/main/scala/graft/sources/Staging.scala"))
     }
 
     it("no registration checks in the operators: the natives are the only path") {

@@ -296,6 +296,13 @@ class SimilaritySpec extends AnyFunSpec {
     }
   }
 
+  /** ADC lookup-sum, built-in fold form — the value-identical
+    * reference form of the native `adc_dist` ([[graft.plans.AdcDist]]). */
+  private def adcBuiltin(qtab: Column, codes: Column, m: Int): Column =
+    aggregate(sequence(lit(0), lit(m - 1)), lit(0L), (acc, s) =>
+      acc + element_at(element_at(qtab, (s + 1).cast("int")),
+        (element_at(codes, (s + 1).cast("int")) + 1).cast("int")))
+
   describe("adc_dist native expression") {
     it("equals the element_at fold on real qtab/codes shapes") {
       // qtab rows of ksub=4 distances, codes selecting one per row —
@@ -309,7 +316,7 @@ class SimilaritySpec extends AnyFunSpec {
             (($"vec_id" + s) % 4).cast("long")).as("codes"))
       val both = df.select($"vec_id",
         call_function("adc_dist", $"qtab", $"codes").as("nat"),
-        Similarity.adcBuiltin($"qtab", $"codes", 8).as("bi"))
+        adcBuiltin($"qtab", $"codes", 8).as("bi"))
       assert(both.count() == 200)
       assert(both.filter($"nat" =!= $"bi").isEmpty)
     }

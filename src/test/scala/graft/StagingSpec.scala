@@ -87,4 +87,38 @@ class StagingSpec extends AnyFunSpec {
       finally new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
     }
   }
+
+  describe("Staging.scoped") {
+    import graft.sources.Staging
+    // RDD ids are never reused and ContextCleaner only ever drops
+    // entries, so a restored set is one that gained nothing
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+    Seq("q_kcore", "q_hits").foreach { q =>
+      it(s"frees every snapshot $q persisted") {
+        val before = persisted
+        val inside = Staging.scoped(spark) {
+          SparkEntry.queries(q)(spark, dir).count()
+          persisted
+        }
+        assert((inside -- before).nonEmpty, s"$q persisted nothing")
+        assert((persisted -- before).isEmpty, persisted -- before)
+      }
+    }
+
+    it("releases when the body throws, and the exception propagates") {
+      val before = persisted
+      var staged = Set.empty[Int]
+      val e = intercept[IllegalStateException] {
+        Staging.scoped(spark) {
+          Staging.snapshot(spark.range(100).toDF()).count()
+          staged = persisted -- before
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(staged.nonEmpty)
+      assert((persisted -- before).isEmpty, persisted -- before)
+    }
+  }
 }

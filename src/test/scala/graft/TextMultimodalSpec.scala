@@ -419,15 +419,6 @@ class TextMultimodalSpec extends AnyFunSpec {
       val empty = Seq((9L, "")).toDF("doc_id", "text")
       assert(Multimodal.sampleFrames(Multimodal.asMedia(empty, "doc_id", "text")).isEmpty)
     }
-    it("resize stub shrinks payloads and keeps metadata consistent") {
-      val big = Seq((9L, "abcdefghij" * 10)).toDF("doc_id", "text") // 100 bytes
-      val resized = Multimodal.resizeStub(Multimodal.asMedia(big, "doc_id", "text"), 4)
-      val row = resized.head()
-      assert(row.getAs[Array[Byte]]("payload").length == 25)
-      assert(row.getStruct(row.fieldIndex("meta")).getAs[Int]("n_bytes") == 25)
-      // every 4th byte: a, e, i, c, ...
-      assert(new String(row.getAs[Array[Byte]]("payload")).startsWith("aei"))
-    }
     it("stub decode emits deterministic bounded features") {
       val f = Multimodal.decodeStubFeatures(media)
         .select("features").as[Seq[Double]].collect()
@@ -435,9 +426,6 @@ class TextMultimodalSpec extends AnyFunSpec {
       val again = Multimodal.decodeStubFeatures(media)
         .select("features").as[Seq[Double]].collect()
       assert(f.toSeq == again.toSeq)
-    }
-    it("mapPartitions decode plumbing preserves rows") {
-      assert(Multimodal.decodePartitioned(media).count() == 3)
     }
     it("real ImageIO roundtrip: decode(encode(bytes)) recovers the raster exactly") {
       val px1 = Array.tabulate[Byte](16)(i => (i * 17).toByte)     // 4×4 gradient
