@@ -74,6 +74,9 @@ object Session {
       .config(LocalFs.hadoopConfs.map { case (k, v) => s"spark.hadoop.$k" -> v })
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
+      // each aggregation task takes a Tungsten page; Spark sizes it from
+      // heap / cores (64 MB at 8g and 4 cores), most of a drain's heap
+      .config("spark.buffer.pageSize", "4m")
       .getOrCreate()
     if (!spark.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
       spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)

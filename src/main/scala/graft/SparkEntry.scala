@@ -253,7 +253,7 @@ object SparkEntry {
     * excurse) mirrored in the oracle.
     *
     * 2 state partitions, not 4: the keyed monitors hold one state row
-    * per symbol (5 here) — every extra partition is a RocksDB store
+    * per symbol (5 here) — every extra partition is a state-store
     * instance opened+committed per micro-batch for zero keys. (The
     * joins/windows keep 4: their state is row-granular.) */
   private def qStreamCusum(s: SparkSession, dir: String): DataFrame = {

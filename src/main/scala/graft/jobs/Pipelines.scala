@@ -47,7 +47,7 @@ object Pipelines {
     def main(args: Array[String]): Unit = {
       val Array(rawPath, outPath, checkpoint) = args.take(3)
       withSession("graft-stream") { spark =>
-        TickStream.configureRocksDbState(spark)
+        spark.conf.set(TickStream.unloadOnCommit, true)
         val ticks = BatchCleaner.cleanTicks(TickStream.rawTickStream(spark, rawPath))
         val q = TickStream.toParquet(TickStream.windowed(ticks), outPath, checkpoint).start()
         q.awaitTermination()

@@ -28,32 +28,25 @@ import graft.sources.Staging.Snapshottable
   *     exactly-once per window instead of the reference's duplicate
   *     windows across runs (SURVEY §2.8).
   *
-  * At scale: state lives in the state store keyed by (symbol, window);
-  * tumbling windows mean one state row per key, and partial aggregation
-  * happens before the shuffle, so the stateful stage sees pre-reduced
-  * rows, not raw ticks.
+  * At scale: state lives in Spark's in-heap state store keyed by
+  * (symbol, window); tumbling windows mean one state row per key, and
+  * partial aggregation happens before the shuffle, so the stateful
+  * stage sees pre-reduced rows, not raw ticks.
   */
 object TickStream {
 
-  /** Production state-store configuration: RocksDB instead of the
-    * default in-heap HDFS-backed provider. Stateful operators (window
-    * aggs, dropDuplicates, mapGroupsWithState) keep state per key —
-    * with millions of (symbol, window) keys the in-heap store competes
-    * with execution memory and stalls GC; RocksDB keeps state off-heap.
-    * Each commit uploads a full `<version>.zip` snapshot, so a restart
-    * loads one snapshot. With changelog checkpointing a commit uploads
-    * only a delta and snapshots come from a maintenance thread that
-    * first runs 60 s after a store opens; a seconds-long AvailableNow
-    * drain never reaches it, so every start would replay each changelog
-    * since batch 0. Apply BEFORE starting queries:
-    * configureRocksDbState(spark). */
-  val rocksDbStateConfigs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
-
-  def configureRocksDbState(spark: SparkSession): Unit =
-    rocksDbStateConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Session conf key an AvailableNow drain sets to `true` before it
+    * starts. The state stays in Spark's default in-heap HDFS-backed
+    * store: it is one row per (symbol, open window), bounded by
+    * symbols × (watermark / window + 1). With this key each commit
+    * runs the store's maintenance before the task ends: a `.snapshot`
+    * every `minDeltasForSnapshot` (10) deltas, and files older than
+    * `minBatchesToRetain` deleted. A seconds-long drain never reaches
+    * the background maintenance thread (first run after
+    * `maintenanceInterval`, 60 s), so without it a restart would
+    * replay every delta since batch 0 and the checkpoint would only
+    * grow. A checkpoint keeps the provider its offset log records. */
+  val unloadOnCommit = "spark.sql.streaming.stateStore.unloadOnCommit"
 
   /** Existence check through the Hadoop FileSystem API, so the upsert
     * sinks see the table on ANY supported scheme (file://, hdfs://,

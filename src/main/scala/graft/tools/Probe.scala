@@ -29,7 +29,8 @@ object Probe {
 
   /** `endMs` is -1 for a job whose end event never arrived. */
   final case class Job(startMs: Long, endMs: Long)
-  final case class Batch(id: Long, rows: Long, durationsMs: Map[String, Long], stateRows: Long)
+  final case class Batch(id: Long, rows: Long, durationsMs: Map[String, Long], stateRows: Long,
+                         stateCommitMs: Long, stateStores: Long)
 
   /** What Spark reported while one [[record]] body ran. `plans` holds
     * the physical plan of every SQL execution, in start order. */
@@ -48,7 +49,8 @@ object Probe {
       def at(i: Int) = if (walls.isEmpty) 0.0 else walls(i)
       val bs = batches.map { b =>
         val ds = b.durationsMs.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-        s"""{"id":${b.id},"rows":${b.rows},"state_rows":${b.stateRows},"durations_ms":$ds}"""
+        s"""{"id":${b.id},"rows":${b.rows},"state_rows":${b.stateRows},""" +
+          s""""state_commit_ms":${b.stateCommitMs},"state_stores":${b.stateStores},"durations_ms":$ds}"""
       }.mkString("[", ",", "]")
       s"""{"wall_s":${r3(wallS)},"jobs":${jobs.size},"job_median_s":${r3(at(walls.size / 2))},""" +
         s""""job_p90_s":${r3(at(walls.size * 9 / 10))},"driver_gap_s":${r3(driverGapS)},""" +
@@ -100,9 +102,11 @@ object Probe {
       def onQueryStarted(e: QueryStartedEvent): Unit = ()
       def onQueryProgress(e: QueryProgressEvent): Unit = Listeners.this.synchronized {
         val p = e.progress
+        val ops = p.stateOperators
         batches += Batch(p.batchId, p.numInputRows,
           p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap,
-          p.stateOperators.map(_.numRowsTotal).sum)
+          ops.map(_.numRowsTotal).sum, ops.map(_.commitTimeMs).sum,
+          ops.map(_.numStateStoreInstances.toLong).sum)
       }
       def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }

@@ -83,6 +83,10 @@ class LocalFsSpec extends AnyFunSpec {
       assert(Files.list(Paths.get(zone.dir, "out")).iterator.asScala.exists(_.toString.endsWith(".parquet")))
       val forks = commands.filter(c => c.contains("chmod") || c.contains("readlink"))
       assert(forks.isEmpty, s"${forks.size} of ${commands.size} process starts: ${forks.take(3)}")
+      // a state store with a local working directory (RocksDB) deletes
+      // it with a forked `rm -rf` on every commit
+      val storeRms = commands.filter(_.contains("StateStoreId("))
+      assert(storeRms.isEmpty, s"${storeRms.size} of ${commands.size} process starts: ${storeRms.take(3)}")
     }
   }
 }

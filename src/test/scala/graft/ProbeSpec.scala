@@ -49,10 +49,16 @@ class ProbeSpec extends AnyFunSpec {
 
     it("records the micro-batch phases of a streaming lane") {
       withOut { out =>
-        val batches = Probe.probe(spark, dir, out, "q_stream_join").last.construct.batches
+        val construct = Probe.probe(spark, dir, out, "q_stream_join").last.construct
+        val batches = construct.batches
         assert(batches.nonEmpty)
         assert(batches.exists(b => Seq("addBatch", "walCommit").forall(b.durationsMs.contains)),
           batches)
+        // the join keeps four stores (two per side) in each of its 4 partitions
+        assert(batches.forall(_.stateStores == 16), batches)
+        assert(batches.map(_.stateCommitMs).sum > 0, batches)
+        assert(Seq("\"state_commit_ms\":", "\"state_stores\":16").forall(construct.json.contains),
+          construct.json)
       }
     }
   }

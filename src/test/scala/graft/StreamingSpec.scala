@@ -247,9 +247,7 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("windowed aggregation runs on the RocksDB state store with identical results") {
-      val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      TickStream.configureRocksDbState(spark)
-      try {
+      Session.withConf(spark, TickDrain.rocksDb: _*) {
         val source = MemoryStream[Tick](spark)
         source.addData(ticks: _*)
         val q = TickStream.windowed(source.toDF(), "15 minutes", "30 minutes")
@@ -260,11 +258,6 @@ class StreamingSpec extends AnyFunSpec {
           .select("symbol", "window_start", "window_end", "ma", "volatility", "volume_sum")
         val batch = TickAnalytics.windowAggregates(ticks.toDF(), "15 minutes")
         assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
       }
     }
 
@@ -657,12 +650,7 @@ class StreamingSpec extends AnyFunSpec {
         zone.land("b.csv", TickDrain.closingRows)
         zone.drain()
       }
-      val cols = Seq("symbol", "window_start", "window_end", "ma", "volatility", "volume_sum")
-      val out = spark.read.parquet(s"${zone.dir}/out").select(cols.map(col): _*)
-      val ticks = graft.operators.BatchCleaner.cleanTicks(spark.read
-        .schema(graft.sources.Schemas.rawTick).option("header", "true").csv(zone.raw.getAbsolutePath))
-      val want = TickAnalytics.windowAggregates(ticks, "15 minutes")
-        .filter($"window_start" < Timestamp.valueOf("2024-01-01 13:00:00"))
+      val (out, want) = (zone.written(spark), zone.closedWindows(spark))
       assert(want.count() == 5)
       assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
       // the stateful operator kept the checkpoint's 8 partitions
@@ -671,24 +659,55 @@ class StreamingSpec extends AnyFunSpec {
   }
 
   describe("StreamingPipeline restart") {
-    it("every state-store commit writes a full snapshot, never a changelog") {
+    it("snapshots within 10 deltas of the last commit and keeps only the retained window") {
       val zone = new TickDrain("graft_ckpt_snap")
+      val retain = 2
       TickDrain.isolated(spark) {
-        zone.land("a.csv", TickDrain.firstRows)
-        zone.drain()
-        zone.land("b.csv", TickDrain.closingRows)
-        zone.drain()
+        Session.withConf(spark, "spark.sql.streaming.minBatchesToRetain" -> retain.toString) {
+          // each drain advances the watermark an hour: a data batch,
+          // then a no-data batch that evicts the closed windows
+          (10 until 17).foreach { h =>
+            zone.land(s"$h.csv", Seq(s"AAPL,2024-01-01 $h:00:00,10.0,10,10,10,1"))
+            zone.drain()
+          }
+        }
       }
       // state-store version n is the state after batch n - 1
       val last = new java.io.File(s"${zone.dir}/ckpt/commits").list()
         .filter(_.forall(_.isDigit)).map(_.toLong).max + 1
-      assert(last >= 2, "two drains commit at least two batches")
+      assert(last >= 13, "seven drains commit at least 13 batches")
       assert(zone.stores.nonEmpty)
       zone.stores.foreach { store =>
         val files = store.list().toSeq
-        assert(!files.exists(_.endsWith(".changelog")), s"$store holds a changelog: $files")
-        assert(files.contains(s"$last.zip"), s"$store lacks the version-$last snapshot: $files")
+        val version = (f: String) => f.dropWhile(_ == '.').takeWhile(_.isDigit).toLong
+        val snapshots = files.filter(_.endsWith(".snapshot")).map(version)
+        assert(snapshots.exists(_ >= last - 10), s"$store: no snapshot within 10 deltas of $last: $files")
+        // a restart to version last - retain loads the newest snapshot
+        // at or below it; nothing older is retained
+        val base = snapshots.filter(_ <= last - retain).maxOption
+          .getOrElse(fail(s"$store: no snapshot at or below ${last - retain}: $files"))
+        val stale = files.filter(f => f.head.isDigit || f.startsWith(".")).filter(version(_) < base)
+        assert(stale.isEmpty, s"$store keeps files older than $base.snapshot: ${stale.sorted}")
       }
+    }
+
+    it("drains a checkpoint RocksDB wrote, on the provider its offset log records") {
+      val zone = new TickDrain("graft_ckpt_rocks")
+      TickDrain.isolated(spark) {
+        zone.land("a.csv", TickDrain.firstRows)
+        Session.withConf(spark, TickDrain.rocksDb: _*)(zone.drain())
+        zone.land("b.csv", TickDrain.closingRows)
+        zone.drain()
+      }
+      val offsets = new java.io.File(s"${zone.dir}/ckpt/offsets")
+      val newest = offsets.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+      assert(newest.getName.toLong >= 2, "the second drain ran its own batches")
+      assert(scala.io.Source.fromFile(newest).mkString.contains("RocksDBStateStoreProvider"))
+      val (out, want) = (zone.written(spark), zone.closedWindows(spark))
+      assert(want.count() == 5)
+      assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
+      assert(out.count() == out.dropDuplicates("symbol", "window_start").count(),
+        "a window was emitted twice")
     }
   }
 }
@@ -710,6 +729,20 @@ class TickDrain(prefix: String) {
   def drain(): Unit = graft.jobs.Pipelines.StreamingPipeline.main(
     Array(raw.getAbsolutePath, s"$dir/out", s"$dir/ckpt"))
 
+  /** The windows the drains appended. */
+  def written(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(s"$dir/out").select(TickDrain.windowCols.map(col): _*)
+
+  /** The batch recompute of the landed ticks' windows that start
+    * before 13:00: the ones [[TickDrain.closingRows]] closes. */
+  def closedWindows(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    val ticks = graft.operators.BatchCleaner.cleanTicks(spark.read
+      .schema(graft.sources.Schemas.rawTick).option("header", "true").csv(raw.getAbsolutePath))
+    TickAnalytics.windowAggregates(ticks, "15 minutes")
+      .filter(col("window_start") < Timestamp.valueOf("2024-01-01 13:00:00"))
+      .select(TickDrain.windowCols.map(col): _*)
+  }
+
   /** The windowed aggregate's state-store directories, one per partition. */
   def stores: Seq[java.io.File] =
     new java.io.File(s"$dir/ckpt/state/0").listFiles().filter(_.getName.forall(_.isDigit)).toSeq
@@ -725,10 +758,19 @@ object TickDrain {
     // closes every window above: watermark 12:30
     "AAPL,2024-01-01 13:00:00,1.0,1,1,1,1")
 
+  val windowCols = Seq("symbol", "window_start", "window_end", "ma", "volatility", "volume_sum")
+
+  /** The state-store confs StreamingPipeline set before it moved to the
+    * default provider: RocksDB, a full snapshot per commit. */
+  val rocksDb: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
+
   /** Runs `body` and restores the session confs a drain changes: the
-    * main switches the state store to RocksDB on the shared session. */
+    * main sets `unloadOnCommit` on the shared session. */
   def isolated[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val touched = "spark.sql.shuffle.partitions" +: TickStream.rocksDbStateConfigs.keys.toSeq
+    val touched = Seq("spark.sql.shuffle.partitions", TickStream.unloadOnCommit)
     val saved = touched.map(k => k -> spark.conf.getOption(k))
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
