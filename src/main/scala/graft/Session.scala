@@ -1,5 +1,7 @@
 package graft
 
+import java.net.URLClassLoader
+import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, SparkPlugin}
 import org.apache.spark.sql.SparkSession
 import graft.plans.{GraftExtensions, PinPartitioningStrategy}
 import graft.sources.LocalFs
@@ -63,10 +65,15 @@ object Session {
     }
   }
 
+  /** Contexts built here share one codegen cache per JVM: with artifact
+    * isolation off (graft sessions add no artifacts) tasks run under the
+    * executor's default loader, and [[SharedCodegen]] moves them to its
+    * parent. */
   private def build(appName: String): SparkSession = {
     val master = sys.props.get("spark.master")
       .orElse(sys.env.get("SPARK_GRAFT_CPUS").map(n => s"local[$n]"))
       .getOrElse("local[*]")
+    val plugins = sys.props.get("spark.plugins").toSeq :+ classOf[SharedCodegen].getName
     val spark = SparkSession.builder()
       .appName(appName)
       .master(master)
@@ -77,9 +84,35 @@ object Session {
       // each aggregation task takes a Tungsten page; Spark sizes it from
       // heap / cores (64 MB at 8g and 4 cores), most of a drain's heap
       .config("spark.buffer.pageSize", "4m")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.plugins", plugins.mkString(","))
       .getOrCreate()
     if (!spark.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
       spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
     spark
+  }
+}
+
+/** Spark keys its codegen cache by (the thread's context loader,
+  * source), and each executor gives its task threads a new loader, so
+  * every context compiles again what the JVM already holds. A task
+  * whose loader is a `URLClassLoader` with no URLs (it defines no class)
+  * runs under that loader's parent instead: in local mode the loader
+  * the driver compiles under. A task with jars or a REPL loader keeps
+  * its own. */
+final class SharedCodegen extends SparkPlugin {
+  def driverPlugin(): DriverPlugin = null
+  def executorPlugin(): ExecutorPlugin = new ExecutorPlugin {
+    override def onTaskStart(): Unit = {
+      val t = Thread.currentThread
+      t.setContextClassLoader(SharedCodegen.loaderFor(t.getContextClassLoader))
+    }
+  }
+}
+
+object SharedCodegen {
+  def loaderFor(l: ClassLoader): ClassLoader = l match {
+    case u: URLClassLoader if u.getURLs.isEmpty && u.getParent != null => u.getParent
+    case other => other
   }
 }

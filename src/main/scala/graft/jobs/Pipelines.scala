@@ -47,10 +47,11 @@ object Pipelines {
     def main(args: Array[String]): Unit = {
       val Array(rawPath, outPath, checkpoint) = args.take(3)
       withSession("graft-stream") { spark =>
-        spark.conf.set(TickStream.unloadOnCommit, true)
-        val ticks = BatchCleaner.cleanTicks(TickStream.rawTickStream(spark, rawPath))
-        val q = TickStream.toParquet(TickStream.windowed(ticks), outPath, checkpoint).start()
-        q.awaitTermination()
+        graft.Session.withConf(spark, TickStream.unloadOnCommit -> "true") {
+          val ticks = BatchCleaner.cleanTicks(TickStream.rawTickStream(spark, rawPath))
+          val q = TickStream.toParquet(TickStream.windowed(ticks), outPath, checkpoint).start()
+          q.awaitTermination()
+        }
       }
     }
   }

@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.PlanBridge
@@ -33,11 +35,14 @@ object Probe {
                          stateCommitMs: Long, stateStores: Long)
 
   /** What Spark reported while one [[record]] body ran. `plans` holds
-    * the physical plan of every SQL execution, in start order. */
+    * the physical plan of every SQL execution, in start order.
+    * `codegenCompiles` and `codegenMs` count the JVM's generated-class
+    * compiles (driver and tasks) and their time. */
   final case class Record(wallS: Double, jobs: Seq[Job], stages: Long, tasks: Long,
                           taskS: Double, gcS: Double, shuffleReadMb: Double,
                           shuffleWriteMb: Double, spillMb: Double,
-                          plans: Seq[String], batches: Seq[Batch]) {
+                          plans: Seq[String], batches: Seq[Batch],
+                          codegenCompiles: Long, codegenMs: Double) {
     /** Wall time no job covered: planning and driver work between jobs. */
     def driverGapS: Double = wallS - jobs.map(j => (j.startMs, math.max(j.startMs, j.endMs)))
       .sortBy(_._1).foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
@@ -56,7 +61,8 @@ object Probe {
         s""""job_p90_s":${r3(at(walls.size * 9 / 10))},"driver_gap_s":${r3(driverGapS)},""" +
         s""""stages":$stages,"tasks":$tasks,"task_s":${r3(taskS)},"gc_s":${r3(gcS)},""" +
         s""""shuffle_read_mb":${r3(shuffleReadMb)},"shuffle_write_mb":${r3(shuffleWriteMb)},""" +
-        s""""spill_mb":${r3(spillMb)},"executions":${plans.size},"batches":$bs}"""
+        s""""spill_mb":${r3(spillMb)},"executions":${plans.size},""" +
+        s""""codegen_compiles":$codegenCompiles,"codegen_ms":${r3(codegenMs)},"batches":$bs}"""
     }
   }
 
@@ -111,9 +117,10 @@ object Probe {
       def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
 
-    def result(wallS: Double): Record = synchronized {
+    def result(wallS: Double, compiles: Long, compileMs: Double): Record = synchronized {
       Record(wallS, jobs.values.toSeq, stages, tasks, runMs / 1000.0, gcMs / 1000.0,
-        readBytes / MB, writeBytes / MB, spillBytes / MB, plans.toSeq, batches.toSeq)
+        readBytes / MB, writeBytes / MB, spillBytes / MB, plans.toSeq, batches.toSeq,
+        compiles, compileMs)
     }
   }
 
@@ -127,11 +134,13 @@ object Probe {
     spark.sparkContext.addSparkListener(ls)
     spark.streams.addListener(ls.streams)
     try {
+      val (c0, cNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val out = body
       val wallS = (System.nanoTime() - t0) / 1e9
+      val (c1, cNs1) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
       PlanBridge.drainListenerBus(spark)
-      (out, ls.result(wallS))
+      (out, ls.result(wallS, c1 - c0, (cNs1 - cNs0) / 1e6))
     } finally {
       spark.streams.removeListener(ls.streams)
       spark.sparkContext.removeSparkListener(ls)

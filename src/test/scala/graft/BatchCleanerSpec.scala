@@ -11,8 +11,8 @@ import graft.sources.{RawSources, Schemas}
 class BatchCleanerSpec extends AnyFunSpec {
   import SharedSpark.spark
 
-  private def fixtureCsv(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_raw").toFile
+  /** Runs `body` on a raw landing directory holding the fixture CSV. */
+  private def withFixtureCsv[T](body: String => T): T = TempDir("graft_raw") { dir =>
     val f = new java.io.File(dir, "part-0.csv")
     val w = new java.io.PrintWriter(f)
     w.println("symbol,date,daily_open,daily_high,daily_low,daily_close,daily_volume,batch_load_timestamp")
@@ -24,26 +24,30 @@ class BatchCleanerSpec extends AnyFunSpec {
     w.println("MSFT,2024-01-03,20,22,19,21,-10,2024-01-03T00:00:00")  // negative volume
     w.println("MSFT,2099-01-01,20,22,19,21,800,2024-01-03T00:00:00")  // future date
     w.close()
-    dir.getAbsolutePath
+    body(dir)
   }
 
   describe("BatchCleaner.cleanDailyBars") {
     it("applies renames, casts, filters and dedup exactly like the reference job") {
-      val raw = RawSources.rawDailyBars(spark, fixtureCsv())
-      val clean = BatchCleaner.cleanDailyBars(raw, today = lit("2024-02-01").cast("date"))
-      val rows = clean.orderBy("symbol", "trade_date").collect()
+      withFixtureCsv { csv =>
+        val raw = RawSources.rawDailyBars(spark, csv)
+        val clean = BatchCleaner.cleanDailyBars(raw, today = lit("2024-02-01").cast("date"))
+        val rows = clean.orderBy("symbol", "trade_date").collect()
 
-      assert(rows.length == 2) // aapl d1 + AAPL d2 (dedup'd); all bad rows dropped
-      assert(rows.forall(_.getAs[String]("symbol") == "AAPL")) // upper(trim)
-      assert(clean.columns.toSet == Set("symbol", "trade_date", "open_price", "high_price",
-        "low_price", "close_price", "volume", "batch_loaded_at"))
-      assert(rows.head.getAs[java.sql.Date]("trade_date").toString == "2024-01-02")
-      assert(rows.head.getAs[Double]("close_price") == 11.0)
+        assert(rows.length == 2) // aapl d1 + AAPL d2 (dedup'd); all bad rows dropped
+        assert(rows.forall(_.getAs[String]("symbol") == "AAPL")) // upper(trim)
+        assert(clean.columns.toSet == Set("symbol", "trade_date", "open_price", "high_price",
+          "low_price", "close_price", "volume", "batch_loaded_at"))
+        assert(rows.head.getAs[java.sql.Date]("trade_date").toString == "2024-01-02")
+        assert(rows.head.getAs[Double]("close_price") == 11.0)
+      }
     }
 
     it("reads with the explicit schema — no inference") {
-      val raw = RawSources.rawDailyBars(spark, fixtureCsv())
-      assert(raw.schema == Schemas.rawDailyBar)
+      withFixtureCsv { csv =>
+        val raw = RawSources.rawDailyBars(spark, csv)
+        assert(raw.schema == Schemas.rawDailyBar)
+      }
     }
   }
 }

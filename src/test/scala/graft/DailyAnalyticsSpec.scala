@@ -180,30 +180,31 @@ class DailyAnalyticsSpec extends AnyFunSpec {
       import graft.operators.Enrichment
       import graft.sources.RawSources
       // a seed in the reference CSV's exact shape, own fixture content
-      val dir = java.nio.file.Files.createTempDirectory("graft_seed").toString
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/tickers.csv"),
-        ("symbol,company_name,sector,industry,market_cap_tier\n" +
-          "AAA,Alpha Co,Tech,Software,LARGE\n" +
-          "BBB,Beta Co,Tech,Hardware,MID\n" +
-          "CCC,Gamma Co,Energy,Oil,LARGE\n").getBytes("UTF-8"))
-      val dim = RawSources.tickerDim(spark, s"$dir/tickers.csv")
-        .select("symbol", "sector", "market_cap_tier")
-      val perf = Seq(
-        ("AAA", "2024-01-02", Some(1.5), "GOLDEN_CROSS", "NEUTRAL", 100L),
-        ("BBB", "2024-01-02", Some(-0.5), "NEUTRAL", "OVERBOUGHT", 200L),
-        ("CCC", "2024-01-02", None, "NEUTRAL", "NEUTRAL", 50L))
-        .toDF("symbol", "d", "daily_return_pct", "ma_signal_5_20", "rsi_signal", "volume")
-        .withColumn("trade_date", to_date($"d")).drop("d")
-      val got = Enrichment.sectorSummary(perf, dim)
-        .orderBy("sector", "market_cap_tier")
-        .select("sector", "market_cap_tier", "symbols", "advancers", "decliners",
-          "avg_return_pct", "golden_cross_5_20_count", "overbought_count", "total_volume")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), Option(r.get(5)), r.getLong(6), r.getLong(7), r.getLong(8))).toSeq
-      assert(got == Seq(
-        ("Energy", "LARGE", 1L, 0L, 0L, None, 0L, 0L, 50L),
-        ("Tech", "LARGE", 1L, 1L, 0L, Some(1.5), 1L, 0L, 100L),
-        ("Tech", "MID", 1L, 0L, 1L, Some(-0.5), 0L, 1L, 200L)))
+      TempDir("graft_seed") { dir =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/tickers.csv"),
+          ("symbol,company_name,sector,industry,market_cap_tier\n" +
+            "AAA,Alpha Co,Tech,Software,LARGE\n" +
+            "BBB,Beta Co,Tech,Hardware,MID\n" +
+            "CCC,Gamma Co,Energy,Oil,LARGE\n").getBytes("UTF-8"))
+        val dim = RawSources.tickerDim(spark, s"$dir/tickers.csv")
+          .select("symbol", "sector", "market_cap_tier")
+        val perf = Seq(
+          ("AAA", "2024-01-02", Some(1.5), "GOLDEN_CROSS", "NEUTRAL", 100L),
+          ("BBB", "2024-01-02", Some(-0.5), "NEUTRAL", "OVERBOUGHT", 200L),
+          ("CCC", "2024-01-02", None, "NEUTRAL", "NEUTRAL", 50L))
+          .toDF("symbol", "d", "daily_return_pct", "ma_signal_5_20", "rsi_signal", "volume")
+          .withColumn("trade_date", to_date($"d")).drop("d")
+        val got = Enrichment.sectorSummary(perf, dim)
+          .orderBy("sector", "market_cap_tier")
+          .select("sector", "market_cap_tier", "symbols", "advancers", "decliners",
+            "avg_return_pct", "golden_cross_5_20_count", "overbought_count", "total_volume")
+          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), Option(r.get(5)), r.getLong(6), r.getLong(7), r.getLong(8))).toSeq
+        assert(got == Seq(
+          ("Energy", "LARGE", 1L, 0L, 0L, None, 0L, 0L, 50L),
+          ("Tech", "LARGE", 1L, 1L, 0L, Some(1.5), 1L, 0L, 100L),
+          ("Tech", "MID", 1L, 0L, 1L, Some(-0.5), 0L, 1L, 200L)))
+      }
     }
   }
 

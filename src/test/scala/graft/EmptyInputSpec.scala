@@ -125,10 +125,11 @@ class EmptyInputSpec extends AnyFunSpec {
         DailyAnalytics.martStockPerformance(emptyBars), dim).isEmpty)
       val noMedia = Seq.empty[(Long, Array[Byte])].toDF("media_id", "payload")
       assert(Multimodal.decodeImageFeatures(noMedia).isEmpty)
-      val out = java.nio.file.Files.createTempDirectory("graft_empty_z").toString
-      graft.sources.Layout.zorderWrite(
-        emptyBars.select(col("symbol"), col("volume")), "symbol", "volume", s"$out/z", 4)
-      assert(spark.read.parquet(s"$out/z").isEmpty)
+      TempDir("graft_empty_z") { out =>
+        graft.sources.Layout.zorderWrite(
+          emptyBars.select(col("symbol"), col("volume")), "symbol", "volume", s"$out/z", 4)
+        assert(spark.read.parquet(s"$out/z").isEmpty)
+      }
     }
     it("round-9 operators degrade to empty output on empty input") {
       val emptySrc = Seq.empty[(Long, String)].toDF("doc_id", "source")

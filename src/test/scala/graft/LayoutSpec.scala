@@ -99,26 +99,27 @@ class LayoutSpec extends AnyFunSpec {
   describe("zorderWrite") {
     it("prunes row groups on the SECOND dimension — the win a single sort can't give") {
       val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey", "l_quantity")
-      val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+      TempDir("graft_zorder") { base =>
 
-      // z-ordered layout vs the same data sorted ONLY by l_orderkey
-      Layout.zorderWrite(li, "l_orderkey", "l_suppkey", s"$base/zorder", outFiles = 8)
-      li.repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey")
-        .write.parquet(s"$base/bykey")
+        // z-ordered layout vs the same data sorted ONLY by l_orderkey
+        Layout.zorderWrite(li, "l_orderkey", "l_suppkey", s"$base/zorder", outFiles = 8)
+        li.repartitionByRange(8, col("l_orderkey"))
+          .sortWithinPartitions("l_orderkey")
+          .write.parquet(s"$base/bykey")
 
-      // same selective filter on the second column
-      def filtered(p: String) =
-        spark.read.parquet(p).filter(col("l_suppkey") === 1)
-      val zRows = scanOutputRows(filtered(s"$base/zorder"))
-      val kRows = scanOutputRows(filtered(s"$base/bykey"))
-      // identical answers either way…
-      assert(filtered(s"$base/zorder").agg(sum("l_quantity")).head() ==
-        filtered(s"$base/bykey").agg(sum("l_quantity")).head())
-      // …but the z layout lets parquet min/max stats skip most row
-      // groups, where the orderkey-sorted layout scatters suppkey
-      // everywhere and reads the world
-      assert(zRows * 2 <= kRows, s"zorder read $zRows rows, single-key layout read $kRows")
+        // same selective filter on the second column
+        def filtered(p: String) =
+          spark.read.parquet(p).filter(col("l_suppkey") === 1)
+        val zRows = scanOutputRows(filtered(s"$base/zorder"))
+        val kRows = scanOutputRows(filtered(s"$base/bykey"))
+        // identical answers either way…
+        assert(filtered(s"$base/zorder").agg(sum("l_quantity")).head() ==
+          filtered(s"$base/bykey").agg(sum("l_quantity")).head())
+        // …but the z layout lets parquet min/max stats skip most row
+        // groups, where the orderkey-sorted layout scatters suppkey
+        // everywhere and reads the world
+        assert(zRows * 2 <= kRows, s"zorder read $zRows rows, single-key layout read $kRows")
+      }
     }
   }
 

@@ -11,15 +11,9 @@ class ProbeSpec extends AnyFunSpec {
   import SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def withOut[T](body: String => T): T = {
-    val out = Files.createTempDirectory("graft_probe").toFile
-    try body(out.getPath)
-    finally new scala.reflect.io.Directory(out).deleteRecursively()
-  }
-
   describe("Probe.probe") {
     it("records a batch query's jobs, task time and final plan, each job ended") {
-      withOut { out =>
+      TempDir("graft_probe") { out =>
         val runs = Probe.probe(spark, dir, out, "q_mart_stock_performance")
         assert(runs.size == Probe.Runs)
         runs.foreach { r =>
@@ -36,7 +30,7 @@ class ProbeSpec extends AnyFunSpec {
     }
 
     it("leaves no RDD any of its runs persisted, the warm run's included") {
-      withOut { out =>
+      TempDir("graft_probe") { out =>
         // RDD ids are never reused and ContextCleaner only ever drops
         // entries: a run's snapshot left behind shows up as a new id
         val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -48,7 +42,7 @@ class ProbeSpec extends AnyFunSpec {
     }
 
     it("records the micro-batch phases of a streaming lane") {
-      withOut { out =>
+      TempDir("graft_probe") { out =>
         val construct = Probe.probe(spark, dir, out, "q_stream_join").last.construct
         val batches = construct.batches
         assert(batches.nonEmpty)
@@ -59,6 +53,23 @@ class ProbeSpec extends AnyFunSpec {
         assert(batches.map(_.stateCommitMs).sum > 0, batches)
         assert(Seq("\"state_commit_ms\":", "\"state_stores\":16").forall(construct.json.contains),
           construct.json)
+      }
+    }
+  }
+
+  describe("Probe codegen counts") {
+    it("counts a new class's compile and its time") {
+      val (_, rec) = Probe.record(spark)(
+        spark.range(10).selectExpr(s"id * ${System.nanoTime() % 1000000 + 7} AS v").collect())
+      assert(rec.codegenCompiles >= 1 && rec.codegenMs > 0, rec.json)
+      assert(Seq("\"codegen_compiles\":", "\"codegen_ms\":").forall(rec.json.contains), rec.json)
+    }
+
+    it("a warm q_scc run compiles at most 5 classes") {
+      TempDir("graft_probe") { out =>
+        Probe.probe(spark, dir, out, "q_scc").foreach { r =>
+          assert(r.construct.codegenCompiles + r.execute.codegenCompiles <= 5, r.json)
+        }
       }
     }
   }

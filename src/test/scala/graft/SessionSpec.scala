@@ -1,7 +1,12 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.net.{URL, URLClassLoader}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkContext
+import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, PluginContext, SparkPlugin}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funspec.AnyFunSpec
@@ -26,22 +31,24 @@ class SessionSpec extends AnyFunSpec {
       natives.foreach(bare.sessionState.functionRegistry.dropFunction)
       assert(!natives.exists(id => bare.catalog.functionExists(id.funcName)))
 
-      val dir = Files.createTempDirectory("graft_session").toFile
-      val raw = new java.io.File(dir, "raw")
-      raw.mkdirs()
-      val w = new java.io.PrintWriter(new java.io.File(raw, "bars.csv"))
-      w.println("symbol,date,daily_open,daily_high,daily_low,daily_close,daily_volume,batch_load_timestamp")
-      w.println("AAPL,2024-01-02,10,12,9,11,1000,2024-01-03T00:00:00")
-      w.close()
-      SparkSession.setActiveSession(bare)
-      try graft.jobs.Pipelines.BatchPipeline.main(
-        Array(raw.getAbsolutePath, new java.io.File(dir, "out").getAbsolutePath))
-      finally SparkSession.setActiveSession(spark)
+      TempDir("graft_session") { d =>
+        val dir = new java.io.File(d)
+        val raw = new java.io.File(dir, "raw")
+        raw.mkdirs()
+        val w = new java.io.PrintWriter(new java.io.File(raw, "bars.csv"))
+        w.println("symbol,date,daily_open,daily_high,daily_low,daily_close,daily_volume,batch_load_timestamp")
+        w.println("AAPL,2024-01-02,10,12,9,11,1000,2024-01-03T00:00:00")
+        w.close()
+        SparkSession.setActiveSession(bare)
+        try graft.jobs.Pipelines.BatchPipeline.main(
+          Array(raw.getAbsolutePath, new java.io.File(dir, "out").getAbsolutePath))
+        finally SparkSession.setActiveSession(spark)
 
-      assert(bare.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false")
-      assert(bare.conf.get("spark.sql.session.timeZone") == "UTC")
-      val missing = natives.map(_.funcName).filterNot(bare.catalog.functionExists)
-      assert(missing.isEmpty, s"natives missing after the main: $missing")
+        assert(bare.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false")
+        assert(bare.conf.get("spark.sql.session.timeZone") == "UTC")
+        val missing = natives.map(_.funcName).filterNot(bare.catalog.functionExists)
+        assert(missing.isEmpty, s"natives missing after the main: $missing")
+      }
     }
 
     it("is idempotent: one pin strategy and the same keyed plan") {
@@ -56,6 +63,56 @@ class SessionSpec extends AnyFunSpec {
       assert(pins == 1)
       assert(plan() == before)
       assert(!before.contains("Exchange"), s"the pinned layout must not re-exchange:\n$before")
+    }
+  }
+
+  describe("one codegen cache per JVM") {
+    it("a new session reruns a query whose tasks compile without compiling a class") {
+      def query(s: SparkSession) = s.range(0, 4000, 1, 4).selectExpr("id % 13 AS k", "id * 7 AS v")
+        .groupBy("k").sum("v").collect()
+      query(spark)
+      // the same plan: a new session starts from the context's partition count
+      val fresh = spark.newSession()
+      fresh.conf.set("spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions"))
+      assert(CodegenChild.compiles(query(fresh)) == 0)
+    }
+
+    it("a second context in the JVM drains StreamingPipeline without compiling again") {
+      TempDir("graft_codegen_child") { dir =>
+        val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+        val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+          .filter(_.startsWith("--add-opens"))
+        val (stdout, log) = (new java.io.File(dir, "child.out"), new java.io.File(dir, "child.log"))
+        val child = new ProcessBuilder((Seq(javaBin, "-Xmx1g", "-Dspark.master=local[2]",
+          s"-Dspark.plugins=${classOf[RecordingPlugin].getName}") ++ opens ++
+          Seq("-cp", System.getProperty("java.class.path"), CodegenChild.getClass.getName.stripSuffix("$"),
+            dir)).asJava)
+          .redirectOutput(stdout).redirectError(log).start()
+        val exited = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+        if (!exited) child.destroyForcibly().waitFor()
+        assert(exited && child.exitValue == 0,
+          Files.readAllLines(log.toPath).asScala.takeRight(40).mkString("\n"))
+        val out = Files.readAllLines(stdout.toPath).asScala.toList
+        val got = out.flatMap { l =>
+          l.split(" ", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
+        }.toMap
+        val Array(first, second) = got("compiles").split(",").map(_.toLong)
+        assert(first >= 10 && second <= 2, out)
+        val plugins = got("plugins").split(",").toSet
+        assert(plugins == Set(classOf[RecordingPlugin].getName, classOf[SharedCodegen].getName), out)
+        // a context with a jar: its tasks keep the executor's own loader
+        assert(got("jar_loader") == "kept", out)
+      }
+    }
+
+    it("a task's loader moves to its parent only when it holds no URLs") {
+      val parent = getClass.getClassLoader
+      val empty = new URLClassLoader(Array.empty[URL], parent)
+      val withJar = new URLClassLoader(Array(new java.io.File("x.jar").toURI.toURL), parent)
+      val other = new ClassLoader(parent) {}
+      assert(SharedCodegen.loaderFor(empty) eq parent)
+      assert(SharedCodegen.loaderFor(withJar) eq withJar)
+      assert(SharedCodegen.loaderFor(other) eq other)
     }
   }
 
@@ -102,5 +159,64 @@ class SessionSpec extends AnyFunSpec {
         .filter(p => check.findFirstIn(read(p)).nonEmpty).map(_.toString)
       assert(hits.isEmpty)
     }
+  }
+}
+
+/** Does nothing but note the `spark.plugins` of the context that loads it. */
+class RecordingPlugin extends SparkPlugin {
+  def driverPlugin(): DriverPlugin = new DriverPlugin {
+    override def init(sc: SparkContext, ctx: PluginContext): java.util.Map[String, String] = {
+      RecordingPlugin.seen = sc.getConf.get("spark.plugins")
+      java.util.Collections.emptyMap()
+    }
+  }
+  def executorPlugin(): ExecutorPlugin = null
+}
+
+object RecordingPlugin {
+  @volatile var seen = ""
+}
+
+/** SessionSpec's child JVM, run the way a scheduler runs the mains:
+  *
+  *   CodegenChild <dir>
+  *
+  * Drains two tick increments through `StreamingPipeline.main`, each
+  * in a context it builds and stops, then runs one job on a context
+  * with a jar. Prints `compiles <first>,<second>` (generated-class
+  * compiles per drain), `plugins <spark.plugins of the first context>`
+  * and `jar_loader kept|moved`. */
+object CodegenChild {
+  /** Generated classes the JVM compiled while `body` ran. */
+  def compiles(body: => Any): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  def main(args: Array[String]): Unit = {
+    val zone = new TickDrain(args(0))
+    def drain(name: String, rows: Seq[String]): Long = {
+      zone.land(name, rows)
+      compiles(zone.drain())
+    }
+    val first = drain("a.csv", TickDrain.firstRows)
+    val plugins = RecordingPlugin.seen
+    val second = drain("b.csv", TickDrain.closingRows)
+    println(s"compiles $first,$second")
+    println(s"plugins $plugins")
+
+    val jar = new java.io.File(args(0), "empty.jar")
+    new java.util.jar.JarOutputStream(new java.io.FileOutputStream(jar)).close()
+    sys.props("spark.jars") = jar.getAbsolutePath
+    val spark = Session.getOrCreate("graft-codegen-jar")
+    val kept = spark.sparkContext.parallelize(1 to 4, 4).map { _ =>
+      Thread.currentThread.getContextClassLoader match {
+        case u: URLClassLoader => u.getURLs.exists(_.getPath.endsWith("empty.jar"))
+        case _ => false
+      }
+    }.collect()
+    spark.stop()
+    println(s"jar_loader ${if (kept.forall(identity)) "kept" else "moved"}")
   }
 }

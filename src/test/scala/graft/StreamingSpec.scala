@@ -42,24 +42,25 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("append-mode parquet sink emits finalized windows exactly once") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-      val source = MemoryStream[Tick](spark)
-      source.addData(ticks: _*)
-      // late watermark-closing batch: an event far in the future closes
-      // all earlier windows
-      source.addData(Tick("AAPL", Timestamp.valueOf("2024-01-01 13:00:00"), 1.0, 1))
-      val q = TickStream.toParquet(
-        TickStream.windowed(source.toDF(), "15 minutes", "10 minutes"),
-        s"$dir/out", s"$dir/ckpt").start()
-      try q.processAllAvailable() finally q.stop()
+      TempDir("graft_stream") { dir =>
+        val source = MemoryStream[Tick](spark)
+        source.addData(ticks: _*)
+        // late watermark-closing batch: an event far in the future closes
+        // all earlier windows
+        source.addData(Tick("AAPL", Timestamp.valueOf("2024-01-01 13:00:00"), 1.0, 1))
+        val q = TickStream.toParquet(
+          TickStream.windowed(source.toDF(), "15 minutes", "10 minutes"),
+          s"$dir/out", s"$dir/ckpt").start()
+        try q.processAllAvailable() finally q.stop()
 
-      val out = spark.read.parquet(s"$dir/out")
-      // the 5 original windows are closed by the 13:00 event; the 13:00
-      // window itself is still open and must NOT be emitted
-      assert(out.count() == 5)
-      assert(out.filter($"window_start" === "2024-01-01 13:00:00").isEmpty)
-      // no duplicate windows (the reference's append lane can duplicate)
-      assert(out.groupBy("symbol", "window_start").count().filter($"count" > 1).isEmpty)
+        val out = spark.read.parquet(s"$dir/out")
+        // the 5 original windows are closed by the 13:00 event; the 13:00
+        // window itself is still open and must NOT be emitted
+        assert(out.count() == 5)
+        assert(out.filter($"window_start" === "2024-01-01 13:00:00").isEmpty)
+        // no duplicate windows (the reference's append lane can duplicate)
+        assert(out.groupBy("symbol", "window_start").count().filter($"count" > 1).isEmpty)
+      }
     }
   }
 
@@ -157,65 +158,68 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("upsert-sink existence check resolves through the Hadoop FileSystem API") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_fs_check").toString
-      // An explicit file:-scheme URI: java.io.File("file:/...") never exists
-      // (the scheme becomes part of the pathname), so a true result proves
-      // the check went through Hadoop's FileSystem, not the local-FS API.
-      assert(!new java.io.File(s"file:$dir").exists)
-      assert(TickStream.tableExists(spark, s"file:$dir"))
-      assert(!TickStream.tableExists(spark, s"file:$dir/absent"))
+      TempDir("graft_fs_check") { dir =>
+        // An explicit file:-scheme URI: java.io.File("file:/...") never exists
+        // (the scheme becomes part of the pathname), so a true result proves
+        // the check went through Hadoop's FileSystem, not the local-FS API.
+        assert(!new java.io.File(s"file:$dir").exists)
+        assert(TickStream.tableExists(spark, s"file:$dir"))
+        assert(!TickStream.tableExists(spark, s"file:$dir/absent"))
+      }
     }
 
     it("foreachBatch upsert sink converges to one row per key across batches") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-      val source = MemoryStream[Tick](spark)
-      val stats = TickStream.runningStats(source.toDS())
-        .withColumn("version", col("n_ticks")) // monotone per key
-      val q = TickStream.upsertSink(stats, s"$dir/table", s"$dir/ckpt",
-        Seq("symbol"), "version").start()
-      try {
-        source.addData(ticks.take(4): _*)
-        q.processAllAvailable()
-        source.addData(ticks.drop(4): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      val table = spark.read.parquet(s"$dir/table")
-      assert(table.groupBy("symbol").count().filter($"count" > 1).isEmpty)
-      val aapl = ticks.filter(_.symbol == "AAPL")
-      assert(table.filter($"symbol" === "AAPL").select("n_ticks").as[Long].head() == aapl.length)
+      TempDir("graft_upsert") { dir =>
+        val source = MemoryStream[Tick](spark)
+        val stats = TickStream.runningStats(source.toDS())
+          .withColumn("version", col("n_ticks")) // monotone per key
+        val q = TickStream.upsertSink(stats, s"$dir/table", s"$dir/ckpt",
+          Seq("symbol"), "version").start()
+        try {
+          source.addData(ticks.take(4): _*)
+          q.processAllAvailable()
+          source.addData(ticks.drop(4): _*)
+          q.processAllAvailable()
+        } finally q.stop()
+        val table = spark.read.parquet(s"$dir/table")
+        assert(table.groupBy("symbol").count().filter($"count" > 1).isEmpty)
+        val aapl = ticks.filter(_.symbol == "AAPL")
+        assert(table.filter($"symbol" === "AAPL").select("n_ticks").as[Long].head() == aapl.length)
+      }
     }
 
     it("partitioned upsert sink rewrites only the partitions a batch touches") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_upsert_part").toString
-      val source = MemoryStream[(String, String, Double, Long)](spark)
-      val updates = source.toDF().toDF("symbol", "trade_date", "price", "version")
-      val q = TickStream.upsertSinkPartitioned(updates, s"$dir/table", s"$dir/ckpt",
-        Seq("symbol", "trade_date"), "version", "trade_date").start()
+      TempDir("graft_upsert_part") { dir =>
+        val source = MemoryStream[(String, String, Double, Long)](spark)
+        val updates = source.toDF().toDF("symbol", "trade_date", "price", "version")
+        val q = TickStream.upsertSinkPartitioned(updates, s"$dir/table", s"$dir/ckpt",
+          Seq("symbol", "trade_date"), "version", "trade_date").start()
 
-      def partFiles(p: String): Map[String, Long] = {
-        val d = new java.io.File(s"$dir/table/trade_date=$p")
-        if (!d.exists) Map.empty
-        else d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getName -> f.lastModified()).toMap
+        def partFiles(p: String): Map[String, Long] = {
+          val d = new java.io.File(s"$dir/table/trade_date=$p")
+          if (!d.exists) Map.empty
+          else d.listFiles().filter(_.getName.endsWith(".parquet"))
+            .map(f => f.getName -> f.lastModified()).toMap
+        }
+
+        try {
+          source.addData(("AAPL", "d1", 10.0, 1L), ("MSFT", "d2", 50.0, 1L))
+          q.processAllAvailable()
+          val d1Before = partFiles("d1")
+          assert(d1Before.nonEmpty)
+          Thread.sleep(1100) // mtime granularity
+          // second batch touches ONLY d2 (new version) — d1 must not be rewritten
+          source.addData(("MSFT", "d2", 55.0, 2L))
+          q.processAllAvailable()
+          assert(partFiles("d1") == d1Before, "untouched partition was rewritten")
+        } finally q.stop()
+
+        val table = spark.read.parquet(s"$dir/table")
+        assert(table.count() == 2)
+        assert(table.filter($"symbol" === "MSFT").select("price").as[Double].head() == 55.0)
+        assert(table.filter($"symbol" === "MSFT").select("version").as[Long].head() == 2L)
+        assert(table.filter($"symbol" === "AAPL").select("price").as[Double].head() == 10.0)
       }
-
-      try {
-        source.addData(("AAPL", "d1", 10.0, 1L), ("MSFT", "d2", 50.0, 1L))
-        q.processAllAvailable()
-        val d1Before = partFiles("d1")
-        assert(d1Before.nonEmpty)
-        Thread.sleep(1100) // mtime granularity
-        // second batch touches ONLY d2 (new version) — d1 must not be rewritten
-        source.addData(("MSFT", "d2", 55.0, 2L))
-        q.processAllAvailable()
-        assert(partFiles("d1") == d1Before, "untouched partition was rewritten")
-      } finally q.stop()
-
-      val table = spark.read.parquet(s"$dir/table")
-      assert(table.count() == 2)
-      assert(table.filter($"symbol" === "MSFT").select("price").as[Double].head() == 55.0)
-      assert(table.filter($"symbol" === "MSFT").select("version").as[Long].head() == 2L)
-      assert(table.filter($"symbol" === "AAPL").select("price").as[Double].head() == 10.0)
     }
 
     it("stream-stream tick⋈quote join matches the batch range join") {
@@ -262,47 +266,49 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("streaming corpus ingestion flags cross-batch near-dups exactly once") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_corpus_stream").toString
-      val source = MemoryStream[(Long, String)](spark)
-      val docs = source.toDF().toDF("doc_id", "text")
-      val q = graft.streaming.CorpusStream.dedupIngest(docs, "doc_id", "text",
-        s"$dir/store", s"$dir/flags", s"$dir/ckpt").start()
-      try {
-        source.addData(
-          (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-          (2L, "completely different words about spark window functions and shuffles here"))
-        q.processAllAvailable()
-        source.addData(
-          (3L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
-          (4L, "yet another unrelated document about batch pipelines and parquet files"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pairs = spark.read.parquet(s"$dir/flags")
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      // batch 2 finds 3 ~ 1 across batches; nothing pairs within either batch
-      assert(pairs == Set((1L, 3L)))
-      // all four docs (signatures) accumulated in the store
-      assert(spark.read.parquet(s"$dir/store").select("doc_id").distinct().count() == 4)
+      TempDir("graft_corpus_stream") { dir =>
+        val source = MemoryStream[(Long, String)](spark)
+        val docs = source.toDF().toDF("doc_id", "text")
+        val q = graft.streaming.CorpusStream.dedupIngest(docs, "doc_id", "text",
+          s"$dir/store", s"$dir/flags", s"$dir/ckpt").start()
+        try {
+          source.addData(
+            (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+            (2L, "completely different words about spark window functions and shuffles here"))
+          q.processAllAvailable()
+          source.addData(
+            (3L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
+            (4L, "yet another unrelated document about batch pipelines and parquet files"))
+          q.processAllAvailable()
+        } finally q.stop()
+        val pairs = spark.read.parquet(s"$dir/flags")
+          .select("id1", "id2").as[(Long, Long)].collect().toSet
+        // batch 2 finds 3 ~ 1 across batches; nothing pairs within either batch
+        assert(pairs == Set((1L, 3L)))
+        // all four docs (signatures) accumulated in the store
+        assert(spark.read.parquet(s"$dir/store").select("doc_id").distinct().count() == 4)
+      }
     }
 
     it("a degenerate first batch (all docs below shingle size) doesn't poison the store") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_corpus_degen").toString
-      val source = MemoryStream[(Long, String)](spark)
-      val docs = source.toDF().toDF("doc_id", "text")
-      val q = graft.streaming.CorpusStream.dedupIngest(docs, "doc_id", "text",
-        s"$dir/store", s"$dir/flags", s"$dir/ckpt").start()
-      try {
-        source.addData((1L, "too short")) // < 3 words -> zero shingles -> empty batch
-        q.processAllAvailable()
-        source.addData(
-          (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
-          (3L, "the quick brown fox jumps over the lazy dog near the river bank today"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val pairs = spark.read.parquet(s"$dir/flags")
-        .select("id1", "id2").as[(Long, Long)].collect().toSet
-      assert(pairs == Set((2L, 3L)))
-      assert(spark.read.parquet(s"$dir/store").select("doc_id").distinct().count() == 2)
+      TempDir("graft_corpus_degen") { dir =>
+        val source = MemoryStream[(Long, String)](spark)
+        val docs = source.toDF().toDF("doc_id", "text")
+        val q = graft.streaming.CorpusStream.dedupIngest(docs, "doc_id", "text",
+          s"$dir/store", s"$dir/flags", s"$dir/ckpt").start()
+        try {
+          source.addData((1L, "too short")) // < 3 words -> zero shingles -> empty batch
+          q.processAllAvailable()
+          source.addData(
+            (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+            (3L, "the quick brown fox jumps over the lazy dog near the river bank today"))
+          q.processAllAvailable()
+        } finally q.stop()
+        val pairs = spark.read.parquet(s"$dir/flags")
+          .select("id1", "id2").as[(Long, Long)].collect().toSet
+        assert(pairs == Set((2L, 3L)))
+        assert(spark.read.parquet(s"$dir/store").select("doc_id").distinct().count() == 2)
+      }
     }
 
     it("stageTimeChunks writes disjoint ascending time ranges with matching mtime order") {
@@ -435,90 +441,93 @@ class StreamingSpec extends AnyFunSpec {
     }
 
     it("upsert sink: restarting a COMPLETED run from its checkpoint changes nothing") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_eo1").toString
-      writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 1L)))
-      writeFile(s"$dir/src", Seq(("AAPL", 11.0, 2L)))
-      runUpsert(s"$dir/src", dir)
-      val after = tableRows(s"$dir/table")
-      assert(after == Set(("AAPL", 11.0, 2L), ("MSFT", 50.0, 1L)))
-      // restart: checkpoint says both files are committed — no batch may
-      // re-apply, the table must be row-identical
-      runUpsert(s"$dir/src", dir)
-      assert(tableRows(s"$dir/table") == after,
-        "completed-checkpoint restart changed the table")
+      TempDir("graft_eo1") { dir =>
+        writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 1L)))
+        writeFile(s"$dir/src", Seq(("AAPL", 11.0, 2L)))
+        runUpsert(s"$dir/src", dir)
+        val after = tableRows(s"$dir/table")
+        assert(after == Set(("AAPL", 11.0, 2L), ("MSFT", 50.0, 1L)))
+        // restart: checkpoint says both files are committed — no batch may
+        // re-apply, the table must be row-identical
+        runUpsert(s"$dir/src", dir)
+        assert(tableRows(s"$dir/table") == after,
+          "completed-checkpoint restart changed the table")
+      }
     }
 
     it("upsert sink: an UNCOMMITTED batch replays idempotently after a crash") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_eo2").toString
-      writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 1L)))
-      writeFile(s"$dir/src", Seq(("AAPL", 11.0, 2L), ("GOOG", 99.0, 1L)))
-      runUpsert(s"$dir/src", dir)
-      val after = tableRows(s"$dir/table")
-      // simulate a crash BETWEEN the sink write and the commit-log write
-      // of the last batch: restore the checkpoint to a fresh location
-      // with the final commits entry MISSING (offsets entry present), so
-      // the restart re-executes that batch's foreachBatch against a
-      // table that already contains its effects — the merge must
-      // converge, not duplicate. (A fresh location, not in-place
-      // surgery: Spark 4 flags same-JVM checkpoint mutation as
-      // concurrent use — and a restored-backup checkpoint is exactly
-      // the operational crash-recovery shape anyway.)
-      val src = java.nio.file.Paths.get(s"$dir/ckpt")
-      val restored = java.nio.file.Paths.get(s"$dir/ckpt_restored")
-      val commitNames = new java.io.File(s"$dir/ckpt/commits")
-        .listFiles().filter(_.getName.forall(_.isDigit)).map(_.getName)
-        .sortBy(_.toInt)
-      assert(commitNames.length >= 2, "expected one commit per staged file")
-      // drop the commit entry AND its local-FS checksum shadow (the
-      // ChecksumFileSystem writes commits/.1.crc beside commits/1; a
-      // stale shadow makes the replay's commit rewrite fail with
-      // FileAlreadyExists)
-      val dropped = Set(s"commits/${commitNames.last}",
-        s"commits/.${commitNames.last}.crc")
-      java.nio.file.Files.walk(src).forEach { p =>
-        val rel = src.relativize(p).toString
-        if (rel.nonEmpty && !dropped(rel)) {
-          val t = restored.resolve(rel)
-          if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-          else {
-            java.nio.file.Files.createDirectories(t.getParent)
-            java.nio.file.Files.copy(p, t)
+      TempDir("graft_eo2") { dir =>
+        writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 1L)))
+        writeFile(s"$dir/src", Seq(("AAPL", 11.0, 2L), ("GOOG", 99.0, 1L)))
+        runUpsert(s"$dir/src", dir)
+        val after = tableRows(s"$dir/table")
+        // simulate a crash BETWEEN the sink write and the commit-log write
+        // of the last batch: restore the checkpoint to a fresh location
+        // with the final commits entry MISSING (offsets entry present), so
+        // the restart re-executes that batch's foreachBatch against a
+        // table that already contains its effects — the merge must
+        // converge, not duplicate. (A fresh location, not in-place
+        // surgery: Spark 4 flags same-JVM checkpoint mutation as
+        // concurrent use — and a restored-backup checkpoint is exactly
+        // the operational crash-recovery shape anyway.)
+        val src = java.nio.file.Paths.get(s"$dir/ckpt")
+        val restored = java.nio.file.Paths.get(s"$dir/ckpt_restored")
+        val commitNames = new java.io.File(s"$dir/ckpt/commits")
+          .listFiles().filter(_.getName.forall(_.isDigit)).map(_.getName)
+          .sortBy(_.toInt)
+        assert(commitNames.length >= 2, "expected one commit per staged file")
+        // drop the commit entry AND its local-FS checksum shadow (the
+        // ChecksumFileSystem writes commits/.1.crc beside commits/1; a
+        // stale shadow makes the replay's commit rewrite fail with
+        // FileAlreadyExists)
+        val dropped = Set(s"commits/${commitNames.last}",
+          s"commits/.${commitNames.last}.crc")
+        java.nio.file.Files.walk(src).forEach { p =>
+          val rel = src.relativize(p).toString
+          if (rel.nonEmpty && !dropped(rel)) {
+            val t = restored.resolve(rel)
+            if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+            else {
+              java.nio.file.Files.createDirectories(t.getParent)
+              java.nio.file.Files.copy(p, t)
+            }
           }
         }
-      }
-      val updates = spark.readStream.schema(updSchema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/src")
-      val q = TickStream.upsertSink(updates, s"$dir/table", s"$dir/ckpt_restored",
-          Seq("symbol"), "version")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      assert(tableRows(s"$dir/table") == after,
-        "replayed batch was not idempotent")
-    }
-
-    it("snapshot sink: restart with NEW data equals one continuous run (state restore)") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_eo3").toString
-      def runSnapshot(): Unit = {
-        val src = spark.readStream.schema(updSchema).parquet(s"$dir/src")
-        val agg = src.groupBy("symbol")
-          .agg(count(lit(1)).as("n"), sum(col("version")).as("vsum"))
-        val q = TickStream.snapshotSink(agg, s"$dir/table", s"$dir/ckpt")
+        val updates = spark.readStream.schema(updSchema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$dir/src")
+        val q = TickStream.upsertSink(updates, s"$dir/table", s"$dir/ckpt_restored",
+            Seq("symbol"), "version")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
+        assert(tableRows(s"$dir/table") == after,
+          "replayed batch was not idempotent")
       }
-      writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 2L)))
-      runSnapshot()
-      // run 2 sees ONLY the new file — its complete-mode snapshot is
-      // correct only if the aggregation state was restored from the
-      // checkpoint, not recomputed from the batch alone
-      writeFile(s"$dir/src", Seq(("AAPL", 12.0, 4L), ("TSLA", 1.0, 8L)))
-      runSnapshot()
-      val got = spark.read.parquet(s"$dir/table")
-        .as[(String, Long, Long)].collect().toSet
-      assert(got == Set(("AAPL", 2L, 5L), ("MSFT", 1L, 2L), ("TSLA", 1L, 8L)),
-        s"snapshot after restart diverged from the continuous-run result: $got")
+    }
+
+    it("snapshot sink: restart with NEW data equals one continuous run (state restore)") {
+      TempDir("graft_eo3") { dir =>
+        def runSnapshot(): Unit = {
+          val src = spark.readStream.schema(updSchema).parquet(s"$dir/src")
+          val agg = src.groupBy("symbol")
+            .agg(count(lit(1)).as("n"), sum(col("version")).as("vsum"))
+          val q = TickStream.snapshotSink(agg, s"$dir/table", s"$dir/ckpt")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        }
+        writeFile(s"$dir/src", Seq(("AAPL", 10.0, 1L), ("MSFT", 50.0, 2L)))
+        runSnapshot()
+        // run 2 sees ONLY the new file — its complete-mode snapshot is
+        // correct only if the aggregation state was restored from the
+        // checkpoint, not recomputed from the batch alone
+        writeFile(s"$dir/src", Seq(("AAPL", 12.0, 4L), ("TSLA", 1.0, 8L)))
+        runSnapshot()
+        val got = spark.read.parquet(s"$dir/table")
+          .as[(String, Long, Long)].collect().toSet
+        assert(got == Set(("AAPL", 2L, 5L), ("MSFT", 1L, 2L), ("TSLA", 1L, 8L)),
+          s"snapshot after restart diverged from the continuous-run result: $got")
+      }
     }
   }
 
@@ -641,28 +650,44 @@ class StreamingSpec extends AnyFunSpec {
 
   describe("StreamingPipeline checkpoint across a shuffle-partition change") {
     it("drains a checkpoint written at 8 partitions after the session moves to 4") {
-      val zone = new TickDrain("graft_ckpt_parts")
-      TickDrain.isolated(spark) {
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+      TickDrain.zone("graft_ckpt_parts") { zone =>
+        Session.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+          zone.land("a.csv", TickDrain.firstRows)
+          zone.drain()
+          spark.conf.set("spark.sql.shuffle.partitions", "4")
+          zone.land("b.csv", TickDrain.closingRows)
+          zone.drain()
+        }
+        val (out, want) = (zone.written(spark), zone.closedWindows(spark))
+        assert(want.count() == 5)
+        assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
+        // the stateful operator kept the checkpoint's 8 partitions
+        assert(zone.stores.size == 8)
+      }
+    }
+  }
+
+  describe("StreamingPipeline.main on a reused session") {
+    it("leaves unloadOnCommit at the value the session had") {
+      TickDrain.zone("graft_conf_restore") { zone =>
+        val prior = spark.conf.getOption(TickStream.unloadOnCommit)
         zone.land("a.csv", TickDrain.firstRows)
         zone.drain()
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        zone.land("b.csv", TickDrain.closingRows)
-        zone.drain()
+        assert(spark.conf.getOption(TickStream.unloadOnCommit) == prior)
+        Session.withConf(spark, TickStream.unloadOnCommit -> "false") {
+          zone.land("b.csv", TickDrain.closingRows)
+          zone.drain()
+          assert(spark.conf.get(TickStream.unloadOnCommit) == "false")
+        }
+        assert(zone.written(spark).count() == 5)
       }
-      val (out, want) = (zone.written(spark), zone.closedWindows(spark))
-      assert(want.count() == 5)
-      assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
-      // the stateful operator kept the checkpoint's 8 partitions
-      assert(zone.stores.size == 8)
     }
   }
 
   describe("StreamingPipeline restart") {
     it("snapshots within 10 deltas of the last commit and keeps only the retained window") {
-      val zone = new TickDrain("graft_ckpt_snap")
-      val retain = 2
-      TickDrain.isolated(spark) {
+      TickDrain.zone("graft_ckpt_snap") { zone =>
+        val retain = 2
         Session.withConf(spark, "spark.sql.streaming.minBatchesToRetain" -> retain.toString) {
           // each drain advances the watermark an hour: a data batch,
           // then a no-data batch that evicts the closed windows
@@ -671,51 +696,49 @@ class StreamingSpec extends AnyFunSpec {
             zone.drain()
           }
         }
-      }
-      // state-store version n is the state after batch n - 1
-      val last = new java.io.File(s"${zone.dir}/ckpt/commits").list()
-        .filter(_.forall(_.isDigit)).map(_.toLong).max + 1
-      assert(last >= 13, "seven drains commit at least 13 batches")
-      assert(zone.stores.nonEmpty)
-      zone.stores.foreach { store =>
-        val files = store.list().toSeq
-        val version = (f: String) => f.dropWhile(_ == '.').takeWhile(_.isDigit).toLong
-        val snapshots = files.filter(_.endsWith(".snapshot")).map(version)
-        assert(snapshots.exists(_ >= last - 10), s"$store: no snapshot within 10 deltas of $last: $files")
-        // a restart to version last - retain loads the newest snapshot
-        // at or below it; nothing older is retained
-        val base = snapshots.filter(_ <= last - retain).maxOption
-          .getOrElse(fail(s"$store: no snapshot at or below ${last - retain}: $files"))
-        val stale = files.filter(f => f.head.isDigit || f.startsWith(".")).filter(version(_) < base)
-        assert(stale.isEmpty, s"$store keeps files older than $base.snapshot: ${stale.sorted}")
+        // state-store version n is the state after batch n - 1
+        val last = new java.io.File(s"${zone.dir}/ckpt/commits").list()
+          .filter(_.forall(_.isDigit)).map(_.toLong).max + 1
+        assert(last >= 13, "seven drains commit at least 13 batches")
+        assert(zone.stores.nonEmpty)
+        zone.stores.foreach { store =>
+          val files = store.list().toSeq
+          val version = (f: String) => f.dropWhile(_ == '.').takeWhile(_.isDigit).toLong
+          val snapshots = files.filter(_.endsWith(".snapshot")).map(version)
+          assert(snapshots.exists(_ >= last - 10), s"$store: no snapshot within 10 deltas of $last: $files")
+          // a restart to version last - retain loads the newest snapshot
+          // at or below it; nothing older is retained
+          val base = snapshots.filter(_ <= last - retain).maxOption
+            .getOrElse(fail(s"$store: no snapshot at or below ${last - retain}: $files"))
+          val stale = files.filter(f => f.head.isDigit || f.startsWith(".")).filter(version(_) < base)
+          assert(stale.isEmpty, s"$store keeps files older than $base.snapshot: ${stale.sorted}")
+        }
       }
     }
 
     it("drains a checkpoint RocksDB wrote, on the provider its offset log records") {
-      val zone = new TickDrain("graft_ckpt_rocks")
-      TickDrain.isolated(spark) {
+      TickDrain.zone("graft_ckpt_rocks") { zone =>
         zone.land("a.csv", TickDrain.firstRows)
         Session.withConf(spark, TickDrain.rocksDb: _*)(zone.drain())
         zone.land("b.csv", TickDrain.closingRows)
         zone.drain()
+        val offsets = new java.io.File(s"${zone.dir}/ckpt/offsets")
+        val newest = offsets.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+        assert(newest.getName.toLong >= 2, "the second drain ran its own batches")
+        assert(scala.io.Source.fromFile(newest).mkString.contains("RocksDBStateStoreProvider"))
+        val (out, want) = (zone.written(spark), zone.closedWindows(spark))
+        assert(want.count() == 5)
+        assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
+        assert(out.count() == out.dropDuplicates("symbol", "window_start").count(),
+          "a window was emitted twice")
       }
-      val offsets = new java.io.File(s"${zone.dir}/ckpt/offsets")
-      val newest = offsets.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-      assert(newest.getName.toLong >= 2, "the second drain ran its own batches")
-      assert(scala.io.Source.fromFile(newest).mkString.contains("RocksDBStateStoreProvider"))
-      val (out, want) = (zone.written(spark), zone.closedWindows(spark))
-      assert(want.count() == 5)
-      assert(out.exceptAll(want).isEmpty && want.exceptAll(out).isEmpty)
-      assert(out.count() == out.dropDuplicates("symbol", "window_start").count(),
-        "a window was emitted twice")
     }
   }
 }
 
-/** A StreamingPipeline landing zone: CSV increments land in `raw`, a
-  * drain appends windows to `out` and checkpoints in `ckpt`. */
-class TickDrain(prefix: String) {
-  val dir: String = java.nio.file.Files.createTempDirectory(prefix).toString
+/** A StreamingPipeline landing zone in `dir`: CSV increments land in
+  * `raw`, a drain appends windows to `out` and checkpoints in `ckpt`. */
+class TickDrain(val dir: String) {
   val raw = new java.io.File(dir, "raw")
   raw.mkdirs()
 
@@ -749,6 +772,9 @@ class TickDrain(prefix: String) {
 }
 
 object TickDrain {
+  /** Runs `body` on a zone in a temporary directory, deleted afterwards. */
+  def zone[T](prefix: String)(body: TickDrain => T): T = TempDir(prefix)(d => body(new TickDrain(d)))
+
   val firstRows = Seq(
     "AAPL,2024-01-01 10:00:00,10.0,10,10,10,1", "AAPL,2024-01-01 10:05:00,12.0,12,12,12,2",
     "MSFT,2024-01-01 10:02:00,50.0,50,50,50,1", "AAPL,2024-01-01 10:16:00,13.0,13,13,13,3")
@@ -766,15 +792,4 @@ object TickDrain {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false")
-
-  /** Runs `body` and restores the session confs a drain changes: the
-    * main sets `unloadOnCommit` on the shared session. */
-  def isolated[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val touched = Seq("spark.sql.shuffle.partitions", TickStream.unloadOnCommit)
-    val saved = touched.map(k => k -> spark.conf.getOption(k))
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }
