@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs.{nullifZero, rd}
 import graft.sources.Staging
@@ -13,16 +13,23 @@ import graft.sources.Staging.Snapshottable
   * prioritization and quality weighting in pretraining pipelines —
   * the original application of PageRank, Brin & Page, WWW'98).
   *
-  * Staging regime for the bounded-round loops: each loop probes the
-  * measured size of its NODE/LABEL frame ([[Staging.wantsPin]]) and
-  * picks per scale. Small labels (they broadcast) → plain snapshots;
-  * every per-round join broadcasts the label side and the edge frame
-  * never moves — the optimal small-data plan. Labels past the
-  * broadcast threshold → the loop pins hash layouts
+  * Staging regime for the bounded-round loops: each loop probes its
+  * NODE/LABEL frame (the self-joins: the joined frame itself) with
+  * [[Staging.isLarge]] and picks per scale. Small labels (they
+  * broadcast) → plain snapshots; every per-round join broadcasts the
+  * label side and the edge frame never moves — the optimal small-data
+  * plan. Labels past the broadcast threshold, or of unmeasured size
+  * (reliable checkpoints) → the loop pins hash layouts
   * ([[Staging.snapshotKeyed]]) on its edge AND label frames once, and
   * every round's join/aggregate then reuses the layout instead of
   * re-exchanging — the optimal big-data plan (at 100 TB, one message
   * shuffle per round instead of two-plus). Same code, both regimes.
+  *
+  * Each graph shape has one setup: [[directed]] (PageRank, PPR, HITS,
+  * SCC), [[undirected]] (the triangle family, rich club, Adamic-Adar,
+  * assortativity) and [[symmetric]] (the BFS frontier loops).
+  * Label propagation and k-core keep their raw endpoints (no null or
+  * self-loop filter); their oracles mirror that.
   */
 object Graph {
 
@@ -39,6 +46,47 @@ object Graph {
   /** Loop-carried staging: pinned in the big regime, plain otherwise. */
   private def stageIf(big: Boolean, df: DataFrame, keys: String*): DataFrame =
     if (big) Staging.snapshotKeyed(df, keys: _*) else Staging.snapshot(df)
+
+  /** `edges` as long `(a, b)` pairs, without nulls or self-loops. */
+  private def cleaned(edges: DataFrame, srcCol: String, dstCol: String,
+                      a: String, b: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as(a), col(dstCol).cast("long").as(b))
+      .filter(col(a).isNotNull && col(b).isNotNull && col(a) =!= col(b))
+
+  /** Both directions of every `(u, v)` edge. */
+  private def mirrored(e: DataFrame): DataFrame =
+    e.union(e.select(col("v").as("u"), col("u").as("v")))
+
+  /** The directed loops' setup: the cleaned, distinct `(src, dst)`
+    * edge snapshot (reused every round), its node snapshot `id`
+    * (joined on id every round), and the regime the node frame's size
+    * SETS. Re-keying is the caller's: its join keys differ. */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, DataFrame, Boolean) = {
+    val e = cleaned(edges, srcCol, dstCol, "src", "dst").distinct().snapshot()
+    val nodes = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+      .distinct().snapshot()
+    (e, nodes, Staging.isLarge(nodes))
+  }
+
+  /** The canonical undirected edge set: cleaned `(least, greatest)`
+    * pairs, parallel edges collapsed. Not snapshotted. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    cleaned(edges, srcCol, dstCol, "u", "v")
+      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .distinct()
+
+  /** The frontier loops' setup ([[bfsHops]], [[closenessSample]]):
+    * the cleaned edges in both directions, snapshotted and keyed on
+    * `u` in the big regime (rounds join edges on u), and their node
+    * snapshot, whose size SETS the regime. */
+  private def symmetric(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, DataFrame, Boolean) = {
+    val e = mirrored(cleaned(edges, srcCol, dstCol, "u", "v")).distinct().snapshot()
+    val nodes = e.select(col("u").as("id")).distinct().snapshot()
+    val big = Staging.isLarge(nodes)
+    (rekeyIf(big, e, "u"), nodes, big)
+  }
 
   /** Fixed-iteration PageRank in EXACT integer arithmetic.
     *
@@ -62,35 +110,8 @@ object Graph {
     * ranking is still well-defined and deterministic.
     */
   def pageRankScaled(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int = 2, scale: Long = 1000000000000L): DataFrame = {
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .snapshot() // reused every iteration
-    val nodes0 = e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
-      .distinct()
-      .snapshot() // joined on id twice per round; its size SETS the regime
-    val big = Staging.wantsPin(nodes0)
-    val e = rekeyIf(big, e0, "src") // per-round message join keys on src
-    val nodes = rekeyIf(big, nodes0, "id")
-    val n = nodes.count()
-    require(n > 0, "pageRankScaled: empty graph")
-    val base = (3L * scale) / (20L * n) // 0.15 · scale / N, exact
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    var ranks = nodes.withColumn("rank", lit(scale / n))
-    for (i <- 1 to iters) {
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .join(outdeg, "src")
-        .select(col("dst"), expr("rank div outdeg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("in_sum"))
-      val next = nodes.join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("17 * coalesce(in_sum, 0L) div 20")).as("rank"))
-      ranks = if (i % 2 == 0 && i < iters) stageIf(big, next, "id") else next
-    }
-    ranks
-  }
+                     iters: Int = 2, scale: Long = 1000000000000L): DataFrame =
+    rankLoop(edges, srcCol, dstCol, None, iters, scale)
 
   /** Personalized PageRank from a seed set (Jeh & Widom, WWW'03 —
     * random walk with restart): identical to [[pageRankScaled]] except
@@ -106,40 +127,40 @@ object Graph {
     * able when small); the only driver scalar is |S∩V|. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, iters: Int = 2,
-                           scale: Long = 1000000000000L): DataFrame = {
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .snapshot() // reused every iteration
-    val nodes0 = e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
-      .distinct()
-      .snapshot() // joined on id twice per round; its size SETS the regime
-    val big = Staging.wantsPin(nodes0)
+                           scale: Long = 1000000000000L): DataFrame =
+    rankLoop(edges, srcCol, dstCol, Some(seeds), iters, scale)
+
+  /** The one exact-integer PageRank loop: restart mass on every node
+    * when `seeds` is None ([[pageRankScaled]], which stages no seed
+    * frame), on the seeds in the graph otherwise
+    * ([[personalizedPageRank]]). */
+  private def rankLoop(edges: DataFrame, srcCol: String, dstCol: String,
+                       seeds: Option[DataFrame], iters: Int, scale: Long): DataFrame = {
+    val (e0, nodes0, big) = directed(edges, srcCol, dstCol)
     val e = rekeyIf(big, e0, "src") // per-round message join keys on src
     val nodes = rekeyIf(big, nodes0, "id")
-    val seed = stageIf(big, seeds
-      .select(col(seeds.columns.head).cast("long").as("id")).distinct()
+    val seed = seeds.map(s => stageIf(big, s
+      .select(col(s.columns.head).cast("long").as("id")).distinct()
       .join(nodes, "id") // off-graph seeds carry no walk mass
       .withColumn("is_seed", lit(true)),
-      "id") // the restart flag joins (on id) every iteration
-    val ns = seed.count()
-    require(ns > 0, "personalizedPageRank: no seeds present in the graph")
-    val base = (3L * scale) / (20L * ns) // 0.15 · scale / |S|, exact
+      "id")) // the restart flag joins (on id) every iteration
+    val n = seed.getOrElse(nodes).count()
+    require(n > 0, seed.fold("pageRankScaled: empty graph")(_ =>
+      "personalizedPageRank: no seeds present in the graph"))
+    // restart mass `v` lands on every node, or on the seeds only
+    val onto = seed.fold(nodes)(s => nodes.join(s, Seq("id"), "left"))
+    def share(v: Long): Column =
+      if (seed.isEmpty) lit(v) else when(col("is_seed"), lit(v)).otherwise(lit(0L))
+    val base = (3L * scale) / (20L * n) // 0.15 · scale / N (or / |S|), exact
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    var ranks = nodes.join(seed, Seq("id"), "left")
-      .select(col("id"),
-        when(col("is_seed"), lit(scale / ns)).otherwise(lit(0L)).as("rank"))
+    var ranks = onto.select(col("id"), share(scale / n).as("rank"))
     for (i <- 1 to iters) {
       val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
         .join(outdeg, "src")
         .select(col("dst"), expr("rank div outdeg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("in_sum"))
-      val next = nodes.join(seed, Seq("id"), "left")
-        .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
-            expr("17 * coalesce(in_sum, 0L) div 20")).as("rank"))
+      val next = onto.join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left")
+        .select(col("id"), (share(base) + expr("17 * coalesce(in_sum, 0L) div 20")).as("rank"))
       ranks = if (i % 2 == 0 && i < iters) stageIf(big, next, "id") else next
     }
     ranks
@@ -148,7 +169,28 @@ object Graph {
   /** Local (per-vertex) triangle counts over an undirected edge list —
     * the clustering-coefficient / community-density primitive (spam
     * and link-farm detection in web-graph curation; cohesion scoring
-    * for co-occurrence graphs).
+    * for co-occurrence graphs): [[triangles]] rolled up at node grain,
+    * each triangle crediting its three vertices. */
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    triangles(undirected(edges, srcCol, dstCol).snapshot()) // feeds degree count AND orientation
+      .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
+      .groupBy("id").agg(count(lit(1)).as("triangles"))
+
+  /** Per-edge triangle support over the canonical undirected edge
+    * set: [[triangles]] rolled up at EDGE grain, each triangle
+    * (a,b,c) crediting its three canonical (min,max) edges. The
+    * building block [[kTruss]] peels on. */
+  private def edgeSupport(und: DataFrame): DataFrame =
+    triangles(und).select(explode(array(
+        struct(least(col("a"), col("b")).as("eu"), greatest(col("a"), col("b")).as("ev")),
+        struct(least(col("a"), col("c")).as("eu"), greatest(col("a"), col("c")).as("ev")),
+        struct(least(col("b"), col("c")).as("eu"), greatest(col("b"), col("c")).as("ev"))))
+        .as("e"))
+      .select(col("e.eu").as("u"), col("e.ev").as("v"))
+      .groupBy("u", "v").agg(count(lit(1)).as("support"))
+
+  /** Every triangle of the canonical undirected edge set `und`, once,
+    * as `(a, b, c)`.
     *
     * Skew safety is the whole design: edges are ORIENTED from the
     * endpoint with the lower (degree, id) to the higher before the
@@ -162,15 +204,7 @@ object Graph {
     * lowest-ordered apex), closed by a semi join back to the oriented
     * edge set — equi joins only, all partial-aggregable.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    // canonical undirected form; distinct collapses parallel edges
-    val und = raw
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .snapshot() // feeds degree count AND orientation
+  private def triangles(und: DataFrame): DataFrame = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     val withDeg = und
@@ -185,45 +219,10 @@ object Graph {
     // so the frame's own measured size is the regime probe — small
     // oriented lists broadcast (AQE), big ones get the pinned hash(a)
     // layout that makes both wedge sides exchange-free
-    val orientedStaged = rekeyIf(Staging.wantsPin(oriented), oriented, "a")
-    val wedges = orientedStaged
-      .join(orientedStaged.select(col("a"), col("b").as("c")), "a")
+    val o = rekeyIf(Staging.isLarge(oriented), oriented, "a")
+    o.join(o.select(col("a"), col("b").as("c")), "a")
       .filter(col("b") =!= col("c"))
-    val tri = wedges.join(
-      orientedStaged.select(col("a").as("b"), col("b").as("c")), Seq("b", "c"), "left_semi")
-    tri.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("triangles"))
-  }
-
-  /** Per-edge triangle support over the canonical undirected edge
-    * set — [[triangleCounts]]'s degree-oriented enumeration (same
-    * orientation rule, same wedge join, same skew safety) with the
-    * rollup moved from NODE grain to EDGE grain: each triangle
-    * (a,b,c) credits its three canonical (min,max) edges. The
-    * building block [[kTruss]] peels on. */
-  private def edgeSupport(und: DataFrame): DataFrame = {
-    val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-    val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg
-      .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
-        when(uFirst, col("v")).otherwise(col("u")).as("b"))
-      .snapshot() // three plan appearances (2x wedge, closure)
-    val oS = rekeyIf(Staging.wantsPin(oriented), oriented, "a")
-    val tri = oS
-      .join(oS.select(col("a"), col("b").as("c")), "a")
-      .filter(col("b") =!= col("c"))
-      .join(oS.select(col("a").as("b"), col("b").as("c")), Seq("b", "c"), "left_semi")
-    tri.select(explode(array(
-        struct(least(col("a"), col("b")).as("eu"), greatest(col("a"), col("b")).as("ev")),
-        struct(least(col("a"), col("c")).as("eu"), greatest(col("a"), col("c")).as("ev")),
-        struct(least(col("b"), col("c")).as("eu"), greatest(col("b"), col("c")).as("ev"))))
-        .as("e"))
-      .select(col("e.eu").as("u"), col("e.ev").as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("support"))
+      .join(o.select(col("a").as("b"), col("b").as("c")), Seq("b", "c"), "left_semi")
   }
 
   /** Rich-club coefficient ladder (Zhou & Mondragón, IEEE Comm.
@@ -248,11 +247,7 @@ object Graph {
   def richClub(edges: DataFrame, srcCol: String, dstCol: String,
                ks: Seq[Int] = Seq(2, 4, 8, 16)): DataFrame = {
     require(ks.nonEmpty, "richClub: at least one degree rung")
-    val und = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .snapshot() // feeds the degree rollup AND the edge-grain ladder
     val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -300,12 +295,7 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String,
              k: Int = 4, rounds: Int = 2): DataFrame = {
     require(k >= 3 && rounds >= 1, "kTruss: k >= 3 and rounds >= 1")
-    var und = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .snapshot() // peeled in place each round
+    var und = undirected(edges, srcCol, dstCol).snapshot() // peeled in place each round
     for (_ <- 1 to rounds) {
       und = und.join(edgeSupport(und), Seq("u", "v"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= lit((k - 2).toLong))
@@ -341,8 +331,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 2): DataFrame = {
     val M = 10000000L
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val sym0 = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val sym0 = mirrored(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
       .distinct().snapshot()
     // the packed (count, label) argmax key is only injective for
     // 0 <= id < M; an out-of-domain id would silently corrupt labels,
@@ -355,7 +344,7 @@ object Graph {
     var labels = sym0.select(col("u").as("id")).distinct()
       .withColumn("label", guarded)
       .snapshot() // materialized to set the regime (labels = the join's small side)
-    val big = Staging.wantsPin(labels)
+    val big = Staging.isLarge(labels)
     val sym = rekeyIf(big, sym0, "v") // the per-round message join keys on v
     for (_ <- 1 to iters) {
       labels = sym
@@ -389,14 +378,7 @@ object Graph {
            iters: Int = 2): DataFrame = {
     require(iters >= 1, "hits: iters must be >= 1")
     val dec = "CAST(1 AS DECIMAL(38,0))"
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .snapshot() // reused in every half-round
-    val nodes0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct().snapshot()
-    val big = Staging.wantsPin(nodes0)
+    val (e, nodes0, big) = directed(edges, srcCol, dstCol)
     val nodes = rekeyIf(big, nodes0, "id")
     // big regime: TWO pinned edge copies — the auth half-round joins
     // edges on src, the hub half-round on dst; one extra pass over the
@@ -404,7 +386,7 @@ object Graph {
     // both shapes. Broadcast regime: the score frames broadcast, the
     // edge frame never moves, one copy suffices.
     val eSrc = if (big) Staging.snapshotKeyed(e, "src") else e
-    val eDst = if (big) { val k = Staging.snapshotKeyed(e, "dst"); Staging.release(e); k } else e
+    val eDst = rekeyIf(big, e, "dst")
     var hubs = nodes.select(col("id"), expr(dec).as("h"))
     var auths: DataFrame = null
     for (i <- 1 to iters) {
@@ -452,14 +434,9 @@ object Graph {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  cap: Int = 64): DataFrame = {
     require(cap >= 2, "adamicAdar: cap must be >= 2")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val und = raw
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .snapshot() // degree count, wedge join (twice), anti join
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = mirrored(und)
     val deg = sym.groupBy(col("u").as("w")).agg(count(lit(1)).as("deg"))
     // apex-centered adjacency, capped: only apexes with deg <= cap
     // generate wedges, and their weight is fixed per apex
@@ -470,7 +447,7 @@ object Graph {
       .snapshot()
     // self-join staging, probed by the frame's own size (see
     // triangleCounts) — degree-capped apexes usually stay broadcastable
-    val apexStaged = rekeyIf(Staging.wantsPin(apex), apex, "w")
+    val apexStaged = rekeyIf(Staging.isLarge(apex), apex, "w")
     val wedges = apexStaged.select(col("w"), col("n").as("a"), col("wgt"))
       .join(apexStaged.select(col("w"), col("n").as("b")), "w")
       .filter(col("a") < col("b"))
@@ -490,14 +467,9 @@ object Graph {
     * the one Pearson division rounds rd(4). Shape: one degree count +
     * two equi joins + one 1-row rollup — linear in |E|. */
   def assortativity(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val und = raw
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .snapshot() // degree count AND both endpoint joins
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = mirrored(und)
     val deg = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
     val ends = sym
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
@@ -534,15 +506,14 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1, "kCore: k and rounds must be positive")
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    var sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    var sym = mirrored(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
       .distinct().snapshot()
     // Round 1's degree frame, hoisted: it is exactly the node-sized
     // frame the semi joins broadcast in the small regime, so its
     // measured size IS the regime probe — no extra work, round 1 needs
     // it anyway.
     val deg1 = sym.groupBy(col("u")).agg(count(lit(1)).as("deg")).snapshot()
-    val big = Staging.wantsPin(deg1)
+    val big = Staging.isLarge(deg1)
     sym = rekeyIf(big, sym, "u") // degree count + first semi join key on u
     for (r <- 1 to rounds) {
       val keep = (if (r == 1) deg1
@@ -568,12 +539,7 @@ object Graph {
     * full node set. */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
                             dstCol: String): DataFrame = {
-    val und = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    val deg = und.select(explode(array(col("u"), col("v"))).as("id"))
+    val deg = undirected(edges, srcCol, dstCol).select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     val tri = triangleCounts(edges, srcCol, dstCol)
     deg.join(tri, Seq("id"), "left")
@@ -625,16 +591,9 @@ object Graph {
                         rounds: Int = 6, phases: Int = 2): DataFrame = {
     require(rounds >= 1 && phases >= 1,
       "stronglyConnected: rounds and phases must be positive")
-    var e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
-      .snapshot() // reused every round, both passes
-    var remaining = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct()
-      .snapshot() // phase-1 label init + the regime probe
-    val big = Staging.wantsPin(remaining)
-    e = rekeyIf(big, e, "src") // forward rounds join edges on src
+    val (e0, nodes, big) = directed(edges, srcCol, dstCol)
+    var e = rekeyIf(big, e0, "src") // forward rounds join edges on src
+    var remaining = nodes // phase-1 label init
     val resolved = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var p = 1
     var settled = false
@@ -729,15 +688,7 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               rounds: Int = 4, nSeeds: Int = 8): DataFrame = {
     require(rounds >= 1 && nSeeds >= 1, "bfsHops: rounds and seeds must be positive")
-    val und0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val e = und0.union(und0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .snapshot() // reused every round
-    val nodes = e.select(col("u").as("id")).distinct().snapshot()
-    val big = Staging.wantsPin(nodes)
-    val eK = rekeyIf(big, e, "u") // rounds join edges on u
+    val (eK, nodes, big) = symmetric(edges, srcCol, dstCol)
     val seeds = nodes.orderBy("id").limit(nSeeds)
     var dist = seeds.select(col("id"), lit(0L).as("hops")).snapshot()
     for (r <- 1 to rounds) {
@@ -779,15 +730,7 @@ object Graph {
                       rounds: Int = 4, nSeeds: Int = 8): DataFrame = {
     require(rounds >= 1 && nSeeds >= 1,
       "closenessSample: rounds and seeds must be positive")
-    val und0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val e = und0.union(und0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .snapshot() // reused every round
-    val nodes = e.select(col("u").as("id")).distinct().snapshot()
-    val big = Staging.wantsPin(nodes)
-    val eK = rekeyIf(big, e, "u")
+    val (eK, nodes, big) = symmetric(edges, srcCol, dstCol)
     val seeds = nodes.orderBy("id").limit(nSeeds)
     var dist = seeds.select(col("id").as("seed"), col("id"),
       lit(0L).as("hops")).snapshot()

@@ -221,12 +221,12 @@ object Profiling {
 
   /** EXACT global row number over a TOTAL order without a single-task
     * window, for the row-scale `Window.orderBy` sites
-    * ([[calibrationBins]], [[TextAnalysis.heapsLaw]]). Regime-gated on
-    * the snapshotted input's measured size: a frame under the pin dial
-    * ([[graft.sources.Staging.pinThreshold]]) goes through ONE
-    * bounded-size WindowExec task, cheaper than the range-sample +
-    * offset machinery; a larger frame, or one whose size cannot be
-    * measured (`graft.staging.reliable=true`), gets [[rangeRank]].
+    * ([[calibrationBins]], [[TextAnalysis.heapsLaw]]). Regime-gated
+    * by [[graft.sources.Staging.isLarge]] on the snapshotted input: a
+    * frame under the pin dial goes through ONE bounded-size WindowExec
+    * task, cheaper than the range-sample + offset machinery; a larger
+    * frame, or one whose size cannot be measured
+    * (`graft.staging.reliable=true`), gets [[rangeRank]].
     * `order` must be a total order (include a unique tiebreak).
     *
     * `consume` receives the input columns + `rankCol` (1-based global
@@ -242,7 +242,7 @@ object Profiling {
                                 consume: DataFrame => DataFrame): DataFrame = {
     val src = Staging.snapshot(df)
     val (staged, ranked) =
-      if (Staging.measuredSize(src).exists(_ <= Staging.pinThreshold(src)))
+      if (!Staging.isLarge(src))
         (src, src.withColumn(rankCol, row_number().over(Window.orderBy(order: _*)).cast("long"))
           .withColumn(totalCol, count(lit(1)).over(Window.partitionBy())))
       else {

@@ -21,9 +21,14 @@ import graft.plans.{PinPartitioningStrategy, SnapshotFacts}
   *    Spark checkpoint directory (HDFS/object store) — executor loss
   *    recomputes from the checkpoint instead of failing the query. Set
   *    `graft.staging.dir` (or `SparkContext.setCheckpointDir`) to the
-  *    durable location. This is the cluster-run switch: same plans,
-  *    same results (StagingSpec pins result equality on the heaviest
-  *    shared-panel query), different fault-tolerance contract.
+  *    durable location. `graft.staging.dir` binds at a context's first
+  *    reliable snapshot: the context keeps that checkpoint dir, and a
+  *    later value is ignored. This is the cluster-run switch: same
+  *    results (StagingSpec pins result equality on the heaviest
+  *    shared-panel query and on every graph loop), different
+  *    fault-tolerance contract. Its snapshots hold no blocks, so their
+  *    size is unmeasured and every regime gate ([[isLarge]]) picks the
+  *    large branch.
   *
   * Three staging primitives, by how much the snapshot TELLS the
   * planner (measured on the sf0.1 graph lane — each works where the
@@ -67,7 +72,7 @@ object Staging {
     * graph-loop frame at sf0.1, where label frames are ~2 MB, ran the
     * lane 3× slower). Call sites therefore choose per REGIME:
     * unconditionally for big-frame SELF-joins (both sides are the
-    * same frame — never broadcastable), and via [[wantsPin]] on the
+    * same frame — never broadcastable), and via [[isLarge]] on the
     * measured label/node frame for message-passing loops — the same
     * query broadcasts at sf0.1 and runs co-partitioned at 100 TB with
     * no code change.
@@ -80,31 +85,23 @@ object Staging {
     withFacts(rawSnapshot(df.repartition(n, keys.map(col): _*)), keys)
   }
 
-  /** Measured materialized size of ANY eager snapshot (read from the
-    * block manager — works whether or not the frame carries
-    * [[graft.plans.SnapshotFacts]]). The loops' regime probe. */
-  def measuredSize(df: DataFrame): Option[BigInt] = measuredBytes(df)
-
-  /** The pin dial: a frame bigger than this can't be broadcast, so
-    * loops carrying it should run in the co-partitioned (pinned)
-    * regime. Defaults to the session broadcast threshold; override via
-    * `graft.staging.pinThreshold` (bytes). A broadcast-off session
-    * (threshold -1) always pins. */
-  def pinThreshold(df: DataFrame): Long = {
-    val spark = df.sparkSession
-    val t = spark.conf
-      .getOption("graft.staging.pinThreshold")
-      .getOrElse(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
+  /** The one small/large regime gate, for every device that switches
+    * on a snapshot's size (the `Graph` loops, `Profiling.globalRank`).
+    * True when the eager snapshot `df` is past the pin dial — joins
+    * against it will NOT broadcast it, so loops pin their layouts — or
+    * when its size is unmeasured (reliable checkpoints hold no blocks):
+    * the large branch is the one that is safe at scale.
+    *
+    * The pin dial defaults to the session broadcast threshold;
+    * `graft.staging.pinThreshold` (bytes) overrides it. A
+    * broadcast-off session (threshold -1) always reads large. */
+  def isLarge(df: DataFrame): Boolean = {
+    val conf = df.sparkSession.conf
+    val dial = conf.getOption("graft.staging.pinThreshold")
+      .getOrElse(conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
       .stripSuffix("b").toLong
-    if (t < 0) 0L else t
+    measuredBytes(df).forall(_ > math.max(dial, 0L))
   }
-
-  /** True when `df` (a measured snapshot) is past the pin dial — i.e.
-    * joins against it will NOT broadcast it, so loops should pin their
-    * layouts. Unmeasured frames report false (broadcast regime — the
-    * status-quo plan, never a layout lie). */
-  def wantsPin(df: DataFrame): Boolean =
-    measuredSize(df).exists(_ > pinThreshold(df))
 
   /** Explicitly free a snapshot's blocks (e.g. after re-keying it into
     * a pinned copy). The frame must not be used afterwards — a local

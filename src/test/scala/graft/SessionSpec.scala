@@ -153,6 +153,13 @@ class SessionSpec extends AnyFunSpec {
       assert(hits == Seq("src/main/scala/graft/sources/Staging.scala"))
     }
 
+    it("snapshot sizes and the pin dial only in graft/sources/Staging.scala") {
+      val device = "measuredBytes|measuredSize|pinThreshold|getRDDStorageInfo".r
+      val hits = scalaFiles("src/main").filter(p => device.findFirstIn(read(p)).nonEmpty)
+        .map(_.toString)
+      assert(hits == Seq("src/main/scala/graft/sources/Staging.scala"))
+    }
+
     it("no registration checks in the operators: the natives are the only path") {
       val check = ("function" + "Exists|nat" + "Fn").r
       val hits = scalaFiles("src/main/scala/graft/operators")

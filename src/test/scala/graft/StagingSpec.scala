@@ -1,6 +1,8 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funspec.AnyFunSpec
+import graft.sources.Scratch
 
 /** The cluster-run switch for multi-consumer staging panels
   * ([[graft.sources.Staging]]): `graft.staging.reliable=true` routes
@@ -8,9 +10,16 @@ import org.scalatest.funspec.AnyFunSpec
   * `localCheckpoint`, trading a write to durable storage for
   * executor-loss recovery. Results must be bit-identical either way.
   */
-class StagingSpec extends AnyFunSpec {
+class StagingSpec extends AnyFunSpec with BeforeAndAfterAll {
   import SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
+
+  // One checkpoint dir for every reliable-mode case below, deleted once
+  // after the last: a context keeps the dir of its first reliable
+  // snapshot, whatever `graft.staging.dir` says later.
+  private val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+  private val reliable = Seq("graft.staging.reliable" -> "true", "graft.staging.dir" -> ckptDir)
+  override def afterAll(): Unit = try Scratch.deleteDir(ckptDir) finally super.afterAll()
 
   describe("Staging.snapshot reliable mode") {
     it("refuses reliable mode without a checkpoint dir, with a clear message") {
@@ -28,17 +37,10 @@ class StagingSpec extends AnyFunSpec {
 
     it("reliable checkpoints produce identical results on the heaviest shared-panel query") {
       val default = SparkEntry.queries("q_pairs_spread")(spark, dir).collect().toSeq
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-      try {
-        spark.conf.set("graft.staging.reliable", "true")
-        spark.conf.set("graft.staging.dir", tmp)
-        val reliable = SparkEntry.queries("q_pairs_spread")(spark, dir).collect().toSeq
-        assert(reliable.nonEmpty && reliable == default)
-      } finally {
-        spark.conf.unset("graft.staging.reliable")
-        spark.conf.unset("graft.staging.dir")
-        new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+      val got = Session.withConf(spark, reliable: _*) {
+        SparkEntry.queries("q_pairs_spread")(spark, dir).collect().toSeq
       }
+      assert(got.nonEmpty && got == default)
     }
   }
 
@@ -82,9 +84,42 @@ class StagingSpec extends AnyFunSpec {
     }
 
     it("equals row_number on an unmeasured (reliable) snapshot") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-      try ranked(range = true, "graft.staging.reliable" -> "true", "graft.staging.dir" -> tmp)
-      finally new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+      ranked(range = true, reliable: _*)
+    }
+  }
+
+  // The large branch of every Graph regime gate, one query per gate.
+  // Each regime must reproduce the default regime's rows, and its plans
+  // must hold the hash exchange `snapshotKeyed` pins (REPARTITION_BY_NUM),
+  // which no default-regime plan of these queries holds.
+  describe("graph regime gates") {
+    import graft.sources.Staging
+    import graft.tools.Probe
+
+    def run(q: String, sf: String, confs: (String, String)*): (Seq[String], Probe.Record) =
+      Session.withConf(spark, confs: _*) {
+        Probe.record(spark)(Staging.scoped(spark) {
+          SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+        })
+      }
+    def pinned(rec: Probe.Record): Boolean = rec.plans.exists(_.contains("REPARTITION_BY_NUM"))
+    val defaults = scala.collection.mutable.Map.empty[String, (Seq[String], Probe.Record)]
+    val regimes = Seq("graft.staging.pinThreshold=0" -> Seq("graft.staging.pinThreshold" -> "0"),
+      "graft.staging.reliable=true" -> reliable)
+
+    for {
+      q <- Seq("q_pagerank", "q_ppr", "q_triangles", "q_ktruss", "q_communities", "q_hits",
+        "q_link_predict", "q_kcore", "q_scc", "q_bfs_hops", "q_closeness")
+      (regime, confs) <- regimes
+    } it(s"$q under $regime: the default regime's rows, through the large branch") {
+      // q_kcore's 30-core is empty at sf0.001
+      val sf = if (q == "q_kcore") "/root/testdata/sf0.01" else dir
+      val (want, default) = defaults.getOrElseUpdate(q, run(q, sf))
+      assert(want.nonEmpty)
+      assert(!pinned(default), s"$q pinned a layout in the default regime")
+      val (got, rec) = run(q, sf, confs: _*)
+      assert(got == want)
+      assert(pinned(rec), s"$q took the small branch under $regime")
     }
   }
 
