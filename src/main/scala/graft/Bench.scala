@@ -101,10 +101,10 @@ object Bench {
     // noisy enough to masquerade as regressions (q_bm25 swung
     // 0.40→1.27 s across rounds with zero code change under min-of-3).
     //
-    // Correctness-only rows: q_dedup_groups_star forces the SAME
-    // computation as q_dedup_groups down its deep-graph fallback path
-    // (the hybrid picks min-label here) — benching it would just count
-    // the operator twice at its worst-case configuration.
+    // Correctness-only rows: q_dedup_groups_star runs the SAME groups
+    // as q_dedup_groups through star contraction, the large branch
+    // (the gate picks the driver union-find here) — benching it would
+    // just count the operator twice, once in a regime nothing reaches.
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "5").toInt
     // one trial: a failed run records -1 rows and its wall time
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =

@@ -3,6 +3,7 @@ package graft
 import java.net.URLClassLoader
 import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, SparkPlugin}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.PlanBridge
 import graft.plans.{GraftExtensions, PinPartitioningStrategy}
 import graft.sources.LocalFs
 
@@ -30,8 +31,9 @@ object Session {
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
   /** The active (or default) session with [[install]] applied, or a new
-    * one. A new session runs `spark.sql.shuffle.partitions` at the
-    * master's parallelism unless `-D`/`--conf` set it. */
+    * one. A new context runs `spark.sql.shuffle.partitions` at the
+    * master's parallelism, in this session and every `newSession()` of
+    * it, unless `-D`/`--conf` set it. */
   def getOrCreate(appName: String): SparkSession =
     install(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .getOrElse(build(appName)))
@@ -87,8 +89,13 @@ object Session {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.plugins", plugins.mkString(","))
       .getOrCreate()
-    if (!spark.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
-      spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
+    // set where this session and every `newSession()` of it read it
+    val partitions = "spark.sql.shuffle.partitions"
+    if (!spark.sparkContext.getConf.contains(partitions)) {
+      val n = spark.sparkContext.defaultParallelism.toString
+      PlanBridge.sharedConf(spark).set(partitions, n)
+      spark.conf.set(partitions, n)
+    }
     spark
   }
 }

@@ -309,11 +309,10 @@ object SparkEntry {
         scaled(col("value"), 2).as("v2"))
       .as[(String, Long, Long)]
     val updates = TickStream.abMonitor(typed)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     val n = col("n_ctrl") + col("n_treat")
     val ssum = col("s_ctrl") + col("s_treat")
-    val sigma2 = (dec(n) * col("s_sq") - dec(ssum) * ssum).cast("double") /
-      (dec(n) * n).cast("double") / 1e4
+    val sigma2 = (dec38(n) * col("s_sq") - dec38(ssum) * ssum).cast("double") /
+      (dec38(n) * n).cast("double") / 1e4
     val h = (col("n_ctrl") * col("n_treat")).cast("double") / n.cast("double")
     val delta = (col("s_treat").cast("double") / col("n_treat").cast("double") -
       col("s_ctrl").cast("double") / col("n_ctrl").cast("double")) / 1e2
@@ -1244,10 +1243,11 @@ object SparkEntry {
       .orderBy("doc_id", "chunk_idx")
 
   /** Near-dup GROUPS: the pair graph collapsed to canonical
-    * representatives via distributed min-label propagation
-    * ([[Dedup.connectedComponents]]) — what a dedup pipeline actually
-    * keys its keep/drop decision on. Oracle: DuckDB recursive CTE
-    * reaching the same fixpoint. */
+    * representatives (component minima) by [[Dedup.dedupGroups]] —
+    * what a dedup pipeline actually keys its keep/drop decision on. At
+    * the shipped scale factors its regime gate picks the driver
+    * union-find. Oracle: DuckDB recursive CTE reaching the same
+    * fixpoint. */
   private def qDedupGroups(s: SparkSession, dir: String): DataFrame =
     Dedup.dedupGroups(
       Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
@@ -1301,15 +1301,14 @@ object SparkEntry {
       "doc_id", "text", "source")
       .orderBy("source")
 
-  /** Same groups, FORCED through the large-star/small-star path — the
-    * hybrid default takes min-label on this corpus's shallow graphs,
-    * so without this row the oracle would never exercise star
-    * contraction end-to-end (same gap the streaming lane had). */
+  /** Same groups through [[Dedup.connectedComponentsStar]], the large
+    * branch of [[Dedup.dedupGroups]]'s gate, which this corpus never
+    * reaches by size: without this row the oracle would never exercise
+    * star contraction end-to-end in the default regime. */
   private def qDedupGroupsStar(s: SparkSession, dir: String): DataFrame =
-    Dedup.dedupGroups(
+    Dedup.groupsOf(Dedup.connectedComponentsStar(
       Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, numHashes = 32, bands = 8, threshold = 0.5),
-      algo = "star")
+        n = 3, numHashes = 32, bands = 8, threshold = 0.5), "id1", "id2"))
       .orderBy("doc_id")
 
   /** Native-Expression variant (scan-stage signature; agg-form

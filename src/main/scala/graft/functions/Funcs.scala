@@ -96,6 +96,10 @@ object Funcs {
   def scaledAvg(scaledCol: Column, scale: Int, outScale: Int): Column =
     rd(sum(scaledCol) / count(scaledCol) / math.pow(10, scale), outScale)
 
+  /** `c` as DECIMAL(38, 0): the exact integer type fixed-point
+    * products and sums are widened to before they can overflow a long. */
+  def dec38(c: Column): Column = c.cast("decimal(38,0)")
+
   /** Typed DECIMAL(38, s) money view — the warehouse-DDL-compatible
     * surface for published money columns (the reference's Snowflake
     * tables type prices FLOAT, load_to_snowflake.py:27-38; DECIMAL(38)

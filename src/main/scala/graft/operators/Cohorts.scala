@@ -673,7 +673,6 @@ object Cohorts {
   def welchTTest(events: DataFrame, userCol: String = "user_id",
                  typeCol: String = "event_type",
                  valueCol: String = "value"): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val perUser = events
       .groupBy(col(typeCol).as("metric"), col(userCol).as("user_id"))
       .agg(sum(scaled(col(valueCol), 2)).as("y"))
@@ -683,11 +682,11 @@ object Cohorts {
       sum(when(col("v") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("v") === 0, col("y")).otherwise(0L)).as("s0"),
       sum(when(col("v") === 1, col("y")).otherwise(0L)).as("s1"),
-      sum(when(col("v") === 0, d(col("y")) * d(col("y"))).otherwise(d(lit(0)))).as("ss0"),
-      sum(when(col("v") === 1, d(col("y")) * d(col("y"))).otherwise(d(lit(0)))).as("ss1"))
+      sum(when(col("v") === 0, dec38(col("y")) * dec38(col("y"))).otherwise(dec38(lit(0)))).as("ss0"),
+      sum(when(col("v") === 1, dec38(col("y")) * dec38(col("y"))).otherwise(dec38(lit(0)))).as("ss1"))
       .filter(col("n0") >= 2 && col("n1") >= 2)
     def svar(n: String, s: String, ss: String) =
-      (d(col(n)) * col(ss) - d(col(s)) * d(col(s))).cast("double") /
+      (dec38(col(n)) * col(ss) - dec38(col(s)) * dec38(col(s))).cast("double") /
         (col(n).cast("double") * (col(n) - 1).cast("double"))
     val v0 = svar("n0", "s0", "ss0")
     val v1 = svar("n1", "s1", "ss1")
@@ -825,7 +824,6 @@ object Cohorts {
   def mcnemar(events: DataFrame, target: String = "purchase",
               tsCol: String = "event_time", userCol: String = "user_id",
               typeCol: String = "event_type"): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy(userCol).orderBy(col(tsCol), col("event_id"))
     val marked = events
       .withColumn("rn", row_number().over(w))
@@ -848,8 +846,8 @@ object Cohorts {
         col("gained").cast("long").as("n_gained"),
         rd((d * d).cast("double") /
           nullifZero((col("lost") + col("gained")).cast("double")), 4).as("chi2"),
-        (dd(d) * dd(d) * lit(10000L) >
-          dd(col("lost") + col("gained")) * lit(38415L)).as("significant"))
+        (dec38(d) * dec38(d) * lit(10000L) >
+          dec38(col("lost") + col("gained")) * lit(38415L)).as("significant"))
   }
 
   /** Cochran's Q across the k event-type "treatments" (Cochran,
@@ -873,7 +871,6 @@ object Cohorts {
   def cochranQ(events: DataFrame, userCol: String = "user_id",
                typeCol: String = "event_type", expectK: Int = 5,
                chi2Crit4: Long = 94877L): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val x = events
       .select(col(userCol).as("uid"), col(typeCol).as("t"))
       .filter(col("uid").isNotNull && col("t").isNotNull)
@@ -883,12 +880,12 @@ object Cohorts {
     // passes 2^63 near 1e9 users (the dimsonBeta overflow rule)
     val cj = x.groupBy("t").agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("k"), sum(col("c")).as("n"),
-        sum(dd(col("c")) * dd(col("c"))).as("sc2"))
+        sum(dec38(col("c")) * dec38(col("c"))).as("sc2"))
     val ri = x.groupBy("uid").agg(count(lit(1)).as("r"))
-      .agg(count(lit(1)).as("n_users"), sum(dd(col("r")) * dd(col("r"))).as("sr2"))
+      .agg(count(lit(1)).as("n_users"), sum(dec38(col("r")) * dec38(col("r"))).as("sr2"))
     val g = cj.crossJoin(broadcast(ri))
-    val num = dd(col("k") - 1L) * (dd(col("k")) * col("sc2") - dd(col("n")) * dd(col("n")))
-    val den = dd(col("k")) * dd(col("n")) - col("sr2")
+    val num = dec38(col("k") - 1L) * (dec38(col("k")) * col("sc2") - dec38(col("n")) * dec38(col("n")))
+    val den = dec38(col("k")) * dec38(col("n")) - col("sr2")
     g.select(col("n_users").cast("long").as("n_users"),
       col("k").cast("long").as("k_treatments"),
       col("n").cast("long").as("n_marks"),

@@ -504,12 +504,11 @@ object DailyAnalytics {
     // hit it (ARITHMETIC_OVERFLOW at 10× the pair count). Only the
     // PAIR-grain rows pay the decimal cost; the S²·D hot-path sums
     // above stay long.
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     g.select(col("s1"), col("s2"), col("n_days"),
-      r4((dec(col("n_days")) * col("sxy") - dec(col("sx")) * col("sy")).cast("double") /
+      r4((dec38(col("n_days")) * col("sxy") - dec38(col("sx")) * col("sy")).cast("double") /
         nullifZero(
-          sqrt((dec(col("n_days")) * col("sxx") - dec(col("sx")) * col("sx")).cast("double")) *
-          sqrt((dec(col("n_days")) * col("syy") - dec(col("sy")) * col("sy")).cast("double"))))
+          sqrt((dec38(col("n_days")) * col("sxx") - dec38(col("sx")) * col("sx")).cast("double")) *
+          sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * col("sy")).cast("double"))))
         .as("return_corr"))
   }
 
@@ -551,7 +550,6 @@ object DailyAnalytics {
     */
   def marketBeta(returns: DataFrame, minDays: Int = 30): DataFrame = {
     // Σ products in DECIMAL(38,0) — same overflow rule as [[sharpeRatio]]
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -564,12 +562,12 @@ object DailyAnalytics {
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dd(col("x")) * dd(col("y"))).as("sxy"),
-        sum(dd(col("x")) * dd(col("x"))).as("sxx"))
+        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
+        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"))
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
-        r4((dd(col("n_days")) * col("sxy") - dd(col("sx")) * dd(col("sy"))).cast("double") /
-          nullifZero((dd(col("n_days")) * col("sxx") - dd(col("sx")) * dd(col("sx"))).cast("double")))
+        r4((dec38(col("n_days")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
+          nullifZero((dec38(col("n_days")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")))
           .as("beta"))
   }
 
@@ -594,7 +592,6 @@ object DailyAnalytics {
     * (calendar-bounded, not data-scale); per-symbol moments are one
     * partial-aggregable shuffle — two exchanges total, no self-join. */
   def twoFactorRegression(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -612,11 +609,11 @@ object DailyAnalytics {
       .groupBy("symbol").agg(
         count(lit(1)).as("n"),
         sum(col("x1")).as("s1"), sum(col("x2")).as("s2"), sum(col("y")).as("sy"),
-        sum(dd(col("x1")) * dd(col("x1"))).as("s11"),
-        sum(dd(col("x1")) * dd(col("x2"))).as("s12"),
-        sum(dd(col("x2")) * dd(col("x2"))).as("s22"),
-        sum(dd(col("x1")) * dd(col("y"))).as("s1y"),
-        sum(dd(col("x2")) * dd(col("y"))).as("s2y"))
+        sum(dec38(col("x1")) * dec38(col("x1"))).as("s11"),
+        sum(dec38(col("x1")) * dec38(col("x2"))).as("s12"),
+        sum(dec38(col("x2")) * dec38(col("x2"))).as("s22"),
+        sum(dec38(col("x1")) * dec38(col("y"))).as("s1y"),
+        sum(dec38(col("x2")) * dec38(col("y"))).as("s2y"))
       .filter(col("n") >= minDays)
     // Cramer over the 3×3 normal equations, every determinant one
     // fixed double tree (identical text in the oracle)
@@ -743,19 +740,18 @@ object DailyAnalytics {
     * clears 2^63); the DuckDB mirror uses HUGEINT — both sides then
     * cast the SAME exact integer to double, so bits still match. */
   def sharpeRatio(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
         sum(col("y")).as("sy"),
-        sum(d(col("y")) * d(col("y"))).as("syy"))
+        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
         r4(col("sy").cast("double") / col("n_days") / 10000.0)
           .as("mean_return_pct"),
         r4((col("sy").cast("double") / col("n_days")) /
-          nullifZero(sqrt((d(col("n_days")) * col("syy") - d(col("sy")) * d(col("sy"))).cast("double") /
+          nullifZero(sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double") /
             (col("n_days") * (col("n_days") - lit(1L))))) * sqrt(lit(252.0)))
           .as("sharpe_annual"))
   }
@@ -768,14 +764,13 @@ object DailyAnalytics {
     * downside sum in DECIMAL(38,0) (HUGEINT in the DuckDB mirror),
     * and ONE fixed scalar tree over the exact integers. */
   def sortinoRatio(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val dn = when(col("y") < 0, col("y")).otherwise(lit(0L))
     returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
         sum(col("y")).as("sy"),
-        sum(d(dn) * d(dn)).as("sdd"))
+        sum(dec38(dn) * dec38(dn)).as("sdd"))
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
         r4(col("sy").cast("double") / col("n_days") / 10000.0)
@@ -799,7 +794,6 @@ object DailyAnalytics {
     * shuffle. */
   def factorIC(bars: DataFrame, lagDays: Int = 21,
                minSymbols: Int = 5): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val lagC = lag(col("close_price"), lagDays).over(bySymbol)
     val base = dailyReturns(bars)
       .select(col("symbol"), col("trade_date"), col("close_price"),
@@ -812,15 +806,15 @@ object DailyAnalytics {
     base.groupBy("trade_date")
       .agg(count(lit(1)).as("n_symbols"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(d(col("x")) * d(col("y"))).as("sxy"),
-        sum(d(col("x")) * d(col("x"))).as("sxx"),
-        sum(d(col("y")) * d(col("y"))).as("syy"))
+        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
+        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"),
+        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
       .filter(col("n_symbols") >= minSymbols)
       .select(col("trade_date"), col("n_symbols"),
-        r4((d(col("n_symbols")) * col("sxy") - d(col("sx")) * d(col("sy"))).cast("double") /
+        r4((dec38(col("n_symbols")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
           nullifZero(
-            sqrt((d(col("n_symbols")) * col("sxx") - d(col("sx")) * d(col("sx"))).cast("double")) *
-            sqrt((d(col("n_symbols")) * col("syy") - d(col("sy")) * d(col("sy"))).cast("double"))))
+            sqrt((dec38(col("n_symbols")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")) *
+            sqrt((dec38(col("n_symbols")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double"))))
           .as("ic"))
       .orderBy("trade_date")
   }
@@ -1453,12 +1447,11 @@ object DailyAnalytics {
       .join(p.select(col("symbol").as("s2"), col("trade_date"), col("p").as("pb")),
         Seq("s2", "trade_date"))
       .snapshot() // regression pass AND residual pass
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val g1 = panel.groupBy("s1", "s2").agg(
       count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum(dec(col("pa"))).as("sa"), sum(dec(col("pb"))).as("sb"),
-      sum(dec(col("pa")) * col("pb")).as("sab"),
-      sum(dec(col("pa")) * col("pa")).as("saa"))
+      sum(dec38(col("pa"))).as("sa"), sum(dec38(col("pb"))).as("sb"),
+      sum(dec38(col("pa")) * col("pb")).as("sab"),
+      sum(dec38(col("pa")) * col("pa")).as("saa"))
       .filter(col("n") >= minDays)
       .select(col("s1"), col("s2"),
         ((col("n") * col("sab") - col("sa") * col("sb")).cast("double") /
@@ -1478,10 +1471,10 @@ object DailyAnalytics {
       .select(col("s1"), col("s2"), col("x"), (col("e") - col("x")).as("y"))
     val g2 = d.groupBy("s1", "s2").agg(
       count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("y")) * col("y")).as("syy"))
+      sum(dec38(col("x"))).as("sx"), sum(dec38(col("y"))).as("sy"),
+      sum(dec38(col("x")) * col("y")).as("sxy"),
+      sum(dec38(col("x")) * col("x")).as("sxx"),
+      sum(dec38(col("y")) * col("y")).as("syy"))
     val (n, sx, sy, sxy, sxx, syy) = (col("n").cast("double"),
       col("sx").cast("double"), col("sy").cast("double"),
       col("sxy").cast("double"), col("sxx").cast("double"), col("syy").cast("double"))
@@ -1527,13 +1520,12 @@ object DailyAnalytics {
     // series and a LongType sum would WRAP silently at large panels
     // (the DuckDB mirror errors loudly — the two sides must not fail
     // differently); first moments stay long (≤ ~1e13)
-    def dm(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val g = lagged.groupBy("symbol").agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("s0"), sum(col("x1")).as("s1"), sum(col("y")).as("sy"),
-      sum(dm(col("x")) * col("x")).as("s00"), sum(dm(col("x")) * col("x1")).as("s01"),
-      sum(dm(col("x1")) * col("x1")).as("s11"),
-      sum(dm(col("x")) * col("y")).as("s0y"), sum(dm(col("x1")) * col("y")).as("s1y"))
+      sum(dec38(col("x")) * col("x")).as("s00"), sum(dec38(col("x")) * col("x1")).as("s01"),
+      sum(dec38(col("x1")) * col("x1")).as("s11"),
+      sum(dec38(col("x")) * col("y")).as("s0y"), sum(dec38(col("x1")) * col("y")).as("s1y"))
     // Cramer over [[n,s0,s1],[s0,s00,s01],[s1,s01,s11]] — fixed trees
     val (n, s0, s1, sy) =
       (col("n").cast("double"), col("s0").cast("double"),
@@ -2098,7 +2090,6 @@ object DailyAnalytics {
     * and the per-symbol sums. */
   def autocorrelation(returns: DataFrame, lagDays: Int = 1,
                       minDays: Int = 30): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val y = scaled(col("daily_return_pct"), 4)
     val paired = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"), y.as("y"))
@@ -2107,15 +2098,15 @@ object DailyAnalytics {
     paired.groupBy("symbol")
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("y")).as("sx"), sum(col("yl")).as("sy"),
-        sum(dd(col("y")) * dd(col("yl"))).as("sxy"),
-        sum(dd(col("y")) * dd(col("y"))).as("sxx"),
-        sum(dd(col("yl")) * dd(col("yl"))).as("syy"))
+        sum(dec38(col("y")) * dec38(col("yl"))).as("sxy"),
+        sum(dec38(col("y")) * dec38(col("y"))).as("sxx"),
+        sum(dec38(col("yl")) * dec38(col("yl"))).as("syy"))
       .filter(col("n_pairs") >= minDays)
       .select(col("symbol"), col("n_pairs"),
-        r4((dd(col("n_pairs")) * col("sxy") - dd(col("sx")) * dd(col("sy"))).cast("double") /
+        r4((dec38(col("n_pairs")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
           nullifZero(
-            sqrt((dd(col("n_pairs")) * col("sxx") - dd(col("sx")) * dd(col("sx"))).cast("double")) *
-            sqrt((dd(col("n_pairs")) * col("syy") - dd(col("sy")) * dd(col("sy"))).cast("double"))))
+            sqrt((dec38(col("n_pairs")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")) *
+            sqrt((dec38(col("n_pairs")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double"))))
           .as(s"acf_$lagDays"))
   }
 
@@ -2149,14 +2140,13 @@ object DailyAnalytics {
     * 10¹⁸) with ONE final division. Zero-dollar-volume days drop out
     * via NULLIF, not as zeros. */
   def amihudIlliquidity(returns: DataFrame, minDays: Int = 20): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val v = abs(col("daily_return_pct")) /
       nullifZero(col("close_price") * col("volume")) * lit(1000000.0)
     returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), scaled(v, 8).as("vi"))
       .filter(col("vi").isNotNull)
       .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"), sum(d(col("vi"))).as("s"))
+      .agg(count(lit(1)).as("n_days"), sum(dec38(col("vi"))).as("s"))
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
         rd(col("s").cast("double") / col("n_days") / 1.0e8, 6)
@@ -2175,7 +2165,6 @@ object DailyAnalytics {
     * state, the [[crossSectionalZ]] discipline); z stays exact via
     * DECIMAL(38,0) spread squares. */
   def pairsSpread(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     // ONE reduced+checkpointed panel feeds the correlation AND both
     // spread legs — re-deriving it per consumer would triple the
     // upstream scan (measured: almost halves the query)
@@ -2196,12 +2185,12 @@ object DailyAnalytics {
       .snapshot()
     val st = sp.groupBy("s1", "s2")
       .agg(count(lit(1)).as("n"), sum(col("spread")).as("ss"),
-        sum(d(col("spread")) * d(col("spread"))).as("sss"))
+        sum(dec38(col("spread")) * dec38(col("spread"))).as("sss"))
     sp.join(broadcast(st), Seq("s1", "s2"))
       .select(col("s1"), col("s2"), col("trade_date"),
         r4(col("spread").cast("double") / 10000.0).as("spread_pct"),
         r4((col("spread") - col("ss").cast("double") / col("n")) /
-          nullifZero(sqrt((d(col("n")) * col("sss") - d(col("ss")) * d(col("ss"))).cast("double") /
+          nullifZero(sqrt((dec38(col("n")) * col("sss") - dec38(col("ss")) * dec38(col("ss"))).cast("double") /
             (col("n") * (col("n") - lit(1L)))))).as("spread_z"))
   }
 
@@ -2213,20 +2202,19 @@ object DailyAnalytics {
     * discipline) and come back by broadcast: the stats frame is the
     * days DIMENSION, so the panel never re-shuffles. */
   def crossSectionalZ(returns: DataFrame, minSymbols: Int = 2): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
       .snapshot() // feeds the day stats AND the join probe
     val stats = r.groupBy("trade_date")
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-        sum(d(col("y")) * d(col("y"))).as("syy"))
+        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
       .filter(col("n") >= minSymbols)
     r.join(broadcast(stats), "trade_date")
       .select(col("symbol"), col("trade_date"),
         r4(col("y").cast("double") / 10000.0).as("return_pct"),
         r4((col("y") - col("sy").cast("double") / col("n")) /
-          nullifZero(sqrt((d(col("n")) * col("syy") - d(col("sy")) * d(col("sy"))).cast("double") /
+          nullifZero(sqrt((dec38(col("n")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double") /
             (col("n") * (col("n") - lit(1L)))))).as("z"))
   }
 
@@ -2338,14 +2326,13 @@ object DailyAnalytics {
     * Ranks tie-break by symbol for a total order. */
   def bhFdr(returns: DataFrame, alpha: Double = 0.05,
             minDays: Int = 30): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val m = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"), sum(col("y")).as("sy"),
-        sum(d(col("y")) * d(col("y"))).as("syy"))
+        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
       .filter(col("n_days") >= minDays)
-    val sd = sqrt((d(col("n_days")) * col("syy") - d(col("sy")) * d(col("sy")))
+    val sd = sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * dec38(col("sy")))
       .cast("double") / (col("n_days").cast("double") * (col("n_days") - lit(1L))))
     val z = (col("sy").cast("double") / col("n_days")) /
       nullifZero(sd / sqrt(col("n_days").cast("double")))
@@ -2396,14 +2383,13 @@ object DailyAnalytics {
   def ljungBox(returns: DataFrame, maxLag: Int = 5,
                minDays: Int = 40): DataFrame = {
     require(maxLag >= 1 && maxLag <= 12, s"ljungBox: maxLag out of range: $maxLag")
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
       .withColumn("idx", row_number().over(bySymbol).cast("long"))
       .snapshot() // full-sample moments AND both legs of the lag join
     val tot = base.groupBy("symbol").agg(count(lit(1)).as("n"),
-      sum(col("y")).as("sy"), sum(dd(col("y")) * col("y")).as("syy"))
+      sum(col("y")).as("sy"), sum(dec38(col("y")) * col("y")).as("syy"))
     val lagsLeft = base
       .withColumn("k", explode(array((1 to maxLag).map(lit(_)): _*)))
       .select(col("symbol"), col("k"), col("y"),
@@ -2414,7 +2400,7 @@ object DailyAnalytics {
     val perLag = paired.groupBy("symbol", "k").agg(
       count(lit(1)).as("nk"),
       sum(col("y")).as("sa"), sum(col("yl")).as("sb"),
-      sum(dd(col("y")) * col("yl")).as("sab"))
+      sum(dec38(col("y")) * col("yl")).as("sab"))
     val ybar = col("sy").cast("double") / col("n").cast("double")
     val num = col("sab").cast("double") -
       ybar * (col("sa") + col("sb")).cast("double") +
@@ -2490,7 +2476,6 @@ object DailyAnalytics {
     * S² Granger matrix is a different query; one date-aligned equi
     * join, one lag window, one grouped rollup. */
   def grangerAdjacent(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -2512,12 +2497,12 @@ object DailyAnalytics {
     val g = lagged.groupBy("s1", "s2").agg(
       count(lit(1)).as("n"),
       sum(col("ya")).as("my"), sum(col("yl")).as("m0"), sum(col("xl")).as("m1"),
-      sum(dd(col("yl")) * col("yl")).as("m00"),
-      sum(dd(col("yl")) * col("xl")).as("m01"),
-      sum(dd(col("xl")) * col("xl")).as("m11"),
-      sum(dd(col("yl")) * col("ya")).as("m0y"),
-      sum(dd(col("xl")) * col("ya")).as("m1y"),
-      sum(dd(col("ya")) * col("ya")).as("myy"))
+      sum(dec38(col("yl")) * col("yl")).as("m00"),
+      sum(dec38(col("yl")) * col("xl")).as("m01"),
+      sum(dec38(col("xl")) * col("xl")).as("m11"),
+      sum(dec38(col("yl")) * col("ya")).as("m0y"),
+      sum(dec38(col("xl")) * col("ya")).as("m1y"),
+      sum(dec38(col("ya")) * col("ya")).as("myy"))
       .filter(col("n") >= minDays)
     val n = col("n").cast("double")
     val (sy, s0, s1v) = (col("my").cast("double"),
@@ -2559,7 +2544,6 @@ object DailyAnalytics {
     * Scale shape: one window pass for t, one conditional rollup at
     * the symbol grain — S·D rows in, S out, no joins, no collect. */
   def chowBreak(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -2575,9 +2559,9 @@ object DailyAnalytics {
       seg(1, "c")(lit(1L)), seg(0, "c")(lit(1L)),
       seg(1, "st")(col("t")), seg(0, "st")(col("t")),
       seg(1, "sy")(col("y")), seg(0, "sy")(col("y")),
-      seg(1, "qtt")(dd(col("t")) * col("t")), seg(0, "qtt")(dd(col("t")) * col("t")),
-      seg(1, "qty")(dd(col("t")) * col("y")), seg(0, "qty")(dd(col("t")) * col("y")),
-      seg(1, "qyy")(dd(col("y")) * col("y")), seg(0, "qyy")(dd(col("y")) * col("y")))
+      seg(1, "qtt")(dec38(col("t")) * col("t")), seg(0, "qtt")(dec38(col("t")) * col("t")),
+      seg(1, "qty")(dec38(col("t")) * col("y")), seg(0, "qty")(dec38(col("t")) * col("y")),
+      seg(1, "qyy")(dec38(col("y")) * col("y")), seg(0, "qyy")(dec38(col("y")) * col("y")))
       .filter(col("n") >= minDays)
     def ssr(cn: org.apache.spark.sql.Column, st: org.apache.spark.sql.Column,
             sy: org.apache.spark.sql.Column, stt: org.apache.spark.sql.Column,
@@ -2704,15 +2688,14 @@ object DailyAnalytics {
     * Scale shape: one partial-aggregable grouped pass, S·D rows in,
     * S out, no windows, no joins. */
   def jarqueBera(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val g = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
       .groupBy("symbol").agg(
         count(lit(1)).as("n"),
         sum(col("y")).as("s1"),
-        sum(dd(col("y")) * col("y")).as("s2"),
-        sum(dd(col("y")) * col("y") * col("y")).as("s3"),
-        sum(dd(col("y")) * col("y") * col("y") * col("y")).as("s4"))
+        sum(dec38(col("y")) * col("y")).as("s2"),
+        sum(dec38(col("y")) * col("y") * col("y")).as("s3"),
+        sum(dec38(col("y")) * col("y") * col("y") * col("y")).as("s4"))
       .filter(col("n") >= minDays)
     val n = col("n").cast("double")
     val mu = col("s1").cast("double") / n
@@ -2748,7 +2731,6 @@ object DailyAnalytics {
   def leadLagAdjacent(returns: DataFrame, maxLag: Int = 2,
                       minDays: Int = 40): DataFrame = {
     require(maxLag >= 1 && maxLag <= 5, s"leadLagAdjacent: maxLag out of range: $maxLag")
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     def knm(k: Int): String =
       if (k < 0) s"rho_m${-k}" else if (k == 0) "rho_0" else s"rho_p$k"
     val r = returns.filter(col("daily_return_pct").isNotNull)
@@ -2777,9 +2759,9 @@ object DailyAnalytics {
     val g = paired.groupBy("s1", "s2", "k").agg(
       count(lit(1)).as("nk"),
       sum(col("a")).as("sa"), sum(col("b")).as("sb"),
-      sum(dd(col("a")) * col("a")).as("saa"),
-      sum(dd(col("b")) * col("b")).as("sbb"),
-      sum(dd(col("a")) * col("b")).as("sab"))
+      sum(dec38(col("a")) * col("a")).as("saa"),
+      sum(dec38(col("b")) * col("b")).as("sbb"),
+      sum(dec38(col("a")) * col("b")).as("sab"))
     val nkD = col("nk").cast("double")
     val (saD, sbD) = (col("sa").cast("double"), col("sb").cast("double"))
     val (saaD, sbbD, sabD) = (col("saa").cast("double"),
@@ -2818,14 +2800,13 @@ object DailyAnalytics {
     * Scale shape: same single lag join serving both lags as
     * [[ljungBox]]; everything else is one grouped pass. */
   def neweyWest(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
       .withColumn("idx", row_number().over(bySymbol).cast("long"))
       .snapshot() // full-sample moments AND both legs of the lag join
     val tot = base.groupBy("symbol").agg(count(lit(1)).as("n"),
-      sum(col("y")).as("sy"), sum(dd(col("y")) * col("y")).as("syy"))
+      sum(col("y")).as("sy"), sum(dec38(col("y")) * col("y")).as("syy"))
     val lagsLeft = base
       .withColumn("k", explode(array(lit(1), lit(2))))
       .select(col("symbol"), col("k"), col("y"),
@@ -2836,7 +2817,7 @@ object DailyAnalytics {
     val perLag = paired.groupBy("symbol", "k").agg(
       count(lit(1)).as("nk"),
       sum(col("y")).as("sa"), sum(col("yl")).as("sb"),
-      sum(dd(col("y")) * col("yl")).as("sab"))
+      sum(dec38(col("y")) * col("yl")).as("sab"))
     val nD = col("n").cast("double")
     val ybar = col("sy").cast("double") / nD
     val num = col("sab").cast("double") -
@@ -2914,7 +2895,6 @@ object DailyAnalytics {
     * Scale shape: identical to [[marketBeta]] — one broadcast date
     * join, one partial-aggregable rollup. */
   def upDownBeta(returns: DataFrame, minSide: Int = 10): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -2927,18 +2907,18 @@ object DailyAnalytics {
       sum(when(cond, 1L).otherwise(0L)).as(s"n_$nm"),
       sum(when(cond, col("x"))).as(s"sx_$nm"),
       sum(when(cond, col("y"))).as(s"sy_$nm"),
-      sum(when(cond, dd(col("x")) * col("y"))).as(s"sxy_$nm"),
-      sum(when(cond, dd(col("x")) * col("x"))).as(s"sxx_$nm"))
+      sum(when(cond, dec38(col("x")) * col("y"))).as(s"sxy_$nm"),
+      sum(when(cond, dec38(col("x")) * col("x"))).as(s"sxx_$nm"))
     val g = r.join(broadcast(mkt), "trade_date")
       .groupBy("symbol")
       .agg((side(col("x") > 0, "up") ++ side(col("x") < 0, "dn")).head,
         (side(col("x") > 0, "up") ++ side(col("x") < 0, "dn")).tail: _*)
       .filter(col("n_up") >= minSide && col("n_dn") >= minSide)
     def beta(nm: String) =
-      (dd(col(s"n_$nm")) * col(s"sxy_$nm") - dd(col(s"sx_$nm")) * col(s"sy_$nm"))
+      (dec38(col(s"n_$nm")) * col(s"sxy_$nm") - dec38(col(s"sx_$nm")) * col(s"sy_$nm"))
         .cast("double") /
-      nullifZero((dd(col(s"n_$nm")) * col(s"sxx_$nm") -
-        dd(col(s"sx_$nm")) * col(s"sx_$nm")).cast("double"))
+      nullifZero((dec38(col(s"n_$nm")) * col(s"sxx_$nm") -
+        dec38(col(s"sx_$nm")) * col(s"sx_$nm")).cast("double"))
     g.select(col("symbol"), col("n_up"), col("n_dn"),
       rd(beta("up"), 4).as("beta_up"),
       rd(beta("dn"), 4).as("beta_down"),
@@ -3051,7 +3031,6 @@ object DailyAnalytics {
     *
     * Scale shape: identical to [[calmarRatio]]. */
   def ulcerIndex(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val peak = max(col("close_price"))
       .over(bySymbol.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     val dd4 = scaled((col("close_price") - peak) / nullifZero(peak) * 100, 4)
@@ -3060,7 +3039,7 @@ object DailyAnalytics {
         dd4.as("dd4"))
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"), sum(col("y")).as("sy"),
-        sum(dec(col("dd4")) * col("dd4")).as("sdd2"))
+        sum(dec38(col("dd4")) * col("dd4")).as("sdd2"))
       .filter(col("n_days") >= minDays)
     val ui = sqrt(col("sdd2").cast("double") /
       col("n_days").cast("double")) / 10000.0
@@ -3087,21 +3066,20 @@ object DailyAnalytics {
     * Scale shape: one lag window + one partial-aggregable groupBy on
     * the already-reduced symbol×day panel — D·S grain, no joins. */
   def durbinWatson(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val base = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
       .withColumn("dy", col("y") - lag(col("y"), 1).over(bySymbol))
     val g = base.groupBy("symbol").agg(
       count(lit(1)).as("n"), sum(col("y")).as("sy"),
-      sum(dec(col("dy")) * col("dy")).as("sdd"),
-      sum(dec(col("y")) * col("y")).as("syy"))
+      sum(dec38(col("dy")) * col("dy")).as("sdd"),
+      sum(dec38(col("y")) * col("y")).as("syy"))
       .filter(col("n") >= minDays)
     // Σ(n·y−Σy)² = n²Σy² − n(Σy)²  (expand once, keep sums exact);
     // Σ(n·Δy)² = n²ΣΔy² — the n² cancels against the denominator's
-    val den = dec(col("n")) * col("n") * col("syy") -
-      dec(col("n")) * col("sy") * col("sy")
-    val num = dec(col("n")) * col("n") * col("sdd")
+    val den = dec38(col("n")) * col("n") * col("syy") -
+      dec38(col("n")) * col("sy") * col("sy")
+    val num = dec38(col("n")) * col("n") * col("sdd")
     g.select(col("symbol"), col("n").as("n_days"),
       rd(num.cast("double") / nullifZero(den.cast("double")), 4).as("dw_stat"),
       (num.cast("double") / nullifZero(den.cast("double")) < 1.5)
@@ -3211,12 +3189,11 @@ object DailyAnalytics {
       .withColumn("x", sum(col("y")).over(mom))
       .withColumn("nw", count(lit(1)).over(mom))
       .filter(col("nw") === lookback) // full-lookback signals only
-    def dm(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val daily = base.groupBy("trade_date").agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(dm(col("x")) * col("x")).as("sxx"),
-      sum(dm(col("x")) * col("y")).as("sxy"))
+      sum(dec38(col("x")) * col("x")).as("sxx"),
+      sum(dec38(col("x")) * col("y")).as("sxy"))
       .filter(col("n") >= minSymbols)
     val (n, sx, sy, sxx, sxy) = (col("n").cast("double"),
       col("sx").cast("double"), col("sy").cast("double"),
@@ -3228,7 +3205,7 @@ object DailyAnalytics {
     val agg = g6.agg(
       count(lit(1)).as("d"),
       sum(col("g")).as("sg"),
-      sum(dm(col("g")) * col("g")).as("sgg"),
+      sum(dec38(col("g")) * col("g")).as("sgg"),
       sum(when(col("g") > 0, 1L).otherwise(0L)).as("npos"))
     val (d, sg, sgg) = (col("d").cast("double"),
       col("sg").cast("double"), col("sgg").cast("double"))
@@ -3270,15 +3247,14 @@ object DailyAnalytics {
       .withColumn("sy", sum(col("y")).over(Window.partitionBy("symbol")))
       .withColumn("u1", lead(col("n") * col("y") - col("sy"), 1).over(bySymbol))
       .withColumn("u2", lead(col("n") * col("y") - col("sy"), 2).over(bySymbol))
-    def dm(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val g = base.groupBy("symbol").agg(
       count(lit(1)).as("n"),
-      sum(dm(col("n") * col("p") - col("t") * col("sy"))
+      sum(dec38(col("n") * col("p") - col("t") * col("sy"))
         * (col("n") * col("p") - col("t") * col("sy"))).as("st2"),
-      sum(dm(col("n") * col("y") - col("sy"))
+      sum(dec38(col("n") * col("y") - col("sy"))
         * (col("n") * col("y") - col("sy"))).as("g0"),
-      sum(dm(col("n") * col("y") - col("sy")) * col("u1")).as("g1"),
-      sum(dm(col("n") * col("y") - col("sy")) * col("u2")).as("g2"))
+      sum(dec38(col("n") * col("y") - col("sy")) * col("u1")).as("g1"),
+      sum(dec38(col("n") * col("y") - col("sy")) * col("u2")).as("g2"))
       .filter(col("n") >= minDays)
     val (n, st2, g0, g1, g2) = (col("n").cast("double"),
       col("st2").cast("double"), col("g0").cast("double"),
@@ -3309,13 +3285,12 @@ object DailyAnalytics {
       .withColumn("q", expr("(y * y) div 10000"))
       .withColumn("x", lag(col("q"), 1).over(bySymbol))
       .filter(col("x").isNotNull)
-    def dm(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val g = base.groupBy("symbol").agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"), sum(col("q")).as("sq"),
-      sum(dm(col("x")) * col("x")).as("sxx"),
-      sum(dm(col("x")) * col("q")).as("sxq"),
-      sum(dm(col("q")) * col("q")).as("sqq"))
+      sum(dec38(col("x")) * col("x")).as("sxx"),
+      sum(dec38(col("x")) * col("q")).as("sxq"),
+      sum(dec38(col("q")) * col("q")).as("sqq"))
       .filter(col("n") >= minDays)
     val (n, sx, sq, sxx, sxq, sqq) = (col("n").cast("double"),
       col("sx").cast("double"), col("sq").cast("double"),
@@ -3489,7 +3464,6 @@ object DailyAnalytics {
     * grouped pass over the returns panel — S·D rows in, S out, no
     * joins, no windows. */
   def kyleLambda(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val y = scaled(col("daily_return_pct"), 4)
     val x = (when(col("daily_return_pct") < 0, -1L).otherwise(1L) *
       col("volume") * scaled(col("close_price"), 2))
@@ -3498,14 +3472,14 @@ object DailyAnalytics {
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dd(col("x")) * dd(col("y"))).as("sxy"),
-        sum(dd(col("x")) * dd(col("x"))).as("sxx"),
-        sum(dd(col("y")) * dd(col("y"))).as("syy"))
+        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
+        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"),
+        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
       .filter(col("n_days") >= minDays)
-    val n = dd(col("n_days"))
-    val covN = (n * col("sxy") - dd(col("sx")) * dd(col("sy"))).cast("double")
-    val varXN = (n * col("sxx") - dd(col("sx")) * dd(col("sx"))).cast("double")
-    val varYN = (n * col("syy") - dd(col("sy")) * dd(col("sy"))).cast("double")
+    val n = dec38(col("n_days"))
+    val covN = (n * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double")
+    val varXN = (n * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")
+    val varYN = (n * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double")
     g.select(col("symbol"), col("n_days"),
       // slope in scaled units × 1e4 = pct-return per million dollars
       rd(covN / nullifZero(varXN) * 1e4, 6).as("lambda_per_musd"),
@@ -3592,17 +3566,16 @@ object DailyAnalytics {
     * partial-aggregable rollup at (symbol, day) input grain → D rows
     * out, no windows, no joins. */
   def hhiConcentration(bars: DataFrame): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     bars.groupBy("trade_date")
       .agg(count(lit(1)).as("n_symbols"),
         sum(col("volume")).as("total_volume"),
-        sum(dd(col("volume")) * dd(col("volume"))).as("sumsq"),
+        sum(dec38(col("volume")) * dec38(col("volume"))).as("sumsq"),
         max(col("volume")).as("max_volume"))
       .select(col("trade_date"),
         col("n_symbols").cast("long").as("n_symbols"),
         col("total_volume").cast("long").as("total_volume"),
         rd(col("sumsq").cast("double") /
-          (dd(col("total_volume")) * dd(col("total_volume"))).cast("double"), 6)
+          (dec38(col("total_volume")) * dec38(col("total_volume"))).cast("double"), 6)
           .as("hhi"),
         rd(col("max_volume").cast("double") /
           col("total_volume").cast("double"), 4).as("top_share"))
@@ -3622,20 +3595,19 @@ object DailyAnalytics {
     * Scale shape: one partial-aggregable (dow) rollup at panel grain;
     * everything after lives on the ≤7-row group frame. */
   def anovaDow(returns: DataFrame): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val g = returns.filter(col("daily_return_pct").isNotNull)
       .select(dayofweek(col("trade_date")).cast("long").as("dow"),
         scaled(col("daily_return_pct"), 4).as("y"))
       .groupBy("dow")
       .agg(count(lit(1)).as("ng"), sum(col("y")).as("sg"),
-        sum(dd(col("y")) * dd(col("y"))).as("qg"))
+        sum(dec38(col("y")) * dec38(col("y"))).as("qg"))
       // S_g²/n_g quantized once per group (scaled² units, scale 0)
-      .withColumn("ag", scaled((dd(col("sg")) * dd(col("sg"))).cast("double") /
+      .withColumn("ag", scaled((dec38(col("sg")) * dec38(col("sg"))).cast("double") /
         col("ng").cast("double"), 0))
     g.agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
         sum(col("sg")).as("s"), sum(col("qg")).as("q"),
         sum(col("ag")).as("a"))
-      .withColumn("b", scaled((dd(col("s")) * dd(col("s"))).cast("double") /
+      .withColumn("b", scaled((dec38(col("s")) * dec38(col("s"))).cast("double") /
         col("n").cast("double"), 0))
       .select(col("n").cast("long").as("n_days"),
         col("k").cast("long").as("k_groups"),
@@ -3742,12 +3714,11 @@ object DailyAnalytics {
       .filter(col("ndow") === col("k"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("symbol").orderBy(col("m"), col("dow"))).cast("long"))
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val nb = complete.select(col("symbol")).distinct()
       .agg(count(lit(1)).as("n"))
     val rj = complete.groupBy("dow")
       .agg(sum(col("rnk")).as("rj"))
-    val g = rj.agg(sum(dd(col("rj")) * col("rj")).as("sr2"),
+    val g = rj.agg(sum(dec38(col("rj")) * col("rj")).as("sr2"),
         sum(col("dow") * col("rj")).as("page_l"))
       .crossJoin(broadcast(nb))
       .crossJoin(broadcast(kf))
@@ -3761,9 +3732,9 @@ object DailyAnalytics {
         lit(3.0) * n * (kk + lit(1.0)), 4).as("chi2_f"),
       when(col("k") === expectK.toLong,
         lit(120000L).cast("decimal(38,0)") * col("sr2") -
-          dd(lit(30000L)) * dd(col("n")) * dd(col("n")) *
-            dd(col("k") * (col("k") + lit(1L)) * (col("k") + lit(1L))) >
-          dd(lit(chi2Crit4)) * dd(col("n")) * dd(col("k") * (col("k") + lit(1L))))
+          dec38(lit(30000L)) * dec38(col("n")) * dec38(col("n")) *
+            dec38(col("k") * (col("k") + lit(1L)) * (col("k") + lit(1L))) >
+          dec38(lit(chi2Crit4)) * dec38(col("n")) * dec38(col("k") * (col("k") + lit(1L))))
         .as("significant"))
   }
 
@@ -3829,7 +3800,6 @@ object DailyAnalytics {
     * exact median over day-grain rows), one broadcast join of the
     * 7-row median frame, one 7-group rollup, one 1-row reduction. */
   def brownForsythe(returns: DataFrame): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val y = returns.filter(col("daily_return_pct").isNotNull)
       .select(dayofweek(col("trade_date")).cast("long").as("dow"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -3840,12 +3810,12 @@ object DailyAnalytics {
       .select(col("dow"), abs(lit(2L) * col("y") - col("med2")).as("z"))
     val g = z.groupBy("dow")
       .agg(count(lit(1)).as("ng"), sum(col("z")).as("sg"),
-        sum(dd(col("z")) * col("z")).as("qg"))
-      .withColumn("ag", scaled((dd(col("sg")) * dd(col("sg"))).cast("double") /
+        sum(dec38(col("z")) * col("z")).as("qg"))
+      .withColumn("ag", scaled((dec38(col("sg")) * dec38(col("sg"))).cast("double") /
         col("ng").cast("double"), 0))
     g.agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
         sum(col("sg")).as("s"), sum(col("qg")).as("q"), sum(col("ag")).as("a"))
-      .withColumn("b", scaled((dd(col("s")) * dd(col("s"))).cast("double") /
+      .withColumn("b", scaled((dec38(col("s")) * dec38(col("s"))).cast("double") /
         col("n").cast("double"), 0))
       .select(col("n").cast("long").as("n_days"),
         col("k").cast("long").as("k_groups"),
@@ -3880,7 +3850,6 @@ object DailyAnalytics {
     * rows, then one partial-aggregable symbol rollup. */
   def pettittTest(returns: DataFrame, minDays: Int = 60,
                   crit4: Long = 36889L): DataFrame = {
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val x = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("x"))
@@ -3909,9 +3878,9 @@ object DailyAnalytics {
       rd(least(lit(1.0), lit(2.0) * exp(lit(-6.0) *
         col("k").cast("double") * col("k").cast("double") /
         (nD * nD * nD + nD * nD))), 6).as("p_approx"),
-      (dd(lit(60000L)) * dd(col("k")) * col("k") >
-        dd(lit(crit4)) * (dd(col("n")) * col("n") * col("n") +
-          dd(col("n")) * col("n"))).as("significant"))
+      (dec38(lit(60000L)) * dec38(col("k")) * col("k") >
+        dec38(lit(crit4)) * (dec38(col("n")) * col("n") * col("n") +
+          dec38(col("n")) * col("n"))).as("significant"))
   }
 
   /** Kupiec proportion-of-failures VaR backtest per symbol (Kupiec,
@@ -4187,7 +4156,6 @@ object DailyAnalytics {
     * shape: two symbol-partitioned windows + one rollup — D·S grain,
     * NO pair fan-out despite the O(n²) semantics. */
   def energyDistanceSplit(returns: DataFrame, minDays: Int = 60): DataFrame = {
-    def d(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val r = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), col("trade_date"),
         scaled(col("daily_return_pct"), 4).as("y"))
@@ -4202,12 +4170,12 @@ object DailyAnalytics {
     val gr = r.groupBy("symbol").agg(
       max(col("n")).as("n"),
       sum(when(col("g") === 1L, 1L).otherwise(0L)).as("n1"),
-      sum(d(lit(2L) * col("j") - col("n") - lit(1L)) * col("y")).as("pooled"),
+      sum(dec38(lit(2L) * col("j") - col("n") - lit(1L)) * col("y")).as("pooled"),
       sum(when(col("g") === 1L,
-        d(lit(2L) * col("jg") - col("mg") - lit(1L)) * col("y"))
+        dec38(lit(2L) * col("jg") - col("mg") - lit(1L)) * col("y"))
         .otherwise(lit(0L).cast("decimal(38,0)"))).as("w1"),
       sum(when(col("g") === 2L,
-        d(lit(2L) * col("jg") - col("mg") - lit(1L)) * col("y"))
+        dec38(lit(2L) * col("jg") - col("mg") - lit(1L)) * col("y"))
         .otherwise(lit(0L).cast("decimal(38,0)"))).as("w2"))
       .filter(col("n") >= minDays.toLong)
       .withColumn("n2", col("n") - col("n1"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs._
+import graft.sources.Staging
 import graft.sources.Staging.Snapshottable
 
 /** Deduplication operators for training-data pipelines, each designed
@@ -520,94 +521,20 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Connected components over a near-dup pair graph: every vertex
-    * gets the MINIMUM id reachable from it as its component label —
-    * the deterministic "canonical representative" a dedup pipeline
-    * keeps while dropping the rest of the group.
+  /** Connected components over a near-dup pair graph by alternating
+    * LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14 — public algorithm;
+    * reference has no graph operator, this is the scale path behind
+    * near-dup grouping). Every vertex gets the MINIMUM id reachable
+    * from it as its component label — the deterministic "canonical
+    * representative" a dedup pipeline keeps while dropping the rest of
+    * the group.
     *
-    * Distributed min-label propagation: each round, every vertex takes
-    * the min of its own label and its neighbors' labels; converged
-    * when a round changes nothing (exact, order-independent — the
-    * fixpoint is the component minimum regardless of schedule).
-    * Rounds needed ≤ graph diameter; near-dup components are
-    * shallow (dup clusters are cliques or near-cliques from banding),
-    * so convergence is fast; `maxIters` is a safety bound and
-    * non-convergence throws rather than returning partial labels.
-    * Caching discipline: edges and the current round persist
-    * (MEMORY_AND_DISK) and every superseded round unpersists — an
-    * iterative operator that leaks its intermediates would bleed
-    * block-manager memory across queries in a long-lived session.
-    * CALLER CONTRACT: the returned labels frame is persisted so
-    * multi-use consumption doesn't recompute the whole iteration;
-    * the caller MUST `unpersist()` it when done (or go through
-    * [[dedupGroups]], which snapshots and frees it internally).
-    * Edges and intermediate rounds are freed here. Lineage is
-    * truncated with `localCheckpoint` every few rounds so the logical
-    * plan doesn't grow one join per round (analyzer cost compounds on
-    * high-diameter graphs; local checkpoints trade executor-loss
-    * resilience for plan truncation, the right trade in an iterative
-    * inner loop).
-    * Only vertices present in `pairs` are labeled: singletons are
-    * their own group by definition and never shuffle. */
-  def connectedComponents(pairs: DataFrame, src: String, dst: String,
-                          maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = pairs.select(col(src).as("a"), col(dst).as("b"))
-      .union(pairs.select(col(dst).as("a"), col(src).as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // `round` is the frame actually persisted each iteration (it
-    // carries the previous label for the convergence filter); `labels`
-    // is its (id, label) projection, which reads through the cache.
-    var round = edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = round
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val prop = edges
-        .join(labels.select(col("id").as("a"), col("label").as("la")), "a")
-        .groupBy(col("b").as("id")).agg(min(col("la")).as("nmin"))
-      // carry the previous label through the round so convergence is a
-      // plain filter on the cached frame — no extra join per round
-      val grown = labels.join(prop, Seq("id"), "left")
-        .select(col("id"), col("label").as("prev"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      // every 4th round: cut lineage (the plan otherwise accretes one
-      // join per round); other rounds: plain persist, forced below.
-      val next =
-        if ((i + 1) % 4 == 0) grown.snapshot()
-        else grown.persist(StorageLevel.MEMORY_AND_DISK)
-      converged = next.filter(col("label") =!= col("prev")).isEmpty // forces `next`'s cache
-      round.unpersist(blocking = false)
-      round = next
-      labels = next.select(col("id"), col("label"))
-      i += 1
-    }
-    edges.unpersist(blocking = false)
-    if (!converged) {
-      round.unpersist(blocking = false)
-      throw new IllegalStateException(s"connectedComponents: no fixpoint after $maxIters rounds")
-    }
-    // hand back a frame that is ITSELF the cache entry (a projection
-    // would make the caller's unpersist() a no-op) and free the round
-    val fin = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    fin.count()
-    round.unpersist(blocking = false)
-    fin
-  }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14 — public algorithm; reference has no graph
-    * operator, this is the scale path behind near-dup grouping).
-    *
-    * Same fixpoint as [[connectedComponents]] — every vertex labeled
-    * with its component MINIMUM — but convergence is O(log n) rounds
-    * instead of O(diameter): min-label propagation on a million-doc
-    * near-dup chain needs a million rounds; star contraction halves
-    * tree heights every alternation, so even a pathological chain at
-    * 100 TB converges in a few dozen jobs.
+    * Convergence is O(log n) rounds whatever the graph's depth: label
+    * propagation on a million-doc near-dup chain needs a million
+    * rounds; star contraction halves tree heights every alternation,
+    * so even a pathological chain at 100 TB converges in a few dozen
+    * jobs.
     *
     * Edges are kept directed child→parent (`u > v`). One round =
     *  - large-star: per vertex x, connect every LARGER neighbor to
@@ -617,17 +544,19 @@ object Dedup {
     * Both preserve connectivity (paper, Lemmas 1-2); the fixpoint is
     * a star forest rooted at component minima. Convergence check =
     * edge-set equality with the previous round (count + anti-join,
-    * both on cached frames). Exact and deterministic — no sampling,
-    * no hashing tricks.
+    * both on snapshots). Exact and deterministic — no sampling, no
+    * hashing tricks; ids may be of any orderable type. Non-convergence
+    * within `maxIters` throws rather than returning partial labels.
     *
-    * CALLER CONTRACT: as [[connectedComponents]] — the returned
-    * labels frame is persisted; callers must `unpersist()` it (or use
-    * [[dedupGroups]]). `onConverged` reports the round count (tests
-    * assert the O(log n) bound with it). */
+    * Each round is staged with `snapshot()` (flat lineage) and the
+    * superseded round released; the last round's blocks stay with the
+    * returned labels, for [[graft.sources.Staging.scoped]] to free.
+    * `onConverged` reports the round count (tests assert the O(log n)
+    * bound with it). Only vertices present in `pairs` are labeled:
+    * singletons are their own group by definition and never shuffle. */
   def connectedComponentsStar(pairs: DataFrame, src: String, dst: String,
                               maxIters: Int = 50,
                               onConverged: Int => Unit = _ => ()): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
 
     def largeStar(e: DataFrame): DataFrame = {
       val nbrs = e.select(col("u").as("x"), col("v").as("y"))
@@ -654,55 +583,46 @@ object Dedup {
       .select(greatest(col(src), col(dst)).as("u"), least(col(src), col(dst)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .snapshot()
     var nEdges = edges.count()
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val grown = smallStar(largeStar(edges))
-      val next =
-        if ((i + 1) % 3 == 0) grown.snapshot()
-        else grown.persist(StorageLevel.MEMORY_AND_DISK)
+      val next = smallStar(largeStar(edges)).snapshot()
       val nNext = next.count()
       converged = nNext == nEdges && next.exceptAll(edges).isEmpty
-      edges.unpersist(blocking = false)
+      Staging.release(edges)
       edges = next
       nEdges = nNext
       i += 1
     }
-    if (!converged) {
-      edges.unpersist(blocking = false)
+    if (!converged)
       throw new IllegalStateException(s"connectedComponentsStar: no fixpoint after $maxIters rounds")
-    }
     onConverged(i)
     // Converged star forest: each non-root vertex has exactly one edge
     // to its component minimum; roots label themselves.
     val verts = pairs.select(col(src).as("id")).union(pairs.select(col(dst).as("id"))).distinct()
-    val labels = verts
+    verts
       .join(edges.select(col("u").as("id"), col("v").as("lbl")), Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    edges.unpersist(blocking = false)
-    labels
   }
 
-  /** Driver-side union-find over a COLLECTED edge list — the small-
-    * graph fast path behind [[dedupGroups]]. Near-dup graphs are
-    * usually tiny relative to the corpus (pairs ≈ duplicate docs, not
-    * all docs), so when the edge count fits a bound, 12+ scheduler
-    * round-trips of iterative label propagation collapse into one
-    * collect + an O(E α(E)) in-memory pass + one parallelize.
-    * Callers MUST pre-check the bound (dedupGroups counts the cached
-    * edge frame first); this method materializes whatever it is given.
-    * Same fixpoint as the distributed forms: every vertex labeled with
-    * its component MINIMUM — exact and deterministic, so the three
-    * paths are interchangeable under one oracle (tested). */
+  /** Driver-side union-find over a COLLECTED long edge list — the
+    * small branch of [[dedupGroups]]. Near-dup graphs are usually tiny
+    * relative to the corpus (pairs ≈ duplicate docs, not all docs), so
+    * when the edge list broadcasts, a dozen scheduler round-trips of
+    * iterative contraction collapse into one collect + an O(E α(E))
+    * in-memory pass + one local relation. This method materializes
+    * whatever it is given; [[dedupGroups]] calls it only below the
+    * regime gate. Same fixpoint as [[connectedComponentsStar]]: every
+    * vertex labeled with its component MINIMUM — exact and
+    * deterministic, so the branches are interchangeable under one
+    * oracle (tested). */
   private[operators] def connectedComponentsLocal(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // null endpoints drop out of join/group keys in the distributed
-    // forms; drop them here too (getLong would silently unbox null→0L
+    // form; drop them here too (getLong would silently unbox null→0L
     // and merge the edge into vertex 0's component). Collect as
     // specialized (Long, Long) tuples, not boxed Rows.
     val rows: Array[(Long, Long)] = edges
@@ -730,109 +650,50 @@ object Dedup {
     spark.createDataset(verts.map(v => (v, find(v))).toSeq).toDF("id", "label")
   }
 
-  /** Max collected edges for the driver-side fast path. 1M edges is
-    * ~16 MB as primitive longs; the transient driver cost is a few ×
-    * that (tuple headers during collect, the HashMap, the vertex
-    * array) — call it low hundreds of MB worst case, still far under
-    * any sane driver heap and far over any graph where scheduler
-    * overhead dominates. */
-  val LocalEdgeCap: Long = 1L << 20
+  /** Component labels (id, label) → near-dup groups (doc_id, rep_id,
+    * group_size), snapshotted. Ends [[dedupGroups]]; composes with
+    * [[connectedComponentsStar]] for a caller that wants that branch
+    * at any size. */
+  def groupsOf(labels: DataFrame): DataFrame =
+    labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
+      .join(labels.groupBy(col("label").as("rep_id")).agg(count(lit(1)).as("group_size")), "rep_id")
+      .select("doc_id", "rep_id", "group_size")
+      .snapshot()
 
   /** Near-dup groups: pair graph → (doc_id, rep_id, group_size) with
     * rep_id = min doc id of the component. The keep/drop decision of
     * a dedup pipeline is then `doc_id != rep_id`.
     *
-    * `algo = "auto"` (default) first counts the (cached) edge list:
-    * at or under [[LocalEdgeCap]] edges with integral ids it runs
-    * [[connectedComponentsLocal]] — one job to collect, union-find on
-    * the driver, one parallelize — because a dozen iterative-join jobs
-    * over a graph that fits in one task's memory is pure scheduling
-    * overhead. Above the cap (or for non-integral id types) it stays
-    * fully distributed: min-label
-    * propagation first — near-dup components are cliques or
-    * near-cliques from banding, so diameter is tiny and min-label's
-    * 2-shuffles-per-round loop wins by ~5× over star contraction
-    * (measured at sf0.1) — falling back to the O(log n)-round
-    * large-star/small-star form only when the graph turns out deep
-    * (min-label fails to converge in `shallowRounds`). The fallback
-    * re-derives from the original pairs: bounded rework
-    * (`shallowRounds` cheap rounds) on exactly the pathological inputs
-    * where star is the only thing that terminates at all.
-    * The result is snapshotted with `localCheckpoint` and the labels
-    * cache is freed here, so repeated calls don't accrete
-    * block-manager entries. */
-  def dedupGroups(pairs: DataFrame, src: String = "id1", dst: String = "id2",
-                  algo: String = "auto", shallowRounds: Int = 8,
-                  localEdgeCap: Long = LocalEdgeCap): DataFrame = {
+    * One regime gate, [[graft.sources.Staging.isLarge]] on the staged
+    * long edge list: a small list runs [[connectedComponentsLocal]]
+    * (one job to collect, union-find on the driver); a large or
+    * unmeasured one (reliable mode) runs [[connectedComponentsStar]],
+    * as do non-integral ids. Both branches label with the component
+    * minimum, and integral ids come back as the wider of the two id
+    * types either way. */
+  def dedupGroups(pairs: DataFrame, src: String = "id1", dst: String = "id2"): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-    import org.apache.spark.storage.StorageLevel
     def width(t: DataType): Int = t match {
       case ByteType => 1; case ShortType => 2; case IntegerType => 4; case LongType => 8
       case _        => 0
     }
-    val integralIds = width(pairs.schema(src).dataType) > 0 && width(pairs.schema(dst).dataType) > 0
-    // ids and labels mix values from BOTH columns; casting back to the
-    // narrower of two mixed widths could wrap silently (non-ANSI cast),
-    // so the restore type is the WIDER of the two.
-    val widerIdType: DataType =
-      if (width(pairs.schema(src).dataType) >= width(pairs.schema(dst).dataType))
-        pairs.schema(src).dataType
-      else pairs.schema(dst).dataType
-    val cc = algo match {
-      case "auto" if integralIds =>
-        // count the cached edge list once (a partial-agg job over work
-        // the distributed path would persist anyway); small graph →
-        // driver union-find, else fall through to the iterative hybrid
-        // reading the same cache.
-        val edges = pairs
-          .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val m = edges.count()
-        val labels =
-          if (m <= localEdgeCap) {
-            val fin = connectedComponentsLocal(edges).persist(StorageLevel.MEMORY_AND_DISK)
-            fin.count()
-            fin
-          } else {
-            try connectedComponents(edges, "a", "b", maxIters = shallowRounds)
-            catch { case _: IllegalStateException => connectedComponentsStar(edges, "a", "b") }
-          }
-        edges.unpersist(blocking = false)
-        // restore the wider of the two id types (cast long → wider is
-        // exact; every id/label value fits by construction)
-        if (widerIdType == LongType) labels
-        else {
-          val typed = labels.select(col("id").cast(widerIdType).as("id"),
-              col("label").cast(widerIdType).as("label"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          typed.count()
-          labels.unpersist(blocking = false)
-          typed
-        }
-      case "auto" =>
-        try connectedComponents(pairs, src, dst, maxIters = shallowRounds)
-        catch { case _: IllegalStateException => connectedComponentsStar(pairs, src, dst) }
-      case "star"     => connectedComponentsStar(pairs, src, dst)
-      case "minlabel" => connectedComponents(pairs, src, dst)
-      case "local"    =>
-        // integral ids only: an arbitrary type cast('long') turns
-        // non-numeric ids into nulls, which the distributed paths drop
-        // from join keys — forcing the same contract keeps the three
-        // algos interchangeable instead of silently lossy.
-        require(integralIds,
-          s"dedupGroups(algo=local) requires integral id columns, got " +
-            s"${pairs.schema(src).dataType}/${pairs.schema(dst).dataType}")
-        val e = pairs.select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
-        connectedComponentsLocal(e)
-          .select(col("id").cast(widerIdType).as("id"), col("label").cast(widerIdType).as("label"))
-      case other      => throw new IllegalArgumentException(s"dedupGroups: unknown algo '$other'")
+    val (ts, td) = (pairs.schema(src).dataType, pairs.schema(dst).dataType)
+    if (width(ts) == 0 || width(td) == 0) groupsOf(connectedComponentsStar(pairs, src, dst))
+    else {
+      val edges = pairs.select(col(src).cast("long").as("a"), col(dst).cast("long").as("b")).snapshot()
+      val labels =
+        if (Staging.isLarge(edges)) connectedComponentsStar(edges, "a", "b")
+        else connectedComponentsLocal(edges)
+      // ids and labels mix values from BOTH columns; casting back to the
+      // narrower of two mixed widths could wrap silently (non-ANSI cast),
+      // so the restore type is the WIDER of the two (long → wider is
+      // exact; every id/label value fits by construction)
+      val idType = if (width(ts) >= width(td)) ts else td
+      val out = groupsOf(labels.select(col("id").cast(idType).as("id"),
+        col("label").cast(idType).as("label")))
+      Staging.release(edges)
+      out
     }
-    val out = cc.select(col("id").as("doc_id"), col("label").as("rep_id"))
-      .join(cc.groupBy(col("label").as("rep_id")).agg(count(lit(1)).as("group_size")), "rep_id")
-      .select("doc_id", "rep_id", "group_size")
-      .snapshot() // snapshot before freeing the labels cache
-    cc.unpersist(blocking = false)
-    out
   }
 
   /** The end-to-end dedup decision a pipeline actually applies: MinHash

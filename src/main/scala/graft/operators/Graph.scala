@@ -321,7 +321,7 @@ object Graph {
     * the label WITHOUT the modulo wraparound a subtractive key has
     * at label 0). Completes the graph family next to
     * [[pageRankScaled]] / [[triangleCounts]] /
-    * [[Dedup.connectedComponents]]: CC answers "connected at all",
+    * [[Dedup.connectedComponentsStar]]: CC answers "connected at all",
     * LPA answers "densely connected together".
     *
     * Scale shape: each round is one equi-join shuffle (edges ⋈

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Funcs.{nullifZero, r4, rd, scaled}
+import graft.functions.Funcs.{dec38, nullifZero, r4, rd, scaled}
 import graft.sources.Staging
 import graft.sources.Staging.Snapshottable
 
@@ -126,7 +126,6 @@ object Profiling {
   def distributionDrift(a: DataFrame, b: DataFrame, value: Column,
                         lo: Long, hi: Long, nBuckets: Int): DataFrame = {
     require(hi > lo && nBuckets > 0, "distributionDrift: bad bucket spec")
-    def d(c: Column) = c.cast("decimal(38,0)")
     // exact integer bucketing: ((v-lo)·nB) div (hi-lo), clamped
     def buckets(df: DataFrame) = df
       .select(value.cast("long").as("v"))
@@ -145,7 +144,7 @@ object Profiling {
       .groupBy("na", "nb")
       .agg(sum(when(col("ca") > 0, lit(1L)).otherwise(0L)).as("buckets_a"),
         sum(when(col("cb") > 0, lit(1L)).otherwise(0L)).as("buckets_b"),
-        sum(abs(d(col("ca")) * d(col("nb")) - d(col("cb")) * d(col("na"))))
+        sum(abs(dec38(col("ca")) * dec38(col("nb")) - dec38(col("cb")) * dec38(col("na"))))
           .as("num"))
       .select(col("na").as("n_a"), col("nb").as("n_b"),
         col("buckets_a"), col("buckets_b"),
@@ -622,7 +621,6 @@ object Profiling {
     * broadcast-joined. No fact-side windows, no fact re-sorts. */
   def cramersV(df: DataFrame, groupCol: String, aCol: String,
                bCol: String): DataFrame = {
-    def dd(c: Column) = c.cast("decimal(38,0)")
     val base = df
       .select(col(groupCol).as("grp"), col(aCol).as("a"), col(bCol).as("b"))
       .snapshot() // feeds cells + both margins + totals
@@ -630,9 +628,9 @@ object Profiling {
     val ra = base.groupBy("grp", "a").agg(count(lit(1)).as("na"))
     val cb = base.groupBy("grp", "b").agg(count(lit(1)).as("nb"))
     val tot = base.groupBy("grp").agg(count(lit(1)).as("n"))
-    val diff = dd(col("o")) * dd(col("n")) - dd(col("na")) * dd(col("nb"))
+    val diff = dec38(col("o")) * dec38(col("n")) - dec38(col("na")) * dec38(col("nb"))
     val contrib = (diff * diff).cast("double") /
-      (dd(col("n")) * dd(col("na")) * dd(col("nb"))).cast("double")
+      (dec38(col("n")) * dec38(col("na")) * dec38(col("nb"))).cast("double")
     val grid = ra.join(cb, "grp").join(broadcast(tot), "grp")
       .join(cells, Seq("grp", "a", "b"), "left")
       .withColumn("o", coalesce(col("o"), lit(0L)))
@@ -832,7 +830,6 @@ object Profiling {
     * bounded by support size, never by corpus size. */
   def wassersteinDrift(docs: DataFrame, sourceCol: String,
                        textCol: String): DataFrame = {
-    def d(c: Column) = c.cast("decimal(38,0)")
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val cells = docs
       .select(col(sourceCol).as("source"),
@@ -856,7 +853,7 @@ object Profiling {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     grid.groupBy("source")
       .agg(max(col("n_s")).as("n_docs"), max(col("nn")).as("nn"),
-        sum(abs(d(col("cum_s")) * col("nn") - d(col("cum_all")) * col("n_s")) *
+        sum(abs(dec38(col("cum_s")) * col("nn") - dec38(col("cum_all")) * col("n_s")) *
           col("delta")).as("num"))
       .select(col("source"), col("n_docs").cast("long").as("n_docs"),
         rd(col("num").cast("double") /

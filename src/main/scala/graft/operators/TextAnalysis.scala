@@ -892,7 +892,6 @@ object TextAnalysis {
   def tokenDispersion(docs: DataFrame, idCol: String, textCol: String,
                       sourceCol: String, topK: Int = 50): DataFrame = {
     require(topK >= 1, "tokenDispersion: topK must be positive")
-    def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val mf = docs.agg(countDistinct(col(sourceCol)).cast("long").as("m"))
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val cells = docs
@@ -902,7 +901,7 @@ object TextAnalysis {
       .filter(col("t") =!= "")
       .groupBy("t", "source").agg(count(lit(1)).as("f"))
     val g = cells.groupBy("t")
-      .agg(sum(col("f")).as("ft"), sum(dd(col("f")) * col("f")).as("qt"),
+      .agg(sum(col("f")).as("ft"), sum(dec38(col("f")) * col("f")).as("qt"),
         count(lit(1)).as("ns"))
       .crossJoin(broadcast(mf))
     val mean = col("ft").cast("double") / col("m").cast("double")
@@ -1595,7 +1594,6 @@ object TextAnalysis {
     * on the k²-bounded confusion frame. */
   def cohensKappa(docs: DataFrame, labelCol: String,
                   textCol: String): DataFrame = {
-    def dd(c: Column) = c.cast("decimal(38,0)")
     val cells = languageId(docs, textCol)
       .groupBy(col(labelCol).as("lang"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
@@ -1606,15 +1604,15 @@ object TextAnalysis {
       sum(when(col("lang") === col("lang_pred"), col("n")).otherwise(0L))
         .as("agree"))
     val pe = rMarg.join(cMarg, col("lang") === col("lang_pred"))
-      .agg(sum(dd(col("r")) * dd(col("c"))).as("src"))
+      .agg(sum(dec38(col("r")) * dec38(col("c"))).as("src"))
     tot.crossJoin(broadcast(pe))
       .select(col("nn").cast("long").as("n_docs"),
         col("agree").cast("long").as("n_agree"),
         rd(col("agree").cast("double") / col("nn").cast("double"), 6).as("p_o"),
         rd(col("src").cast("double") /
-          (dd(col("nn")) * dd(col("nn"))).cast("double"), 6).as("p_e"),
-        rd((dd(col("nn")) * dd(col("agree")) - col("src")).cast("double") /
-          nullifZero((dd(col("nn")) * dd(col("nn")) - col("src")).cast("double")),
+          (dec38(col("nn")) * dec38(col("nn"))).cast("double"), 6).as("p_e"),
+        rd((dec38(col("nn")) * dec38(col("agree")) - col("src")).cast("double") /
+          nullifZero((dec38(col("nn")) * dec38(col("nn")) - col("src")).cast("double")),
           6).as("kappa"))
   }
 
@@ -1700,22 +1698,21 @@ object TextAnalysis {
   def tokenBurstiness(docs: DataFrame, idCol: String, textCol: String,
                       topK: Int = 50): DataFrame = {
     require(topK >= 1, "tokenBurstiness: topK must be positive")
-    def dd(c: Column) = c.cast("decimal(38,0)")
     val dc = Dedup.spreadById(docs, idCol, textCol)
       .select(col(idCol).as("d"), explode(tokens(col(textCol))).as("t"))
       .filter(col("t") =!= "")
       .groupBy("d", "t").agg(count(lit(1)).as("c"))
     val g = dc.groupBy("t")
       .agg(count(lit(1)).as("m"), sum(col("c")).as("sc"),
-        sum(dd(col("c")) * col("c")).as("sq"))
+        sum(dec38(col("c")) * col("c")).as("sq"))
     val nDocs = docs.agg(count(lit(1)).as("nd"))
     g.crossJoin(broadcast(nDocs))
       .orderBy(col("sc").desc, col("t")).limit(topK)
       .select(col("t").as("token"),
         col("sc").cast("long").as("n_occ"),
         col("m").cast("long").as("n_docs_with"),
-        rd((dd(col("nd")) * col("sq") - dd(col("sc")) * col("sc")).cast("double") /
-          nullifZero((dd(col("nd")) * col("sc")).cast("double")), 6)
+        rd((dec38(col("nd")) * col("sq") - dec38(col("sc")) * col("sc")).cast("double") /
+          nullifZero((dec38(col("nd")) * col("sc")).cast("double")), 6)
           .as("vmr_burstiness"))
   }
 
@@ -1765,7 +1762,6 @@ object TextAnalysis {
 
   def diversityIndex(docs: DataFrame, sourceCol: String,
                      textCol: String): DataFrame = {
-    def dd(c: Column) = c.cast("decimal(38,0)")
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val cells = docs
       .select(col(sourceCol).as("source"), col(textCol))
@@ -1780,13 +1776,13 @@ object TextAnalysis {
       .groupBy("source")
       .agg(max(col("n")).as("n"), count(lit(1)).as("v"),
         sum(col("h12")).as("sh"),
-        sum(dd(col("c")) * (col("c") - lit(1L))).as("sq"))
+        sum(dec38(col("c")) * (col("c") - lit(1L))).as("sq"))
       .select(col("source"),
         col("n").cast("long").as("n_tokens"),
         col("v").cast("long").as("vocab"),
         rd(col("sh").cast("double") / 1.0e12, 6).as("shannon_nats"),
         rd(col("sq").cast("double") /
-          nullifZero((dd(col("n")) * (col("n") - lit(1L))).cast("double")), 6)
+          nullifZero((dec38(col("n")) * (col("n") - lit(1L))).cast("double")), 6)
           .as("simpson_concentration"),
         rd(col("sh").cast("double") / 1.0e12 /
           nullifZero(log(col("v").cast("double"))), 6).as("pielou_evenness"))

@@ -433,10 +433,9 @@ object TickAnalytics {
     val lagged = dp.select(
       Seq(col("symbol"), col("trade_date"), col("dp")) ++
         (1 to h).map(j => lag(col("dp"), j).over(w).as(s"dp$j")): _*)
-    def dd(c: Column) = c.cast("decimal(38,0)")
     val gammas =
-      Seq(count(lit(1)).as("n_moves"), sum(dd(col("dp")) * col("dp")).as("g0")) ++
-        (1 to h).map(j => sum(dd(col("dp")) * col(s"dp$j")).as(s"g$j"))
+      Seq(count(lit(1)).as("n_moves"), sum(dec38(col("dp")) * col("dp")).as("g0")) ++
+        (1 to h).map(j => sum(dec38(col("dp")) * col(s"dp$j")).as(s"g$j"))
     val g = lagged.groupBy("symbol", "trade_date")
       .agg(gammas.head, gammas.tail: _*)
       .filter(col("n_moves") >= minMoves)

@@ -86,7 +86,8 @@ object Staging {
   }
 
   /** The one small/large regime gate, for every device that switches
-    * on a snapshot's size (the `Graph` loops, `Profiling.globalRank`).
+    * on a snapshot's size (the `Graph` loops, `Profiling.globalRank`,
+    * `Dedup.dedupGroups`).
     * True when the eager snapshot `df` is past the pin dial — joins
     * against it will NOT broadcast it, so loops pin their layouts — or
     * when its size is unmeasured (reliable checkpoints hold no blocks):

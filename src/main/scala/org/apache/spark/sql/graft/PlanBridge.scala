@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -10,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * [[graft.sources.Staging.snapshotKeyed]] to wrap a checkpointed
   * frame in [[graft.plans.PinHashPartitioning]] — there is no public
   * Dataset API that attaches a custom logical node — and by
-  * [[graft.tools.Probe]] to flush the listener bus. Nothing else in
-  * the repo goes through this package. */
+  * [[graft.tools.Probe]] to flush the listener bus, and by
+  * [[graft.Session]] to set the conf new sessions start from. Nothing
+  * else in the repo goes through this package. */
 object PlanBridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
@@ -23,4 +25,7 @@ object PlanBridge {
   /** Blocks until every event posted so far reached every listener,
     * streaming-query listeners included (their bus listens on this one). */
   def drainListenerBus(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The context-wide conf every `newSession()` of `spark` starts from. */
+  def sharedConf(spark: SparkSession): SparkConf = spark.asInstanceOf[CSparkSession].sharedState.conf
 }

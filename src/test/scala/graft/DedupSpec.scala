@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.scalatest.funspec.AnyFunSpec
 import graft.operators.Dedup
 
@@ -169,6 +170,23 @@ class DedupSpec extends AnyFunSpec {
   }
 
   describe("connectedComponents / dedupGroups") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.sources.Staging
+    import graft.tools.Probe
+
+    val pinned = Seq("graft.staging.pinThreshold" -> "0")
+    /** dedupGroups' rows and id type under `confs`, and whether star
+      * contraction ran: its convergence check is the only except-all
+      * (`replicaterows`) the call plans. */
+    def groups(pairs: DataFrame, confs: (String, String)*): (Set[Row], DataType, Boolean) =
+      Session.withConf(spark, confs: _*) {
+        val ((rows, t), rec) = Probe.record(spark) {
+          val g = Dedup.dedupGroups(pairs)
+          (g.collect().toSet, g.schema("doc_id").dataType)
+        }
+        (rows, t, rec.plans.exists(_.contains("replicaterows")))
+      }
+
     it("labels every vertex with its component minimum across chains and cliques") {
       // components: {1,2,3,4} (a chain), {10,11,12} (a triangle), {20,21}
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
@@ -181,101 +199,114 @@ class DedupSpec extends AnyFunSpec {
         (20L, 20L, 2L), (21L, 20L, 2L)))
     }
     it("throws rather than returning partial labels when the iteration cap is too low") {
-      // a 6-chain needs more than 1 round to flood the min label
+      // a 6-chain is not a star forest after 1 round of contraction
       val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("id1", "id2")
       intercept[IllegalStateException] {
-        Dedup.connectedComponents(chain, "id1", "id2", maxIters = 1).collect()
+        Dedup.connectedComponentsStar(chain, "id1", "id2", maxIters = 1).collect()
       }
     }
+    val fixtures = Seq(
+      // chain + triangle + pair (the group fixture above)
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)),
+      // edges arriving in both orientations and duplicated
+      Seq((2L, 1L), (1L, 2L), (3L, 2L), (5L, 4L), (4L, 6L)),
+      // a star already, plus an isolated long chain
+      Seq((7L, 1L), (8L, 1L), (9L, 1L), (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L)))
+
     it("star contraction equals min-label propagation on chains, cliques and forests") {
-      val fixtures = Seq(
-        // chain + triangle + pair (the group fixture above)
-        Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)),
-        // edges arriving in both orientations and duplicated
-        Seq((2L, 1L), (1L, 2L), (3L, 2L), (5L, 4L), (4L, 6L)),
-        // a star already, plus an isolated long chain
-        Seq((7L, 1L), (8L, 1L), (9L, 1L), (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L)))
       for (fx <- fixtures) {
-        val pairs = fx.toDF("id1", "id2")
-        val a = Dedup.connectedComponents(pairs, "id1", "id2")
-        val b = Dedup.connectedComponentsStar(pairs, "id1", "id2")
-        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-        a.unpersist(); b.unpersist()
+        // min-label propagation, on the driver: every vertex takes the
+        // least label among itself and its neighbours until none moves
+        var minLabel = fx.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+        var moved = true
+        while (moved) {
+          val next = fx.foldLeft(minLabel) { case (l, (a, b)) =>
+            val m = math.min(l(a), l(b))
+            l.updated(a, m).updated(b, m)
+          }
+          moved = next != minLabel
+          minLabel = next
+        }
+        val star = Staging.scoped(spark) {
+          Dedup.connectedComponentsStar(fx.toDF("id1", "id2"), "id1", "id2")
+            .as[(Long, Long)].collect()
+        }
+        assert(star.length == minLabel.size && star.toMap == minLabel)
       }
     }
     it("driver union-find labels exactly like the distributed forms") {
-      val fixtures = Seq(
-        Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)),
-        Seq((2L, 1L), (1L, 2L), (3L, 2L), (5L, 4L), (4L, 6L)),
-        Seq((7L, 1L), (8L, 1L), (9L, 1L), (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L)))
       for (fx <- fixtures) {
         val pairs = fx.toDF("id1", "id2")
-        val dist = Dedup.dedupGroups(pairs, algo = "minlabel")
-        val loc = Dedup.dedupGroups(pairs, algo = "local")
-        assert(dist.exceptAll(loc).isEmpty && loc.exceptAll(dist).isEmpty)
+        val (local, _, ranStar) = groups(pairs)
+        val star = Dedup.groupsOf(Dedup.connectedComponentsStar(pairs, "id1", "id2")).collect().toSet
+        assert(!ranStar && local.nonEmpty && local == star)
       }
     }
-    it("auto takes the same fixpoint below and above the local edge cap") {
+    it("takes the same fixpoint below and above the pin dial") {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
         .toDF("id1", "id2")
-      val local = Dedup.dedupGroups(pairs) // 5 edges ≤ cap → driver path
-      val dist = Dedup.dedupGroups(pairs, localEdgeCap = 0L) // forced distributed
-      assert(local.exceptAll(dist).isEmpty && dist.exceptAll(local).isEmpty)
+      val (local, _, smallRanStar) = groups(pairs)
+      val (star, _, largeRanStar) = groups(pairs, pinned: _*)
+      assert(!smallRanStar && largeRanStar)
+      assert(local.nonEmpty && local == star)
     }
     it("local path preserves a non-long integral id type") {
       val pairs = Seq((1, 2), (2, 3), (10, 11)).toDF("id1", "id2") // IntegerType
-      val groups = Dedup.dedupGroups(pairs, algo = "local")
-      assert(groups.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
-      assert(groups.filter(col("doc_id") === 3).select("rep_id").as[Int].head() == 1)
+      for (confs <- Seq(Nil, pinned)) {
+        val (rows, t, ranStar) = groups(pairs, confs: _*)
+        assert(ranStar == confs.nonEmpty)
+        assert(t == IntegerType)
+        assert(rows.collect { case Row(3, rep: Int, _) => rep } == Set(1))
+      }
     }
-    it("auto algo falls back from min-label to star on a deep chain") {
+    it("the large branch floods a 200-vertex chain into one group") {
       val chain = spark.range(1, 200)
         .select(col("id").as("id1"), (col("id") + 1).as("id2"))
-      // cap 0 forces the distributed hybrid: min-label would need 199
-      // rounds; auto must land on star and finish
-      val groups = Dedup.dedupGroups(chain, "id1", "id2", localEdgeCap = 0L)
-      assert(groups.agg(count(lit(1)), countDistinct(col("rep_id")),
-        min(col("rep_id")), max(col("group_size")))
-        .as[(Long, Long, Long, Long)].head() == ((200L, 1L, 1L, 200L)))
+      val (rows, _, ranStar) = groups(chain, pinned: _*)
+      assert(ranStar)
+      assert(rows.size == 200 && rows.forall(r => r.getLong(1) == 1L && r.getLong(2) == 200L))
     }
     it("mixed-width ids restore to the WIDER type so wide labels never wrap") {
       // id2 carries a value outside Int range; casting the labels back
       // to id1's IntegerType would wrap it silently (non-ANSI cast)
       val pairs = Seq((1, 5000000000L), (1, 2L)).toDF("id1", "id2")
       val groups = Dedup.dedupGroups(pairs)
-      assert(groups.schema("doc_id").dataType == org.apache.spark.sql.types.LongType)
+      assert(groups.schema("doc_id").dataType == LongType)
       assert(groups.filter(col("doc_id") === 5000000000L).select("rep_id")
         .as[Long].head() == 1L)
     }
     it("local path drops null endpoints instead of merging them into vertex 0") {
       val pairs = Seq((Some(0L), Some(1L)), (None, Some(5L)))
         .toDF("id1", "id2")
-      val groups = Dedup.dedupGroups(pairs, algo = "local")
+      val (rows, _, ranStar) = groups(pairs)
+      assert(!ranStar)
       // the null edge contributes nothing: 5 must NOT join component 0
       // (getLong on a null used to unbox it to 0L)
-      assert(groups.filter(col("doc_id") === 5L && col("rep_id") === 0L).isEmpty)
-      assert(groups.filter(col("doc_id") === 1L).select("rep_id").as[Long].head() == 0L)
+      assert(!rows.exists(r => r.get(0) == 5L && r.get(1) == 0L))
+      assert(rows.collect { case Row(1L, rep: Long, _) => rep } == Set(0L))
     }
-    it("local path rejects non-integral id types rather than hashing them to null") {
-      val pairs = Seq(("a", "b"), ("b", "c")).toDF("id1", "id2")
-      intercept[IllegalArgumentException] {
-        Dedup.dedupGroups(pairs, algo = "local")
-      }
+    it("string ids take the star branch and label by component minimum") {
+      val pairs = Seq(("b", "a"), ("b", "c"), ("y", "x")).toDF("id1", "id2")
+      val (rows, t, ranStar) = groups(pairs)
+      assert(ranStar && t == StringType)
+      assert(rows == Set(Row("a", "a", 3L), Row("b", "a", 3L), Row("c", "a", 3L),
+        Row("x", "x", 2L), Row("y", "x", 2L)))
     }
     it("star contraction converges in O(log n) rounds on a 10k-vertex chain") {
-      // THE pathological case for min-label propagation: diameter 9 999
+      // THE pathological case for label propagation: diameter 9 999
       // means ~10k rounds there. Star contraction must do it in < 20.
       val n = 10000L
       val chain = spark.range(1, n) // ids 1..n, edges (i, i+1)
         .select(col("id").as("id1"), (col("id") + 1).as("id2"))
       var rounds = -1
-      val labels = Dedup.connectedComponentsStar(chain, "id1", "id2",
-        onConverged = r => rounds = r)
-      assert(rounds > 0 && rounds < 20, s"converged in $rounds rounds")
-      // one component, labeled by the minimum vertex
-      assert(labels.agg(count(lit(1)), countDistinct(col("label")), min(col("label")))
-        .as[(Long, Long, Long)].head() == ((n, 1L, 1L)))
-      labels.unpersist()
+      Staging.scoped(spark) {
+        val labels = Dedup.connectedComponentsStar(chain, "id1", "id2",
+          onConverged = r => rounds = r)
+        assert(rounds > 0 && rounds < 20, s"converged in $rounds rounds")
+        // one component, labeled by the minimum vertex
+        assert(labels.agg(count(lit(1)), countDistinct(col("label")), min(col("label")))
+          .as[(Long, Long, Long)].head() == ((n, 1L, 1L)))
+      }
     }
   }
 

@@ -37,7 +37,6 @@ class EmptyInputSpec extends AnyFunSpec {
     }
     it("connected components (both forms) label nothing on an empty pair graph") {
       val noPairs = Seq.empty[(Long, Long)].toDF("id1", "id2")
-      assert(Dedup.connectedComponents(noPairs, "id1", "id2").isEmpty)
       assert(Dedup.connectedComponentsStar(noPairs, "id1", "id2").isEmpty)
       assert(Dedup.dedupGroups(noPairs).isEmpty)
     }

@@ -71,10 +71,13 @@ class SessionSpec extends AnyFunSpec {
       def query(s: SparkSession) = s.range(0, 4000, 1, 4).selectExpr("id % 13 AS k", "id * 7 AS v")
         .groupBy("k").sum("v").collect()
       query(spark)
-      // the same plan: a new session starts from the context's partition count
-      val fresh = spark.newSession()
-      fresh.conf.set("spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions"))
-      assert(CodegenChild.compiles(query(fresh)) == 0)
+      assert(CodegenChild.compiles(query(spark.newSession())) == 0)
+    }
+
+    it("a new session of a graft-built context plans at the context's partition count") {
+      val n = spark.sparkContext.defaultParallelism.toString
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == n)
+      assert(spark.newSession().conf.get("spark.sql.shuffle.partitions") == n)
     }
 
     it("a second context in the JVM drains StreamingPipeline without compiling again") {

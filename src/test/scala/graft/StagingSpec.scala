@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funspec.AnyFunSpec
-import graft.sources.Scratch
+import graft.sources.{Scratch, Staging}
+import graft.tools.Probe
 
 /** The cluster-run switch for multi-consumer staging panels
   * ([[graft.sources.Staging]]): `graft.staging.reliable=true` routes
@@ -50,7 +51,6 @@ class StagingSpec extends AnyFunSpec with BeforeAndAfterAll {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import graft.operators.Profiling
-    import graft.tools.Probe
 
     /** Under `confs`: ranks equal `row_number() OVER (ORDER BY v, id)`,
       * in one column order, through the range device iff `range`. */
@@ -88,24 +88,23 @@ class StagingSpec extends AnyFunSpec with BeforeAndAfterAll {
     }
   }
 
-  // The large branch of every Graph regime gate, one query per gate.
-  // Each regime must reproduce the default regime's rows, and its plans
-  // must hold the hash exchange `snapshotKeyed` pins (REPARTITION_BY_NUM),
-  // which no default-regime plan of these queries holds.
-  describe("graph regime gates") {
-    import graft.sources.Staging
-    import graft.tools.Probe
+  // The large branch of every regime gate, one query per gate: each
+  // regime must reproduce the default regime's rows through it.
+  private def run(q: String, sf: String, confs: (String, String)*): (Seq[String], Probe.Record) =
+    Session.withConf(spark, confs: _*) {
+      Probe.record(spark)(Staging.scoped(spark) {
+        SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+      })
+    }
+  private val defaults = scala.collection.mutable.Map.empty[String, (Seq[String], Probe.Record)]
+  private val regimes = Seq("graft.staging.pinThreshold=0" -> Seq("graft.staging.pinThreshold" -> "0"),
+    "graft.staging.reliable=true" -> reliable)
 
-    def run(q: String, sf: String, confs: (String, String)*): (Seq[String], Probe.Record) =
-      Session.withConf(spark, confs: _*) {
-        Probe.record(spark)(Staging.scoped(spark) {
-          SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
-        })
-      }
+  // A Graph gate's large branch holds the hash exchange `snapshotKeyed`
+  // pins (REPARTITION_BY_NUM), which no default-regime plan of these
+  // queries holds.
+  describe("graph regime gates") {
     def pinned(rec: Probe.Record): Boolean = rec.plans.exists(_.contains("REPARTITION_BY_NUM"))
-    val defaults = scala.collection.mutable.Map.empty[String, (Seq[String], Probe.Record)]
-    val regimes = Seq("graft.staging.pinThreshold=0" -> Seq("graft.staging.pinThreshold" -> "0"),
-      "graft.staging.reliable=true" -> reliable)
 
     for {
       q <- Seq("q_pagerank", "q_ppr", "q_triangles", "q_ktruss", "q_communities", "q_hits",
@@ -123,8 +122,26 @@ class StagingSpec extends AnyFunSpec with BeforeAndAfterAll {
     }
   }
 
+  // `Dedup.dedupGroups`' large branch is star contraction, whose
+  // convergence check is the only except-all (`replicaterows`) these
+  // queries plan; the small branch is the driver union-find.
+  describe("near-dup group regime gate") {
+    def star(rec: Probe.Record): Boolean = rec.plans.exists(_.contains("replicaterows"))
+
+    for {
+      q <- Seq("q_dedup_groups", "q_semdedup")
+      (regime, confs) <- regimes
+    } it(s"$q under $regime: the default regime's rows, through star contraction") {
+      val (want, default) = defaults.getOrElseUpdate(q, run(q, dir))
+      assert(want.nonEmpty)
+      assert(!star(default), s"$q ran star contraction in the default regime")
+      val (got, rec) = run(q, dir, confs: _*)
+      assert(got == want)
+      assert(star(rec), s"$q took the driver union-find under $regime")
+    }
+  }
+
   describe("Staging.scoped") {
-    import graft.sources.Staging
     // RDD ids are never reused and ContextCleaner only ever drops
     // entries, so a restored set is one that gained nothing
     def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
