@@ -33,9 +33,10 @@ object Pipelines {
     def main(args: Array[String]): Unit = {
       val Array(rawPath, outPath) = args.take(2)
       withSession("graft-batch") { spark =>
-        val clean = BatchCleaner.cleanDailyBars(RawSources.rawDailyBars(spark, rawPath))
+        val (clean, written) = Staging.observed(
+          BatchCleaner.cleanDailyBars(RawSources.rawDailyBars(spark, rawPath)), count(lit(1)))
         Sinks.writePartitioned(clean, outPath, "symbol", Seq("trade_date"))
-        println(s"bars written: ${spark.read.parquet(outPath).count()}")
+        println(s"bars written: ${written().getLong(0)}")
       }
     }
   }
@@ -106,7 +107,10 @@ object Pipelines {
     * dedup by content hash. Every stage is the oracle-checked
     * operator; counts must shrink monotonically (a curation stage that
     * grows its input is a bug, not a statistic); stages snapshot so
-    * audits and successors read materialized frames. */
+    * audits and successors read materialized frames. Every count is
+    * observed on a job the pipeline runs anyway ([[Staging.observed]]):
+    * the input's on the decode snapshot, each stage's on its own
+    * snapshot, the unique frames' on their write. */
   object MediaPipeline {
     import graft.sources.Staging.Snapshottable
 
@@ -114,36 +118,34 @@ object Pipelines {
       val Array(blobsPath, outDir) = args.take(2)
       withSession("graft-media") { spark =>
         // 1. ingest: gzip blob archive -> raw payloads; poison pills drop
-        val blobs = spark.read.parquet(blobsPath)
-        val total = blobs.count()
-        val raw = Compression
+        val (blobs, readTotal) = Staging.observed(spark.read.parquet(blobsPath), count(lit(1)))
+        val (raw, nDecoded) = Compression
           .decompressCorpus(blobs, "doc_id", "blob", "orig_len", "gzip")
           .filter(col("ok"))
           .select(col("doc_id").as("media_id"),
             unhex(md5(col("text"))).as("payload"),
             lit(8000).as("sample_rate"))
-          .snapshot()
-        val nDecoded = raw.count()
+          .snapshotCounted()
+        val total = readTotal().getLong(0)
         // 2. container encode + 3. parse/decode to frame features
         val frames = Multimodal.wavFrameFeatures(
           Multimodal.toWav(raw, "sample_rate"), frameSamples = 4).snapshot()
         // 4. VAD curation: media with at least one voiced segment
         val segs = Multimodal.energySegments(
           frames.drop("sample_rate", "n_channels"), minFrameEnergy = 1000000000L)
-        val voiced = raw.join(
-          segs.select("media_id").distinct(), "media_id").snapshot()
-        val nVoiced = voiced.count()
+        val (voiced, nVoiced) = raw.join(
+          segs.select("media_id").distinct(), "media_id").snapshotCounted()
         require(nDecoded <= total && nVoiced <= nDecoded,
           s"media stage grew: $total -> $nDecoded -> $nVoiced")
         // 5. frame-level exact dedup on content hash, keep-first
-        val uniqueFrames = Dedup.keepFirst(
+        val (uniqueFrames, readFrames) = Staging.observed(Dedup.keepFirst(
           Multimodal.sampleFrames(
             Multimodal.asMedia(voiced.select(col("media_id"), col("payload")),
               "media_id", "payload")),
-          Seq("frame_hash"), Seq(col("media_id"), col("frame_idx")))
+          Seq("frame_hash"), Seq(col("media_id"), col("frame_idx"))), count(lit(1)))
         uniqueFrames.write.mode("overwrite").parquet(s"$outDir/frames")
         voiced.select("media_id").write.mode("overwrite").parquet(s"$outDir/kept")
-        val nFrames = spark.read.parquet(s"$outDir/frames").count()
+        val nFrames = readFrames().getLong(0)
         println(s"[media] total=$total decoded=$nDecoded voiced=$nVoiced " +
           s"unique_frames=$nFrames")
       }
@@ -166,10 +168,15 @@ object Pipelines {
     * not a statistic).
     *
     * Each stage output is snapshotted ([[graft.sources.Staging]]) so
-    * its audit count AND the next stage read a materialized frame —
-    * without that, every downstream action re-executes the expensive
-    * MinHash/decontamination DAG from the scan; the final split report
-    * reads the WRITTEN corpus for the same reason. */
+    * the next stage reads a materialized frame — without that, every
+    * downstream action re-executes the expensive MinHash/
+    * decontamination DAG from the scan. Each stage costs its eager
+    * snapshot job plus its own work: the audit counts are observed on
+    * jobs that run anyway ([[Staging.observed]]) — the input's at the
+    * gate, each stage's on its own snapshot, the per-split counts on
+    * the corpus write — and the eval set (its text alone) and the
+    * written corpus are read with known schemas: the one job that
+    * neither stages, collects nor writes is the docs' schema inference. */
   object CorpusPipeline {
     import graft.sources.Staging.Snapshottable
 
@@ -177,43 +184,48 @@ object Pipelines {
       val Array(docsPath, evalPath, outDir) = args.take(3)
       withSession("graft-corpus") { spark =>
         val docs = spark.read.parquet(docsPath)
-        val total = docs.count()
-        // 1. quality / language gate (first-failing-gate verdicts)
-        val verdicts = TextAnalysis.corpusFilter(docs, "doc_id", "text", "lang")
-        val kept = docs.join(
-          verdicts.filter(col("keep")).select("doc_id"), "doc_id")
-          .snapshot()
-        val nKept = kept.count()
+        // 1. quality / language gate (first-failing-gate verdicts) over
+        // the docs' own rows. The input count is observed between the
+        // signal projection and the verdict's filter, which the
+        // observation keeps from being pushed into that projection: each
+        // row is profiled once, and the verdict reads attributes.
+        val (signals, readTotal) =
+          Staging.observed(TextAnalysis.corpusSignals(docs, "text"), count(lit(1)))
+        val (kept, nKept) = signals.filter(TextAnalysis.dropReason("lang") === "kept")
+          .select(docs.columns.map(col): _*)
+          .snapshotCounted()
+        val total = readTotal().getLong(0)
         // 2. near-dup removal: keep each group's representative
-        val deduped = Dedup.dedupCorpus(kept, "doc_id", "text").snapshot()
-        val nDeduped = deduped.count()
+        val (deduped, nDeduped) = Dedup.dedupCorpus(kept, "doc_id", "text").snapshotCounted()
         // 3. eval decontamination: drop heavy-overlap docs (docs too
         // short to shingle never appear in the score frame = clean)
-        val evalDocs = spark.read.parquet(evalPath)
+        val evalDocs = spark.read.schema("text STRING").parquet(evalPath)
         val contaminated = Decontamination
           .contaminationScores(deduped, "doc_id", "text", evalDocs, "text")
           .filter(col("overlap_ratio") >= 0.5)
           .select("doc_id")
-        val clean = deduped.join(contaminated, Seq("doc_id"), "left_anti")
-          .snapshot()
-        val nClean = clean.count()
+        val (clean, nClean) = deduped.join(contaminated, Seq("doc_id"), "left_anti")
+          .snapshotCounted()
         require(nKept <= total && nDeduped <= nKept && nClean <= nDeduped,
           s"corpus stage grew: $total -> $nKept -> $nDeduped -> $nClean")
         // 4. deterministic split, stable under corpus growth
-        Sampling.withSplit(clean, "doc_id", trainFraction = 0.8,
-          valFraction = 0.1)
-          .write.mode("overwrite").partitionBy("split")
+        val names = Seq("train", "val", "test")
+        val (split, readSplits) = Staging.observed(
+          Sampling.withSplit(clean, "doc_id", trainFraction = 0.8, valFraction = 0.1),
+          names.map(n => count_if(col("split") === n).as(n)): _*)
+        split.write.mode("overwrite").partitionBy("split")
           .parquet(s"$outDir/corpus")
         // 5. packing plan for the train split (fixed shards: layout
         // reproducibility across runs beats auto-scaling here)
-        val written = spark.read.parquet(s"$outDir/corpus")
+        val written = spark.read.schema(split.schema).parquet(s"$outDir/corpus")
         val packed = Packing.chunkSpans(
           TextAnalysis.tokenStats(written.filter(col("split") === "train"), "text")
             .select("doc_id", "n_tokens"),
           "doc_id", "n_tokens", budget = 2048, shards = 64)
         packed.write.mode("overwrite").parquet(s"$outDir/packing_plan")
-        val splits = written.groupBy("split").count().collect()
-          .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
+        val bySplit = readSplits()
+        val splits = names.indices.filter(bySplit.getLong(_) > 0)
+          .map(i => s"${names(i)}=${bySplit.getLong(i)}").sorted.mkString(" ")
         println(s"[corpus] total=$total kept=$nKept deduped=$nDeduped " +
           s"clean=$nClean splits($splits)")
       }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import graft.functions.Funcs._
 import graft.sources.Staging
 import graft.sources.Staging.Snapshottable
@@ -612,13 +613,14 @@ object Dedup {
     * relative to the corpus (pairs ≈ duplicate docs, not all docs), so
     * when the edge list broadcasts, a dozen scheduler round-trips of
     * iterative contraction collapse into one collect + an O(E α(E))
-    * in-memory pass + one local relation. This method materializes
-    * whatever it is given; [[dedupGroups]] calls it only below the
-    * regime gate. Same fixpoint as [[connectedComponentsStar]]: every
-    * vertex labeled with its component MINIMUM — exact and
-    * deterministic, so the branches are interchangeable under one
-    * oracle (tested). */
-  private[operators] def connectedComponentsLocal(edges: DataFrame): DataFrame = {
+    * in-memory pass. The groups (doc_id, rep_id, group_size) come out
+    * of that pass as one local relation, ids cast to `idType`: no job
+    * builds or stages them. This method materializes whatever it is
+    * given; [[dedupGroups]] calls it only below the regime gate. Same
+    * fixpoint as [[connectedComponentsStar]]: every vertex labeled with
+    * its component MINIMUM — exact and deterministic, so the branches
+    * are interchangeable under one oracle (tested). */
+  private[operators] def connectedComponentsLocal(edges: DataFrame, idType: DataType): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // null endpoints drop out of join/group keys in the distributed
@@ -645,15 +647,18 @@ object Dedup {
       }
     }
     // touch every endpoint so singleton-in-pairs vertices are emitted
-    val verts = rows.iterator.flatMap(e => Iterator(e._1, e._2))
-      .toArray.distinct.sorted
-    spark.createDataset(verts.map(v => (v, find(v))).toSeq).toDF("id", "label")
+    val labels = rows.iterator.flatMap(e => Iterator(e._1, e._2))
+      .toArray.distinct.sorted.map(v => v -> find(v))
+    val sizes = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
+    spark.createDataset(labels.map { case (v, l) => (v, l, sizes(l)) }.toSeq)
+      .select(col("_1").cast(idType).as("doc_id"), col("_2").cast(idType).as("rep_id"),
+        col("_3").as("group_size"))
   }
 
   /** Component labels (id, label) → near-dup groups (doc_id, rep_id,
-    * group_size), snapshotted. Ends [[dedupGroups]]; composes with
-    * [[connectedComponentsStar]] for a caller that wants that branch
-    * at any size. */
+    * group_size), snapshotted. Ends [[dedupGroups]]' star branch;
+    * composes with [[connectedComponentsStar]] for a caller that wants
+    * that branch at any size. */
   def groupsOf(labels: DataFrame): DataFrame =
     labels.select(col("id").as("doc_id"), col("label").as("rep_id"))
       .join(labels.groupBy(col("label").as("rep_id")).agg(count(lit(1)).as("group_size")), "rep_id")
@@ -666,13 +671,13 @@ object Dedup {
     *
     * One regime gate, [[graft.sources.Staging.isLarge]] on the staged
     * long edge list: a small list runs [[connectedComponentsLocal]]
-    * (one job to collect, union-find on the driver); a large or
-    * unmeasured one (reliable mode) runs [[connectedComponentsStar]],
-    * as do non-integral ids. Both branches label with the component
-    * minimum, and integral ids come back as the wider of the two id
-    * types either way. */
+    * (one job to collect, union-find on the driver, the groups a local
+    * relation); a large or unmeasured one (reliable mode) runs
+    * [[connectedComponentsStar]] and [[groupsOf]], as do non-integral
+    * ids. Both branches label with the component minimum, and integral
+    * ids come back as the wider of the two id types either way. */
   def dedupGroups(pairs: DataFrame, src: String = "id1", dst: String = "id2"): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     def width(t: DataType): Int = t match {
       case ByteType => 1; case ShortType => 2; case IntegerType => 4; case LongType => 8
       case _        => 0
@@ -681,16 +686,17 @@ object Dedup {
     if (width(ts) == 0 || width(td) == 0) groupsOf(connectedComponentsStar(pairs, src, dst))
     else {
       val edges = pairs.select(col(src).cast("long").as("a"), col(dst).cast("long").as("b")).snapshot()
-      val labels =
-        if (Staging.isLarge(edges)) connectedComponentsStar(edges, "a", "b")
-        else connectedComponentsLocal(edges)
       // ids and labels mix values from BOTH columns; casting back to the
       // narrower of two mixed widths could wrap silently (non-ANSI cast),
       // so the restore type is the WIDER of the two (long → wider is
       // exact; every id/label value fits by construction)
       val idType = if (width(ts) >= width(td)) ts else td
-      val out = groupsOf(labels.select(col("id").cast(idType).as("id"),
-        col("label").cast(idType).as("label")))
+      val out =
+        if (Staging.isLarge(edges)) {
+          val labels = connectedComponentsStar(edges, "a", "b")
+          groupsOf(labels.select(col("id").cast(idType).as("id"),
+            col("label").cast(idType).as("label")))
+        } else connectedComponentsLocal(edges, idType)
       Staging.release(edges)
       out
     }

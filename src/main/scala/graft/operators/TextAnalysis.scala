@@ -28,8 +28,14 @@ object TextAnalysis {
 
   private def tokens(text: Column): Column = split(text, " ")
 
-  private def hits(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(words)))
+  /** Stopword hits of `text`: its tokens in profile `i` of
+    * [[stopwords]], or in any profile for `i = stopwords.size`. Every
+    * read is an element of one native `stopword_hits` call
+    * ([[graft.plans.StopwordHits]], equal to
+    * `size(filter(split(text, " "), t -> t IN (words)))`), which a
+    * projection evaluates once per row however many elements it reads. */
+  private def hits(text: Column, i: Int): Column =
+    call_function("stopword_hits", text, typedLit(stopwords.map(_._2))).getItem(i)
 
   /** BPE-ish subword pattern: alpha runs, digit runs, or single
     * non-alphanumeric symbols — the usual pre-tokenization granularity
@@ -304,18 +310,29 @@ object TextAnalysis {
 
   /** Stopword-profile language ID: count stopword hits per language,
     * pick the argmax with a fixed priority order on ties (the order of
-    * [[stopwords]]). 'und' (undetermined) when nothing matches.
+    * [[stopwords]]). 'und' (undetermined) when nothing matches. All
+    * five counts come from one native `stopword_hits` pass per row
+    * ([[hits]]), and [[argmaxLang]] reads each of them once.
     */
-  def languageId(df: DataFrame, textCol: String): DataFrame = {
-    val hitCols = stopwords.map { case (lang, words) => lang -> hits(col(textCol), words) }
-    val total = hitCols.map(_._2).reduce(_ + _)
-    val pred = hitCols.zipWithIndex.foldRight(lit("und")) { case (((lang, h), i), els) =>
-      val rest = hitCols.drop(i + 1)
-      val isMax = rest.foldLeft(h > 0) { case (c, (_, h2)) => c && h >= h2 }
-      when(isMax, lang).otherwise(els)
-    }
-    df.withColumn("lang_pred", pred)
-      .withColumn("stopword_hits", total)
+  def languageId(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("lang_pred", langPred(col(textCol)))
+      .withColumn("stopword_hits", stopwords.indices.map(hits(col(textCol), _)).reduce(_ + _))
+
+  private def langPred(text: Column): Column =
+    argmaxLang(stopwords.zipWithIndex.map { case ((lang, _), i) => lang -> hits(text, i) })
+
+  /** The language with the most hits, the first in `hits` order on a
+    * tie, 'und' when no count is positive: the max of (hits, -priority,
+    * lang) structs plus the sentinel (0, 1, 'und'), which outranks every
+    * zero or null count and no positive one. Each count is referenced
+    * once; the when-fold it replaces (first language whose count is
+    * positive and at least every later one's) repeated every count
+    * O(L²) times. Equal to that fold on every hit vector (tested). */
+  private[graft] def argmaxLang(hits: Seq[(String, Column)]): Column = {
+    def entry(h: Column, p: Int, lang: String) =
+      struct(h.as("hits"), lit(p).as("p"), lit(lang).as("lang"))
+    val entries = hits.zipWithIndex.map { case ((lang, h), i) => entry(h, -i, lang) }
+    array_max(array(entries :+ entry(lit(0), 1, "und"): _*)).getField("lang")
   }
 
   /** Language-ID confusion matrix: predicted vs labeled language with
@@ -339,35 +356,50 @@ object TextAnalysis {
   /** Composite quality score in [0,1]: length saturation, lexical
     * diversity, stopword presence — the standard cheap pre-filter
     * before expensive dedup/embedding stages. */
-  def qualityScore(df: DataFrame, textCol: String): DataFrame = {
-    val t = tokens(col(textCol))
+  def qualityScore(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("quality_score", quality(col(textCol)))
+
+  private def quality(text: Column): Column = {
+    val t = tokens(text)
     val n = size(t).cast("double")
     val diversity = size(array_distinct(t)) / n
-    val stop = hits(col(textCol), stopwords.flatMap(_._2).distinct) / n
-    df.withColumn("quality_score",
-      r4(least(n / 100, lit(1.0)) * 0.4 + diversity * 0.3 + least(stop * 5, lit(1.0)) * 0.3))
+    val stop = hits(text, stopwords.size) / n
+    r4(least(n / 100, lit(1.0)) * 0.4 + diversity * 0.3 + least(stop * 5, lit(1.0)) * 0.3)
+  }
+
+  /** The signals the corpus gate reads, appended to `docs`: `n_tokens`
+    * ([[tokenStats]]), `lang_pred` ([[languageId]]) and
+    * `quality_score` ([[qualityScore]]). One narrow codegen'd
+    * projection, no shuffle; it splits and profiles each row once. */
+  def corpusSignals(docs: DataFrame, textCol: String): DataFrame = {
+    val t = col(textCol)
+    docs.withColumn("n_tokens", size(tokens(t)))
+      .withColumn("lang_pred", langPred(t))
+      .withColumn("quality_score", quality(t))
   }
 
   /** The keep/drop decision a corpus pipeline publishes after the
-    * cheap signal pass: too-short, predicted-language mismatch, and
-    * low composite quality, in that priority order (the FIRST failing
-    * gate names the drop reason, the convention that makes funnel
-    * accounting of a cleaning pipeline additive). Pure composition of
-    * [[tokenStats]] + [[languageId]] + [[qualityScore]] — still one
-    * narrow codegen'd map over the corpus, no shuffle. */
+    * cheap signal pass, as a Column over [[corpusSignals]]' columns:
+    * too-short, predicted-language mismatch, and low composite quality,
+    * in that priority order (the FIRST failing gate names the drop
+    * reason, the convention that makes funnel accounting of a cleaning
+    * pipeline additive); "kept" when every gate passes. */
+  def dropReason(langCol: String, minTokens: Int = 10, minQuality: Double = 0.5): Column =
+    when(col("n_tokens") < minTokens, "too_short")
+      .when(col("lang_pred") =!= col(langCol), "lang_mismatch")
+      .when(col("quality_score") < minQuality, "low_quality")
+      .otherwise("kept")
+
+  /** The gate's verdict per document: [[dropReason]] over
+    * [[corpusSignals]], with the signals it read. */
   def corpusFilter(docs: DataFrame, idCol: String, textCol: String,
                    langCol: String, minTokens: Int = 10,
-                   minQuality: Double = 0.5): DataFrame = {
-    val scored = qualityScore(languageId(tokenStats(docs, textCol), textCol), textCol)
-    scored.select(col(idCol), col(langCol), col("lang_pred"),
+                   minQuality: Double = 0.5): DataFrame =
+    corpusSignals(docs, textCol)
+      .select(col(idCol), col(langCol), col("lang_pred"),
         col("n_tokens"), col("quality_score"))
-      .withColumn("drop_reason",
-        when(col("n_tokens") < minTokens, "too_short")
-          .when(col("lang_pred") =!= col(langCol), "lang_mismatch")
-          .when(col("quality_score") < minQuality, "low_quality")
-          .otherwise("kept"))
+      .withColumn("drop_reason", dropReason(langCol, minTokens, minQuality))
       .withColumn("keep", col("drop_reason") === "kept")
-  }
 
   /** Shingle-hash fingerprint: min over word-3-gram hash60s — one long
     * per document (a 1-permutation MinHash; equal fingerprints ⇒ likely

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * table on a session built elsewhere.
   *
   * Registers the custom native expressions: [[RollingHash]],
-  * [[MinHashSig]], [[SimHashSig]], [[WordShingles]], [[HyperplaneSig]],
-  * [[DotQ]], [[QuantizeVec]], [[NearestCells]], [[CmsMergeAgg]],
+  * [[MinHashSig]], [[SimHashSig]], [[WordShingles]], [[StopwordHits]],
+  * [[HyperplaneSig]], [[DotQ]], [[QuantizeVec]], [[NearestCells]],
+  * [[PqEncode]], [[AdcDist]], [[WinnowFps]], [[CmsMergeAgg]],
   * [[CmsEstimate]], plus Spark's own bloom aggregate/probe exposed as
   * functions. The reference's own operator
   * surface needs no custom Catalyst rules/strategies (SURVEY §4
@@ -56,6 +57,11 @@ object GraftExtensions {
     fn("word_shingles", classOf[WordShingles])(c => WordShingles(
       arity("word_shingles", c, 1, 2).head,
       foldableInt("word_shingles", "n", c, 1, default = 3))),
+    fn("stopword_hits", classOf[StopwordHits]) { c =>
+      val a = arity("stopword_hits", c, 2, 2)
+      StopwordHits(a.head, foldableProfiles("stopword_hits", a(1)),
+        org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+    },
     fn("hyperplane_sig", classOf[HyperplaneSig])(c => HyperplaneSig(
       arity("hyperplane_sig", c, 1, 2).head,
       foldableInt("hyperplane_sig", "planes", c, 1, default = 12))),
@@ -128,6 +134,29 @@ object GraftExtensions {
           "actualNum" -> children.size.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
     children
+  }
+
+  /** Literal `array<array<string>>` argument (word profiles); a
+    * non-literal or mistyped one raises `NON_FOLDABLE_ARGUMENT`. */
+  private def foldableProfiles(fn: String, e: Expression): Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    def fail = throw new AnalysisException(
+      errorClass = "NON_FOLDABLE_ARGUMENT",
+      messageParameters = Map(
+        "funcName" -> s"`$fn`",
+        "paramName" -> "`profiles`",
+        "paramType" -> "\"ARRAY<ARRAY<STRING>>\""))
+    def strings(a: ArrayData): Seq[String] =
+      (0 until a.numElements()).map(i => if (a.isNullAt(i)) null else a.getUTF8String(i).toString)
+    e.dataType match {
+      case ArrayType(ArrayType(_: StringType, _), _) if e.foldable =>
+        val outer = e.eval().asInstanceOf[ArrayData]
+        if (outer == null) fail
+        (0 until outer.numElements()).map(i =>
+          if (outer.isNullAt(i)) Nil else strings(outer.getArray(i)))
+      case _ => fail
+    }
   }
 
   /** Optional literal-int config argument: absent → default; present

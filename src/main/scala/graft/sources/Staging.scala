@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.graft.PlanBridge
 import graft.plans.{PinPartitioningStrategy, SnapshotFacts}
 
@@ -49,10 +51,44 @@ import graft.plans.{PinPartitioningStrategy, SnapshotFacts}
   *  - [[snapshotKeyed]]: + a pinned `HashPartitioning(keys, n)`
   *    layout. Use for big-frame self-joins and for every loop frame in
   *    the big regime, where co-partitioned joins must not re-exchange.
+  *
+  * [[snapshotCounted]] is [[snapshot]] plus the snapshot's row count,
+  * observed on its own eager job; [[observed]] reads any aggregates off
+  * whatever action runs a frame (a write, a collect). Neither adds a job.
   */
 object Staging {
 
   def snapshot(df: DataFrame): DataFrame = rawSnapshot(df)
+
+  /** [[snapshot]] and its row count, observed on the snapshot's own
+    * eager job ([[observed]]): counting a stage adds no job. */
+  def snapshotCounted(df: DataFrame): (DataFrame, Long) = {
+    val (seen, metrics) = observed(df, count(lit(1)))
+    val snap = rawSnapshot(seen)
+    (snap, metrics().getLong(0))
+  }
+
+  /** `df` with `metrics` (aggregates) observed on it, and a reader of
+    * the metric row that the first action over the returned frame
+    * computes as it runs: a snapshot, a write, a collect. The row
+    * comes from that action's own job, so observing adds none; read it
+    * after the action. The action's listener event delivers the row
+    * asynchronously, and the reader waits for it. It fails instead of
+    * waiting without end when no row comes within a minute (no action
+    * ran) or the row is empty: the planner pruned the observed node,
+    * as it may under a subtree it proved empty, so the action never
+    * computed the metrics. */
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, () => Row) = {
+    val obs = Observation()
+    val read = () => {
+      val row = try Await.result(obs.future, 1.minute)
+        catch { case _: TimeoutException => Row.empty }
+      if (row.length == 0) throw new IllegalStateException(
+        s"observation ${obs.name}: no metrics (no action ran the frame, or the planner pruned its node)")
+      row
+    }
+    (df.observe(obs, metrics.head, metrics.tail: _*), read)
+  }
 
   /** Plain snapshot + measured-size statistics (see object doc). */
   def snapshotMeasured(df: DataFrame): DataFrame = withFacts(rawSnapshot(df), Nil)
@@ -189,6 +225,7 @@ object Staging {
     * `.localCheckpoint(true)` calls they replace. */
   implicit class Snapshottable(private val df: DataFrame) extends AnyVal {
     def snapshot(): DataFrame = Staging.snapshot(df)
+    def snapshotCounted(): (DataFrame, Long) = Staging.snapshotCounted(df)
     def snapshotKeyed(keys: String*): DataFrame = Staging.snapshotKeyed(df, keys: _*)
   }
 }

@@ -231,4 +231,34 @@ class EmptyInputSpec extends AnyFunSpec {
       assert(DailyAnalytics.mannKendall(emptyBars).isEmpty)
     }
   }
+  // The pipeline's audit counts are observed on the jobs it runs anyway
+  // (Staging.observed). Over empty stages each observation must still
+  // arrive, and no reader may wait on one without end.
+  describe("CorpusPipeline on an empty or fully rejected corpus") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+
+    /** The pipeline's `[corpus]` audit line over `corpus`. */
+    def auditLine(corpus: org.apache.spark.sql.DataFrame): String = TempDir("graft_corpus_empty") { d =>
+      corpus.write.parquet(s"$d/docs")
+      Seq("the cat sat on the mat by the door").toDF("text").write.parquet(s"$d/eval")
+      val out = new java.io.ByteArrayOutputStream()
+      TimeLimits.failAfter(3.minutes) {
+        Console.withOut(out)(graft.jobs.Pipelines.CorpusPipeline.main(
+          Array(s"$d/docs", s"$d/eval", s"$d/out")))
+      }
+      out.toString("UTF-8").linesIterator.filter(_.startsWith("[corpus]")).toSeq.last
+    }
+
+    it("an empty docs file prints zeros") {
+      val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
+      assert(auditLine(empty) == "[corpus] total=0 kept=0 deduped=0 clean=0 splits()")
+    }
+    it("a corpus the gate rejects entirely prints its total and zeros") {
+      // three tokens each: every doc fails the too-short gate
+      val tooShort = (1L to 40L).map(i => (i, "the a of", "en")).toDF("doc_id", "text", "lang")
+      assert(auditLine(tooShort) == "[corpus] total=40 kept=0 deduped=0 clean=0 splits()")
+    }
+  }
 }

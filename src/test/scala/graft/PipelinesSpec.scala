@@ -158,7 +158,10 @@ class PipelinesSpec extends AnyFunSpec {
         val evalIds = docs.orderBy("doc_id").limit(5)
         evalIds.select("text").write.parquet(evalPath)
 
-        leavesNoBlocks(graft.jobs.Pipelines.CorpusPipeline.main(Array(docsPath, evalPath, outDir)))
+        val stdout = new java.io.ByteArrayOutputStream()
+        leavesNoBlocks(Console.withOut(stdout)(
+          graft.jobs.Pipelines.CorpusPipeline.main(Array(docsPath, evalPath, outDir))))
+        val audit = stdout.toString("UTF-8").linesIterator.filter(_.startsWith("[corpus]")).toSeq
 
         val corpus = spark.read.parquet(s"$outDir/corpus")
         val n = corpus.count()
@@ -178,6 +181,19 @@ class PipelinesSpec extends AnyFunSpec {
         val plan = spark.read.parquet(s"$outDir/packing_plan")
         assert(plan.select("doc_id").distinct().count() ==
           corpus.filter(col("split") === "train").count())
+        // the audit line's observed counts equal recounts of the inputs
+        // and outputs: the gate's verdicts, the dedup stage rerun on the
+        // kept docs, and the written corpus
+        import graft.operators.{Dedup, TextAnalysis}
+        val keptIds = TextAnalysis.corpusFilter(docs, "doc_id", "text", "lang")
+          .filter(col("keep")).select("doc_id")
+        val nKept = keptIds.count()
+        val nDeduped = graft.sources.Staging.scoped(spark)(
+          Dedup.dedupCorpus(docs.join(keptIds, "doc_id"), "doc_id", "text").count())
+        val splits = bySplit.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ")
+        assert(audit == Seq(s"[corpus] total=${docs.count()} kept=$nKept deduped=$nDeduped " +
+          s"clean=$n splits($splits)"))
+        assert(n <= nDeduped && nDeduped < nKept && nKept < docs.count())
       }
     }
   }

@@ -141,6 +141,23 @@ class StagingSpec extends AnyFunSpec with BeforeAndAfterAll {
     }
   }
 
+  describe("Staging.snapshotCounted") {
+    import org.apache.spark.sql.functions._
+    for ((regime, confs) <- Seq("default" -> Nil, "graft.staging.reliable=true" -> reliable))
+      it(s"returns the true row count from the snapshot's own execution, counted once ($regime)") {
+        Session.withConf(spark, confs: _*)(Staging.scoped(spark) {
+          // an aggregate over a shuffle, which AQE runs as two jobs
+          val agg = spark.range(0, 10000, 1, 4).groupBy((col("id") % 37).as("k")).count()
+          for ((df, want) <- Seq(agg.filter(col("k") =!= 0) -> 36L, agg.filter(col("k") > 99) -> 0L)) {
+            val ((snap, n), rec) = Probe.record(spark)(Staging.snapshotCounted(df))
+            assert(n == want)
+            assert(rec.plans.size == 1, "one execution: the snapshot's")
+            assert(snap.count() == want)
+          }
+        })
+      }
+  }
+
   describe("Staging.scoped") {
     // RDD ids are never reused and ContextCleaner only ever drops
     // entries, so a restored set is one that gained nothing
