@@ -787,12 +787,11 @@ object SparkEntry {
       minTokens = 10, minQuality = 0.5)
       .orderBy("doc_id")
 
-  /** Registered as the native-Expression variant: the MinHash
-    * signature emits inside the scan stage (no explode / signature
-    * shuffle). Agg-form equality is proven in DedupSpec; the oracle
-    * is result-based, so it covers both. */
+  /** MinHash-LSH near-dup pairs; the signature emits inside the scan
+    * stage (native `minhash_sig`), and DedupSpec checks it against the
+    * aggregation-form reference [[Dedup.minhashSigAgg]]. */
   private def qDedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
+    Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
       n = 3, numHashes = 32, bands = 8, threshold = 0.5)
       .orderBy("id1", "id2")
 
@@ -1250,7 +1249,7 @@ object SparkEntry {
     * fixpoint. */
   private def qDedupGroups(s: SparkSession, dir: String): DataFrame =
     Dedup.dedupGroups(
-      Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
+      Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
         n = 3, numHashes = 32, bands = 8, threshold = 0.5))
       .orderBy("doc_id")
 
@@ -1268,7 +1267,7 @@ object SparkEntry {
   private def qDedupCanonical(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
     val groups = Dedup.dedupGroups(
-      Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
+      Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
         n = 3, numHashes = 32, bands = 8, threshold = 0.5))
     val scored = TextAnalysis.qualityScore(docs, "text")
       .select(col("doc_id"), col("quality_score"))
@@ -1307,14 +1306,15 @@ object SparkEntry {
     * star contraction end-to-end in the default regime. */
   private def qDedupGroupsStar(s: SparkSession, dir: String): DataFrame =
     Dedup.groupsOf(Dedup.connectedComponentsStar(
-      Dedup.minhashLshPairsNative(Tables.documents(s, dir), "doc_id", "text",
+      Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
         n = 3, numHashes = 32, bands = 8, threshold = 0.5), "id1", "id2"))
       .orderBy("doc_id")
 
-  /** Native-Expression variant (scan-stage signature; agg-form
-    * equality proven in DedupSpec, result-based oracle unchanged). */
+  /** SimHash near-dup pairs; the signature emits inside the scan stage
+    * (native `simhash_sig`), and DedupSpec checks it against the
+    * aggregation-form reference [[Dedup.simhashAgg]]. */
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairsNative(Tables.documents(s, dir), "doc_id", "text",
+    Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text",
       maxHamming = 3, bands = 4)
       .orderBy("id1", "id2")
 

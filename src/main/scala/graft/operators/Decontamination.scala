@@ -11,12 +11,22 @@ import graft.functions.Funcs._
   *
   * Shape at 100 TB: the EVAL side is small (benchmarks are thousands
   * of docs), so its distinct shingle-hash set broadcasts; the corpus
-  * side is one explode → broadcast-hash semi-match → per-doc count.
-  * No corpus-side shuffle except the per-doc count aggregation, which
+  * side is the shared shingle path ([[Dedup.shingledDocs]], spread by
+  * id) → one explode → broadcast-hash semi-match → per-doc count, which
   * partial-aggregates map-side. Shingles travel as 60-bit hashes
   * (never strings), computed once per (doc, shingle).
   */
 object Decontamination {
+
+  /** The eval set's distinct 60-bit shingle hashes (`sh`), the universe
+    * both scorers match against. The eval side is small, so it is
+    * neither spread nor filtered (a shingle-less doc explodes to no
+    * rows). */
+  private def evalShingleHashes(evalDocs: DataFrame, evalTextCol: String, n: Int): DataFrame =
+    Dedup.withShingles(evalDocs.select(col(evalTextCol)), evalTextCol, n)
+      .select(explode(col("shingles")).as("s"))
+      .select(hash60(col("s")).as("sh"))
+      .distinct()
 
   /** Per-corpus-doc overlap against the eval set's shingle universe:
     * (id, n_shingles, matched, overlap_ratio). `overlap_ratio` is the
@@ -27,17 +37,8 @@ object Decontamination {
   def contaminationScores(corpus: DataFrame, idCol: String, textCol: String,
                           evalDocs: DataFrame, evalTextCol: String,
                           n: Int = 3): DataFrame = {
-    // spread the corpus before the interpreted shingle lambda (same
-    // rationale as Dedup.spreadById: explicit partition count so the
-    // CPU-bound stage parallelizes regardless of file-split layout)
-    val ex = Dedup.withShingles(Dedup.spreadById(corpus, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-      .select(col(idCol), explode(col("shingles")).as("s"))
-      .select(col(idCol), hash60(col("s")).as("sh"))
-    val evalSh = Dedup.withShingles(evalDocs.select(col(evalTextCol)), evalTextCol, n)
-      .select(explode(col("shingles")).as("s"))
-      .select(hash60(col("s")).as("sh"))
-      .distinct()
+    val ex = Dedup.shingleHashes(Dedup.shingledDocs(corpus, idCol, textCol, n), idCol)
+    val evalSh = evalShingleHashes(evalDocs, evalTextCol, n)
     ex.join(broadcast(evalSh).withColumn("__hit", lit(1)), Seq("sh"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shingles"),
@@ -63,14 +64,8 @@ object Decontamination {
   def contaminationScoresBloom(corpus: DataFrame, idCol: String, textCol: String,
                                evalDocs: DataFrame, evalTextCol: String,
                                n: Int = 3): DataFrame = {
-    val ex = Dedup.withShingles(Dedup.spreadById(corpus, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-      .select(col(idCol), explode(col("shingles")).as("s"))
-      .select(col(idCol), hash60(col("s")).as("sh"))
-    val evalSh = Dedup.withShingles(evalDocs.select(col(evalTextCol)), evalTextCol, n)
-      .select(explode(col("shingles")).as("s"))
-      .select(hash60(col("s")).as("sh"))
-      .distinct()
+    val ex = Dedup.shingleHashes(Dedup.shingledDocs(corpus, idCol, textCol, n), idCol)
+    val evalSh = evalShingleHashes(evalDocs, evalTextCol, n)
     // the two eval-side jobs (count + bloom build) are bounded by the
     // EVAL corpus — small by construction; default sizing ≈ 7.2
     // bits/item at 3% fpp (Spark's BloomFilter.optimalNumOfBits)

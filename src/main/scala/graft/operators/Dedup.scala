@@ -41,24 +41,6 @@ object Dedup {
   def withShingles(df: DataFrame, textCol: String, n: Int): DataFrame =
     df.withColumn("shingles", call_function("word_shingles", col(textCol), lit(n)))
 
-  /** MinHash signature (adds `sig`: array of numHashes longs) via the
-    * standard one-base-hash + affine-permutation family:
-    *   base  = hash60(shingle) mod 2^30          (one md5 per shingle)
-    *   h_i   = ((2i+1)·base + 7919·i) mod p30    (p30 = 1073741821)
-    * This computes ONE md5 per shingle instead of numHashes of them —
-    * the md5 pass is the dominant scan cost at corpus scale — and all
-    * arithmetic stays below 2^37, far from BIGINT overflow (which
-    * engines handle differently). The built-in reference form of the
-    * native `minhash_sig` (tested value-identical).
-    */
-  def withMinhash(df: DataFrame, numHashes: Int): DataFrame =
-    df.withColumn("__base", transform(col("shingles"), s => hash60(s) % 1073741824L))
-      .withColumn("sig",
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => array_min(transform(col("__base"),
-            h => ((i * 2 + 1) * h + i * 7919L) % 1073741821L))))
-      .drop("__base")
-
   /** LSH banding: explode to (band, band_key) rows. rowsPerBand
     * consecutive signature entries are concatenated into the bucket
     * key; docs sharing any band key become candidates. */
@@ -72,15 +54,15 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)) / size(array_union(a, b)).cast("double")
 
-  /** MinHash-LSH near-duplicate pairs: band-bucket candidates, then
-    * exact-Jaccard verification ≥ threshold. Output: (id1, id2,
-    * jaccard) with id1 < id2.
-    */
   /** MinHash signatures via explode → hash-once-per-shingle → numHashes
-    * partial `min` aggregates. Equivalent to [[withMinhash]] but the
-    * md5 runs exactly once per (doc, shingle) and the mins combine
-    * map-side — the shape that scales (and is ~30× faster than nested
-    * array lambdas, which Catalyst re-inlines per signature index). */
+    * partial `min` aggregates, by the standard one-base-hash +
+    * affine-permutation family:
+    *   base  = hash60(shingle) mod 2^30          (one md5 per shingle)
+    *   h_i   = ((2i+1)·base + 7919·i) mod p30    (p30 = 1073741821)
+    * All arithmetic stays below 2^37, far from BIGINT overflow (which
+    * engines handle differently). The built-in reference form of the
+    * native `minhash_sig` that [[minhashSignatures]] emits (tested
+    * value-identical); no pair generator runs it. */
   def minhashSigAgg(shingled: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     val ex = shingled.select(col(idCol), explode(col("shingles")).as("s"))
       .withColumn("h", hash60(col("s")) % 1073741824L)
@@ -109,6 +91,34 @@ object Dedup {
     docs.select(col(idCol), col(textCol)).repartition(parts, col(idCol))
   }
 
+  /** The shingle frame every n-gram operator starts from: (id, text)
+    * spread by [[spreadById]], shingled by [[withShingles]], and docs
+    * without a shingle (fewer than `n` words) dropped. */
+  private[operators] def shingledDocs(docs: DataFrame, idCol: String, textCol: String,
+                                      n: Int): DataFrame =
+    withShingles(spreadById(docs, idCol, textCol), textCol, n)
+      .filter(size(col("shingles")) > 0)
+
+  /** One (id, sh) row per distinct shingle of a [[shingledDocs]] frame,
+    * `sh` the shingle's 60-bit hash: every join and shuffle past the
+    * shingle lambda compares fixed-width longs, never strings, and the
+    * oracle hashes identically, so results agree even on (cosmically
+    * rare) collisions. */
+  private[operators] def shingleHashes(shingled: DataFrame, idCol: String): DataFrame =
+    shingled.select(col(idCol), explode(col("shingles")).as("s"))
+      .select(col(idCol), hash60(col("s")).as("sh"))
+
+  /** |A∩B| per unordered doc pair (id1 < id2) sharing a shingle: a
+    * grouped count over the scalar shingle-hash equi join, so no array
+    * crosses an exchange. */
+  private def sharedShingleCounts(shingled: DataFrame, idCol: String): DataFrame = {
+    val ex = shingleHashes(shingled, idCol)
+    ex.select(col(idCol).as("id1"), col("sh"))
+      .join(ex.select(col(idCol).as("id2"), col("sh")), "sh")
+      .filter(col("id1") < col("id2"))
+      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
+  }
+
   /** Distinct candidate id pairs from LSH band buckets: only
     * (id, band, key) scalars shuffle, id1 < id2. Shared by the
     * Jaccard-verified and edit-distance-verified pair generators. */
@@ -122,47 +132,43 @@ object Dedup {
       .select("id1", "id2").distinct()
   }
 
-  /** Band the signature frame, equi-join candidates, verify with
-    * exact Jaccard — the tail shared by both signature computations.
-    * Candidate ids first; the shingle arrays rejoin on the (small)
-    * surviving candidate set. */
-  private def lshCandidatesVerify(shingled: DataFrame, sigDf: DataFrame, idCol: String,
-                                  bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    lshCandidateIds(sigDf, idCol, bands, rowsPerBand)
+  /** Exact-Jaccard verification of candidate pairs (id1, id2) against
+    * an (id, shingles) frame, keeping jaccard ≥ threshold. The shingle
+    * arrays rejoin on the (small) surviving candidate set. The tail of
+    * both [[minhashLshPairs]] and [[minhashLshPairsIncremental]]. */
+  private def jaccardVerify(cand: DataFrame, shingled: DataFrame, idCol: String,
+                            threshold: Double): DataFrame =
+    cand
       .join(shingled.select(col(idCol).as("id1"), col("shingles").as("s1")), "id1")
       .join(shingled.select(col(idCol).as("id2"), col("shingles").as("s2")), "id2")
       .select(col("id1"), col("id2"), r4(jaccard(col("s1"), col("s2"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
+  /** The signature-store view a corpus persists once per ingest:
+    * (id, shingles, sig). At 100 TB the store is the precomputed
+    * history — incremental dedup never re-shingles or re-signs it.
+    * The one MinHash signing device: every MinHash operator, batch and
+    * streaming, signs here, by the native `minhash_sig` Catalyst
+    * expression ([[graft.plans.MinHashSig]]), so the whole signature
+    * emits inside the scan stage — no explode of (doc, shingle) rows,
+    * no shuffle through numHashes partial aggregates. */
+  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
+                        n: Int = 3, numHashes: Int = 32): DataFrame =
+    shingledDocs(docs, idCol, textCol, n).select(col(idCol), col("shingles"),
+      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
+
+  /** MinHash-LSH near-duplicate pairs: band-bucket candidates over the
+    * [[minhashSignatures]] frame, then exact-Jaccard verification ≥
+    * threshold. Output: (id1, id2, jaccard) with id1 < id2. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5): DataFrame = {
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-    lshCandidatesVerify(shingled, minhashSigAgg(shingled, idCol, numHashes),
-      idCol, bands, numHashes / bands, threshold)
-  }
-
-  /** [[minhashLshPairs]] with the signature computed by the native
-    * `minhash_sig` Catalyst expression
-    * ([[graft.plans.MinHashSig]], registered via GraftExtensions):
-    * the whole signature emits inside the scan stage — no explode of
-    * (doc, shingle) rows, no md5-per-exploded-row, no shuffle through
-    * numHashes partial aggregates. Value-identical to the agg form
-    * (tested); the preferred form. */
-  def minhashLshPairsNative(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                            threshold: Double = 0.5): DataFrame = {
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-    val sig = shingled.select(col(idCol),
-      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
-    lshCandidatesVerify(shingled, sig, idCol, bands, numHashes / bands, threshold)
+    val sigs = minhashSignatures(docs, idCol, textCol, n, numHashes)
+    jaccardVerify(lshCandidateIds(sigs, idCol, bands, numHashes / bands), sigs, idCol, threshold)
   }
 
   /** Fuzzy near-dup pairs by bounded EDIT DISTANCE: the same MinHash
-    * band buckets as [[minhashLshPairsNative]] generate candidates
+    * band buckets as [[minhashLshPairs]] generate candidates
     * (O(docs × bands) shuffle, never all-pairs), then each surviving
     * pair is verified with Levenshtein over a fixed-length text prefix.
     * Catches the "same doc, scattered small edits" family that
@@ -186,12 +192,10 @@ object Dedup {
   def fuzzyEditPairs(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                      maxDist: Int = 40, prefixLen: Int = 160): DataFrame = {
-    val spread = spreadById(docs, idCol, textCol)
-    val shingled = withShingles(spread, textCol, n).filter(size(col("shingles")) > 0)
-    val sig = shingled.select(col(idCol),
-      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
-    val pref = spread.select(col(idCol), substring(col(textCol), 1, prefixLen).as("p"))
-    lshCandidateIds(sig, idCol, bands, numHashes / bands)
+    val pref = spreadById(docs, idCol, textCol)
+      .select(col(idCol), substring(col(textCol), 1, prefixLen).as("p"))
+    lshCandidateIds(minhashSignatures(docs, idCol, textCol, n, numHashes),
+        idCol, bands, numHashes / bands)
       .join(pref.select(col(idCol).as("id1"), col("p").as("p1")), "id1")
       .join(pref.select(col(idCol).as("id2"), col("p").as("p2")), "id2")
       .select(col("id1"), col("id2"),
@@ -220,16 +224,9 @@ object Dedup {
                        n: Int = 3, threshold: Double = 0.8): DataFrame = {
     // snapshot: the shingle frame feeds both the size lookup and the
     // exploded join — one shingle pass instead of two
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-      .snapshot()
+    val shingled = shingledDocs(docs, idCol, textCol, n).snapshot()
     val sizes = shingled.select(col(idCol), size(col("shingles")).as("sz"))
-    val ex = shingled.select(col(idCol), explode(col("shingles")).as("s"))
-      .select(col(idCol), hash60(col("s")).as("sh"))
-    val inter = ex.select(col(idCol).as("id1"), col("sh"))
-      .join(ex.select(col(idCol).as("id2"), col("sh")), "sh")
-      .filter(col("id1") < col("id2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
+    val inter = sharedShingleCounts(shingled, idCol)
     val dir = inter.select(col("id1").as("src_id"), col("id2").as("dst_id"), col("inter"))
       .unionByName(
         inter.select(col("id2").as("src_id"), col("id1").as("dst_id"), col("inter")))
@@ -249,19 +246,9 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
+    val shingled = shingledDocs(docs, idCol, textCol, n)
     val sizes = shingled.select(col(idCol), size(col("shingles")).as("n"))
-    // join/shuffle on the 60-bit shingle hash, not the string — less
-    // shuffle volume and faster comparisons; the oracle hashes
-    // identically so results agree even on (cosmically rare) collisions
-    val ex = shingled.select(col(idCol), explode(col("shingles")).as("shingle"))
-      .select(col(idCol), hash60(col("shingle")).as("sh"))
-    val inter = ex.select(col(idCol).as("id1"), col("sh"))
-      .join(ex.select(col(idCol).as("id2"), col("sh")), "sh")
-      .filter(col("id1") < col("id2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
-    inter
+    sharedShingleCounts(shingled, idCol)
       .join(sizes.select(col(idCol).as("id1"), col("n").as("n1")), "id1")
       .join(sizes.select(col(idCol).as("id2"), col("n").as("n2")), "id2")
       .select(col("id1"), col("id2"),
@@ -290,8 +277,7 @@ object Dedup {
     // aggregate, its join-back, and both verify joins — without the
     // snapshot the shingle lambda + per-shingle md5 (the dominant scan
     // cost) re-runs 4× (a full corpus re-scan each at 100 TB)
-    val hashed = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
+    val hashed = shingledDocs(docs, idCol, textCol, n)
       .select(col(idCol), transform(col("shingles"), s => hash60(s)).as("sh_arr"))
       .snapshot()
     val ex = hashed.select(col(idCol), size(col("sh_arr")).as("n"),
@@ -441,11 +427,8 @@ object Dedup {
                       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-    val sig = shingled.select(col(idCol),
-      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
-    val cand = lshCandidateIds(sig, idCol, bands, rowsPerBand)
+    val cand = lshCandidateIds(minhashSignatures(docs, idCol, textCol, n, numHashes),
+        idCol, bands, rowsPerBand)
       .withColumn("caught", lit(1L))
     val expectedLit = array(lshExpectedRecall(bands, rowsPerBand).map(lit): _*)
     val band10 = least(floor(scaled(col("jaccard"), 4) / lit(1000.0)), lit(9.0))
@@ -464,9 +447,9 @@ object Dedup {
 
   /** SimHash via explode → hash-once-per-token → 60 partial bit-sum
     * aggregates (Σ ±1 per bit), then the signature is assembled from
-    * the sums. Same values as the native `simhash_sig`
-    * ([[graft.plans.SimHashSig]]), but one md5 per token
-    * and map-side-combinable aggregation — the corpus-scale shape. */
+    * the sums. The built-in reference form of the native `simhash_sig`
+    * ([[graft.plans.SimHashSig]]) that [[simhashPairs]] emits (tested
+    * value-identical); no pair generator runs it. */
   def simhashAgg(docs: DataFrame, idCol: String, textCol: String, bits: Int = 60): DataFrame = {
     val ex = spreadById(docs, idCol, textCol)
       .select(col(idCol), explode(array_distinct(split(col(textCol), " "))).as("t"))
@@ -478,17 +461,6 @@ object Dedup {
       .select(col(idCol),
         (0 until bits).map(j => when(col(s"__b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
-  }
-
-  /** The signature-store view a corpus persists once per ingest:
-    * (id, shingles, sig). At 100 TB the store is the precomputed
-    * history — incremental dedup never re-shingles or re-signs it. */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, numHashes: Int = 32): DataFrame = {
-    val shingled = withShingles(spreadById(docs, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-    shingled.select(col(idCol), col("shingles"),
-      call_function("minhash_sig", col("shingles"), lit(numHashes)).as("sig"))
   }
 
   /** INCREMENTAL MinHash-LSH dedup: near-dup pairs where at least one
@@ -515,11 +487,7 @@ object Dedup {
       .select(least(col("fid"), col("aid")).as("id1"),
         greatest(col("fid"), col("aid")).as("id2"))
       .distinct()
-    cand
-      .join(all.select(col(idCol).as("id1"), col("shingles").as("s1")), "id1")
-      .join(all.select(col(idCol).as("id2"), col("shingles").as("s2")), "id2")
-      .select(col("id1"), col("id2"), r4(jaccard(col("s1"), col("s2"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(cand, all, idCol, threshold)
   }
 
   /** Connected components over a near-dup pair graph by alternating
@@ -712,7 +680,7 @@ object Dedup {
                   n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                   threshold: Double = 0.5): DataFrame = {
     val groups = dedupGroups(
-      minhashLshPairsNative(docs, idCol, textCol, n, numHashes, bands, threshold))
+      minhashLshPairs(docs, idCol, textCol, n, numHashes, bands, threshold))
     val drop = groups.filter(col("doc_id") =!= col("rep_id"))
       .select(col("doc_id").as(idCol))
     docs.join(drop, Seq(idCol), "left_anti")
@@ -789,13 +757,21 @@ object Dedup {
           .as("dup_token_frac"))
   }
 
-  /** Banded Hamming-candidate tail shared by both signature forms:
-    * `sigDf` must carry (idCol, simhash). */
-  private def simhashBandedPairs(sigDf: DataFrame, idCol: String,
-                                 maxHamming: Int, bands: Int): DataFrame = {
+  /** SimHash near-duplicate pairs: the 60-bit signature from the native
+    * `simhash_sig` Catalyst expression ([[graft.plans.SimHashSig]])
+    * emits inside the scan stage — no token explode, no 60-column
+    * bit-sum aggregation shuffle. The signature is banded into `bands`
+    * chunks (Hamming distance ≤ bands−1 guarantees one exact band
+    * match), candidates join per band, and each pair is verified
+    * bit_count(xor) ≤ maxHamming. Output: (id1, id2, hamming), id1 < id2. */
+  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
+                   maxHamming: Int = 3, bands: Int = 4): DataFrame = {
     val bandBits = 60 / bands
     val mask = (1L << bandBits) - 1
-    val banded = sigDf.select(col(idCol), col("simhash"), posexplode(
+    val banded = spreadById(docs, idCol, textCol)
+      .select(col(idCol), call_function("simhash_sig",
+        array_distinct(split(col(textCol), " ")), lit(60)).as("simhash"))
+      .select(col(idCol), col("simhash"), posexplode(
         expr(s"transform(sequence(0, ${bands - 1}), b -> shiftright(simhash, b * $bandBits) & $mask)"))
       .as(Seq("band", "band_key")))
     val l = banded.select(col(idCol).as("id1"), col("simhash").as("sh1"),
@@ -808,28 +784,6 @@ object Dedup {
         expr("bit_count(sh1 ^ sh2)").as("hamming"))
       .filter(col("hamming") <= maxHamming) // filter BEFORE distinct: candidates are ~10× the survivors
       .distinct()
-  }
-
-  /** SimHash near-duplicate pairs: band the 60-bit signature into
-    * `bands` chunks (Hamming distance ≤ bands−1 guarantees one exact
-    * band match), candidate-join per band, verify
-    * bit_count(xor) ≤ maxHamming. */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, bands: Int = 4): DataFrame =
-    simhashBandedPairs(
-      simhashAgg(docs.select(col(idCol), col(textCol)), idCol, textCol),
-      idCol, maxHamming, bands)
-
-  /** [[simhashPairs]] with the signature from the native `simhash_sig`
-    * Catalyst expression ([[graft.plans.SimHashSig]]): the 60-bit
-    * signature emits inside the scan stage — no token explode, no
-    * 60-column bit-sum aggregation shuffle. Value-identical (tested). */
-  def simhashPairsNative(docs: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    val sig = spreadById(docs, idCol, textCol)
-      .select(col(idCol), call_function("simhash_sig",
-        array_distinct(split(col(textCol), " ")), lit(60)).as("simhash"))
-    simhashBandedPairs(sig, idCol, maxHamming, bands)
   }
 
   /** URL canonicalization — the grain every web-scale pretraining

@@ -197,10 +197,8 @@ object TextAnalysis {
     *
     * Scale notes: the fold is interpreted per element and copies the
     * accumulator (O(len²) per doc per merge) — fine for the
-    * oracle-parity surface; the production encode at 100 TB is
-    * [[bpeEncodeFast]], the same greedy rule as one JVM pass per doc
-    * (proven equal in TextMultimodalSpec). Merge learning itself is
-    * the scalable half (partial-agg shuffle + TakeOrdered). */
+    * oracle-parity surface. Merge learning itself is the scalable half
+    * (partial-agg shuffle + TakeOrdered). */
   def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
                 numMerges: Int = 8): DataFrame = {
     val merges = bpeMergeCandidates(docs, textCol, numMerges)
@@ -225,49 +223,6 @@ object TextAnalysis {
         expr(encoded).as("bpe_tokens"))
       .withColumn("n_bpe", size(col("bpe_tokens")).cast("long"))
       .select(col(idCol), col("n_subwords"), col("n_bpe"), col("bpe_tokens"))
-  }
-
-  /** The 100 TB twin of [[bpeEncode]]: identical greedy semantics, one
-    * typed JVM pass per doc (no per-step array copying), merges
-    * broadcast as plain data. Use this to actually encode a corpus;
-    * use [[bpeEncode]] when cross-engine checkability matters. */
-  def bpeEncodeFast(docs: DataFrame, idCol: String, textCol: String,
-                    numMerges: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val mergeList = bpeMergeCandidates(docs, textCol, numMerges)
-      .collect().sortBy(r => (-r.getLong(1), r.getString(0)))
-      .map(_.getString(0)).toSeq
-    val bc = spark.sparkContext.broadcast(
-      mergeList.map { p => val Array(a, b) = p.split(" ", 2); (a, b) })
-    val pat = java.util.regex.Pattern.compile(subwordPattern)
-    val patBc = spark.sparkContext.broadcast(subwordPattern)
-    Dedup.spreadById(docs, idCol, textCol)
-      .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val p = java.util.regex.Pattern.compile(patBc.value)
-        val merges = bc.value
-        rows.map { case (id, text) =>
-          val m = p.matcher(if (text == null) "" else text.toLowerCase)
-          val toks = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (m.find()) toks += m.group()
-          val nSub = toks.length.toLong
-          var cur: scala.collection.mutable.ArrayBuffer[String] = toks
-          merges.foreach { case (a, b) =>
-            val out = new scala.collection.mutable.ArrayBuffer[String](cur.length)
-            var i = 0
-            while (i < cur.length) {
-              if (out.nonEmpty && out.last == a && cur(i) == b) {
-                out(out.length - 1) = a + b
-              } else out += cur(i)
-              i += 1
-            }
-            cur = out
-          }
-          (id, nSub, cur.length.toLong, cur.toSeq)
-        }
-      }.toDF(idCol, "n_subwords", "n_bpe", "bpe_tokens")
   }
 
   /** Cluster labeling: the top-k most frequent tokens per embedding
@@ -473,10 +428,7 @@ object TextAnalysis {
     * distinct by construction). */
   def crossDocDupNgrams(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3): DataFrame = {
-    val ex = Dedup.withShingles(Dedup.spreadById(df, idCol, textCol), textCol, n)
-      .filter(size(col("shingles")) > 0)
-      .select(col(idCol), explode(col("shingles")).as("s"))
-      .select(col(idCol), hash60(col("s")).as("sh"))
+    val ex = Dedup.shingleHashes(Dedup.shingledDocs(df, idCol, textCol, n), idCol)
     val docFreq = ex.groupBy("sh").agg(count(lit(1)).as("df"))
     ex.join(docFreq, "sh")
       .groupBy(col(idCol))

@@ -37,13 +37,6 @@ class DedupSpec extends AnyFunSpec {
       assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 4L))) // near-dup
       assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
     }
-    it("agg-based signatures equal the array-lambda form") {
-      val shingled = Dedup.withShingles(docs.select($"doc_id", $"text"), "text", 3)
-        .filter(size($"shingles") > 0)
-      val viaAgg = Dedup.minhashSigAgg(shingled, "doc_id", 8)
-      val viaArr = Dedup.withMinhash(shingled, 8).select($"doc_id", $"sig")
-      assert(viaAgg.exceptAll(viaArr).isEmpty && viaArr.exceptAll(viaAgg).isEmpty)
-    }
   }
 
   describe("fuzzyEditPairs") {
@@ -136,19 +129,12 @@ class DedupSpec extends AnyFunSpec {
       val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
       val shingled = Dedup.withShingles(docs.select($"doc_id", $"text"), "text", 3)
         .filter(size($"shingles") > 0)
-      val native = shingled.select($"doc_id",
-        call_function("minhash_sig", $"shingles", lit(32)).as("sig"))
+      val native = Dedup.minhashSignatures(docs, "doc_id", "text").select($"doc_id", $"sig")
       val agg = Dedup.minhashSigAgg(shingled, "doc_id", 32)
       val mismatch = native.join(agg.withColumnRenamed("sig", "sig_agg"), "doc_id")
         .filter($"sig" =!= $"sig_agg")
       assert(mismatch.isEmpty)
       assert(native.count() == agg.count())
-    }
-    it("native pair pipeline returns exactly the agg pipeline's pairs") {
-      val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      val a = Dedup.minhashLshPairs(docs, "doc_id", "text")
-      val b = Dedup.minhashLshPairsNative(docs, "doc_id", "text")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     }
     it("incremental dedup equals the full run restricted to fresh-involved pairs") {
       val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -159,13 +145,6 @@ class DedupSpec extends AnyFunSpec {
         .filter($"id1" % 5 === 0 || $"id2" % 5 === 0)
       assert(incr.exceptAll(full).isEmpty && full.exceptAll(incr).isEmpty)
       assert(incr.count() > 0)
-    }
-
-    it("native simhash pipeline returns exactly the agg pipeline's pairs") {
-      val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      val a = Dedup.simhashPairs(docs, "doc_id", "text")
-      val b = Dedup.simhashPairsNative(docs, "doc_id", "text")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     }
   }
 
@@ -344,6 +323,17 @@ class DedupSpec extends AnyFunSpec {
         .select("id1", "id2").as[(Long, Long)].collect().toSet
       assert(pairs.contains((1L, 4L)))
       assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+    }
+    it("simhash_sig equals simhashAgg on real, one-token and empty docs") {
+      val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+        .select($"doc_id".cast("long"), $"text")
+        .union(Seq((900001L, "solo"), (900002L, "")).toDF("doc_id", "text"))
+      val native = docs.select($"doc_id", call_function("simhash_sig",
+        array_distinct(split($"text", " ")), lit(60)).as("sig"))
+      val both = native.join(Dedup.simhashAgg(docs, "doc_id", "text"), "doc_id")
+      assert(both.count() == docs.count())
+      val mism = both.filter($"sig" =!= $"simhash")
+      assert(mism.isEmpty, mism.take(3).mkString(","))
     }
     it("banding finds every pair a full pairwise scan finds (pigeonhole)") {
       val sh = Dedup.simhashAgg(docs, "doc_id", "text")

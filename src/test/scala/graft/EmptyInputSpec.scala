@@ -24,11 +24,24 @@ class EmptyInputSpec extends AnyFunSpec {
       assert(Dedup.minhashLshPairs(emptyDocs, "doc_id", "text").isEmpty)
       assert(Dedup.ngramJaccardPairs(emptyDocs, "doc_id", "text").isEmpty)
       assert(Dedup.simhashPairs(emptyDocs, "doc_id", "text").isEmpty)
+      assert(Dedup.minhashSignatures(emptyDocs, "doc_id", "text").isEmpty)
+      assert(Dedup.dedupCorpus(emptyDocs, "doc_id", "text").isEmpty)
+      assert(TextAnalysis.crossDocDupNgrams(emptyDocs, "doc_id", "text").isEmpty)
+      assert(Decontamination.contaminationScores(
+        emptyDocs, "doc_id", "text", emptyDocs, "text").isEmpty)
+      assert(Decontamination.contaminationScoresBloom(
+        emptyDocs, "doc_id", "text", emptyDocs, "text").isEmpty)
     }
     it("docs below the shingle size produce no pairs but don't crash") {
       val tiny = Seq((1L, "one"), (2L, "two words")).toDF("doc_id", "text")
       assert(Dedup.minhashLshPairs(tiny, "doc_id", "text").isEmpty)
       assert(Dedup.ngramJaccardPairs(tiny, "doc_id", "text").isEmpty)
+      assert(Dedup.minhashSignatures(tiny, "doc_id", "text").isEmpty)
+      // no pairs, so nothing is dropped
+      assert(Dedup.dedupCorpus(tiny, "doc_id", "text").count() == 2)
+      assert(TextAnalysis.crossDocDupNgrams(tiny, "doc_id", "text").isEmpty)
+      assert(Decontamination.contaminationScores(tiny, "doc_id", "text", tiny, "text").isEmpty)
+      assert(Decontamination.contaminationScoresBloom(tiny, "doc_id", "text", tiny, "text").isEmpty)
     }
     it("tick analytics on zero ticks") {
       val emptyTicks = Seq.empty[(String, java.sql.Timestamp, Double, Long)]

@@ -163,6 +163,22 @@ class SessionSpec extends AnyFunSpec {
       assert(hits == Seq("src/main/scala/graft/sources/Staging.scala"))
     }
 
+    it("one shingling and one MinHash signing path in graft/operators") {
+      // (file, enclosing def) of every match of `device` in the operators
+      def sites(device: String): Seq[(String, String)] =
+        scalaFiles("src/main/scala/graft/operators").flatMap { p =>
+          val src = read(p)
+          device.r.findAllMatchIn(src).map { m =>
+            p.getFileName.toString ->
+              "def (\\w+)".r.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.last
+          }
+        }
+      assert(sites("\"minhash_sig\"") == Seq("Dedup.scala" -> "minhashSignatures"))
+      assert(sites("\"word_shingles\"") == Seq("Dedup.scala" -> "withShingles"))
+      assert(sites("(?<!def )\\bwithShingles\\(").sorted ==
+        Seq("Decontamination.scala" -> "evalShingleHashes", "Dedup.scala" -> "shingledDocs"))
+    }
+
     it("no registration checks in the operators: the natives are the only path") {
       val check = ("function" + "Exists|nat" + "Fn").r
       val hits = scalaFiles("src/main/scala/graft/operators")

@@ -482,14 +482,6 @@ class TextMultimodalSpec extends AnyFunSpec {
       assert(t(0).getSeq[String](3) == Seq("aa", "a"))
       assert(t(1).getSeq[String](3) == Seq("aa"))
     }
-    it("the relational fold and the JVM fast path encode identically") {
-      val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      val a = TextAnalysis.bpeEncode(docs, "doc_id", "text")
-        .select("doc_id", "n_subwords", "n_bpe", "bpe_tokens")
-      val b = TextAnalysis.bpeEncodeFast(docs, "doc_id", "text")
-        .select("doc_id", "n_subwords", "n_bpe", "bpe_tokens")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    }
     it("empty and sub-shingle docs encode to empty, not errors") {
       val docs = Seq((1L, ""), (2L, "solo")).toDF("doc_id", "text")
       val enc = TextAnalysis.bpeEncode(docs, "doc_id", "text")
