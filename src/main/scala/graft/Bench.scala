@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import graft.sources.Staging
 
 /** Fixed host-speed canary shared by [[Bench]] and
-  * [[graft.tools.CompositeScalingBench]]: a registry-independent
+  * [[graft.tools.Scaling]]: a registry-independent
   * CPU-bound fold (1e9-row codegen'd range aggregation over 32 tasks,
   * zero I/O) timed best-of-3 after one codegen warm. `Ref` is the
   * steady-state cost of THIS code path measured on the r15 build host
@@ -62,9 +62,8 @@ object Bench {
 
   /** Wall seconds of one trial `body`, run in a [[graft.sources.Staging.scoped]]
     * scope: the blocks the trial persisted are freed OUTSIDE the timed
-    * region, before the next trial starts. The bench, the scaling gate
-    * ([[graft.tools.Scaling.measure]]) and the composite probe all
-    * time through this. */
+    * region, before the next trial starts. The bench and every span of
+    * [[graft.tools.Scaling.measure]] time through this. */
   def timed(spark: SparkSession)(body: => Any): Double = Staging.scoped(spark) {
     val t0 = System.nanoTime()
     body

@@ -520,7 +520,7 @@ object DailyAnalytics {
     * correlation/spread lanes linear in the pair space — because the
     * grid's construction IS an all-pairs day-grain self-join: the
     * naive `join(Seq("trade_date"))` form measured 178× on the 150
-    * composite entity bound (r16 SCALING.md miss) from the
+    * composite entity bound (the r16 composite-scaling miss) from the
     * date-partitioned agg starving exactly as the [[pairBlocks]] doc
     * describes. Pair semantics are identical (each pair matches once),
     * so results are bit-equal to the naive form and the oracle is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs._
+import graft.sources.Staging
 import graft.sources.Staging.Snapshottable
 
 /** Embedding similarity search.
@@ -291,14 +292,13 @@ object Similarity {
     val centroids =
       if (refineIters == 0) seed
       else {
-        import org.apache.spark.storage.StorageLevel
         val parts = corpus.sparkSession.sessionState.conf.numShufflePartitions
         val vq = corpus.select(col(idCol).as("id"), col(vecCol).as("__v"))
           .repartition(parts, col("id"))
           .select(quantize(col("__v")).as("vq"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .snapshot()
         val r = refineCentroidsLoop(vq, seed, numCells, refineIters)
-        vq.unpersist(blocking = false)
+        Staging.release(vq)
         r
       }
     val centroidLit = typedLit(centroids)
@@ -381,15 +381,14 @@ object Similarity {
     var codebook: Seq[Seq[Seq[Long]]] =
       (0 until m).map(s => seeds.map(_.slice(s * subDim, (s + 1) * subDim)))
     if (refineIters > 0) {
-      import org.apache.spark.storage.StorageLevel
       val sparts = corpus.sparkSession.sessionState.conf.numShufflePartitions
       val vq = corpus.select(col(idCol).as("id"), col(vecCol).as("__v"))
         .repartition(sparts, col("id"))
         .select(quantize(col("__v")).as("vq"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .snapshot()
       for (_ <- 0 until refineIters)
         codebook = refinePqCodebook(vq, codebook, m, ksub, subDim)
-      vq.unpersist(blocking = false)
+      Staging.release(vq)
     }
     val cbLit = typedLit(codebook)
 
@@ -463,8 +462,8 @@ object Similarity {
     * refine-enabled [[ivfTopK]]: assign to nearest cell, recompute
     * ⌊Σ/n⌋ integer-mean centroids (a numCells × dim model collect),
     * empty cells keep their previous centroid. `vq` must expose a
-    * quantized `vq` column (extra columns ignored) and should be
-    * persisted by the caller across rounds. */
+    * quantized `vq` column (extra columns ignored); every round reads
+    * it, so callers pass a snapshot and release it after the loop. */
   private def refineCentroidsLoop(vq: DataFrame, seed: Seq[Seq[Long]],
                                   numCells: Int, iters: Int): Seq[Seq[Long]] = {
     var centroids = seed
@@ -545,24 +544,23 @@ object Similarity {
     * assignment pass (centroids are plan-time literals) plus ONE
     * partial-aggregable grouped sum whose result — numCells × dim
     * rows, the model, not the data — is collected to the driver. The
-    * input is persisted across rounds and the rounds parameter is a
+    * input is staged once across rounds and the rounds parameter is a
     * constant, so total cost is iters × (scan + tiny shuffle).
     */
   def kmeansRefine(df: DataFrame, idCol: String, vecCol: String,
                    numCells: Int = 16, iters: Int = 1): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val vq = df.select(col(idCol).as("id"), col(vecCol).as("__v"))
       .repartition(parts, col("id"))
       .select(col("id"), quantize(col("__v")).as("vq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .snapshot()
     val centroids = refineCentroidsLoop(vq,
       trainCellSeeds(df, idCol, vecCol, numCells), numCells, iters)
     val out = vq.select(col("id"),
       element_at(nearestCellsOf(col("vq"), typedLit(centroids), 1), 1)
         .as("cell"))
       .snapshot()
-    vq.unpersist(blocking = false)
+    Staging.release(vq)
     out
   }
 

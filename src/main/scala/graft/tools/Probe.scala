@@ -8,8 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.{Session, SparkEntry}
@@ -24,8 +23,9 @@ import graft.sources.Staging
   * snapshots, regime probes, and the micro-batches of the streaming
   * lanes, which drain their query while building the frame) and
   * execute (`count()`). Each run prints one JSON line and appends it
-  * to `<outDir>/layers.jsonl`; the last run's final frame's formatted
-  * plan goes to `<outDir>/<q>.plan.txt`. */
+  * to `<outDir>/layers.jsonl`; the formatted plan the last run's
+  * `count()` executed (with AQE, its final plan) goes to
+  * `<outDir>/<q>.plan.txt`. */
 object Probe {
   val Runs = 3
 
@@ -35,7 +35,9 @@ object Probe {
                          stateCommitMs: Long, stateStores: Long)
 
   /** What Spark reported while one [[record]] body ran. `plans` holds
-    * the physical plan of every SQL execution, in start order.
+    * the physical plan of every SQL execution, in start order: a
+    * Dataset action's as it ran (formatted; with AQE, the final plan),
+    * any other's as it started.
     * `codegenCompiles` and `codegenMs` count the JVM's generated-class
     * compiles (driver and tasks) and their time. */
   final case class Record(wallS: Double, jobs: Seq[Job], stages: Long, tasks: Long,
@@ -80,7 +82,7 @@ object Probe {
   private final class Listeners extends SparkListener {
     private val jobs = mutable.LinkedHashMap.empty[Int, Job]
     private var stages, tasks, runMs, gcMs, readBytes, writeBytes, spillBytes = 0L
-    private val plans = mutable.ArrayBuffer.empty[String]
+    private val plans = mutable.LinkedHashMap.empty[Long, String]
     private val batches = mutable.ArrayBuffer.empty[Batch]
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -99,7 +101,12 @@ object Probe {
       }
     }
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => synchronized { plans += s.physicalPlanDescription }
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized { plans(s.executionId) = s.physicalPlanDescription }
+      // the start plan reads `isFinalPlan=false`; an action's end carries the plan it ran
+      case e: SparkListenerSQLExecutionEnd => PlanBridge.executedPlan(e).foreach { plan =>
+        synchronized { if (plans.contains(e.executionId)) plans(e.executionId) = plan }
+      }
       case _ =>
     }
 
@@ -119,7 +126,7 @@ object Probe {
 
     def result(wallS: Double, compiles: Long, compileMs: Double): Record = synchronized {
       Record(wallS, jobs.values.toSeq, stages, tasks, runMs / 1000.0, gcMs / 1000.0,
-        readBytes / MB, writeBytes / MB, spillBytes / MB, plans.toSeq, batches.toSeq,
+        readBytes / MB, writeBytes / MB, spillBytes / MB, plans.values.toSeq, batches.toSeq,
         compiles, compileMs)
     }
   }
@@ -149,9 +156,9 @@ object Probe {
 
   /** Runs registry query `q` once warm and [[Runs]] recorded times,
     * appends each run's line to `<outDir>/layers.jsonl` and writes the
-    * final frame's plan. Each run, the warm one too, is a
-    * [[Staging.scoped]] scope, so every run starts from the same
-    * storage state. */
+    * plan the last run's `count()` executed. Each run, the warm one
+    * too, is a [[Staging.scoped]] scope, so every run starts from the
+    * same storage state. */
   def probe(spark: SparkSession, sfDir: String, outDir: String, q: String): Seq[Run] = {
     val fn = SparkEntry.queries(q)
     Files.createDirectories(Paths.get(outDir))
@@ -160,8 +167,8 @@ object Probe {
       val run = Staging.scoped(spark) {
         val (df, construct) = record(spark)(fn(spark, sfDir))
         val (_, execute) = record(spark)(df.count())
-        Files.write(Paths.get(outDir, s"$q.plan.txt"), // the last run's stays
-          df.queryExecution.explainString(FormattedMode).getBytes(UTF_8))
+        execute.plans.lastOption.foreach(plan => // the last run's stays
+          Files.write(Paths.get(outDir, s"$q.plan.txt"), plan.getBytes(UTF_8)))
         Run(q, i, construct, execute)
       }
       Files.write(Paths.get(outDir, "layers.jsonl"), (run.json + "\n").getBytes(UTF_8),

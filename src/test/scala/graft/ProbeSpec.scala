@@ -29,6 +29,15 @@ class ProbeSpec extends AnyFunSpec {
       }
     }
 
+    it("saves the plan its count() ran: with an exchange, AQE's final plan") {
+      TempDir("graft_probe") { out =>
+        Probe.probe(spark, dir, out, "q_dedup_minhash_lsh")
+        val plan = new String(Files.readAllBytes(Paths.get(out, "q_dedup_minhash_lsh.plan.txt")), "UTF-8")
+        assert(plan.contains("Exchange") && plan.contains("isFinalPlan=true"), plan)
+        assert(!plan.contains("isFinalPlan=false"), plan)
+      }
+    }
+
     it("leaves no RDD any of its runs persisted, the warm run's included") {
       TempDir("graft_probe") { out =>
         // RDD ids are never reused and ContextCleaner only ever drops

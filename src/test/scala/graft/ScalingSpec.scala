@@ -12,32 +12,64 @@ import graft.tools.Scaling
   * ratio jumps toward growth².
   *
   * A representative subset keeps the suite bounded (one query per
-  * family, the full 18-query table lives in SCALING.md via
-  * `runMain graft.tools.ScalingBench`); min-of-2 after the sf0.001
-  * warm-up is enough because the gate has ≥ 2× headroom over the
-  * measured ratios.
+  * family; `runMain graft.tools.Scaling` writes all 23 rows of this
+  * span to SCALING.md, with the two composite spans); min-of-2 after
+  * the sf0.001 warm-up is enough because the gate has ≥ 2× headroom
+  * over the measured ratios.
   */
 class ScalingSpec extends AnyFunSpec {
   private lazy val spark = SharedSpark.spark
 
-  private val subset = Scaling.scaleSensitive.filter { case (n, _, _) =>
+  private val spans = Scaling.spans("entity", "date")
+
+  private val subset = spans.head.copy(families = spans.head.families.filter { case (n, _) =>
     Set("q_dedup_minhash_lsh", "q_dedup_simhash", "q_sim_topk",
         "q_triangles", "q_pagerank", "q_winsorize",
         "q_dedup_recall", "q_retrieval_ndcg")(n)
-  }
+  })
 
   describe("scale growth sf0.01 -> sf0.1") {
     it("stays sub-quadratic for every scale-sensitive family") {
       assume(new java.io.File("/root/testdata/sf0.1").isDirectory &&
              new java.io.File("/root/testdata/sf0.01").isDirectory)
-      val rows = Scaling.measure(spark, subset,
-        "/root/testdata/sf0.01", "/root/testdata/sf0.1", trials = 2)
-      assert(rows.nonEmpty && rows.forall(r => r.tSmall > 0 && r.tLarge > 0))
+      assert(subset.families.size == 8)
+      val Seq((_, rows)) = Scaling.measure(spark, Seq(subset), trials = 2)
+      assert(rows.size == 8 && rows.forall(r => r.tFrom > 0 && r.tTo > 0))
       val bad = rows.filterNot(_.ok)
       assert(bad.isEmpty,
         "super-quadratic growth (ratio > 1.5x input growth): " +
-          bad.map(r => f"${r.name} ratio=${r.ratio}%.1f bound=${r.bound}%.0f " +
-            f"(${r.tSmall}%.2fs -> ${r.tLarge}%.2fs)").mkString("; "))
+          bad.map(r => f"${r.query} ratio=${r.ratio}%.1f bound=${r.bound}%.0f " +
+            f"(${r.tFrom}%.2fs -> ${r.tTo}%.2fs)").mkString("; "))
+    }
+  }
+
+  describe("Scaling spans") {
+    it("name registered queries with positive bounds, in all three spans") {
+      assert(spans.map(_.families.size) == Seq(23, 58, 17))
+      val rows = spans.flatMap(_.families)
+      val unknown = rows.map(_._1).filterNot(SparkEntry.queries.contains)
+      assert(unknown.isEmpty, unknown)
+      assert(rows.forall(_._2 > 0), rows)
+      // the first span's bound is 1.5 × its input growth (10× or 4×)
+      assert(spans.head.families.map(_._2).toSet == Set(15.0, 6.0))
+    }
+
+    it("render one file: a row over its bound reads NO, and one Generated-by line") {
+      val span = spans(1)
+      val rows = Seq(
+        Scaling.Growth("q_winsorize", 15.0, Seq(1.0, 1.2), Seq(14.0, 15.0)),
+        Scaling.Growth("q_pagerank", 15.0, Seq(1.0), Seq(16.0)),
+        // under the 0.15 s floor the denominator is the floor
+        Scaling.Growth("q_triangles", 15.0, Seq(0.01), Seq(2.4)))
+      val md = Scaling.markdown(Seq(spans.head -> rows.take(1), span -> rows.drop(1)),
+        trials = 2, cpus = 4, hostFactors = (1.0, 1.1))
+      val lines = md.linesIterator.toSeq
+      assert(lines.count(_.contains("Generated by")) == 1, md)
+      assert(lines.exists(_.startsWith("| q_winsorize | 1.00 | 1.20 | 14.00 | 1.07 | 14.0 | 15 | yes |")), md)
+      assert(lines.exists(l => l.startsWith("| q_pagerank |") && l.endsWith("| 16.0 | 15 | NO |")), md)
+      assert(lines.exists(l => l.startsWith("| q_triangles |") && l.endsWith("| 16.0 | 15 | NO |")), md)
+      assert(lines.count(_.startsWith("## ")) == 2 && lines.contains("All within bounds: false."), md)
+      assert(lines.exists(_.contains("| t(entity) s |")), md)
     }
   }
 }

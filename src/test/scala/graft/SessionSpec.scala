@@ -150,10 +150,16 @@ class SessionSpec extends AnyFunSpec {
     }
 
     it("block release only in graft/sources/Staging.scala") {
-      val device = "getPersistentRDDs|unpersist\\(blocking = true\\)".r
+      // staging is `snapshot()` + `Staging.release`: no hand-rolled persist anywhere else
+      val device = "getPersistentRDDs|\\.persist\\(|unpersist\\(".r
       val hits = scalaFiles("src/main").filter(p => device.findFirstIn(read(p)).nonEmpty)
         .map(_.toString)
       assert(hits == Seq("src/main/scala/graft/sources/Staging.scala"))
+    }
+
+    it("SCALING.md written only by graft/tools/Scaling.scala") {
+      val hits = scalaFiles("src/main").filter(p => read(p).contains("SCALING.md")).map(_.toString)
+      assert(hits == Seq("src/main/scala/graft/tools/Scaling.scala"))
     }
 
     it("snapshot sizes and the pin dial only in graft/sources/Staging.scala") {
