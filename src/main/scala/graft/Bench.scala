@@ -1,24 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Staging
 
 /** Fixed host-speed canary shared by [[Bench]] and
   * [[graft.tools.Scaling]]: a registry-independent
-  * CPU-bound fold (1e9-row codegen'd range aggregation over 32 tasks,
-  * zero I/O) timed best-of-3 after one codegen warm. `Ref` is the
-  * steady-state cost of THIS code path measured on the r15 build host
-  * (in-bench readings 0.18-0.21 s; a fresh JVM reads ~2x slower, so
-  * the reference must come from the same in-bench context):
+  * CPU-bound fold ([[fold]]: a codegen'd range aggregation, one task
+  * of [[RowsPerTask]] rows per core, zero I/O) timed best-of-3 after
+  * one codegen warm. Every core folds the same rows, so a host's core
+  * count does not read as load; a 32-core session runs the 1e9-row,
+  * 32-task fold `Ref` was taken on. `Ref` is the steady-state cost of
+  * THIS code path measured on the r15 build host (in-bench readings
+  * 0.18-0.21 s; a fresh JVM reads ~2x slower, so the reference must
+  * come from the same in-bench context):
   * host_factor = canary/Ref, 1.0 ≈ that host, 2.0 ≈ a host running
   * everything 2x slower. Lets a reader normalize recorded numbers
   * across rounds taken on differently-loaded hosts. */
 object HostCanary {
   val Ref = 0.20
+  val RowsPerTask = 31250000L
+
+  /** The timed fold: `defaultParallelism` tasks of [[RowsPerTask]] rows. */
+  def fold(spark: SparkSession): DataFrame = {
+    val tasks = spark.sparkContext.defaultParallelism
+    spark.range(0L, RowsPerTask * tasks, 1L, tasks)
+      .selectExpr("sum((id * 2654435761) % 1000003)")
+  }
+
   def measure(spark: SparkSession): Double = {
     def one(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1000000000L, 1L, 32)
-        .selectExpr("sum((id * 2654435761) % 1000003)").collect()
+      fold(spark).collect()
       (System.nanoTime() - t0) / 1e9
     }
     one() // codegen warm (first execution compiles the fold)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,22 +8,24 @@ import graft.functions.Funcs._
 import graft.sources.Staging.Snapshottable
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
-  * metadata, frame sampling, and a feature-extraction stage.
+  * metadata, frame sampling, and real codecs with no non-JDK
+  * dependency.
   *
-  * Image payloads get a REAL decoder: [[decodeImageFeatures]] runs
-  * `javax.imageio` (JDK-bundled PNG/JPEG/BMP codecs) per partition and
-  * emits dimensions + a deterministic raster hex; [[toGrayPng]] is the
-  * matching encoder. Formats with no JDK codec (audio/video) keep the
-  * documented STUB: [[decodeStubFeatures]] derives a deterministic
-  * fake feature vector from the payload's content hash, with the same
-  * signature a real decoder would have.
+  * Images decode through `javax.imageio` ([[decodeImageFeatures]],
+  * [[toGrayPng]]) and an integer 8×8 DCT ([[imageDctFeatures]]).
+  * Audio is WAV: PCM16, G.711 μ-law ([[ulawToLinear]]) and IMA ADPCM
+  * ([[imaAdpcmDecode]]). Video is AVI with 8-bit gray DIB frames.
+  * WAV and AVI share one RIFF chunk reader ([[riffChunks]]). Every
+  * audio lane reads its samples through one int16 read ([[int16]]),
+  * one sample decode per format ([[wavSamples]]) and one frame fold
+  * ([[energyFrames]] over [[frameBounds]]).
   *
   * Scale notes: payloads stay opaque binary end-to-end (no
   * row-to-string conversions); frame sampling explodes bounded
   * sequences (frames per doc = ceil(bytes/frameSize)), so the operator
   * is a narrow map + generate with no shuffle; decode and feature
-  * extraction are embarrassingly parallel per partition (codec state
-  * inits once per partition, never per row).
+  * extraction are embarrassingly parallel per partition
+  * ([[codecStage]]: one narrow mapPartitions per codec operator).
   */
 object Multimodal {
 
@@ -58,15 +60,57 @@ object Multimodal {
         length(col("frame_bytes")).as("frame_len"),
         md5(col("frame_bytes")).as("frame_hash"))
 
-  /** ===== STUB decode =====
-    * A real pipeline would decode `payload` with a codec here and emit
-    * pixel/sample features. Deterministic fake: 8 pseudo-features from
-    * the md5 of the payload. Same signature a real decoder would have.
-    */
-  def decodeStubFeatures(media: DataFrame): DataFrame =
-    media.withColumn("features",
-      transform(sequence(lit(0), lit(7)),
-        i => (hash60(concat(md5(col("payload")), i.cast("string"))) % 1000).cast("double") / 1000.0))
+  /** The one payload step of the codec operators: `media`'s
+    * `media_id` (cast long), `payload` and each `extra` column (cast
+    * int) go through `partition`, which emits rows of `media_id` +
+    * `fields`. Narrow mapPartitions: codec state inits once per
+    * partition, never per row. */
+  private def codecStage(media: DataFrame, fields: Seq[(String, DataType)], extra: String*)(
+      partition: Iterator[Row] => Iterator[Row]): DataFrame =
+    media.select(col("media_id").cast("long") +: col("payload") +: extra.map(col(_).cast("int")): _*)
+      .mapPartitions(partition)(Encoders.row(StructType(
+        (("media_id" -> LongType) +: fields).map { case (n, t) => StructField(n, t) })))
+
+  private val payloadField = Seq("payload" -> BinaryType)
+  /** The frame-feature shape the audio lanes, [[aviFrameDeltas]] and
+    * [[energySegments]] share. */
+  private val energyFields = Seq("frame_idx" -> IntegerType, "n_samples" -> IntegerType,
+    "energy" -> LongType, "peak" -> IntegerType)
+
+  /** Little-endian signed int16 at `off`: the one sample read. */
+  private def int16(b: Array[Byte], off: Int): Int = ((b(off + 1): Int) << 8) | (b(off) & 0xff)
+
+  /** The PCM16 samples of `len` bytes at `off` (a trailing odd byte is ignored). */
+  private def pcm16(b: Array[Byte], off: Int, len: Int): Array[Int] =
+    Array.tabulate(len / 2)(i => int16(b, off + 2 * i))
+
+  /** (frame_idx, start, end) of each `frameSamples` window over
+    * `nSamp` samples: the trailing partial frame is kept unless
+    * `fullOnly`. */
+  private def frameBounds(nSamp: Int, frameSamples: Int,
+                          fullOnly: Boolean = false): Iterator[(Int, Int, Int)] = {
+    val nFrames = if (fullOnly) nSamp / frameSamples else (nSamp + frameSamples - 1) / frameSamples
+    Iterator.range(0, nFrames).map { f =>
+      (f, f * frameSamples, math.min(f * frameSamples + frameSamples, nSamp))
+    }
+  }
+
+  /** The one frame fold: (frame_idx, n_samples, exact Σx², peak |x|)
+    * per `frameSamples` window of `xs`, trailing partial frame kept. */
+  private def energyFrames(xs: Array[Int], frameSamples: Int): Iterator[(Int, Int, Long, Int)] =
+    frameBounds(xs.length, frameSamples).map { case (f, start, end) =>
+      var i = start
+      var energy = 0L
+      var peak = 0
+      while (i < end) {
+        val v = xs(i)
+        energy += v.toLong * v
+        val a = if (v < 0) -v else v
+        if (a > peak) peak = a
+        i += 1
+      }
+      (f, end - start, energy, peak)
+    }
 
   /** ===== REAL audio framing =====
     * Interprets the payload as 16-bit little-endian signed mono PCM —
@@ -78,41 +122,16 @@ object Multimodal {
     * standard first stage of audio curation — silence trimming,
     * clipping detection, energy-based VAD thresholds — and it is
     * oracle-checkable because DuckDB can parse the same bytes from
-    * their hex form. Narrow mapPartitions (one pass per payload, no
+    * their hex form. Narrow mapPartitions (one decode per payload, no
     * shuffle); frames-per-row is bounded by payload size. */
   def pcmFrameFeatures(media: DataFrame, frameSamples: Int = 256): DataFrame = {
     require(frameSamples > 0, "pcmFrameFeatures: frameSamples must be positive")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("energy", LongType),
-      StructField("peak", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val nSamp = b.length / 2
-          val nFrames = (nSamp + frameSamples - 1) / frameSamples
-          (0 until nFrames).iterator.map { f =>
-            val start = f * frameSamples
-            val end = math.min(start + frameSamples, nSamp)
-            var i = start
-            var energy = 0L
-            var peak = 0
-            while (i < end) {
-              val v = ((b(2 * i + 1): Int) << 8) | (b(2 * i) & 0xff)
-              energy += v.toLong * v
-              val a = if (v < 0) -v else v
-              if (a > peak) peak = a
-              i += 1
-            }
-            Row(id, f, end - start, energy, peak)
-          }
-        }
-      }(enc)
+    codecStage(media, energyFields)(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      energyFrames(pcm16(b, 0, b.length), frameSamples).map { case (f, n, energy, peak) =>
+        Row(r.getLong(0), f, n, energy, peak)
+      }
+    })
   }
 
   /** WAVE_FORMAT codes supported by the audio lane. */
@@ -185,7 +204,7 @@ object Multimodal {
     * shorter than a header decode to nothing. */
   private[graft] def imaAdpcmDecode(b: Array[Byte], off: Int, len: Int): Array[Int] = {
     if (len < 4) return Array.empty
-    var pred = ((b(off + 1): Int) << 8) | (b(off) & 0xff)
+    var pred = int16(b, off)
     var idx = math.min(b(off + 2) & 0xff, 88)
     val nNib = (len - 4) * 2
     val out = new Array[Int](1 + nNib)
@@ -209,6 +228,28 @@ object Multimodal {
     out
   }
 
+  // ───────────────────────── RIFF chunk reader ───────────────────────
+
+  private def ascii(b: Array[Byte], off: Int) = new String(b, off, 4, "US-ASCII")
+  private def u16(b: Array[Byte], off: Int): Int = int16(b, off) & 0xffff
+  private def u32(b: Array[Byte], off: Int): Long = u16(b, off) | (u16(b, off + 2).toLong << 16)
+
+  /** Walks the RIFF chunk sequence `[from, to)` of `b` while `more`
+    * holds: `visit(id, bodyOffset, size)` per chunk, stepping over
+    * odd-size padding (RIFF pads odd chunk bodies to even). False when
+    * a chunk overruns `to` or `visit` returns false (a nested walk
+    * failed); the WAV and AVI parsers both read through it. */
+  private def riffChunks(b: Array[Byte], from: Int, to: Int, more: => Boolean = true)(
+      visit: (String, Int, Int) => Boolean): Boolean = {
+    var off = from
+    while (off + 8 <= to && more) {
+      val size = u32(b, off + 4)
+      if (off + 8 + size > to || !visit(ascii(b, off), off + 8, size.toInt)) return false
+      off += 8 + size.toInt + (size.toInt & 1)
+    }
+    true
+  }
+
   /** Parsed RIFF/WAV container: format fields + the data chunk's
     * position inside the payload (no copy at parse time). */
   private[graft] final case class WavInfo(
@@ -216,145 +257,78 @@ object Multimodal {
     dataOffset: Int, dataLen: Int, audioFormat: Int = 1)
 
   /** RIFF/WAV container parse, pure JDK: walks the chunk list
-    * ("fmt " → format fields, "data" → sample position), tolerating
-    * extra chunks (LIST/fact/cue) and odd-size chunk padding per the
-    * RIFF spec. Returns None for anything that is not a well-formed
-    * PCM16 or G.711-μ-law WAV — truncated headers, non-RIFF payloads,
-    * float/ADPCM encodings — so corrupt payloads degrade instead of
-    * throwing. */
+    * ("fmt " → format fields, "data" → sample position) until both
+    * are found, tolerating extra chunks (LIST/fact/cue) and odd-size
+    * chunk padding per the RIFF spec. Returns None for anything that
+    * is not a well-formed PCM16, G.711-μ-law or IMA-ADPCM WAV —
+    * truncated headers, non-RIFF payloads, float encodings — so
+    * corrupt payloads degrade instead of throwing. */
   private[graft] def parseWav(b: Array[Byte]): Option[WavInfo] = {
-    def ascii(off: Int) = new String(b, off, 4, "US-ASCII")
-    def u32(off: Int): Long =
-      (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-    def u16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    if (b.length < 44 || ascii(0) != "RIFF" || ascii(8) != "WAVE") return None
-    var off = 12
+    if (b.length < 44 || ascii(b, 0) != "RIFF" || ascii(b, 8) != "WAVE") return None
     var fmt: Option[(Int, Int, Int, Int)] = None // audioFormat, channels, rate, bits
     var data: Option[(Int, Int)] = None          // offset, len
-    while (off + 8 <= b.length && (fmt.isEmpty || data.isEmpty)) {
-      val id = ascii(off)
-      val size = u32(off + 4)
-      if (size < 0 || off + 8 + size > b.length) return None
-      val sz = size.toInt
+    val walked = riffChunks(b, 12, b.length, fmt.isEmpty || data.isEmpty) { (id, body, sz) =>
       if (id == "fmt " && sz >= 16)
-        fmt = Some((u16(off + 8), u16(off + 10), u32(off + 12).toInt, u16(off + 22)))
+        fmt = Some((u16(b, body), u16(b, body + 2), u32(b, body + 4).toInt, u16(b, body + 14)))
       else if (id == "data")
-        data = Some((off + 8, sz))
-      off += 8 + sz + (sz & 1) // odd-size chunks are padded to even
+        data = Some((body, sz))
+      true
     }
     for {
       (audioFormat, channels, rate, bits) <- fmt
       (dOff, dLen) <- data
-      if channels >= 1 && rate > 0 &&
+      if walked && channels >= 1 && rate > 0 &&
         ((audioFormat == WavPcm16 && bits == 16) ||
           (audioFormat == WavUlaw && bits == 8) ||
           (audioFormat == WavImaAdpcm && bits == 4))
     } yield WavInfo(channels, rate, bits, dOff, dLen, audioFormat)
   }
 
+  /** The one sample decode per WAV format: the data chunk of a parsed
+    * WAV as linear samples — PCM16 read directly, G.711 μ-law through
+    * [[ulawToLinear]], IMA ADPCM through the stateful block decode
+    * [[imaAdpcmDecode]] (the whole chunk is one block). */
+  private def wavSamples(b: Array[Byte], w: WavInfo): Array[Int] =
+    if (w.audioFormat == WavImaAdpcm) imaAdpcmDecode(b, w.dataOffset, w.dataLen)
+    else if (w.audioFormat == WavUlaw) Array.tabulate(w.dataLen)(i => ulawToLinear(b(w.dataOffset + i)))
+    else pcm16(b, w.dataOffset, w.dataLen)
+
   /** ===== REAL audio container encode =====
     * Raw sample payload → WAV bytes (44-byte RIFF header + data),
     * per-row sample rate from `rateCol`. `audioFormat` 1 wraps PCM16
-    * bytes; 7 wraps a G.711 μ-law byte stream. Narrow mapPartitions;
-    * the inverse of [[wavFrameFeatures]]'s parse. */
+    * bytes; 7 wraps a G.711 μ-law byte stream; 0x11 one IMA ADPCM
+    * block. Narrow mapPartitions; the inverse of
+    * [[wavFrameFeatures]]'s parse. */
   def toWav(media: DataFrame, rateCol: String, channels: Int = 1,
-            audioFormat: Int = WavPcm16): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"),
-        col(rateCol).cast("int"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val pcm = r.getAs[Array[Byte]](1)
-          Row(r.getLong(0),
-            wavHeader(pcm.length, r.getInt(2), channels, audioFormat) ++ pcm)
-        }
-      }(enc)
-  }
+            audioFormat: Int = WavPcm16): DataFrame =
+    codecStage(media, payloadField, rateCol)(_.map { r =>
+      val pcm = r.getAs[Array[Byte]](1)
+      Row(r.getLong(0), wavHeader(pcm.length, r.getInt(2), channels, audioFormat) ++ pcm)
+    })
 
   /** ===== REAL audio container decode =====
-    * Parses each payload as a RIFF/WAV container ([[parseWav]]) and
-    * frames the data chunk with exact integer energy Σx², peak |x|,
-    * and sample count per frame, plus the container's
-    * sample_rate/n_channels. PCM16 reads little-endian int16 samples
-    * directly; G.711 μ-law payloads go through the REAL codec
-    * ([[ulawToLinear]] expansion) and IMA ADPCM payloads through the
-    * REAL stateful block decode ([[imaAdpcmDecode]]) before the same
-    * framing math — genuine compressed-audio decode paths with zero
-    * non-JDK dependencies. Unparseable payloads emit ZERO frames instead of
-    * failing the stage (the poison-pill policy of
+    * Parses each payload as a RIFF/WAV container ([[parseWav]]),
+    * decodes the data chunk once into linear samples
+    * ([[wavSamples]]: PCM16, G.711 μ-law or IMA ADPCM — genuine
+    * compressed-audio decode paths with zero non-JDK dependencies) and
+    * frames them with [[energyFrames]]: exact integer energy Σx², peak
+    * |x| and sample count per frame, plus the container's
+    * sample_rate/n_channels. Unparseable payloads emit ZERO frames
+    * instead of failing the stage (the poison-pill policy of
     * [[decodeImageFeatures]]); count them via an anti-join against
     * the input when auditing. Narrow mapPartitions, frames bounded by
     * payload size. */
   def wavFrameFeatures(media: DataFrame, frameSamples: Int = 256): DataFrame = {
     require(frameSamples > 0, "wavFrameFeatures: frameSamples must be positive")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("sample_rate", IntegerType),
-      StructField("n_channels", IntegerType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("energy", LongType),
-      StructField("peak", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          parseWav(b).iterator.flatMap { w =>
-            if (w.audioFormat == WavImaAdpcm) {
-              // stateful codec: the block decodes SEQUENTIALLY (each
-              // nibble's output depends on all prior state), so decode
-              // once per payload, then frame the linear samples
-              val xs = imaAdpcmDecode(b, w.dataOffset, w.dataLen)
-              val nFrames = (xs.length + frameSamples - 1) / frameSamples
-              (0 until nFrames).iterator.map { f =>
-                val start = f * frameSamples
-                val end = math.min(start + frameSamples, xs.length)
-                var i = start
-                var energy = 0L
-                var peak = 0
-                while (i < end) {
-                  val v = xs(i)
-                  energy += v.toLong * v
-                  val a = if (v < 0) -v else v
-                  if (a > peak) peak = a
-                  i += 1
-                }
-                Row(id, w.sampleRate, w.channels, f, end - start, energy, peak)
-              }
-            } else {
-              val ulaw = w.audioFormat == WavUlaw
-              val nSamp = if (ulaw) w.dataLen else w.dataLen / 2
-              val nFrames = (nSamp + frameSamples - 1) / frameSamples
-              (0 until nFrames).iterator.map { f =>
-                val start = f * frameSamples
-                val end = math.min(start + frameSamples, nSamp)
-                var i = start
-                var energy = 0L
-                var peak = 0
-                while (i < end) {
-                  val v =
-                    if (ulaw) ulawToLinear(b(w.dataOffset + i))
-                    else {
-                      val o = w.dataOffset + 2 * i
-                      ((b(o + 1): Int) << 8) | (b(o) & 0xff)
-                    }
-                  energy += v.toLong * v
-                  val a = if (v < 0) -v else v
-                  if (a > peak) peak = a
-                  i += 1
-                }
-                Row(id, w.sampleRate, w.channels, f, end - start, energy, peak)
-              }
-            }
-          }
+    codecStage(media, Seq("sample_rate" -> IntegerType, "n_channels" -> IntegerType) ++
+        energyFields)(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      parseWav(b).iterator.flatMap { w =>
+        energyFrames(wavSamples(b, w), frameSamples).map { case (f, n, energy, peak) =>
+          Row(r.getLong(0), w.sampleRate, w.channels, f, n, energy, peak)
         }
-      }(enc)
+      }
+    })
   }
 
   /** ===== Energy-based VAD / silence segmentation =====
@@ -512,45 +486,30 @@ object Multimodal {
     * biBitCount other than 8 (this lane's wire contract is 8-bit
     * gray DIB frames; anything else would need a real pixel codec). */
   private[graft] def parseAvi(b: Array[Byte]): Option[AviInfo] = {
-    def ascii(off: Int) = new String(b, off, 4, "US-ASCII")
-    def u32(off: Int): Long =
-      (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-    def u16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    if (b.length < 12 || ascii(0) != "RIFF" || ascii(8) != "AVI ") return None
+    if (b.length < 12 || ascii(b, 0) != "RIFF" || ascii(b, 8) != "AVI ") return None
     var avih: Option[(Int, Int, Int)] = None    // width, height, nFrames
     var strh: Option[(Int, Int)] = None         // scale, rate
     var bitCountOk = true
     val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     // walk one chunk sequence [from, to); descend into known LISTs
-    def walk(from: Int, to: Int, inMovi: Boolean): Boolean = {
-      var off = from
-      while (off + 8 <= to) {
-        val id = ascii(off)
-        val size = u32(off + 4)
-        if (size < 0 || off + 8 + size > to) return false
-        val sz = size.toInt
-        if (id == "LIST" && sz >= 4) {
-          val listType = ascii(off + 8)
-          if (listType == "hdrl" || listType == "strl")
-            { if (!walk(off + 12, off + 8 + sz, inMovi = false)) return false }
-          else if (listType == "movi")
-            { if (!walk(off + 12, off + 8 + sz, inMovi = true)) return false }
-          // other list types (odml, INFO) skipped whole
-        } else if (id == "avih" && sz >= 56) {
-          avih = Some((u32(off + 8 + 32).toInt, u32(off + 8 + 36).toInt,
-            u32(off + 8 + 16).toInt))
-        } else if (id == "strh" && sz >= 56) {
-          if (ascii(off + 8) == "vids")
-            strh = Some((u32(off + 8 + 20).toInt, u32(off + 8 + 24).toInt))
+    def walk(from: Int, to: Int, inMovi: Boolean): Boolean = riffChunks(b, from, to) { (id, body, sz) =>
+      if (id == "LIST" && sz >= 4) {
+        val listType = ascii(b, body)
+        if (listType == "hdrl" || listType == "strl") walk(body + 4, body + sz, inMovi = false)
+        else if (listType == "movi") walk(body + 4, body + sz, inMovi = true)
+        else true // other list types (odml, INFO) skipped whole
+      } else {
+        if (id == "avih" && sz >= 56)
+          avih = Some((u32(b, body + 32).toInt, u32(b, body + 36).toInt, u32(b, body + 16).toInt))
+        else if (id == "strh" && sz >= 56) {
+          if (ascii(b, body) == "vids")
+            strh = Some((u32(b, body + 20).toInt, u32(b, body + 24).toInt))
         } else if (id == "strf" && sz >= 40) {
-          if (u16(off + 8 + 14) != 8) bitCountOk = false
-        } else if (inMovi && (id == "00db" || id == "00dc")) {
-          frames += ((off + 8, sz))
-        }
-        off += 8 + sz + (sz & 1) // odd-size chunks are padded to even
+          if (u16(b, body + 14) != 8) bitCountOk = false
+        } else if (inMovi && (id == "00db" || id == "00dc"))
+          frames += ((body, sz))
+        true
       }
-      true
     }
     if (!walk(12, b.length, inMovi = false)) return None
     for {
@@ -569,46 +528,32 @@ object Multimodal {
     * shot-boundary deltas, sampling decisions) over the decoded
     * frames. Unparseable payloads emit ZERO frames (poison-pill
     * policy). Narrow mapPartitions; frames bounded by payload size. */
-  def aviFrameFeatures(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("fps", IntegerType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_bytes", IntegerType),
-      StructField("pix_sum", LongType),
-      StructField("pix_sumsq", LongType),
-      StructField("pix_min", IntegerType),
-      StructField("pix_max", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          parseAvi(b).iterator.flatMap { a =>
-            a.frames.iterator.zipWithIndex.map { case ((off, len), f) =>
-              var i = 0
-              var s = 0L
-              var ss = 0L
-              var mn = 255
-              var mx = 0
-              while (i < len) {
-                val v = b(off + i) & 0xff
-                s += v
-                ss += v.toLong * v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                i += 1
-              }
-              if (len == 0) { mn = 0 }
-              Row(id, a.width, a.height, a.fps, f, len, s, ss, mn, mx)
-            }
+  def aviFrameFeatures(media: DataFrame): DataFrame =
+    codecStage(media, Seq("width" -> IntegerType, "height" -> IntegerType,
+        "fps" -> IntegerType, "frame_idx" -> IntegerType, "n_bytes" -> IntegerType,
+        "pix_sum" -> LongType, "pix_sumsq" -> LongType, "pix_min" -> IntegerType,
+        "pix_max" -> IntegerType))(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      parseAvi(b).iterator.flatMap { a =>
+        a.frames.iterator.zipWithIndex.map { case ((off, len), f) =>
+          var i = 0
+          var s = 0L
+          var ss = 0L
+          var mn = 255
+          var mx = 0
+          while (i < len) {
+            val v = b(off + i) & 0xff
+            s += v
+            ss += v.toLong * v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            i += 1
           }
+          if (len == 0) { mn = 0 }
+          Row(r.getLong(0), a.width, a.height, a.fps, f, len, s, ss, mn, mx)
         }
-      }(enc)
-  }
+      }
+    })
 
   /** ===== Frame-delta (motion) features =====
     * Per consecutive-frame pixel delta over a parsed AVI: exact
@@ -620,64 +565,43 @@ object Multimodal {
     * high-motion runs become motion segments exactly the way voiced
     * runs become VAD segments. One sequential pass per payload
     * (deltas need the previous frame), narrow mapPartitions. */
-  def aviFrameDeltas(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("energy", LongType),
-      StructField("peak", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          parseAvi(b).iterator.flatMap { a =>
-            a.frames.iterator.zipWithIndex.map { case ((off, len), f) =>
-              val prev = if (f == 0) None else Some(a.frames(f - 1))
-              var i = 0
-              var s = 0L
-              var mx = 0
-              while (i < len) {
-                val cur = b(off + i) & 0xff
-                val ref = prev match {
-                  case Some((po, pl)) if i < pl => b(po + i) & 0xff
-                  case _ => 0
-                }
-                val d = if (cur >= ref) cur - ref else ref - cur
-                s += d
-                if (d > mx) mx = d
-                i += 1
-              }
-              Row(id, f, len, s, mx)
+  def aviFrameDeltas(media: DataFrame): DataFrame =
+    codecStage(media, energyFields)(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      parseAvi(b).iterator.flatMap { a =>
+        a.frames.iterator.zipWithIndex.map { case ((off, len), f) =>
+          val prev = if (f == 0) None else Some(a.frames(f - 1))
+          var i = 0
+          var s = 0L
+          var mx = 0
+          while (i < len) {
+            val cur = b(off + i) & 0xff
+            val ref = prev match {
+              case Some((po, pl)) if i < pl => b(po + i) & 0xff
+              case _ => 0
             }
+            val d = if (cur >= ref) cur - ref else ref - cur
+            s += d
+            if (d > mx) mx = d
+            i += 1
           }
+          Row(r.getLong(0), f, len, s, mx)
         }
-      }(enc)
-  }
+      }
+    })
 
   /** [[encodeAvi]] as a DataFrame op: each payload's bytes become
     * ceil(len / (w·h)) frames (payload must tile exactly — a real
     * ingest would resize; require keeps the contract loud), wrapped in
     * one AVI per row with the per-row fps. */
   def toAvi(media: DataFrame, fpsCol: String, width: Int, height: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
     val fb = width * height
-    media.select(col("media_id").cast("long"), col("payload"),
-        col(fpsCol).cast("int"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val raw = r.getAs[Array[Byte]](1)
-          require(raw.length % fb == 0,
-            s"toAvi: payload (${raw.length} B) must tile ${width}x$height frames")
-          val frames = raw.grouped(fb).toArray
-          Row(r.getLong(0), encodeAvi(frames, width, height, r.getInt(2)))
-        }
-      }(enc)
+    codecStage(media, payloadField, fpsCol)(_.map { r =>
+      val raw = r.getAs[Array[Byte]](1)
+      require(raw.length % fb == 0,
+        s"toAvi: payload (${raw.length} B) must tile ${width}x$height frames")
+      Row(r.getLong(0), encodeAvi(raw.grouped(fb).toArray, width, height, r.getInt(2)))
+    })
   }
 
   /** JVM-side single-image helpers shared by the encode/decode
@@ -701,19 +625,11 @@ object Multimodal {
     * Payload bytes → 8-bit grayscale PNG of the given width (payload
     * length must tile the raster). Narrow mapPartitions; the codec
     * writes to in-memory streams (disk cache off). */
-  def toGrayPng(media: DataFrame, width: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false) // once per partition
-        rows.map { r =>
-          Row(r.getLong(0), encodeGrayPngBytes(r.getAs[Array[Byte]](1), width))
-        }
-      }(enc)
-  }
+  def toGrayPng(media: DataFrame, width: Int): DataFrame =
+    codecStage(media, payloadField) { rows =>
+      javax.imageio.ImageIO.setUseCache(false) // once per partition
+      rows.map(r => Row(r.getLong(0), encodeGrayPngBytes(r.getAs[Array[Byte]](1), width)))
+    }
 
   /** ===== REAL decode =====
     * `javax.imageio` per partition: decodes PNG/JPEG/BMP payloads and
@@ -724,52 +640,44 @@ object Multimodal {
     * decode_ok = false with NULL features instead of failing the
     * stage — at 100 TB some payloads WILL be corrupt, and a poison-pill
     * row must not kill the job. */
-  def decodeImageFeatures(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("pixel_hex", StringType),
-      StructField("decode_ok", BooleanType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false) // once per partition
-        rows.map { r =>
-          val id = r.getLong(0)
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-            if (img == null) Row(id, null, null, null, false)
-            else {
-              val (w, h) = (img.getWidth, img.getHeight)
-              val raster = img.getRaster
-              val bands = raster.getNumBands
-              val sb = new java.lang.StringBuilder(w * h * bands * 2)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  var b = 0
-                  while (b < bands) {
-                    val v = raster.getSample(x, y, b) & 0xff
-                    sb.append("0123456789ABCDEF".charAt(v >>> 4))
-                    sb.append("0123456789ABCDEF".charAt(v & 0xf))
-                    b += 1
-                  }
-                  x += 1
+  def decodeImageFeatures(media: DataFrame): DataFrame =
+    codecStage(media, Seq("width" -> IntegerType, "height" -> IntegerType,
+        "pixel_hex" -> StringType, "decode_ok" -> BooleanType)) { rows =>
+      javax.imageio.ImageIO.setUseCache(false) // once per partition
+      rows.map { r =>
+        val id = r.getLong(0)
+        try {
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+          if (img == null) Row(id, null, null, null, false)
+          else {
+            val (w, h) = (img.getWidth, img.getHeight)
+            val raster = img.getRaster
+            val bands = raster.getNumBands
+            val sb = new java.lang.StringBuilder(w * h * bands * 2)
+            var y = 0
+            while (y < h) {
+              var x = 0
+              while (x < w) {
+                var b = 0
+                while (b < bands) {
+                  val v = raster.getSample(x, y, b) & 0xff
+                  sb.append("0123456789ABCDEF".charAt(v >>> 4))
+                  sb.append("0123456789ABCDEF".charAt(v & 0xf))
+                  b += 1
                 }
-                y += 1
+                x += 1
               }
-              Row(id, w, h, sb.toString, true)
+              y += 1
             }
-            // NonFatal, not just IOException: codec internals throw
-            // unchecked exceptions on some malformed inputs, and a
-            // poison-pill row must not kill the job
-          } catch { case scala.util.control.NonFatal(_) => Row(id, null, null, null, false) }
-        }
-      }(enc)
-  }
+            Row(id, w, h, sb.toString, true)
+          }
+          // NonFatal, not just IOException: codec internals throw
+          // unchecked exceptions on some malformed inputs, and a
+          // poison-pill row must not kill the job
+        } catch { case scala.util.control.NonFatal(_) => Row(id, null, null, null, false) }
+      }
+    }
 
   // ───────────────────────────────────────────────────────────────────
   // Transform-coded lossy image lane: integer 8×8 DCT (JPEG-style)
@@ -905,45 +813,33 @@ object Multimodal {
     * [[decodeImageFeatures]]). Narrow mapPartitions, O(1) work per
     * row — the 100 TB shape is one CPU-bound scan stage, no shuffle
     * before the caller's own aggregation. */
-  def imageDctFeatures(media: DataFrame, qualityCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("quality", IntegerType),
-      StructField("dc_q", LongType),
-      StructField("n_nonzero", IntegerType),
-      StructField("max_abs_err", IntegerType),
-      StructField("sse", LongType),
-      StructField("recon_sum", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"),
-        col(qualityCol).cast("int"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val b = r.getAs[Array[Byte]](1)
-          if (b == null || b.length != 64) Iterator.empty
-          else {
-            val pixels = Array.tabulate(64)(i => b(i) & 0xff)
-            val quality = r.getInt(2)
-            val (qz, recon) = dct8x8RoundTrip(pixels, quality)
-            var k = 0
-            var nnz = 0
-            var maxErr = 0
-            var sse = 0L
-            var reconSum = 0L
-            while (k < 64) {
-              if (qz(k) != 0L) nnz += 1
-              val d = pixels(k) - recon(k)
-              val a = if (d < 0) -d else d
-              if (a > maxErr) maxErr = a
-              sse += d.toLong * d
-              reconSum += recon(k)
-              k += 1
-            }
-            Iterator.single(Row(r.getLong(0), quality, qz(0), nnz, maxErr, sse, reconSum))
-          }
+  def imageDctFeatures(media: DataFrame, qualityCol: String): DataFrame =
+    codecStage(media, Seq("quality" -> IntegerType, "dc_q" -> LongType,
+        "n_nonzero" -> IntegerType, "max_abs_err" -> IntegerType, "sse" -> LongType,
+        "recon_sum" -> LongType), qualityCol)(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      if (b == null || b.length != 64) Iterator.empty
+      else {
+        val pixels = Array.tabulate(64)(i => b(i) & 0xff)
+        val quality = r.getInt(2)
+        val (qz, recon) = dct8x8RoundTrip(pixels, quality)
+        var k = 0
+        var nnz = 0
+        var maxErr = 0
+        var sse = 0L
+        var reconSum = 0L
+        while (k < 64) {
+          if (qz(k) != 0L) nnz += 1
+          val d = pixels(k) - recon(k)
+          val a = if (d < 0) -d else d
+          if (a > maxErr) maxErr = a
+          sse += d.toLong * d
+          reconSum += recon(k)
+          k += 1
         }
-      }(enc)
-  }
+        Iterator.single(Row(r.getLong(0), quality, qz(0), nnz, maxErr, sse, reconSum))
+      }
+    })
 
   /** 3×3 box-filter features over per-media rasters via a 2-D
     * INTEGRAL IMAGE computed entirely in window arithmetic — the
@@ -1142,35 +1038,25 @@ object Multimodal {
   def goertzelPower(media: DataFrame, n: Int = goertzelN,
                     bins: Seq[(Int, Long)] = goertzelBins): DataFrame = {
     require(n > 0 && bins.nonEmpty, "goertzelPower: need samples and bins")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("bin_k", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("power", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
     val binArr = bins.toArray
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val nSamp = math.min(b.length / 2, n)
-          binArr.iterator.map { case (k, c) =>
-            var s1 = 0L
-            var s2 = 0L
-            var i = 0
-            while (i < nSamp) {
-              val x = (((b(2 * i + 1): Int) << 8) | (b(2 * i) & 0xff)).toLong
-              val s0 = x + ((c * s1) >> 14) - s2
-              s2 = s1
-              s1 = s0
-              i += 1
-            }
-            val p = s1 * s1 + s2 * s2 - ((c * s1) >> 14) * s2
-            Row(id, k, nSamp, p)
-          }
+    codecStage(media, Seq("bin_k" -> IntegerType, "n_samples" -> IntegerType,
+        "power" -> LongType))(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      val xs = pcm16(b, 0, 2 * math.min(b.length / 2, n)) // the first n samples
+      binArr.iterator.map { case (k, c) =>
+        var s1 = 0L
+        var s2 = 0L
+        var i = 0
+        while (i < xs.length) {
+          val s0 = xs(i) + ((c * s1) >> 14) - s2
+          s2 = s1
+          s1 = s0
+          i += 1
         }
-      }(enc)
+        val p = s1 * s1 + s2 * s2 - ((c * s1) >> 14) * s2
+        Row(r.getLong(0), k, xs.length, p)
+      }
+    })
   }
 
   /** Histogram equalization per raster (Gonzalez & Woods §3.3, the
@@ -1234,44 +1120,28 @@ object Multimodal {
   def resamplePcm(media: DataFrame, frameSamples: Int = 16): DataFrame = {
     require(frameSamples >= 2 && frameSamples % 2 == 0,
       "resamplePcm: frameSamples must be even and >= 2")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_out", IntegerType),
-      StructField("energy_out", LongType),
-      StructField("checksum", LongType),
-      StructField("peak_out", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val nSamp = b.length / 2
-          val nFrames = (nSamp + frameSamples - 1) / frameSamples
-          (0 until nFrames).iterator.map { f =>
-            val start = f * frameSamples
-            val end = math.min(start + frameSamples, nSamp)
-            var i = start
-            var k = 0
-            var energy = 0L
-            var checksum = 0L
-            var peak = 0
-            while (i + 1 < end) {
-              val v0 = ((b(2 * i + 1): Int) << 8) | (b(2 * i) & 0xff)
-              val v1 = ((b(2 * i + 3): Int) << 8) | (b(2 * i + 2) & 0xff)
-              val o = (v0 + v1) / 2 // truncates toward zero, like `//`
-              energy += o.toLong * o
-              checksum += o.toLong * (k + 1)
-              val a = if (o < 0) -o else o
-              if (a > peak) peak = a
-              i += 2
-              k += 1
-            }
-            Row(id, f, k, energy, checksum, peak)
-          }
+    codecStage(media, Seq("frame_idx" -> IntegerType, "n_out" -> IntegerType,
+        "energy_out" -> LongType, "checksum" -> LongType, "peak_out" -> IntegerType))(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      val xs = pcm16(b, 0, b.length)
+      frameBounds(xs.length, frameSamples).map { case (f, start, end) =>
+        var i = start
+        var k = 0
+        var energy = 0L
+        var checksum = 0L
+        var peak = 0
+        while (i + 1 < end) {
+          val o = (xs(i) + xs(i + 1)) / 2 // truncates toward zero, like `//`
+          energy += o.toLong * o
+          checksum += o.toLong * (k + 1)
+          val a = if (o < 0) -o else o
+          if (a > peak) peak = a
+          i += 2
+          k += 1
         }
-      }(enc)
+        Row(r.getLong(0), f, k, energy, checksum, peak)
+      }
+    })
   }
 
   /** Otsu's automatic threshold (Otsu, IEEE TSMC 1979) per raster over
@@ -1377,38 +1247,22 @@ object Multimodal {
     * mapPartitions over payload bytes, one pass, no shuffle. */
   def zcrFrames(media: DataFrame, frameSamples: Int = 16): DataFrame = {
     require(frameSamples > 0, "zcrFrames: frameSamples must be positive")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("n_samples", IntegerType),
-      StructField("crossings", IntegerType),
-      StructField("sum_abs", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val b = r.getAs[Array[Byte]](1)
-          val nSamp = b.length / 2
-          val nFrames = nSamp / frameSamples // full frames only
-          (0 until nFrames).iterator.map { f =>
-            val start = f * frameSamples
-            val end = start + frameSamples
-            var i = start
-            var crossings = 0
-            var sumAbs = 0L
-            var prevNonNeg = false
-            while (i < end) {
-              val v = ((b(2 * i + 1): Int) << 8) | (b(2 * i) & 0xff)
-              val nonNeg = v >= 0
-              if (i > start && nonNeg != prevNonNeg) crossings += 1
-              prevNonNeg = nonNeg
-              sumAbs += (if (v < 0) -v else v).toLong
-              i += 1
-            }
-            Row(id, f, end - start, crossings, sumAbs)
-          }
+    codecStage(media, Seq("frame_idx" -> IntegerType, "n_samples" -> IntegerType,
+        "crossings" -> IntegerType, "sum_abs" -> LongType))(_.flatMap { r =>
+      val b = r.getAs[Array[Byte]](1)
+      val xs = pcm16(b, 0, b.length)
+      frameBounds(xs.length, frameSamples, fullOnly = true).map { case (f, start, end) =>
+        var i = start
+        var crossings = 0
+        var sumAbs = 0L
+        while (i < end) {
+          val v = xs(i)
+          if (i > start && (v >= 0) != (xs(i - 1) >= 0)) crossings += 1
+          sumAbs += (if (v < 0) -v else v).toLong
+          i += 1
         }
-      }(enc)
+        Row(r.getLong(0), f, end - start, crossings, sumAbs)
+      }
+    })
   }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funspec.AnyFunSpec
   * `bench_ledger.json`, corrupting the next round's vs_prev 2× retry
   * gate; the same merge path would also mix mins across scale
   * factors). The write decision and the parse are pure functions so
-  * the guard is testable without running a bench. */
+  * the guard is testable without running a bench; the host canary's
+  * fold shape is checked from its plan, untimed. */
 class BenchLedgerSpec extends AnyFunSpec {
   private val Sf01 = "/root/testdata/sf0.1"
 
@@ -47,6 +48,16 @@ class BenchLedgerSpec extends AnyFunSpec {
     it("SPARK_GRAFT_LEDGER forces: 1 re-seeds through any guard, 0 refuses any write") {
       assert(Bench.ledgerWriteAllowed(4.22, Some(Sf01), "/d/other", Some("1")))
       assert(!Bench.ledgerWriteAllowed(1.0, Some(Sf01), Sf01, Some("0")))
+    }
+  }
+
+  describe("HostCanary.fold") {
+    it("folds one task of RowsPerTask rows per core: 4 partitions over 125,000,000 rows at local[4]") {
+      val range = HostCanary.fold(SharedSpark.spark).queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Range => r
+      }.get
+      assert(range.numSlices.contains(4))
+      assert(range.start == 0L && range.end == 125000000L && range.step == 1L)
     }
   }
 }

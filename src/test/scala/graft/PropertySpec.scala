@@ -105,6 +105,113 @@ class PropertySpec extends AnyFunSpec {
     }
   }
 
+  describe("audio frame contracts against a plain-loop reference") {
+    import graft.operators.Multimodal
+
+    /** Little-endian int16 samples of `b`; a trailing odd byte is ignored. */
+    def int16s(b: Array[Byte]): Array[Int] = {
+      val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      Array.fill(b.length / 2)(bb.getShort().toInt)
+    }
+    /** (frame_idx, n_samples, Σx², peak |x|) per `fs`-sample window, trailing partial kept. */
+    def energyFrames(xs: Array[Int], fs: Int): Seq[(Int, Int, Long, Int)] = {
+      val out = Seq.newBuilder[(Int, Int, Long, Int)]
+      var f = 0
+      while (f * fs < xs.length) {
+        val end = math.min(f * fs + fs, xs.length)
+        var energy = 0L
+        var peak = 0
+        var i = f * fs
+        while (i < end) {
+          energy += xs(i).toLong * xs(i)
+          peak = math.max(peak, math.abs(xs(i)))
+          i += 1
+        }
+        out += ((f, end - f * fs, energy, peak))
+        f += 1
+      }
+      out.result()
+    }
+    /** (frame_idx, n_samples, crossings, Σ|x|) per full `fs`-sample frame only. */
+    def zcrRef(xs: Array[Int], fs: Int): Seq[(Int, Int, Int, Long)] =
+      (0 until xs.length / fs).map { f =>
+        var crossings = 0
+        var sumAbs = 0L
+        var i = f * fs
+        while (i < f * fs + fs) {
+          if (i > f * fs && (xs(i) >= 0) != (xs(i - 1) >= 0)) crossings += 1
+          sumAbs += math.abs(xs(i))
+          i += 1
+        }
+        (f, fs, crossings, sumAbs)
+      }
+    /** (frame_idx, n_out, energy, checksum, peak) of truncating pair averages per
+      * `fs`-sample frame (trailing partial frame kept, its odd last sample dropped). */
+    def resampleRef(xs: Array[Int], fs: Int): Seq[(Int, Int, Long, Long, Int)] =
+      (0 until (xs.length + fs - 1) / fs).map { f =>
+        val end = math.min(f * fs + fs, xs.length)
+        var k = 0
+        var energy = 0L
+        var checksum = 0L
+        var peak = 0
+        var i = f * fs
+        while (i + 1 < end) {
+          val o = (xs(i) + xs(i + 1)) / 2
+          energy += o.toLong * o
+          checksum += o.toLong * (k + 1)
+          peak = math.max(peak, math.abs(o))
+          k += 1
+          i += 2
+        }
+        (f, k, energy, checksum, peak)
+      }
+
+    it("pcm/wav (PCM16, μ-law, ADPCM) frames, zcr full frames and resample pairs match") {
+      val byteGen = Gen.choose(-128, 127).map(_.toByte)
+      val frameSizes = sampled(Gen.choose(1, 32), 8).distinct
+      frameSizes.foreach { fs =>
+        // random lengths plus the edges: empty, one byte, one frame ± an odd byte
+        val lengths = sampled(Gen.choose(0, 600), 6) ++ Seq(0, 1, 2 * fs - 1, 2 * fs + 1)
+        val payloads = lengths.map(n => sampled(byteGen, n).toArray)
+        val media = payloads.zipWithIndex.map { case (p, i) => (i.toLong, p, 8000 + i) }
+          .toDF("media_id", "payload", "rate")
+        def byId[T](rows: Array[org.apache.spark.sql.Row])(f: org.apache.spark.sql.Row => T)
+            : Map[Long, Seq[T]] =
+          rows.toSeq.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(f) }
+        def check[T](what: String, got: Map[Long, Seq[T]], ref: Array[Byte] => Seq[T]): Unit =
+          payloads.zipWithIndex.foreach { case (p, i) =>
+            assert(got.getOrElse(i.toLong, Seq.empty).sortBy(_.toString) ==
+              ref(p).sortBy(_.toString), s"$what: fs=$fs len=${p.length}")
+          }
+
+        val pcm = byId(Multimodal.pcmFrameFeatures(media, fs).collect())(r =>
+          (r.getInt(1), r.getInt(2), r.getLong(3), r.getInt(4)))
+        check("pcmFrameFeatures", pcm, p => energyFrames(int16s(p), fs))
+
+        def wav(format: Int) =
+          byId(Multimodal.wavFrameFeatures(
+            Multimodal.toWav(media, "rate", audioFormat = format), fs).collect()) { r =>
+            assert(r.getInt(1) == 8000 + r.getLong(0) && r.getInt(2) == 1)
+            (r.getInt(3), r.getInt(4), r.getLong(5), r.getInt(6))
+          }
+        check("wav PCM16", wav(Multimodal.WavPcm16), p => energyFrames(int16s(p), fs))
+        check("wav μ-law", wav(Multimodal.WavUlaw),
+          p => energyFrames(p.map(Multimodal.ulawToLinear), fs))
+        check("wav ADPCM", wav(Multimodal.WavImaAdpcm),
+          p => energyFrames(Multimodal.imaAdpcmDecode(p, 0, p.length), fs))
+
+        val zcr = byId(Multimodal.zcrFrames(media, fs).collect())(r =>
+          (r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
+        check("zcrFrames", zcr, p => zcrRef(int16s(p), fs))
+
+        val even = fs + (fs & 1) // resamplePcm takes even frame sizes
+        val rs = byId(Multimodal.resamplePcm(media, even).collect())(r =>
+          (r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getInt(5)))
+        check("resamplePcm", rs, p => resampleRef(int16s(p), even))
+      }
+    }
+  }
+
   describe("hash60: JVM helper vs SQL expression tree") {
     it("agrees on arbitrary strings including unicode and empties") {
       val strings = (sampled(Gen.asciiPrintableStr, 300) ++

@@ -185,6 +185,21 @@ class SessionSpec extends AnyFunSpec {
         Seq("Decontamination.scala" -> "evalShingleHashes", "Dedup.scala" -> "shingledDocs"))
     }
 
+    describe("one sample path in graft/operators/Multimodal.scala") {
+      lazy val src = read(Paths.get("src/main/scala/graft/operators/Multimodal.scala"))
+      def count(device: String): Int =
+        java.util.regex.Pattern.quote(device).r.findAllMatchIn(src).size
+      it("one little-endian int16 read") {
+        assert(count(": Int) << 8) |") == 1)
+      }
+      it("one RIFF field reader") {
+        assert(count("def u16(") == 1 && count("def u32(") == 1)
+      }
+      it("one payload step: a single row encoder") {
+        assert(count("Encoders.row(") == 1)
+      }
+    }
+
     it("no registration checks in the operators: the natives are the only path") {
       val check = ("function" + "Exists|nat" + "Fn").r
       val hits = scalaFiles("src/main/scala/graft/operators")

@@ -419,14 +419,6 @@ class TextMultimodalSpec extends AnyFunSpec {
       val empty = Seq((9L, "")).toDF("doc_id", "text")
       assert(Multimodal.sampleFrames(Multimodal.asMedia(empty, "doc_id", "text")).isEmpty)
     }
-    it("stub decode emits deterministic bounded features") {
-      val f = Multimodal.decodeStubFeatures(media)
-        .select("features").as[Seq[Double]].collect()
-      assert(f.forall(v => v.length == 8 && v.forall(x => x >= 0 && x < 1)))
-      val again = Multimodal.decodeStubFeatures(media)
-        .select("features").as[Seq[Double]].collect()
-      assert(f.toSeq == again.toSeq)
-    }
     it("real ImageIO roundtrip: decode(encode(bytes)) recovers the raster exactly") {
       val px1 = Array.tabulate[Byte](16)(i => (i * 17).toByte)     // 4×4 gradient
       val px2 = Array.tabulate[Byte](8)(i => (255 - i * 31).toByte) // 4×2
