@@ -7,23 +7,31 @@ last run's count() executed). For every query in the parent directory
 this prints the median construct and execute jobs and stages of each
 side, and whether the two formatted plans match once the ids that vary
 between runs are masked: expression ids (`#123`, `#123L`), `plan_id`s,
-and generated lambda/class names with their object hashes. Exit code 1
-on any count or plan mismatch, or a query missing from either side:
+RDD ids (a snapshot's `MapPartitionsRDD[4662]`), and generated
+lambda/class names with their object hashes. For each plan that
+differs it prints the masked unified diff, capped at DIFF_LINES lines.
+Exit code 1 on any count or plan mismatch, or a query missing from
+either side:
 
     python3 scripts/plan_diff.py <parent_probe_dir> <change_probe_dir>
 """
+import difflib
 import json
 import os
 import re
 import statistics
 import sys
 
+DIFF_LINES = 40
 PHASES = ("construct", "execute")
 METRICS = ("jobs", "stages")
 
 MASKS = [
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # the JVM-wide RDD counter: a snapshot scan's RDD id moves with every
+    # RDD created before it in the run
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     # JVM lambda classes: Multimodal$$$Lambda$4144/0x00007fb3e91e7ad8@c32908c
     (re.compile(r"\$Lambda[\w$]*/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
     # generated codegen classes and any remaining identity hashes
@@ -79,6 +87,13 @@ def main() -> int:
         same = pa is not None and pa == pb
         bad += not same
         print(f"{q} plan {'identical (masked)' if same else 'DIFFERS'}")
+        if not same and pa is not None and pb is not None:
+            diff = list(difflib.unified_diff(pa.splitlines(), pb.splitlines(),
+                                             parent_dir, change_dir, n=0, lineterm=""))
+            for line in diff[:DIFF_LINES]:
+                print(f"    {line}")
+            if len(diff) > DIFF_LINES:
+                print(f"    ... {len(diff) - DIFF_LINES} more diff lines")
     extra = sorted(set(change) - set(parent))
     for q in extra:
         print(f"{q:28} missing from {parent_dir}")

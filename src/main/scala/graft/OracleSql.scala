@@ -522,7 +522,7 @@ object OracleSql {
        |FROM scored ORDER BY doc_id""".stripMargin
 
   /** quantized embeddings + exact integer norms (mirrors
-    * Similarity.quantize/normSq at scale 6). */
+    * Similarity.quantize and its `dot_q(v, v)` norms at scale 6). */
   private val embSql: String =
     """ev AS (
       |  SELECT vec_id, label,

@@ -789,7 +789,7 @@ object SparkEntry {
 
   /** MinHash-LSH near-dup pairs; the signature emits inside the scan
     * stage (native `minhash_sig`), and DedupSpec checks it against the
-    * aggregation-form reference [[Dedup.minhashSigAgg]]. */
+    * aggregation-form reference `minhashSigAgg` it defines. */
   private def qDedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
       n = 3, numHashes = 32, bands = 8, threshold = 0.5)
@@ -1312,7 +1312,7 @@ object SparkEntry {
 
   /** SimHash near-dup pairs; the signature emits inside the scan stage
     * (native `simhash_sig`), and DedupSpec checks it against the
-    * aggregation-form reference [[Dedup.simhashAgg]]. */
+    * aggregation-form reference `simhashAgg` it defines. */
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text",
       maxHamming = 3, bands = 4)
@@ -2594,10 +2594,8 @@ object SparkEntry {
     * daily return: B=20 replicates whose weights are pure hash
     * functions — replayable resampling, no RNG. */
   private def qHashBootstrap(s: SparkSession, dir: String): DataFrame =
-    Sampling.hashBootstrapCi(
-      Marts.dailyReturns(s, dir)
-        .filter(col("daily_return_pct").isNotNull),
-      "symbol", col("trade_date"), scaled(col("daily_return_pct"), 4))
+    Sampling.hashBootstrapCi(DailyAnalytics.returnsPanel(Marts.dailyReturns(s, dir), "y"),
+      "symbol", col("trade_date"), col("y"))
       .withColumnRenamed("grp", "symbol")
       .orderBy("symbol")
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Funcs._
@@ -43,6 +43,62 @@ object DailyAnalytics {
 
   private def bySymbol = Window.partitionBy("symbol").orderBy("trade_date")
   private def last(n: Int) = bySymbol.rowsBetween(-(n - 1), 0)
+
+  /** The exact returns panel every returns operator starts from: the
+    * rows with a non-null `daily_return_pct`, as
+    * (symbol, trade_date, `name`) with `name` the return's exact
+    * scale-`scale` long ([[graft.functions.Funcs.scaled]]). Aggregates
+    * that do not group by day prune `trade_date`; a caller whose
+    * panel feeds more than one branch snapshots it itself. */
+  private[graft] def returnsPanel(returns: DataFrame, name: String, scale: Int = 4): DataFrame =
+    returns.filter(col("daily_return_pct").isNotNull)
+      .select(col("symbol"), col("trade_date"),
+        scaled(col("daily_return_pct"), scale).as(name))
+
+  /** The exact-moments device: `count(1)` as `n`, then one sum per
+    * alias in `sums`. An alias is a one-character prefix and one or two
+    * variable labels: `sy` is Σy and `sxy` is Σx·y. A label reads the
+    * column `vars` maps it to, else the column of that name. First
+    * moments are long sums; every product is summed as
+    * dec38(a)·dec38(b), exact in DECIMAL(38,0) — the [[sharpeRatio]]
+    * overflow rule (HUGEINT in the DuckDB mirror). */
+  private[graft] def momentSums(n: String, sums: String*)(vars: (Char, Column)*): Seq[Column] = {
+    val v = vars.toMap.withDefault(l => col(l.toString))
+    count(lit(1)).as(n) +: sums.map { s =>
+      (s.tail.toList match {
+        case List(a) => sum(v(a))
+        case List(a, b) => sum(dec38(v(a)) * dec38(v(b)))
+      }).as(s)
+    }
+  }
+
+  /** The finisher: n·Σab − Σa·Σb over the count `n` and the sums named
+    * `sab`, `sa` and `sb`, in DECIMAL(38,0). With Σa², Σb² it is the
+    * n²-scaled (co)variance; the whole product is exact, so its one
+    * cast to double is the same bits in both engines. */
+  private[graft] def coMoment(n: String, sab: String, sa: String, sb: String): Column =
+    dec38(col(n)) * dec38(col(sab)) - dec38(col(sa)) * dec38(col(sb))
+
+  /** OLS slope of y on x over [[momentSums]]' `s`-prefixed sums. */
+  private def slope(n: String, x: String, y: String): Column =
+    coMoment(n, s"s$x$y", s"s$x", s"s$y").cast("double") /
+      nullifZero(coMoment(n, s"s$x$x", s"s$x", s"s$x").cast("double"))
+
+  /** Pearson correlation of x and y over [[momentSums]]' `s`-prefixed
+    * sums: one fixed scalar tree, null on zero variance. */
+  private def correlation(n: String, x: String, y: String): Column =
+    coMoment(n, s"s$x$y", s"s$x", s"s$y").cast("double") /
+      nullifZero(
+        sqrt(coMoment(n, s"s$x$x", s"s$x", s"s$x").cast("double")) *
+        sqrt(coMoment(n, s"s$y$y", s"s$y", s"s$y").cast("double")))
+
+  /** The equal-weight market index of a panel with a `y` return: one
+    * ⌊Σy/n⌋ per day, as `name` (exact and portable). */
+  private def marketIndex(r: DataFrame, name: String = "x"): DataFrame =
+    r.groupBy("trade_date")
+      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
+      .select(col("trade_date"),
+        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as(name))
 
   /** int_daily_returns.sql:29-59 — lag-based returns per symbol-day. */
   def dailyReturns(bars: DataFrame): DataFrame = {
@@ -261,9 +317,7 @@ object DailyAnalytics {
     * join of the universe-sized bounds frame. */
   def winsorizeReturns(returns: DataFrame, pLo: Double = 0.01,
                        pHi: Double = 0.99): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("xs"))
+    val r = returnsPanel(returns, "xs")
     val bounds = r.groupBy("symbol").agg(
       percentile(col("xs"), lit(pLo)).as("lo_s"),
       percentile(col("xs"), lit(pHi)).as("hi_s"))
@@ -310,9 +364,7 @@ object DailyAnalytics {
     // deviations, final agg); snapshot it once at the already-reduced
     // symbol×day grain so the upstream bar chain isn't recomputed per
     // branch (a full re-scan each at 100 TB)
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("xs"))
-      .snapshot()
+    val r = returnsPanel(returns, "xs").drop("trade_date").snapshot()
     val med = r.groupBy("symbol").agg(median(col("xs")).as("med_s"))
     val dev = r.join(broadcast(med), "symbol")
       .withColumn("dev_s", abs(col("xs") - col("med_s")))
@@ -331,7 +383,8 @@ object DailyAnalytics {
     * universe — the classic risk/pairs-trading matrix. Computed from
     * EXACT integer sums over the scale-4 fixed-point returns
     * (Σx, Σy, Σxy, Σx², Σy² as longs, one shuffle, partial-aggregable),
-    * then one fixed scalar expression per pair:
+    * then one fixed scalar expression per pair ([[correlation]] over
+    * [[coMoment]]):
     *   corr = (n·Σxy − Σx·Σy) / (√(n·Σx²−Σx²̂) · √(n·Σy²−Σy²̂))
     * so the result is bit-portable (no FP accumulation order anywhere).
     * Overflow headroom: |xs| ≤ 10⁶ (100% in scale-4), so n·Σxy at ten
@@ -343,16 +396,8 @@ object DailyAnalytics {
     * (NOT corpus-quadratic; S is a catalog dimension). The grouped
     * sums reduce map-side before the (s1, s2) exchange.
     */
-  /** The reduced (symbol, trade_date, xs) panel both correlation
-    * consumers share — checkpointed so neither re-scans upstream. */
-  private def reducedReturns(returns: DataFrame): DataFrame =
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("xs"))
-      .snapshot()
-
   def pairCorrelation(returns: DataFrame, minDays: Int = 30): DataFrame =
-    pairCorrelationFromReduced(reducedReturns(returns), minDays)
+    pairCorrelationFromReduced(returnsPanel(returns, "xs").snapshot(), minDays)
 
   /** Symbol-block count for the 2-D blocked pair join, ADAPTIVE in the
     * measured symbol cardinality S: per-task aggregation state is
@@ -373,7 +418,7 @@ object DailyAnalytics {
     * a PHYSICAL partitioning strategy — every (s1,s2) pair still
     * matches exactly once at any B, so results are bit-identical and
     * the oracle is untouched; the one extra driver-side scalar is a
-    * distinct-count on the already-checkpointed reduced panel. */
+    * distinct-count on the already-checkpointed returns panel. */
   private[graft] def pairBlocks(symbols: Long): Int =
     if (symbols <= 512) 1 else math.min(8, math.ceil(symbols / 256.0).toInt)
 
@@ -386,7 +431,7 @@ object DailyAnalytics {
 
   /** The 2-D blocked co-partitioned pair self-join — the device both
     * all-pairs lanes ([[pairCorrelation]]/[[pairsSpread]] and
-    * [[headToHead]]) are built on. Input is the reduced panel
+    * [[headToHead]]) are built on. Input is the [[returnsPanel]]
     * (symbol, trade_date, xs); output is one row per (s1 < s2, day)
     * with both sides' values as (x, y), each pair matched EXACTLY
     * once.
@@ -414,7 +459,7 @@ object DailyAnalytics {
     * The block-dial distinct-count is an EAGER action at
     * DataFrame-construction time — safe only because the input is a
     * materialized snapshot (every caller passes the snapshot'd
-    * reduced panel). Guard the contract: an un-checkpointed frame
+    * [[returnsPanel]]). Guard the contract: an un-checkpointed frame
     * here would silently pay a full upstream recompute just to size
     * the block dial, and would make plan-only inspection trigger a
     * job. */
@@ -505,11 +550,7 @@ object DailyAnalytics {
     // PAIR-grain rows pay the decimal cost; the S²·D hot-path sums
     // above stay long.
     g.select(col("s1"), col("s2"), col("n_days"),
-      r4((dec38(col("n_days")) * col("sxy") - dec38(col("sx")) * col("sy")).cast("double") /
-        nullifZero(
-          sqrt((dec38(col("n_days")) * col("sxx") - dec38(col("sx")) * col("sx")).cast("double")) *
-          sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * col("sy")).cast("double"))))
-        .as("return_corr"))
+      r4(correlation("n_days", "x", "y")).as("return_corr"))
   }
 
   /** Head-to-head outperformance grid for pairwise-preference models
@@ -526,7 +567,7 @@ object DailyAnalytics {
     * so results are bit-equal to the naive form and the oracle is
     * untouched. */
   def headToHead(returns: DataFrame): DataFrame =
-    blockedPairJoin(reducedReturns(returns))
+    blockedPairJoin(returnsPanel(returns, "xs").snapshot())
       .filter(col("x") =!= col("y"))
       .select(col("s1").as("i"), col("s2").as("j"),
         col("x").as("yi"), col("y").as("yj"))
@@ -549,26 +590,12 @@ object DailyAnalytics {
     * are one more partial-agg shuffle — two shuffles total, no windows.
     */
   def marketBeta(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    // Σ products in DECIMAL(38,0) — same overflow rule as [[sharpeRatio]]
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the join probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
-    r.join(broadcast(mkt), "trade_date")
-      .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
-        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"))
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the join probe
+    val m = momentSums("n_days", "sx", "sy", "sxy", "sxx")()
+    r.join(broadcast(marketIndex(r)), "trade_date")
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n_days") >= minDays)
-      .select(col("symbol"), col("n_days"),
-        r4((dec38(col("n_days")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
-          nullifZero((dec38(col("n_days")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")))
-          .as("beta"))
+      .select(col("symbol"), col("n_days"), r4(slope("n_days", "x", "y")).as("beta"))
   }
 
   /** Two-factor OLS per symbol: y ~ α + β₁·mkt + β₂·mkt₋₁ — the
@@ -592,28 +619,16 @@ object DailyAnalytics {
     * (calendar-bounded, not data-scale); per-symbol moments are one
     * partial-aggregable shuffle — two exchanges total, no self-join. */
   def twoFactorRegression(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the join probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x1"))
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the join probe
     // lag over the DAYS DIMENSION (≤ calendar length — not data-scale,
     // so the unpartitioned window is a bounded dim frame by design)
-    val lagged = mkt
+    val lagged = marketIndex(r, "x1")
       .withColumn("x2", lag(col("x1"), 1).over(Window.orderBy("trade_date")))
       .filter(col("x2").isNotNull)
+    val m = momentSums("n", "s1", "s2", "sy", "s11", "s12", "s22", "s1y", "s2y")(
+      '1' -> col("x1"), '2' -> col("x2"))
     val g = r.join(broadcast(lagged), "trade_date")
-      .groupBy("symbol").agg(
-        count(lit(1)).as("n"),
-        sum(col("x1")).as("s1"), sum(col("x2")).as("s2"), sum(col("y")).as("sy"),
-        sum(dec38(col("x1")) * dec38(col("x1"))).as("s11"),
-        sum(dec38(col("x1")) * dec38(col("x2"))).as("s12"),
-        sum(dec38(col("x2")) * dec38(col("x2"))).as("s22"),
-        sum(dec38(col("x1")) * dec38(col("y"))).as("s1y"),
-        sum(dec38(col("x2")) * dec38(col("y"))).as("s2y"))
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n") >= minDays)
     // Cramer over the 3×3 normal equations, every determinant one
     // fixed double tree (identical text in the oracle)
@@ -735,23 +750,25 @@ object DailyAnalytics {
     * expression tree over those exact values, so Spark and DuckDB agree
     * bit-for-bit. nΣy² − (Σy)² ≥ 0 holds exactly (Cauchy–Schwarz over
     * integers), so the √ argument is never a rounding-negative.
-    * Σy² and the variance numerator run in DECIMAL(38,0) (long would
-    * overflow: a 10⁴% synthetic return is y≈10⁸, y²≈10¹⁶, and n·Σy²
-    * clears 2^63); the DuckDB mirror uses HUGEINT — both sides then
-    * cast the SAME exact integer to double, so bits still match. */
+    *
+    * The overflow rule the other operators cite: n and Σy stay long,
+    * Σy² is a [[momentSums]] product (dec38(y)·dec38(y)) and the
+    * variance numerator nΣy² − (Σy)² is [[coMoment]], both in
+    * DECIMAL(38,0). As longs they would overflow: at |y| = 10⁶ (a 100%
+    * day at scale 4) over 2,500 days, n·Σy² = 6.25·10¹⁸ is within 1.5×
+    * of 2⁶³, and a 10⁴% synthetic return (y ≈ 10⁸, y² ≈ 10¹⁶) clears
+    * it. The DuckDB mirror uses HUGEINT — both sides then cast the
+    * SAME exact integer to double, so bits still match. */
   def sharpeRatio(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
-      .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("y")).as("sy"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
+    val m = momentSums("n_days", "sy", "syy")()
+    returnsPanel(returns, "y")
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
         r4(col("sy").cast("double") / col("n_days") / 10000.0)
           .as("mean_return_pct"),
         r4((col("sy").cast("double") / col("n_days")) /
-          nullifZero(sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double") /
+          nullifZero(sqrt(coMoment("n_days", "syy", "sy", "sy").cast("double") /
             (col("n_days") * (col("n_days") - lit(1L))))) * sqrt(lit(252.0)))
           .as("sharpe_annual"))
   }
@@ -765,12 +782,9 @@ object DailyAnalytics {
     * and ONE fixed scalar tree over the exact integers. */
   def sortinoRatio(returns: DataFrame, minDays: Int = 30): DataFrame = {
     val dn = when(col("y") < 0, col("y")).otherwise(lit(0L))
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
-      .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("y")).as("sy"),
-        sum(dec38(dn) * dec38(dn)).as("sdd"))
+    val m = momentSums("n_days", "sy", "sdd")('d' -> dn)
+    returnsPanel(returns, "y")
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n_days") >= minDays)
       .select(col("symbol"), col("n_days"),
         r4(col("sy").cast("double") / col("n_days") / 10000.0)
@@ -803,19 +817,11 @@ object DailyAnalytics {
       .filter(col("mom").isNotNull && col("fwd").isNotNull)
       .select(col("trade_date"), scaled(col("mom"), 4).as("x"),
         scaled(col("fwd"), 4).as("y"))
-    base.groupBy("trade_date")
-      .agg(count(lit(1)).as("n_symbols"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
-        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
+    val m = momentSums("n_symbols", "sx", "sy", "sxy", "sxx", "syy")()
+    base.groupBy("trade_date").agg(m.head, m.tail: _*)
       .filter(col("n_symbols") >= minSymbols)
       .select(col("trade_date"), col("n_symbols"),
-        r4((dec38(col("n_symbols")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
-          nullifZero(
-            sqrt((dec38(col("n_symbols")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")) *
-            sqrt((dec38(col("n_symbols")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double"))))
-          .as("ic"))
+        r4(correlation("n_symbols", "x", "y")).as("ic"))
       .orderBy("trade_date")
   }
 
@@ -1004,9 +1010,8 @@ object DailyAnalytics {
          |         THEN (element_at(acc, 3) + element_at(x, 3)) div $P
          |       ELSE (${P - 1} * element_at(acc, 5) + element_at(x, 3)) div $P END)"""
         .stripMargin
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), struct(col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y")).as("ty"))
+    returnsPanel(returns, "y")
+      .select(col("symbol"), struct(col("trade_date"), col("y")).as("ty"))
       .groupBy("symbol")
       .agg(sort_array(collect_list(col("ty"))).as("tys"))
       .select(col("symbol"),
@@ -1104,9 +1109,7 @@ object DailyAnalytics {
     val syms = returns.select(col("symbol")).distinct()
       .orderBy("symbol").limit(2)
       .withColumn("rnk", row_number().over(Window.orderBy("symbol")))
-    val panel = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("x"))
-      .join(broadcast(syms), "symbol")
+    val panel = returnsPanel(returns, "x").join(broadcast(syms), "symbol")
     val counts = panel.agg(
       sum(when(col("rnk") === 1, 1L).otherwise(0L)).as("n_a"),
       sum(when(col("rnk") === 2, 1L).otherwise(0L)).as("n_b"),
@@ -1146,15 +1149,8 @@ object DailyAnalytics {
     * one broadcast join of the day-dimension index + two per-symbol
     * rank windows + a partial-aggregable rollup — S·D grain. */
   def spearmanVsMarket(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the join probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
-    val ranked = r.join(broadcast(mkt), "trade_date")
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the join probe
+    val ranked = r.join(broadcast(marketIndex(r)), "trade_date")
       .withColumn("ry",
         lit(2L) * rank().over(Window.partitionBy("symbol").orderBy("y")) +
           count(lit(1)).over(Window.partitionBy("symbol", "y")) - 1L)
@@ -1237,9 +1233,7 @@ object DailyAnalytics {
     * windows (by date for the split, by value for ranks) and
     * partial-aggregable sums — S·D grain, no pair fan-out. */
   def mannWhitneySplit(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val r = returnsPanel(returns, "y")
     val ranked = r
       .withColumn("day_idx", row_number().over(
         Window.partitionBy("symbol").orderBy("trade_date")))
@@ -1327,7 +1321,7 @@ object DailyAnalytics {
       scaled(lit(0.5) * (u - d) * (u - d) -
         (lit(2.0) * log(lit(2.0)) - 1.0) * c * c, 8).as("gk"),
       scaled(u * (u - c) + d * (d - c), 8).as("rs"))
-    def ann(s: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
+    def ann(s: Column, n: Column) =
       rd(sqrt(greatest(s.cast("double"), lit(0.0)) / n.cast("double") / 1e8 * 252.0),
         4)
     terms.groupBy("symbol").agg(
@@ -1348,25 +1342,18 @@ object DailyAnalytics {
     * report leads with, next to [[sharpeRatio]]'s absolute form.
     * Shape: one broadcast day-index join + one rollup. */
   def trackingError(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // index build AND probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
+    val r = returnsPanel(returns, "y").snapshot() // index build AND probe
     // moments in DECIMAL(38,0): the synthetic panel carries extreme
     // returns (scaled y up to ~1e9), so a² sums and n·Σa² outgrow
     // BIGINT — same discipline as the pair-correlation lane
-    r.join(broadcast(mkt), "trade_date")
+    r.join(broadcast(marketIndex(r)), "trade_date")
       .select(col("symbol"), (col("y") - col("x")).cast("decimal(38,0)").as("a"))
       .groupBy("symbol").agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(col("a")).as("sa"), sum(col("a") * col("a")).as("saa"))
       .filter(col("n") >= minDays)
       .withColumn("te",
-        sqrt((col("n") * col("saa") - col("sa") * col("sa")).cast("double") /
+        sqrt(coMoment("n", "saa", "sa", "sa").cast("double") /
           (col("n") * col("n")).cast("double")) / 1e4)
       .select(col("symbol"), col("n").cast("long").as("n_days"),
         rd(col("te"), 4).as("tracking_error"),
@@ -1503,16 +1490,9 @@ object DailyAnalytics {
     * Shape: one broadcast day-index join, one lag window, one
     * grouped rollup — S·D grain, no pair fan-out. */
   def dimsonBeta(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the join probe
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the join probe
     val w = Window.partitionBy("symbol").orderBy("trade_date")
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
-    val lagged = r.join(broadcast(mkt), "trade_date")
+    val lagged = r.join(broadcast(marketIndex(r)), "trade_date")
       .withColumn("x1", lag(col("x"), 1).over(w))
       .filter(col("x1").isNotNull)
     // second-moment/cross sums in DECIMAL(38,0), the trackingError/
@@ -1520,12 +1500,9 @@ object DailyAnalytics {
     // series and a LongType sum would WRAP silently at large panels
     // (the DuckDB mirror errors loudly — the two sides must not fail
     // differently); first moments stay long (≤ ~1e13)
-    val g = lagged.groupBy("symbol").agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("s0"), sum(col("x1")).as("s1"), sum(col("y")).as("sy"),
-      sum(dec38(col("x")) * col("x")).as("s00"), sum(dec38(col("x")) * col("x1")).as("s01"),
-      sum(dec38(col("x1")) * col("x1")).as("s11"),
-      sum(dec38(col("x")) * col("y")).as("s0y"), sum(dec38(col("x1")) * col("y")).as("s1y"))
+    val m = momentSums("n", "s0", "s1", "sy", "s00", "s01", "s11", "s0y", "s1y")(
+      '0' -> col("x"), '1' -> col("x1"))
+    val g = lagged.groupBy("symbol").agg(m.head, m.tail: _*)
     // Cramer over [[n,s0,s1],[s0,s00,s01],[s1,s01,s11]] — fixed trees
     val (n, s0, s1, sy) =
       (col("n").cast("double"), col("s0").cast("double"),
@@ -1565,15 +1542,8 @@ object DailyAnalytics {
     * guard when either tie product zeroes out. */
   def kendallVsMarket(returns: DataFrame, window: Int = 60,
                       minDays: Int = 10): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // index build AND the tail probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
-    val tail = r.join(broadcast(mkt), "trade_date")
+    val r = returnsPanel(returns, "y").snapshot() // index build AND the tail probe
+    val tail = r.join(broadcast(marketIndex(r)), "trade_date")
       .withColumn("rn", row_number().over(
         Window.partitionBy("symbol").orderBy(col("trade_date").desc)))
       .filter(col("rn") <= window)
@@ -1715,9 +1685,7 @@ object DailyAnalytics {
   def pageHinkley(returns: DataFrame, lambda: Long = 50000L): DataFrame = {
     val w = Window.partitionBy("symbol").orderBy("trade_date")
     val pre = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val x = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
+    val x = returnsPanel(returns, "x")
     x.withColumn("i", row_number().over(w))
       .withColumn("s", sum(col("x")).over(pre))
       .withColumn("dev",
@@ -1744,29 +1712,19 @@ object DailyAnalytics {
     * panel, one date-keyed self-join of two single-symbol series, one
     * 1-row aggregate. */
   def minVariancePair(returns: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val syms = returns.select(col("symbol")).distinct()
       .orderBy("symbol").limit(2)
       .withColumn("rnk", row_number().over(Window.orderBy("symbol")))
-    val panel = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
-      .join(broadcast(syms), "symbol")
+    val panel = returnsPanel(returns, "x").join(broadcast(syms), "symbol")
     val a = panel.filter(col("rnk") === 1)
       .select(col("symbol").as("sym_a"), col("trade_date"), col("x").as("xa"))
     val b = panel.filter(col("rnk") === 2)
       .select(col("symbol").as("sym_b"), col("trade_date"), col("x").as("xb"))
-    val m = a.join(b, "trade_date")
-      .groupBy("sym_a", "sym_b")
-      .agg(count(lit(1)).as("n"),
-        sum(col("xa")).as("sa"), sum(col("xb")).as("sb"),
-        sum(col("xa").cast(dec) * col("xa").cast(dec)).as("saa"),
-        sum(col("xb").cast(dec) * col("xb").cast(dec)).as("sbb"),
-        sum(col("xa").cast(dec) * col("xb").cast(dec)).as("sab"))
-    val nD = col("n").cast(dec)
-    val va = (nD * col("saa") - col("sa").cast(dec) * col("sa").cast(dec)).cast("double")
-    val vb = (nD * col("sbb") - col("sb").cast(dec) * col("sb").cast(dec)).cast("double")
-    val cab = (nD * col("sab") - col("sa").cast(dec) * col("sb").cast(dec)).cast("double")
+    val ms = momentSums("n", "sa", "sb", "saa", "sbb", "sab")('a' -> col("xa"), 'b' -> col("xb"))
+    val m = a.join(b, "trade_date").groupBy("sym_a", "sym_b").agg(ms.head, ms.tail: _*)
+    val va = coMoment("n", "saa", "sa", "sa").cast("double")
+    val vb = coMoment("n", "sbb", "sb", "sb").cast("double")
+    val cab = coMoment("n", "sab", "sa", "sb").cast("double")
     // the n-scaled moments share the n²(n−1)·10⁸ normalizer, which
     // cancels in w*; the reported variances divide it back out
     val norm = (col("n") * (col("n") - 1)).cast("double") * 1e8
@@ -1831,9 +1789,7 @@ object DailyAnalytics {
     * grain. */
   def forecastMase(returns: DataFrame, smaWindow: Int = 5): DataFrame = {
     val w = smaWindow
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
+    val base = returnsPanel(returns, "x")
       .withColumn("rn", row_number().over(bySymbol))
       .withColumn("prev", lag(col("x"), 1).over(bySymbol))
       .withColumn("s5", sum(col("x")).over(bySymbol.rowsBetween(-w, -1)))
@@ -1868,10 +1824,8 @@ object DailyAnalytics {
     * own grain — no date collect, no global sort. */
   def seasonalDecompose(returns: DataFrame): DataFrame = {
     val w5 = bySymbol.rowsBetween(-2, 2)
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"),
-        dayofweek(col("trade_date")).as("dow"))
+    val base = returnsPanel(returns, "x")
+      .withColumn("dow", dayofweek(col("trade_date")))
       .withColumn("t5", sum(col("x")).over(w5))
       .withColumn("c5", count(lit(1)).over(w5))
       .filter(col("c5") === 5)
@@ -1913,9 +1867,7 @@ object DailyAnalytics {
   def cusumChangepoint(returns: DataFrame): DataFrame = {
     val w = bySymbol
     val wAll = Window.partitionBy("symbol")
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
+    val base = returnsPanel(returns, "x")
       .withColumn("i", row_number().over(w).cast("long"))
       .withColumn("c", sum(col("x")).over(w))
       .withColumn("n", count(lit(1)).over(wAll))
@@ -1962,9 +1914,7 @@ object DailyAnalytics {
     * symbol dimension. No date collect, no cross join. */
   def hurstExponent(returns: DataFrame): DataFrame = {
     val windows = Seq(8, 16, 32)
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
+    val base = returnsPanel(returns, "x")
       .withColumn("rn", (row_number().over(bySymbol) - 1).cast("long"))
       .snapshot() // feeds all three window branches + the day count
     val perW = windows.map { w =>
@@ -2066,8 +2016,7 @@ object DailyAnalytics {
   def varCvar(returns: DataFrame, alpha: Double = 0.05,
               minDays: Int = 20): DataFrame = {
     require(alpha > 0 && alpha < 1, "varCvar: alpha in (0,1)")
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
+    returnsPanel(returns, "y")
       .groupBy("symbol")
       .agg(sort_array(collect_list(col("y"))).as("ys"))
       .filter(size(col("ys")) >= minDays)
@@ -2090,24 +2039,15 @@ object DailyAnalytics {
     * and the per-symbol sums. */
   def autocorrelation(returns: DataFrame, lagDays: Int = 1,
                       minDays: Int = 30): DataFrame = {
-    val y = scaled(col("daily_return_pct"), 4)
-    val paired = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"), y.as("y"))
+    val m = momentSums("n_pairs", "sx", "sy", "sxy", "sxx", "syy")(
+      'x' -> col("y"), 'y' -> col("yl"))
+    returnsPanel(returns, "y")
       .withColumn("yl", lag(col("y"), lagDays).over(bySymbol))
       .filter(col("yl").isNotNull)
-    paired.groupBy("symbol")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("y")).as("sx"), sum(col("yl")).as("sy"),
-        sum(dec38(col("y")) * dec38(col("yl"))).as("sxy"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("sxx"),
-        sum(dec38(col("yl")) * dec38(col("yl"))).as("syy"))
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n_pairs") >= minDays)
       .select(col("symbol"), col("n_pairs"),
-        r4((dec38(col("n_pairs")) * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double") /
-          nullifZero(
-            sqrt((dec38(col("n_pairs")) * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")) *
-            sqrt((dec38(col("n_pairs")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double"))))
-          .as(s"acf_$lagDays"))
+        r4(correlation("n_pairs", "x", "y")).as(s"acf_$lagDays"))
   }
 
   /** Day-of-week seasonality profile: mean return, up-day ratio and
@@ -2165,10 +2105,10 @@ object DailyAnalytics {
     * state, the [[crossSectionalZ]] discipline); z stays exact via
     * DECIMAL(38,0) spread squares. */
   def pairsSpread(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    // ONE reduced+checkpointed panel feeds the correlation AND both
+    // ONE checkpointed returns panel feeds the correlation AND both
     // spread legs — re-deriving it per consumer would triple the
     // upstream scan (measured: almost halves the query)
-    val r0 = reducedReturns(returns)
+    val r0 = returnsPanel(returns, "xs").snapshot()
     val top = pairCorrelationFromReduced(r0, minDays)
       .orderBy(col("return_corr").desc, col("s1"), col("s2")).limit(1)
       .select(col("s1"), col("s2"))
@@ -2183,14 +2123,13 @@ object DailyAnalytics {
       // days-sized; snapshot so the stats agg and the final join don't
       // each re-run the correlation pick upstream
       .snapshot()
-    val st = sp.groupBy("s1", "s2")
-      .agg(count(lit(1)).as("n"), sum(col("spread")).as("ss"),
-        sum(dec38(col("spread")) * dec38(col("spread"))).as("sss"))
+    val m = momentSums("n", "ss", "sss")('s' -> col("spread"))
+    val st = sp.groupBy("s1", "s2").agg(m.head, m.tail: _*)
     sp.join(broadcast(st), Seq("s1", "s2"))
       .select(col("s1"), col("s2"), col("trade_date"),
         r4(col("spread").cast("double") / 10000.0).as("spread_pct"),
         r4((col("spread") - col("ss").cast("double") / col("n")) /
-          nullifZero(sqrt((dec38(col("n")) * col("sss") - dec38(col("ss")) * dec38(col("ss"))).cast("double") /
+          nullifZero(sqrt(coMoment("n", "sss", "ss", "ss").cast("double") /
             (col("n") * (col("n") - lit(1L)))))).as("spread_z"))
   }
 
@@ -2202,19 +2141,15 @@ object DailyAnalytics {
     * discipline) and come back by broadcast: the stats frame is the
     * days DIMENSION, so the panel never re-shuffles. */
   def crossSectionalZ(returns: DataFrame, minSymbols: Int = 2): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the day stats AND the join probe
-    val stats = r.groupBy("trade_date")
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
+    val r = returnsPanel(returns, "y").snapshot() // feeds the day stats AND the join probe
+    val m = momentSums("n", "sy", "syy")()
+    val stats = r.groupBy("trade_date").agg(m.head, m.tail: _*)
       .filter(col("n") >= minSymbols)
     r.join(broadcast(stats), "trade_date")
       .select(col("symbol"), col("trade_date"),
         r4(col("y").cast("double") / 10000.0).as("return_pct"),
         r4((col("y") - col("sy").cast("double") / col("n")) /
-          nullifZero(sqrt((dec38(col("n")) * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double") /
+          nullifZero(sqrt(coMoment("n", "syy", "sy", "sy").cast("double") /
             (col("n") * (col("n") - lit(1L)))))).as("z"))
   }
 
@@ -2254,10 +2189,7 @@ object DailyAnalytics {
     * never by symbols or rows). */
   def decileBacktest(bars: DataFrame, lagDays: Int = 21,
                      windowDays: Int = 60): DataFrame = {
-    val rets = dailyReturns(bars)
-      .filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val rets = returnsPanel(dailyReturns(bars), "y")
     val port = momentumDeciles(bars, lagDays)
       .select(col("symbol"), col("trade_date"), col("decile"))
       .join(rets, Seq("symbol", "trade_date"))
@@ -2326,13 +2258,11 @@ object DailyAnalytics {
     * Ranks tie-break by symbol for a total order. */
   def bhFdr(returns: DataFrame, alpha: Double = 0.05,
             minDays: Int = 30): DataFrame = {
-    val m = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
-      .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"), sum(col("y")).as("sy"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
+    val ms = momentSums("n_days", "sy", "syy")()
+    val m = returnsPanel(returns, "y")
+      .groupBy("symbol").agg(ms.head, ms.tail: _*)
       .filter(col("n_days") >= minDays)
-    val sd = sqrt((dec38(col("n_days")) * col("syy") - dec38(col("sy")) * dec38(col("sy")))
+    val sd = sqrt(coMoment("n_days", "syy", "sy", "sy")
       .cast("double") / (col("n_days").cast("double") * (col("n_days") - lit(1L))))
     val z = (col("sy").cast("double") / col("n_days")) /
       nullifZero(sd / sqrt(col("n_days").cast("double")))
@@ -2383,13 +2313,11 @@ object DailyAnalytics {
   def ljungBox(returns: DataFrame, maxLag: Int = 5,
                minDays: Int = 40): DataFrame = {
     require(maxLag >= 1 && maxLag <= 12, s"ljungBox: maxLag out of range: $maxLag")
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("idx", row_number().over(bySymbol).cast("long"))
       .snapshot() // full-sample moments AND both legs of the lag join
-    val tot = base.groupBy("symbol").agg(count(lit(1)).as("n"),
-      sum(col("y")).as("sy"), sum(dec38(col("y")) * col("y")).as("syy"))
+    val tm = momentSums("n", "sy", "syy")()
+    val tot = base.groupBy("symbol").agg(tm.head, tm.tail: _*)
     val lagsLeft = base
       .withColumn("k", explode(array((1 to maxLag).map(lit(_)): _*)))
       .select(col("symbol"), col("k"), col("y"),
@@ -2397,10 +2325,8 @@ object DailyAnalytics {
     val paired = lagsLeft.join(
       base.select(col("symbol"), col("idx").as("jdx"), col("y").as("yl")),
       Seq("symbol", "jdx"))
-    val perLag = paired.groupBy("symbol", "k").agg(
-      count(lit(1)).as("nk"),
-      sum(col("y")).as("sa"), sum(col("yl")).as("sb"),
-      sum(dec38(col("y")) * col("yl")).as("sab"))
+    val lm = momentSums("nk", "sa", "sb", "sab")('a' -> col("y"), 'b' -> col("yl"))
+    val perLag = paired.groupBy("symbol", "k").agg(lm.head, lm.tail: _*)
     val ybar = col("sy").cast("double") / col("n").cast("double")
     val num = col("sab").cast("double") -
       ybar * (col("sa") + col("sb")).cast("double") +
@@ -2444,9 +2370,8 @@ object DailyAnalytics {
     val step =
       s"""(acc, q) -> array(element_at(acc, 1) + 1L,
          |  ($L * element_at(acc, 2) + ${100 - L} * q) div 100)""".stripMargin
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), struct(col("trade_date"),
-        scaled(col("daily_return_pct"), 2).as("yq")).as("ty"))
+    returnsPanel(returns, "yq", 2)
+      .select(col("symbol"), struct(col("trade_date"), col("yq")).as("ty"))
       .groupBy("symbol")
       .agg(sort_array(collect_list(col("ty"))).as("tys"))
       .select(col("symbol"),
@@ -2476,10 +2401,7 @@ object DailyAnalytics {
     * S² Granger matrix is a different query; one date-aligned equi
     * join, one lag window, one grouped rollup. */
   def grangerAdjacent(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // both pair legs
+    val r = returnsPanel(returns, "y").snapshot() // both pair legs
     val syms = r.select(col("symbol")).distinct()
       .withColumn("rk", row_number().over(Window.orderBy("symbol")))
     val pairs = syms.select(col("symbol").as("s1"), col("rk"))
@@ -2494,15 +2416,9 @@ object DailyAnalytics {
       .withColumn("yl", lag(col("ya"), 1).over(w))
       .withColumn("xl", lag(col("yb"), 1).over(w))
       .filter(col("yl").isNotNull && col("xl").isNotNull)
-    val g = lagged.groupBy("s1", "s2").agg(
-      count(lit(1)).as("n"),
-      sum(col("ya")).as("my"), sum(col("yl")).as("m0"), sum(col("xl")).as("m1"),
-      sum(dec38(col("yl")) * col("yl")).as("m00"),
-      sum(dec38(col("yl")) * col("xl")).as("m01"),
-      sum(dec38(col("xl")) * col("xl")).as("m11"),
-      sum(dec38(col("yl")) * col("ya")).as("m0y"),
-      sum(dec38(col("xl")) * col("ya")).as("m1y"),
-      sum(dec38(col("ya")) * col("ya")).as("myy"))
+    val m = momentSums("n", "my", "m0", "m1", "m00", "m01", "m11", "m0y", "m1y", "myy")(
+      'y' -> col("ya"), '0' -> col("yl"), '1' -> col("xl"))
+    val g = lagged.groupBy("s1", "s2").agg(m.head, m.tail: _*)
       .filter(col("n") >= minDays)
     val n = col("n").cast("double")
     val (sy, s0, s1v) = (col("my").cast("double"),
@@ -2544,15 +2460,13 @@ object DailyAnalytics {
     * Scale shape: one window pass for t, one conditional rollup at
     * the symbol grain — S·D rows in, S out, no joins, no collect. */
   def chowBreak(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("t", row_number().over(bySymbol).cast("long"))
       .withColumn("nn", count(lit(1)).over(Window.partitionBy("symbol")))
       .withColumn("h", (col("t") <= expr("nn div 2")).cast("int"))
     // sum() skips the null else-branch, so each aggregate sees only
     // its segment's rows; both segments are non-empty past minDays
-    def seg(h: Int, nm: String)(c: org.apache.spark.sql.Column) =
+    def seg(h: Int, nm: String)(c: Column) =
       sum(when(col("h") === h, c)).as(s"$nm$h")
     val g = base.groupBy("symbol").agg(
       count(lit(1)).as("n"),
@@ -2563,9 +2477,9 @@ object DailyAnalytics {
       seg(1, "qty")(dec38(col("t")) * col("y")), seg(0, "qty")(dec38(col("t")) * col("y")),
       seg(1, "qyy")(dec38(col("y")) * col("y")), seg(0, "qyy")(dec38(col("y")) * col("y")))
       .filter(col("n") >= minDays)
-    def ssr(cn: org.apache.spark.sql.Column, st: org.apache.spark.sql.Column,
-            sy: org.apache.spark.sql.Column, stt: org.apache.spark.sql.Column,
-            sty: org.apache.spark.sql.Column, syy: org.apache.spark.sql.Column) = {
+    def ssr(cn: Column, st: Column,
+            sy: Column, stt: Column,
+            sty: Column, syy: Column) = {
       val n = cn.cast("double")
       val sttc = stt.cast("double") - st.cast("double") * st.cast("double") / n
       val styc = sty.cast("double") - st.cast("double") * sy.cast("double") / n
@@ -2606,9 +2520,8 @@ object DailyAnalytics {
     * contract every recursion lane here relies on), then a codegen'd
     * `aggregate` fold; S·D rows in, S out, zero joins. */
   def garchFilter(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), struct(col("trade_date"),
-        scaled(col("daily_return_pct"), 2).as("y")).as("ty"))
+    returnsPanel(returns, "y", 2)
+      .select(col("symbol"), struct(col("trade_date"), col("y")).as("ty"))
       .groupBy("symbol")
       .agg(sort_array(collect_list(col("ty"))).as("tys"))
       .select(col("symbol"),
@@ -2688,8 +2601,7 @@ object DailyAnalytics {
     * Scale shape: one partial-aggregable grouped pass, S·D rows in,
     * S out, no windows, no joins. */
   def jarqueBera(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val g = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
+    val g = returnsPanel(returns, "y")
       .groupBy("symbol").agg(
         count(lit(1)).as("n"),
         sum(col("y")).as("s1"),
@@ -2733,10 +2645,7 @@ object DailyAnalytics {
     require(maxLag >= 1 && maxLag <= 5, s"leadLagAdjacent: maxLag out of range: $maxLag")
     def knm(k: Int): String =
       if (k < 0) s"rho_m${-k}" else if (k == 0) "rho_0" else s"rho_p$k"
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // both pair legs
+    val r = returnsPanel(returns, "y").snapshot() // both pair legs
     val syms = r.select(col("symbol")).distinct()
       .withColumn("rk", row_number().over(Window.orderBy("symbol")))
     val pairs = syms.select(col("symbol").as("s1"), col("rk"))
@@ -2756,12 +2665,8 @@ object DailyAnalytics {
     val paired = left.join(
       panel.select(col("s1"), col("s2"), col("idx").as("jdx"), col("yb").as("b")),
       Seq("s1", "s2", "jdx"))
-    val g = paired.groupBy("s1", "s2", "k").agg(
-      count(lit(1)).as("nk"),
-      sum(col("a")).as("sa"), sum(col("b")).as("sb"),
-      sum(dec38(col("a")) * col("a")).as("saa"),
-      sum(dec38(col("b")) * col("b")).as("sbb"),
-      sum(dec38(col("a")) * col("b")).as("sab"))
+    val ms = momentSums("nk", "sa", "sb", "saa", "sbb", "sab")()
+    val g = paired.groupBy("s1", "s2", "k").agg(ms.head, ms.tail: _*)
     val nkD = col("nk").cast("double")
     val (saD, sbD) = (col("sa").cast("double"), col("sb").cast("double"))
     val (saaD, sbbD, sabD) = (col("saa").cast("double"),
@@ -2800,13 +2705,11 @@ object DailyAnalytics {
     * Scale shape: same single lag join serving both lags as
     * [[ljungBox]]; everything else is one grouped pass. */
   def neweyWest(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("idx", row_number().over(bySymbol).cast("long"))
       .snapshot() // full-sample moments AND both legs of the lag join
-    val tot = base.groupBy("symbol").agg(count(lit(1)).as("n"),
-      sum(col("y")).as("sy"), sum(dec38(col("y")) * col("y")).as("syy"))
+    val tm = momentSums("n", "sy", "syy")()
+    val tot = base.groupBy("symbol").agg(tm.head, tm.tail: _*)
     val lagsLeft = base
       .withColumn("k", explode(array(lit(1), lit(2))))
       .select(col("symbol"), col("k"), col("y"),
@@ -2814,10 +2717,8 @@ object DailyAnalytics {
     val paired = lagsLeft.join(
       base.select(col("symbol"), col("idx").as("jdx"), col("y").as("yl")),
       Seq("symbol", "jdx"))
-    val perLag = paired.groupBy("symbol", "k").agg(
-      count(lit(1)).as("nk"),
-      sum(col("y")).as("sa"), sum(col("yl")).as("sb"),
-      sum(dec38(col("y")) * col("yl")).as("sab"))
+    val lm = momentSums("nk", "sa", "sb", "sab")('a' -> col("y"), 'b' -> col("yl"))
+    val perLag = paired.groupBy("symbol", "k").agg(lm.head, lm.tail: _*)
     val nD = col("n").cast("double")
     val ybar = col("sy").cast("double") / nD
     val num = col("sab").cast("double") -
@@ -2856,9 +2757,7 @@ object DailyAnalytics {
     * Scale shape: one symbol-partitioned window + one grouped
     * rollup; S·D rows in, S out. */
   def runsTest(returns: DataFrame, minDays: Int = 40): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .filter(col("y") =!= 0)
       .withColumn("s", when(col("y") > 0, lit(1)).otherwise(lit(-1)))
       .withColumn("prev", lag(col("s"), 1).over(bySymbol))
@@ -2895,30 +2794,21 @@ object DailyAnalytics {
     * Scale shape: identical to [[marketBeta]] — one broadcast date
     * join, one partial-aggregable rollup. */
   def upDownBeta(returns: DataFrame, minSide: Int = 10): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the join probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
-    def side(cond: org.apache.spark.sql.Column, nm: String) = Seq(
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the join probe
+    def side(cond: Column, nm: String) = Seq(
       sum(when(cond, 1L).otherwise(0L)).as(s"n_$nm"),
       sum(when(cond, col("x"))).as(s"sx_$nm"),
       sum(when(cond, col("y"))).as(s"sy_$nm"),
       sum(when(cond, dec38(col("x")) * col("y"))).as(s"sxy_$nm"),
       sum(when(cond, dec38(col("x")) * col("x"))).as(s"sxx_$nm"))
-    val g = r.join(broadcast(mkt), "trade_date")
+    val g = r.join(broadcast(marketIndex(r)), "trade_date")
       .groupBy("symbol")
       .agg((side(col("x") > 0, "up") ++ side(col("x") < 0, "dn")).head,
         (side(col("x") > 0, "up") ++ side(col("x") < 0, "dn")).tail: _*)
       .filter(col("n_up") >= minSide && col("n_dn") >= minSide)
     def beta(nm: String) =
-      (dec38(col(s"n_$nm")) * col(s"sxy_$nm") - dec38(col(s"sx_$nm")) * col(s"sy_$nm"))
-        .cast("double") /
-      nullifZero((dec38(col(s"n_$nm")) * col(s"sxx_$nm") -
-        dec38(col(s"sx_$nm")) * col(s"sx_$nm")).cast("double"))
+      coMoment(s"n_$nm", s"sxy_$nm", s"sx_$nm", s"sy_$nm").cast("double") /
+        nullifZero(coMoment(s"n_$nm", s"sxx_$nm", s"sx_$nm", s"sx_$nm").cast("double"))
     g.select(col("symbol"), col("n_up"), col("n_dn"),
       rd(beta("up"), 4).as("beta_up"),
       rd(beta("dn"), 4).as("beta_down"),
@@ -2937,9 +2827,7 @@ object DailyAnalytics {
     * one 10-row rollup — S·D in, 10 rows out; the IV total is a
     * window sum over those 10 rows. */
   def woeIv(returns: DataFrame): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("y_next", lead(col("y"), 1).over(bySymbol))
       .filter(col("y_next").isNotNull)
       .withColumn("decile", ntile(10).over(
@@ -2975,8 +2863,7 @@ object DailyAnalytics {
     *
     * Scale shape: one partial-aggregable grouped pass, no windows. */
   def omegaRatio(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), scaled(col("daily_return_pct"), 4).as("y"))
+    returnsPanel(returns, "y")
       .groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
         sum(when(col("y") > 0, 1L).otherwise(0L)).as("n_up"),
@@ -3066,14 +2953,10 @@ object DailyAnalytics {
     * Scale shape: one lag window + one partial-aggregable groupBy on
     * the already-reduced symbol×day panel — D·S grain, no joins. */
   def durbinWatson(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("dy", col("y") - lag(col("y"), 1).over(bySymbol))
-    val g = base.groupBy("symbol").agg(
-      count(lit(1)).as("n"), sum(col("y")).as("sy"),
-      sum(dec38(col("dy")) * col("dy")).as("sdd"),
-      sum(dec38(col("y")) * col("y")).as("syy"))
+    val m = momentSums("n", "sy", "sdd", "syy")('d' -> col("dy"))
+    val g = base.groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n") >= minDays)
     // Σ(n·y−Σy)² = n²Σy² − n(Σy)²  (expand once, keep sums exact);
     // Σ(n·Δy)² = n²ΣΔy² — the n² cancels against the denominator's
@@ -3150,9 +3033,7 @@ object DailyAnalytics {
     * join back on (rank) — the rank table holds max-days rows
     * (time-dimension-sized, broadcastable at any S). */
   def quantileNormalize(returns: DataFrame): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("rnk",
         row_number().over(bySymbol.orderBy(col("y"), col("trade_date"))))
     val rankMeans = base.groupBy("rnk").agg(
@@ -3183,17 +3064,12 @@ object DailyAnalytics {
   def famaMacbeth(returns: DataFrame, lookback: Int = 20,
                   minSymbols: Int = 10): DataFrame = {
     val mom = bySymbol.rowsBetween(-lookback, -1)
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("x", sum(col("y")).over(mom))
       .withColumn("nw", count(lit(1)).over(mom))
       .filter(col("nw") === lookback) // full-lookback signals only
-    val daily = base.groupBy("trade_date").agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(dec38(col("x")) * col("x")).as("sxx"),
-      sum(dec38(col("x")) * col("y")).as("sxy"))
+    val dm = momentSums("n", "sx", "sy", "sxx", "sxy")()
+    val daily = base.groupBy("trade_date").agg(dm.head, dm.tail: _*)
       .filter(col("n") >= minSymbols)
     val (n, sx, sy, sxx, sxy) = (col("n").cast("double"),
       col("sx").cast("double"), col("sy").cast("double"),
@@ -3202,11 +3078,8 @@ object DailyAnalytics {
     val g6 = daily
       .select(floor(gamma * 1e6 + 0.5).cast("long").as("g"))
       .filter(col("g").isNotNull)
-    val agg = g6.agg(
-      count(lit(1)).as("d"),
-      sum(col("g")).as("sg"),
-      sum(dec38(col("g")) * col("g")).as("sgg"),
-      sum(when(col("g") > 0, 1L).otherwise(0L)).as("npos"))
+    val gm = momentSums("d", "sg", "sgg")() :+ sum(when(col("g") > 0, 1L).otherwise(0L)).as("npos")
+    val agg = g6.agg(gm.head, gm.tail: _*)
     val (d, sg, sgg) = (col("d").cast("double"),
       col("sg").cast("double"), col("sgg").cast("double"))
     val mean = sg / d / 1e6
@@ -3237,9 +3110,7 @@ object DailyAnalytics {
     * Scale shape: two window passes + one grouped rollup per symbol,
     * no joins. */
   def kpss(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("t", row_number().over(bySymbol).cast("long"))
       .withColumn("p", sum(col("y")).over(
         bySymbol.rowsBetween(Window.unboundedPreceding, 0)))
@@ -3279,18 +3150,12 @@ object DailyAnalytics {
     * fixed double tree. Scale shape: one lag window + one grouped
     * rollup, no joins. */
   def archLm(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val base = returnsPanel(returns, "y")
       .withColumn("q", expr("(y * y) div 10000"))
       .withColumn("x", lag(col("q"), 1).over(bySymbol))
       .filter(col("x").isNotNull)
-    val g = base.groupBy("symbol").agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("q")).as("sq"),
-      sum(dec38(col("x")) * col("x")).as("sxx"),
-      sum(dec38(col("x")) * col("q")).as("sxq"),
-      sum(dec38(col("q")) * col("q")).as("sqq"))
+    val m = momentSums("n", "sx", "sq", "sxx", "sxq", "sqq")()
+    val g = base.groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n") >= minDays)
     val (n, sx, sq, sxx, sxq, sqq) = (col("n").cast("double"),
       col("sx").cast("double"), col("sq").cast("double"),
@@ -3321,9 +3186,7 @@ object DailyAnalytics {
     * six terms are written out and added in a pinned order).
     * Scale shape: two lag windows + one grouped rollup, no joins. */
   def permutationEntropy(returns: DataFrame, minDays: Int = 30): DataFrame = {
-    val base = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("c"))
+    val base = returnsPanel(returns, "c")
       .withColumn("a", lag(col("c"), 2).over(bySymbol))
       .withColumn("b", lag(col("c"), 1).over(bySymbol))
       .filter(col("a").isNotNull)
@@ -3467,19 +3330,14 @@ object DailyAnalytics {
     val y = scaled(col("daily_return_pct"), 4)
     val x = (when(col("daily_return_pct") < 0, -1L).otherwise(1L) *
       col("volume") * scaled(col("close_price"), 2))
+    val m = momentSums("n_days", "sx", "sy", "sxy", "sxx", "syy")()
     val g = returns.filter(col("daily_return_pct").isNotNull)
       .select(col("symbol"), y.as("y"), x.as("x"))
-      .groupBy("symbol")
-      .agg(count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(dec38(col("x")) * dec38(col("y"))).as("sxy"),
-        sum(dec38(col("x")) * dec38(col("x"))).as("sxx"),
-        sum(dec38(col("y")) * dec38(col("y"))).as("syy"))
+      .groupBy("symbol").agg(m.head, m.tail: _*)
       .filter(col("n_days") >= minDays)
-    val n = dec38(col("n_days"))
-    val covN = (n * col("sxy") - dec38(col("sx")) * dec38(col("sy"))).cast("double")
-    val varXN = (n * col("sxx") - dec38(col("sx")) * dec38(col("sx"))).cast("double")
-    val varYN = (n * col("syy") - dec38(col("sy")) * dec38(col("sy"))).cast("double")
+    val covN = coMoment("n_days", "sxy", "sx", "sy").cast("double")
+    val varXN = coMoment("n_days", "sxx", "sx", "sx").cast("double")
+    val varYN = coMoment("n_days", "syy", "sy", "sy").cast("double")
     g.select(col("symbol"), col("n_days"),
       // slope in scaled units × 1e4 = pct-return per million dollars
       rd(covN / nullifZero(varXN) * 1e4, 6).as("lambda_per_musd"),
@@ -3595,9 +3453,8 @@ object DailyAnalytics {
     * Scale shape: one partial-aggregable (dow) rollup at panel grain;
     * everything after lives on the ≤7-row group frame. */
   def anovaDow(returns: DataFrame): DataFrame = {
-    val g = returns.filter(col("daily_return_pct").isNotNull)
-      .select(dayofweek(col("trade_date")).cast("long").as("dow"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val g = returnsPanel(returns, "y")
+      .select(dayofweek(col("trade_date")).cast("long").as("dow"), col("y"))
       .groupBy("dow")
       .agg(count(lit(1)).as("ng"), sum(col("y")).as("sg"),
         sum(dec38(col("y")) * dec38(col("y"))).as("qg"))
@@ -3649,7 +3506,7 @@ object DailyAnalytics {
       .withColumn("h2", lead(col("h"), 1).over(bySymbol))
       .withColumn("l2", lead(col("l"), 1).over(bySymbol))
       .filter(col("h2").isNotNull)
-    def ln2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
+    def ln2(a: Column, b: Column) = {
       val r = log(a.cast("double") / b.cast("double"))
       r * r
     }
@@ -3697,9 +3554,8 @@ object DailyAnalytics {
     * ≤7-row-per-symbol rank window, two bounded rollups. */
   def friedmanDow(returns: DataFrame, expectK: Int = 7,
                   chi2Crit4: Long = 125916L): DataFrame = {
-    val cell = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), dayofweek(col("trade_date")).cast("long").as("dow"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val cell = returnsPanel(returns, "y")
+      .select(col("symbol"), dayofweek(col("trade_date")).cast("long").as("dow"), col("y"))
       .groupBy("symbol", "dow")
       .agg(count(lit(1)).as("ng"), sum(col("y")).as("sy"))
       .withColumn("m", expr("sy div ng"))
@@ -3800,9 +3656,8 @@ object DailyAnalytics {
     * exact median over day-grain rows), one broadcast join of the
     * 7-row median frame, one 7-group rollup, one 1-row reduction. */
   def brownForsythe(returns: DataFrame): DataFrame = {
-    val y = returns.filter(col("daily_return_pct").isNotNull)
-      .select(dayofweek(col("trade_date")).cast("long").as("dow"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val y = returnsPanel(returns, "y")
+      .select(dayofweek(col("trade_date")).cast("long").as("dow"), col("y"))
       .snapshot() // feeds the median rollup AND the deviation join
     val med = y.groupBy("dow")
       .agg((median(col("y")) * lit(2.0)).cast("long").as("med2"))
@@ -3850,9 +3705,7 @@ object DailyAnalytics {
     * rows, then one partial-aggregable symbol rollup. */
   def pettittTest(returns: DataFrame, minDays: Int = 60,
                   crit4: Long = 36889L): DataFrame = {
-    val x = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("x"))
+    val x = returnsPanel(returns, "x")
     val base = x
       .withColumn("r2", lit(2L) * rank().over(
           Window.partitionBy("symbol").orderBy("x")).cast("long") +
@@ -3907,9 +3760,7 @@ object DailyAnalytics {
   def kupiecPof(returns: DataFrame, alpha: Double = 0.05,
                 minTest: Int = 30, chi2Crit: Double = 3.8415): DataFrame = {
     require(alpha > 0 && alpha < 1, "kupiecPof: alpha in (0,1)")
-    val x0 = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val x0 = returnsPanel(returns, "y")
       .withColumn("t", row_number().over(
         Window.partitionBy("symbol").orderBy("trade_date")).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("symbol")))
@@ -4021,20 +3872,13 @@ object DailyAnalytics {
     * collect discipline), no windows. */
   def eloVsMarket(returns: DataFrame, k: Int = 16,
                   baseRating: Int = 1500, minDays: Int = 30): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build AND the game join
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
+    val r = returnsPanel(returns, "y").snapshot() // feeds the index build AND the game join
     val base6 = baseRating.toLong * 1000000L
     val step =
       s"""(acc, s) -> acc + CAST(floor($k.0 * (s / 2.0 -
          |  1.0 / (1.0 + pow(10.0, ($base6 - acc) / 4.0e8))) * 1.0e6) AS BIGINT)"""
         .stripMargin
-    r.join(broadcast(mkt), "trade_date")
+    r.join(broadcast(marketIndex(r)), "trade_date")
       .select(col("symbol"), struct(col("trade_date"),
         when(col("y") > col("x"), 2L).when(col("y") === col("x"), 1L)
           .otherwise(0L).as("s")).as("ts"))
@@ -4075,9 +3919,7 @@ object DailyAnalytics {
                  minScored: Int = 30): DataFrame = {
     val w = window
     val o = when(col("y") > 0, 1L).otherwise(0L)
-    val scored = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val scored = returnsPanel(returns, "y")
       .withColumn("o", o)
       .withColumn("t", row_number().over(bySymbol).cast("long"))
       .withColumn("c", sum(col("o")).over(bySymbol.rowsBetween(-w, -1)))
@@ -4156,9 +3998,7 @@ object DailyAnalytics {
     * shape: two symbol-partitioned windows + one rollup — D·S grain,
     * NO pair fan-out despite the O(n²) semantics. */
   def energyDistanceSplit(returns: DataFrame, minDays: Int = 60): DataFrame = {
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val r = returnsPanel(returns, "y")
       .withColumn("t", row_number().over(bySymbol).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("symbol")))
       .withColumn("g", when(col("t") * 2 <= col("n"), lit(1L)).otherwise(lit(2L)))
@@ -4215,14 +4055,9 @@ object DailyAnalytics {
                      minDays: Int = 60): DataFrame = {
     require(tailPct > 0 && tailPct < 50, "tailDependence: tailPct in (0,50)")
     val p = tailPct
-    val r = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
-      .snapshot() // feeds the index build, both rank passes, AND the probe
-    val mkt = r.groupBy("trade_date")
-      .agg(sum(col("y")).as("m"), count(lit(1)).as("nsym"))
-      .select(col("trade_date"),
-        floor(col("m").cast("double") / col("nsym").cast("double")).cast("long").as("x"))
+    // feeds the index build, both rank passes, AND the probe
+    val r = returnsPanel(returns, "y").snapshot()
+    val mkt = marketIndex(r)
     val mr = mkt
       .withColumn("rx", row_number().over(
         Window.orderBy(col("x"), col("trade_date"))).cast("long"))
@@ -4281,9 +4116,7 @@ object DailyAnalytics {
     * fans the test scan out 5×, still day-grain-linear. */
   def pinballEval(returns: DataFrame, minTest: Int = 30): DataFrame = {
     val taus = Seq(1, 5, 10, 15, 19) // τ·20
-    val x0 = returns.filter(col("daily_return_pct").isNotNull)
-      .select(col("symbol"), col("trade_date"),
-        scaled(col("daily_return_pct"), 4).as("y"))
+    val x0 = returnsPanel(returns, "y")
       .withColumn("t", row_number().over(bySymbol).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("symbol")))
       .snapshot() // feeds the training rank pass AND the test scan

@@ -54,25 +54,6 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)) / size(array_union(a, b)).cast("double")
 
-  /** MinHash signatures via explode → hash-once-per-shingle → numHashes
-    * partial `min` aggregates, by the standard one-base-hash +
-    * affine-permutation family:
-    *   base  = hash60(shingle) mod 2^30          (one md5 per shingle)
-    *   h_i   = ((2i+1)·base + 7919·i) mod p30    (p30 = 1073741821)
-    * All arithmetic stays below 2^37, far from BIGINT overflow (which
-    * engines handle differently). The built-in reference form of the
-    * native `minhash_sig` that [[minhashSignatures]] emits (tested
-    * value-identical); no pair generator runs it. */
-  def minhashSigAgg(shingled: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val ex = shingled.select(col(idCol), explode(col("shingles")).as("s"))
-      .withColumn("h", hash60(col("s")) % 1073741824L)
-    val mins = (0 until numHashes).map { i =>
-      min((col("h") * (i * 2 + 1) + i * 7919L) % 1073741821L).as(s"__m$i")
-    }
-    ex.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
-  }
-
   /** Pre-cluster (id, text) across the cluster before the shingling
     * lambda. Two reasons, both load-bearing at every scale: (1) the
     * higher-order shingle/hash expressions are interpreted (no codegen
@@ -443,24 +424,6 @@ object Dedup {
         r4(col("n_caught").cast("double") / col("n_exact")).as("recall"),
         element_at(expectedLit, col("band10") + 1).as("expected_recall"))
       .orderBy("j_lo")
-  }
-
-  /** SimHash via explode → hash-once-per-token → 60 partial bit-sum
-    * aggregates (Σ ±1 per bit), then the signature is assembled from
-    * the sums. The built-in reference form of the native `simhash_sig`
-    * ([[graft.plans.SimHashSig]]) that [[simhashPairs]] emits (tested
-    * value-identical); no pair generator runs it. */
-  def simhashAgg(docs: DataFrame, idCol: String, textCol: String, bits: Int = 60): DataFrame = {
-    val ex = spreadById(docs, idCol, textCol)
-      .select(col(idCol), explode(array_distinct(split(col(textCol), " "))).as("t"))
-      .withColumn("h", hash60(col("t")))
-    val sums = (0 until bits).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"__b$j")
-    }
-    ex.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-      .select(col(idCol),
-        (0 until bits).map(j => when(col(s"__b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
   }
 
   /** INCREMENTAL MinHash-LSH dedup: near-dup pairs where at least one

@@ -29,11 +29,6 @@ object Similarity {
   def quantize(vec: Column, scale: Int = 6): Column =
     call_function("quantize_vec", vec, lit(scale))
 
-  /** Exact integer squared norm of a quantized vector — the built-in
-    * reference form of `dot_q(v, v)`. */
-  def normSq(vecQ: Column): Column =
-    aggregate(vecQ, lit(0L), (acc, x) => acc + x * x)
-
   /** Exact integer dot product of two quantized vectors — the built-in
     * reference form of `dot_q`. */
   def dotQ(a: Column, b: Column): Column =
@@ -45,7 +40,8 @@ object Similarity {
     * equal-length vectors (tested). */
   private def dotQN(a: Column, b: Column): Column = call_function("dot_q", a, b)
 
-  /** [[normSq]] via the same native path (`dot_q(v, v)`). */
+  /** The exact integer squared norm of a quantized vector, by the same
+    * native path (`dot_q(v, v)`). */
   private def normSqN(v: Column): Column = call_function("dot_q", v, v)
 
   /** Cosine from exact integer dot/norms (rounded to 6 dp). */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * signature of a shingle array in ONE narrow pass per row.
   *
   * Value-identical to the aggregation form
-  * ([[graft.operators.Dedup.minhashSigAgg]], equality tested):
+  * (`minhashSigAgg` in DedupSpec, equality tested):
   * base_s = first-15-md5-hex-digits(s) mod 2^30, sig_i = min_s
   * ((2i+1)·base_s + 7919·i) mod 1073741821. The aggregation form
   * explodes every (doc, shingle) into a row, md5s it, and shuffles

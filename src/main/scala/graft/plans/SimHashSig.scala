@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Σ_tokens (bit_j(hash60(token))·2 − 1) > 0.
   *
   * Value-identical to the aggregation form
-  * ([[graft.operators.Dedup.simhashAgg]], equality tested) but
+  * (`simhashAgg` in DedupSpec, equality tested) but
   * computed inside the scan stage: no token explode, no shuffle
   * through 60 partial bit-sum aggregates. Registered by
   * [[GraftExtensions]] as `simhash_sig`.

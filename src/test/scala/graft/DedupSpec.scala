@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.scalatest.funspec.AnyFunSpec
+import graft.functions.Funcs.hash60
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSpec {
@@ -16,6 +18,40 @@ class DedupSpec extends AnyFunSpec {
     (4L, "the quick brown fox jumps over the lazy dog near the river bank today"),   // exact dup of 1
     (5L, "tiny doc"))
     .toDF("doc_id", "text")
+
+  /** MinHash signatures via explode → hash-once-per-shingle →
+    * `numHashes` partial `min` aggregates, by the one-base-hash +
+    * affine-permutation family the native `minhash_sig`
+    * ([[graft.plans.MinHashSig]]) computes:
+    *   base  = hash60(shingle) mod 2^30
+    *   h_i   = ((2i+1)·base + 7919·i) mod p30    (p30 = 1073741821)
+    * The aggregation-form reference the native signature is tested
+    * against. */
+  private def minhashSigAgg(shingled: DataFrame, numHashes: Int): DataFrame = {
+    val ex = shingled.select($"doc_id", explode($"shingles").as("s"))
+      .withColumn("h", hash60($"s") % 1073741824L)
+    val mins = (0 until numHashes).map { i =>
+      min(($"h" * (i * 2 + 1) + i * 7919L) % 1073741821L).as(s"__m$i")
+    }
+    ex.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
+      .select($"doc_id", array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
+  }
+
+  /** SimHash via explode → hash-once-per-token → 60 partial bit-sum
+    * aggregates (Σ ±1 per bit), the signature assembled from the sums:
+    * the aggregation-form reference of the native `simhash_sig`
+    * ([[graft.plans.SimHashSig]]). */
+  private def simhashAgg(docs: DataFrame, bits: Int = 60): DataFrame = {
+    val ex = docs.select($"doc_id", explode(array_distinct(split($"text", " "))).as("t"))
+      .withColumn("h", hash60($"t"))
+    val sums = (0 until bits).map { j =>
+      sum(when(shiftright($"h", j).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"__b$j")
+    }
+    ex.groupBy($"doc_id").agg(sums.head, sums.tail: _*)
+      .select($"doc_id",
+        (0 until bits).map(j => when(col(s"__b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+          .reduce(_ + _).as("simhash"))
+  }
 
   describe("keepFirst") {
     it("keeps the lowest-order row per key and is idempotent") {
@@ -130,7 +166,7 @@ class DedupSpec extends AnyFunSpec {
       val shingled = Dedup.withShingles(docs.select($"doc_id", $"text"), "text", 3)
         .filter(size($"shingles") > 0)
       val native = Dedup.minhashSignatures(docs, "doc_id", "text").select($"doc_id", $"sig")
-      val agg = Dedup.minhashSigAgg(shingled, "doc_id", 32)
+      val agg = minhashSigAgg(shingled, 32)
       val mismatch = native.join(agg.withColumnRenamed("sig", "sig_agg"), "doc_id")
         .filter($"sig" =!= $"sig_agg")
       assert(mismatch.isEmpty)
@@ -330,13 +366,13 @@ class DedupSpec extends AnyFunSpec {
         .union(Seq((900001L, "solo"), (900002L, "")).toDF("doc_id", "text"))
       val native = docs.select($"doc_id", call_function("simhash_sig",
         array_distinct(split($"text", " ")), lit(60)).as("sig"))
-      val both = native.join(Dedup.simhashAgg(docs, "doc_id", "text"), "doc_id")
+      val both = native.join(simhashAgg(docs), "doc_id")
       assert(both.count() == docs.count())
       val mism = both.filter($"sig" =!= $"simhash")
       assert(mism.isEmpty, mism.take(3).mkString(","))
     }
     it("banding finds every pair a full pairwise scan finds (pigeonhole)") {
-      val sh = Dedup.simhashAgg(docs, "doc_id", "text")
+      val sh = simhashAgg(docs)
       val full = sh.as("a").join(sh.as("b"),
           $"a.doc_id" < $"b.doc_id" &&
             expr("bit_count(a.simhash ^ b.simhash)") <= 3)

@@ -335,6 +335,62 @@ class PropertySpec extends AnyFunSpec {
     }
   }
 
+  describe("DailyAnalytics moments device: momentSums + coMoment vs a BigInt reference") {
+    it("exact sums and n·Σab − Σa·Σb on random panels, zero variance, one row and |y| = 10⁶") {
+      import graft.operators.DailyAnalytics.{coMoment, momentSums}
+      val value = Gen.choose(-1000000L, 1000000L)
+      val random = sampled(for {
+        rows <- Gen.choose(1, 20)
+        xs   <- Gen.listOfN(rows, value)
+        ys   <- Gen.listOfN(rows, value)
+      } yield xs.zip(ys), 40)
+      val edges = Seq(
+        Seq.fill(7)((42L, 0L)) ++ Seq((42L, -5L)), // zero variance in x
+        Seq((-999999L, 1000000L)),                   // one row
+        Seq.tabulate(2500)(i => (1000000L, if (i % 2 == 0) 1000000L else -1000000L)),
+        Seq.fill(2500)((-1000000L, 1000000L)))      // |y| = 10⁶ (100%) over 2,500 days
+      val panels = (random ++ edges).zipWithIndex
+      val df = panels.flatMap { case (rows, g) => rows.map { case (x, y) => (g, x, y) } }
+        .toDF("g", "x", "y")
+      val m = momentSums("n", "sx", "sy", "sxy", "sxx", "syy")()
+      val co = Seq("xy" -> ("sxy", "sx", "sy"), "xx" -> ("sxx", "sx", "sx"),
+        "yy" -> ("syy", "sy", "sy"))
+      val got = df.groupBy("g").agg(m.head, m.tail: _*)
+        .select(Seq($"g", $"n", $"sx", $"sy", $"sxy", $"sxx", $"syy") ++ co.flatMap {
+          case (k, (ab, a, b)) => Seq(coMoment("n", ab, a, b).as(s"c$k"),
+            Funcs.nullifZero(coMoment("n", ab, a, b)).as(s"z$k"))
+        }: _*)
+        .collect().map(r => r.getInt(0) -> r).toMap
+      assert(got.size == panels.size)
+      def big(v: Any): BigInt = v match {
+        case d: java.math.BigDecimal => BigInt(d.toBigIntegerExact)
+        case l: Long => BigInt(l)
+      }
+      panels.foreach { case (rows, g) =>
+        val r = got(g)
+        val (x, y) = (rows.map(p => BigInt(p._1)), rows.map(p => BigInt(p._2)))
+        val n = BigInt(rows.size)
+        val sums = Seq(x.sum, y.sum, x.zip(y).map(p => p._1 * p._2).sum,
+          x.map(v => v * v).sum, y.map(v => v * v).sum)
+        assert(r.getLong(1) == rows.size)
+        assert((2 to 6).map(i => big(r.get(i))) == sums, s"group $g")
+        val Seq(sx, sy, sxy, sxx, syy) = sums
+        val want = Seq(n * sxy - sx * sy, n * sxx - sx * sx, n * syy - sy * sy)
+        want.zipWithIndex.foreach { case (w, k) =>
+          assert(big(r.get(7 + 2 * k)) == w, s"group $g coMoment $k")
+          assert(r.isNullAt(8 + 2 * k) == (w == 0), s"group $g nullifZero $k")
+        }
+      }
+      // the edge panels hit the null and headroom cases they are there for
+      val Seq(flat, one, alt, same) = edges.indices.map(i => got(random.size + i))
+      assert(flat.isNullAt(10) && !flat.isNullAt(12)) // cxx zero, cyy not
+      assert(one.isNullAt(8) && one.isNullAt(10) && one.isNullAt(12))
+      assert(big(alt.get(6)) == BigInt(2500) * BigInt(10).pow(12))
+      assert(big(alt.get(11)) == BigInt(2500) * BigInt(2500) * BigInt(10).pow(12))
+      assert(same.isNullAt(12) && same.isNullAt(8))
+    }
+  }
+
   describe("Funcs.rd: idempotence and bounded error") {
     it("rd is idempotent and stays within a half-step of the input") {
       // NOTE deliberately not asserting r·10^4 is an exact binary

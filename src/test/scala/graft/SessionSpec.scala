@@ -185,6 +185,30 @@ class SessionSpec extends AnyFunSpec {
         Seq("Decontamination.scala" -> "evalShingleHashes", "Dedup.scala" -> "shingledDocs"))
     }
 
+    it("one returns panel and one exact-moments device in DailyAnalytics") {
+      // enclosing def of every literal `device` in DailyAnalytics and SparkEntry
+      def sites(device: String): Seq[String] =
+        Seq("operators/DailyAnalytics.scala", "SparkEntry.scala").flatMap { f =>
+          val src = read(Paths.get(s"src/main/scala/graft/$f"))
+          java.util.regex.Pattern.quote(device).r.findAllMatchIn(src).map { m =>
+            "def (\\w+)".r.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.last
+          }
+        }.sorted
+      // the panel drops `volume`, `close_price` and the raw return: these read them
+      assert(sites(""".filter(col("daily_return_pct").isNotNull)""") == Seq(
+        "amihudIlliquidity", "calmarRatio", "kyleLambda", "qPercentRank", "returnsPanel",
+        "seasonalityDow", "ulcerIndex"))
+      // sums that are not (n, Σa, Σa·b) moments: decimal first moments
+      // (cointegration, amihud), higher powers (jarqueBera), per-group
+      // rollup names (anova, Brown-Forsythe, Friedman), products of
+      // derived terms (kpss, energy distance), drawdowns and volume
+      assert(sites("sum(dec38(") == Seq(
+        "amihudIlliquidity", "anovaDow", "brownForsythe") ++
+        Seq.fill(9)("cointegrationAdjacent") ++ Seq(
+        "energyDistanceSplit", "friedmanDow", "hhiConcentration", "jarqueBera", "jarqueBera",
+        "jarqueBera", "kpss", "kpss", "kpss", "kpss", "momentSums", "ulcerIndex"))
+    }
+
     describe("one sample path in graft/operators/Multimodal.scala") {
       lazy val src = read(Paths.get("src/main/scala/graft/operators/Multimodal.scala"))
       def count(device: String): Int =

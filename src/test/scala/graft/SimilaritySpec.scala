@@ -286,7 +286,7 @@ class SimilaritySpec extends AnyFunSpec {
         .select($"vec_id", Similarity.quantize($"embedding").as("vq"))
       val both = emb.select($"vec_id",
         call_function("dot_q", $"vq", $"vq").as("nat"),
-        Similarity.normSq($"vq").as("bi"))
+        aggregate($"vq", lit(0L), (acc, x) => acc + x * x).as("bi"))
       assert(both.filter($"nat" =!= $"bi").isEmpty)
       val pairs = emb.limit(10).crossJoin(
           emb.select($"vq".as("vq2")).limit(10))
